@@ -237,8 +237,13 @@ object Dedup {
     val keyed = documents.select(col("doc_id"), col("source"), col("lang"),
       xxhash64(canonicalKey(col("text"))).as("__ck"), seenPred.as("__seen"))
       .localCheckpoint()
-    val bloom = keyed.filter(col("__seen"))
-      .stat.bloomFilter("__ck", expectedItems, fpp)
+    // stat.bloomFilter aggregates zero rows to a null sketch and then
+    // NPEs deserializing it: an empty seen-set is an empty sketch, so
+    // every incoming row is definite-new.
+    val seenRows = keyed.filter(col("__seen"))
+    val bloom =
+      if (seenRows.isEmpty) org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
+      else seenRows.stat.bloomFilter("__ck", expectedItems, fpp)
     // The probe is Spark's own codegen'd BloomFilterMightContain over a
     // literal of the sketch's canonical serialization (stat.bloomFilter
     // and the expression share BloomFilterImpl's format and the
@@ -264,7 +269,7 @@ object Dedup {
     val definiteNew = incoming.filter(!mightContain(col("__ck")))
       .select(col("doc_id"), col("source"), col("lang"),
         lit(0).as("is_dup"), lit(1).as("is_new"))
-    val seenKeys = keyed.filter(col("__seen"))
+    val seenKeys = seenRows
       .select(col("__ck")).distinct().withColumn("__hit", lit(1))
     val confirmed = incoming.filter(mightContain(col("__ck")))
       .join(seenKeys, Seq("__ck"), "left_outer")

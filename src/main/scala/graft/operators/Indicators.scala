@@ -236,11 +236,15 @@ object Indicators {
       .withColumn("__ef", expr(emaFoldSql("closes", fast)))
       .withColumn("__es", expr(emaFoldSql("closes", slow)))
       .withColumn("__macd", expr("zip_with(__ef, __es, (f, s) -> f - s)"))
+      // A key with fewer than `slow` bars has no unmasked macd to seed
+      // the signal (and slice/element_at would raise on the negative
+      // length / missing index under ANSI): its signal array is null, so
+      // macd, macd_signal and macd_hist stay null for the whole key.
       .withColumn("__sig", expr(
-        s"""aggregate(
+        s"""CASE WHEN size(__macd) >= $slow THEN aggregate(
            |  slice(__macd, ${slow + 1}, size(__macd) - $slow),
            |  array(element_at(__macd, $slow)),
-           |  (acc, v) -> array_append(acc, $aSig * v + (1.0 - $aSig) * element_at(acc, -1)))""".stripMargin))
+           |  (acc, v) -> array_append(acc, $aSig * v + (1.0 - $aSig) * element_at(acc, -1))) END""".stripMargin))
     val e = explodeSeries(g, others, Seq("__macd", "__sig"))
     e.withColumn("macd",
         when(col("pos") >= slow - 1, element_at(col("__macd"), col("pos") + 1)))

@@ -239,6 +239,27 @@ class MarketSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("MACD: a key shorter than the slow span is null, longer keys unchanged") {
+    // A newly listed symbol (5 bars) next to a 30-bar one, at the daily
+    // pipeline's (5, 10, 4): the short key has no unmasked macd to seed
+    // the signal, so all three columns are null (pandas semantics).
+    def series(uid: Long, n: Int) = (0 until n).map { i =>
+      (uid, Date.valueOf(d("2024-01-01").toLocalDate.plusDays(i)), 10.0 + math.sin(i * 0.7) + i * 0.1)
+    }.toDF("user_id", "date", "close")
+    val long = series(2L, 30)
+    val mixed = series(1L, 5).union(long)
+    val cols = Seq("macd", "macd_signal", "macd_hist")
+    def rows(df: DataFrame, uid: Long) =
+      df.filter($"user_id" === uid).orderBy("date").select("date", cols: _*).collect().toSeq
+    val out = Indicators.withMacd(mixed, fast = 5, slow = 10, sig = 4)
+    val short = rows(out, 1L)
+    assert(short.length == 5 && short.forall(r => cols.indices.forall(i => r.isNullAt(i + 1))),
+      s"short key must be all-null: $short")
+    assert(rows(out, 2L) == rows(Indicators.withMacd(long, fast = 5, slow = 10, sig = 4), 2L),
+      "the long key must be bit-identical with or without the short key")
+    assert(rows(out, 2L).count(r => !r.isNullAt(2)) == 30 - (10 + 4 - 2))
+  }
+
   test("SMA gates on min_periods and RSI uses rolling-mean gains/losses") {
     val sma = col1(Indicators.withSma(barsOf(Seq(10.0, 12.0, 14.0)), Seq(2)), "ma_2")
     assert(sma == Seq(None, Some(11.0), Some(13.0)))
