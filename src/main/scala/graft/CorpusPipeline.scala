@@ -24,11 +24,13 @@ import graft.operators.{Components, Dedup, TextAnalysis}
 object CorpusPipeline {
 
   /** Curate a raw document corpus. `pairsOf` picks the near-dup pair
-    * emitter (minhash by default; ngram-Jaccard for an oracle-friendly
-    * run — both emit (id1, id2) pairs). `keepBestQuality` switches the
-    * cluster survivor from lowest-id to highest-quality-score
-    * ([[Dedup.keepBest]]) — near-dup members differ, and real curation
-    * keeps the cleanest variant, not an arbitrary one.
+    * emitter: banded minhash LSH ([[Dedup.minhashPairsPortable]]) by
+    * default, or the exact ngram-Jaccard inverted index — both
+    * oracle-checked, both emit (id1, id2) pairs. `keepBestQuality`
+    * switches the cluster survivor from lowest-id to
+    * highest-quality-score ([[Dedup.keepBest]]) — near-dup members
+    * differ, and real curation keeps the cleanest variant, not an
+    * arbitrary one.
     *
     * Opt-in round-8 stages (all projection-form — they extend the
     * stage-1 single pass, never add a shuffle or join):
@@ -77,7 +79,7 @@ object CorpusPipeline {
   def curate(documents: DataFrame,
              minQuality: Double = 0.55,
              langs: Seq[String] = Seq("en", "de", "es", "fr"),
-             pairsOf: DataFrame => DataFrame = d => Dedup.minhashPairs(d),
+             pairsOf: DataFrame => DataFrame = d => Dedup.minhashPairsPortable(d),
              valFrac: Double = 0.05,
              testFrac: Double = 0.05,
              keepBestQuality: Boolean = false,

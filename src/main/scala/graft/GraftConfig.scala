@@ -177,7 +177,7 @@ case class CurateConfig(minQuality: Double, langs: Seq[String],
                         valFrac: Double, testFrac: Double) {
   def curate(documents: DataFrame,
              pairsOf: DataFrame => DataFrame =
-               d => operators.Dedup.minhashPairs(d)): DataFrame =
+               d => operators.Dedup.minhashPairsPortable(d)): DataFrame =
     CorpusPipeline.curate(documents, minQuality, langs, pairsOf, valFrac, testFrac)
 }
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a pair list — the resolution stage of the
-  * dedup pipeline. The pair emitters (Dedup.minhashPairs/simhashPairs,
-  * Similarity.nearDupPairs) find duplicate EDGES; an actual dedup run
+  * dedup pipeline. The pair emitters (Dedup.minhashPairsPortable /
+  * simhashPairsPortable, Similarity.nearDupPairs) find duplicate
+  * EDGES; an actual dedup run
   * needs the transitive clusters those edges imply, one canonical
   * representative per cluster, and the keep/drop verdict per document.
   * The reference has no counterpart (its pandas engine dedups nothing);

@@ -286,20 +286,6 @@ object Dedup {
   val Bands = 8
   private val RowsPerBand = Perms / Bands
 
-  /** MinHash signature from a (materialized) hashed-shingle column: per
-    * permutation i, min of xxhash64(h+i). Hash-of-long replaces the
-    * classic (a·h+b mod p) permutation family — same independence, no
-    * 128-bit multiply, no per-(shingle, perm) string work. Array-column
-    * form for fixtures/specs; the operator path uses the explode+groupBy
-    * twin below, because higher-order functions evaluate interpreted
-    * (outside whole-stage codegen) and 32 interpreted transforms per row
-    * dominate the runtime.
-    */
-  def minhashSignature(hashedShingleCol: Column): Column =
-    array((0 until Perms).map { i =>
-      array_min(transform(hashedShingleCol, h => xxhash64(h + lit(i.toLong))))
-    }: _*)
-
   /** Row-form shingle postings: one (doc_id, source, lang,
     * shingle-hash) row per PER-DOCUMENT-DISTINCT shingle — the dedup is
     * per-doc on the gram strings BEFORE hashing (TokenKgrams'
@@ -930,8 +916,7 @@ object Dedup {
     * segments and `n_chars_removed` counts union bytes (Σ span_len over
     * raw maximal spans double-counts shared bytes — the relationship to
     * [[spanStats]] totals is union ≤ Σ, equality iff no two maximal
-    * repeats overlap). `pd = true` swaps in the prefix-doubling twin
-    * [[maximalSpansPD]] (output-identical, spec-asserted).
+    * repeats overlap).
     *
     * NOTE: the union of maximal spans equals the island cover only for
     * bytes inside SOME maximal repeat ≥ minLen; island bytes covered
@@ -939,11 +924,37 @@ object Dedup {
     * remove what the published statistics say is duplicated.
     */
   def removeMaximalSpans(documents: DataFrame, minLen: Int = 40,
-                         levels: Int = 12, hashGrams: Boolean = true,
-                         pd: Boolean = false): DataFrame = {
-    val spans = if (pd) maximalSpansPD(documents, minLen, levels, hashGrams)
-                else maximalSpans(documents, minLen, levels, hashGrams)
-    cutSpans(documents, mergeSpans(spans))
+                         levels: Int = 12, hashGrams: Boolean = true): DataFrame =
+    cutSpans(documents, mergeSpans(maximalSpans(documents, minLen, levels, hashGrams)))
+
+  /** Shared phase-1 front of [[maximalSpans]] and its prefix-doubling
+    * spec reference (test sources): window-exact islands with their
+    * text, checkpointed so the corpus-scale pass runs ONCE — the guard
+    * aggregate and the suffix pipeline both read the materialized
+    * islands (the duplicated fraction only).
+    */
+  private[graft] def islandFrame(documents: DataFrame, minLen: Int,
+                                 hashGrams: Boolean): DataFrame =
+    exactSpans(documents, minLen, hashGrams)
+      .join(documents.select(col("doc_id"), col("text")), Seq("doc_id"))
+      .select(col("doc_id"), col("span_start").as("island"),
+        col("text").substr((col("span_start") + 1).cast("int"),
+          col("span_len").cast("int")).as("itext"))
+      .localCheckpoint()
+
+  /** Shared tail of the maximal-span plans: from per-position
+    * neighbor-LCP maxima `m(p)` to maximal span rows — left-maximality
+    * needs only a single lag (m decreases by at most 1 per position),
+    * and the window is doc+island bounded (never corpus-wide).
+    */
+  private[graft] def leftMaximalSpans(m: DataFrame, minLen: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("doc_id"), col("island")).orderBy(col("pos"))
+    m.withColumn("__pm", lag(col("m"), 1).over(w))
+      .filter(col("m") >= minLen &&
+        (col("__pm").isNull || col("__pm") < col("m") + 1))
+      .select(col("doc_id"), col("pos").as("span_start"),
+        (col("pos") + col("m")).as("span_end"), col("m").as("span_len"))
   }
 
   /** #40i dedup_spans_maximal: exact MAXIMAL duplicated substrings —
@@ -994,37 +1005,13 @@ object Dedup {
     * (2^levels − 1 chars) rather than silently truncating span
     * lengths. The DuckDB oracle replays the identical construction
     * (row_number suffix order + the same binary LCP descent).
+    *
+    * A Manber–Myers prefix-doubling plan (fixed-width rank rows instead
+    * of suffix strings) lives in the test sources as this operator's
+    * spec reference, pinned output-identical there. It only beat the
+    * string sort on islands of 16 384 chars, past the default cap of
+    * 4 095, so it no longer ships as a runtime alternative.
     */
-  /** Shared phase-1 front of [[maximalSpans]] / [[maximalSpansPD]]:
-    * window-exact islands with their text, checkpointed so the
-    * corpus-scale pass runs ONCE — the guard aggregate and the suffix
-    * pipeline both read the materialized islands (the duplicated
-    * fraction only).
-    */
-  private def islandFrame(documents: DataFrame, minLen: Int,
-                          hashGrams: Boolean): DataFrame =
-    exactSpans(documents, minLen, hashGrams)
-      .join(documents.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .select(col("doc_id"), col("span_start").as("island"),
-        col("text").substr((col("span_start") + 1).cast("int"),
-          col("span_len").cast("int")).as("itext"))
-      .localCheckpoint()
-
-  /** Shared tail of the two maximal-span plans: from per-position
-    * neighbor-LCP maxima `m(p)` to maximal span rows — left-maximality
-    * needs only a single lag (m decreases by at most 1 per position),
-    * and the window is doc+island bounded (never corpus-wide).
-    */
-  private def leftMaximalSpans(m: DataFrame, minLen: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id"), col("island")).orderBy(col("pos"))
-    m.withColumn("__pm", lag(col("m"), 1).over(w))
-      .filter(col("m") >= minLen &&
-        (col("__pm").isNull || col("__pm") < col("m") + 1))
-      .select(col("doc_id"), col("pos").as("span_start"),
-        (col("pos") + col("m")).as("span_end"), col("m").as("span_len"))
-  }
-
   def maximalSpans(documents: DataFrame, minLen: Int = 40,
                    levels: Int = 12, hashGrams: Boolean = true): DataFrame = {
     val isl = islandFrame(documents, minLen, hashGrams)
@@ -1053,7 +1040,7 @@ object Dedup {
     // maxLen guard above), the quantizer-fit bounded-driver-artifact
     // policy, and the LCP walk is the SAME byte walk the r11 native
     // expression ran ([[graft.functions.CommonPrefixChars.lcpChars]]),
-    // so every m value is bit-identical (the maximalSpansPD
+    // so every m value is bit-identical (the prefix-doubling
     // equivalence spec and the DuckDB oracle both still pin it).
     val spark = documents.sparkSession
     val sorted = pos.orderBy(col("sfx"), col("doc_id"), col("pos"))
@@ -1119,174 +1106,6 @@ object Dedup {
     leftMaximalSpans(m, minLen)
   }
 
-  /** Seed window width of [[maximalSpansPD]]'s rank ladder: the first
-    * rank is a plain sort of 8-char prefixes, then doubling takes over.
-    */
-  private val PdSeedWindow = 8
-
-  /** [[maximalSpans]] with Manber–Myers prefix-doubling suffix ranking
-    * — the 100 TB path. Output-identical (spec-asserted); the physical
-    * difference is what crosses the network:
-    *
-    *  - [[maximalSpans]] materializes every island SUFFIX as a string:
-    *    an island of L chars ships O(L²/2) chars through the range
-    *    sort. Bounded by the `levels` cap, but at cap 4095 a single
-    *    full-length island costs ~8M shuffled chars — the documented
-    *    "explicit price of exact maximality". Fastest at bench scale
-    *    (one sort), quadratic-per-island at corpus scale.
-    *  - This twin never builds a suffix string. It sorts 8-char seed
-    *    windows once, then runs ⌈log2 maxLen⌉−3 doubling rounds: rank
-    *    of window 2w = dense-ish rank of the pair (rank_w[i],
-    *    rank_w[i+w] | −1), assigned by sorting the DISTINCT pairs and
-    *    joining back (min-over-group keeps equal keys equal; ranks
-    *    need only be order-isomorphic). Every round shuffles
-    *    fixed-width rows — O(positions · log cap) total bytes.
-    *
-    * Neighbor LCPs reuse the SAME ladder instead of comparing suffix
-    * strings: walk windows from the largest computed down to the seed —
-    * `rank_w[a+acc] == rank_w[b+acc]` (null-safe; a position past the
-    * island end has no rank row) proves the next w chars match, so
-    * `acc += w` and both cursors advance; the final <8-char tail is an
-    * explicit substring descent over the stored seed windows. Matches
-    * on identical-but-truncated suffixes overshoot by design and are
-    * capped by `least(acc, remaining_a, remaining_b)` — exactly the
-    * true LCP in that case (the remainders are equal strings).
-    *
-    * Rounds stop early once every rank is unique (then no two distinct
-    * suffixes share a longer window, so higher levels of the walk
-    * cannot match) — real corpora resolve in a few rounds; the
-    * adversarial all-same-char corpus runs all ⌈log2 cap⌉.
-    */
-  def maximalSpansPD(documents: DataFrame, minLen: Int = 40,
-                     levels: Int = 12, hashGrams: Boolean = true): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val isl = islandFrame(documents, minLen, hashGrams)
-    val maxLen = isl.agg(coalesce(max(length(col("itext"))), lit(0))).head.getInt(0)
-    require(maxLen < (1 << levels),
-      s"maximalSpansPD: island of $maxLen chars exceeds the 2^$levels-1 cap — raise `levels`")
-    // Fixed-width position rows: island-local offset, remaining suffix
-    // length, and the seed window — never a full suffix.
-    val posF = isl
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("island").cast("long").as("island"), col("itext"),
-        explode(sequence(lit(0), length(col("itext")) - 1)).as("i0"))
-      .select(col("doc_id"), col("island"), col("i0").cast("long").as("i"),
-        (length(col("itext")) - col("i0")).cast("long").as("slen"),
-        col("itext").substr(col("i0") + 1, lit(PdSeedWindow)).as("w8"))
-      .localCheckpoint()
-    val nPos = posF.count()
-    // Seed rank: sort the DISTINCT 8-char windows (identical windows —
-    // truncated or not — must share a rank; sorting distinct values
-    // keeps zipWithIndex deterministic with no tie-handling).
-    val r0map = posF.select(col("w8")).distinct().orderBy(col("w8"))
-      .rdd.zipWithIndex().map { case (r, k) => (r.getString(0), k) }
-      .toDF("w8", "rank").localCheckpoint()
-    var cur = posF.join(r0map, Seq("w8"))
-      .select(col("doc_id"), col("island"), col("i"), col("slen"), col("rank"))
-      .localCheckpoint()
-    var ranksUnique = r0map.count() == nPos
-    // Rank ladder, largest window first (the walk consumes it that way).
-    var tabs = List((PdSeedWindow, cur))
-    var w = PdSeedWindow
-    while (w < maxLen && !ranksUnique) {
-      val nxt = cur.select(col("doc_id"), col("island"),
-        (col("i") - w).as("i"), col("rank").as("__rn"))
-      val keyed = cur.join(nxt, Seq("doc_id", "island", "i"), "left")
-        .select(col("doc_id"), col("island"), col("i"), col("slen"),
-          col("rank").as("__ra"), coalesce(col("__rn"), lit(-1L)).as("__rb"))
-      // −1 for "no right half" sorts first: a truncated suffix is a
-      // prefix of any longer suffix sharing its chars, and shorter
-      // sorts lexicographically smaller.
-      val kmap = keyed.select(col("__ra"), col("__rb")).distinct()
-        .orderBy(col("__ra"), col("__rb"))
-        .rdd.zipWithIndex().map { case (r, k) => (r.getLong(0), r.getLong(1), k) }
-        .toDF("__ra", "__rb", "rank").localCheckpoint()
-      cur = keyed.join(kmap, Seq("__ra", "__rb"))
-        .select(col("doc_id"), col("island"), col("i"), col("slen"), col("rank"))
-        .localCheckpoint()
-      ranksUnique = kmap.count() == nPos
-      w *= 2
-      tabs = (w, cur) :: tabs
-    }
-    // Final suffix order — identical to the string sort's
-    // (rank is order-isomorphic to the suffix; ties are identical
-    // suffixes, broken by doc_id/pos exactly as there).
-    val idx = cur
-      .select(col("doc_id"), col("island"), col("i"), col("slen"), col("rank"),
-        (col("island") + col("i")).as("pos"))
-      .orderBy(col("rank"), col("doc_id"), col("pos"))
-      .rdd.zipWithIndex()
-      .map { case (r, k) =>
-        (k, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(5)) }
-      .toDF("idx", "doc_id", "island", "i", "slen", "pos")
-      .localCheckpoint()
-    val adj = idx.select(col("idx").as("ia"), col("doc_id").as("da"),
-        col("island").as("la"), col("i").as("xa"), col("slen").as("sa_len"))
-      .join(idx.select((col("idx") - 1).as("ia"), col("doc_id").as("db"),
-        col("island").as("lb"), col("i").as("xb"), col("slen").as("sb_len")),
-        Seq("ia"))
-      .withColumn("acc", lit(0L))
-    // Rank-ladder LCP walk: two equi-joins per level on the bounded
-    // pairs frame (keys are computed cursor positions — still hash
-    // joins); checkpoint per level keeps the plan linear in levels.
-    val walked = tabs.foldLeft(adj) { case (df, (wk, tab)) =>
-      val ta = tab.select(col("doc_id").as("__tda"), col("island").as("__tla"),
-        col("i").as("__tja"), col("rank").as("__rka"))
-      val tb = tab.select(col("doc_id").as("__tdb"), col("island").as("__tlb"),
-        col("i").as("__tjb"), col("rank").as("__rkb"))
-      df.join(ta, df("da") === ta("__tda") && df("la") === ta("__tla") &&
-          (df("xa") + df("acc")) === ta("__tja"), "left")
-        .join(tb, df("db") === tb("__tdb") && df("lb") === tb("__tlb") &&
-          (df("xb") + df("acc")) === tb("__tjb"), "left")
-        .withColumn("acc", col("acc") +
-          when(col("__rka").isNotNull && col("__rka") === col("__rkb"),
-            lit(wk.toLong)).otherwise(lit(0L)))
-        .drop("__tda", "__tla", "__tja", "__rka", "__tdb", "__tlb", "__tjb", "__rkb")
-        .localCheckpoint()
-    }
-    // Tail: the remaining common prefix is < seed width (the seed level
-    // just ran), so the stored 8-char windows at the advanced cursors
-    // decide it — explicit substring descent with the full-window rule,
-    // overshoot capped by the windows' own lengths.
-    val wa = posF.select(col("doc_id").as("__tda"), col("island").as("__tla"),
-      col("i").as("__tja"), col("w8").as("__wa"))
-    val wb = posF.select(col("doc_id").as("__tdb"), col("island").as("__tlb"),
-      col("i").as("__tjb"), col("w8").as("__wb"))
-    val tailed0 = walked
-      .join(wa, walked("da") === wa("__tda") && walked("la") === wa("__tla") &&
-        (walked("xa") + walked("acc")) === wa("__tja"), "left")
-      .join(wb, walked("db") === wb("__tdb") && walked("lb") === wb("__tlb") &&
-        (walked("xb") + walked("acc")) === wb("__tjb"), "left")
-      .withColumn("tacc", lit(0L))
-    val tailed = Seq(4, 2, 1).foldLeft(tailed0) { (df, wd) =>
-      df.withColumn("tacc", col("tacc") +
-        when(length(col("__wa")) >= col("tacc") + wd &&
-          length(col("__wb")) >= col("tacc") + wd &&
-          col("__wa").substr((col("tacc") + 1).cast("int"), lit(wd)) ===
-            col("__wb").substr((col("tacc") + 1).cast("int"), lit(wd)),
-          lit(wd.toLong)).otherwise(lit(0L)))
-    }
-    // Same double-consumption checkpoint as the string-sort form: the
-    // tail's two window joins + descent feed both the __ln and __lp
-    // joins below.
-    val pairs = tailed.select(col("ia"),
-      least(
-        col("acc") + least(col("tacc"),
-          coalesce(length(col("__wa")), lit(0)).cast("long"),
-          coalesce(length(col("__wb")), lit(0)).cast("long")),
-        col("sa_len"), col("sb_len")).as("lcp"))
-      .localCheckpoint()
-    val m = idx
-      .join(pairs.select(col("ia"), col("lcp").as("__ln")), col("idx") === col("ia"), "left")
-      .drop("ia")
-      .join(pairs.select((col("ia") + 1).as("ib"), col("lcp").as("__lp")),
-        col("idx") === col("ib"), "left")
-      .select(col("doc_id"), col("island"), col("pos"),
-        greatest(coalesce(col("__ln"), lit(0L)), coalesce(col("__lp"), lit(0L))).as("m"))
-    leftMaximalSpans(m, minLen)
-  }
-
   /** #40j span_stats: corpus-level duplication profile over a span
     * frame (any `(doc_id, span_start, span_end, span_len)` emitter —
     * [[maximalSpans]] for Lee-et-al-grade repeat statistics,
@@ -1329,10 +1148,10 @@ object Dedup {
     * the join skew-splits under AQE.
     *
     * Pair source: any (id1, id2) emitter plugs in. At corpus scale the
-    * banded-LSH emitter ([[minhashPairs]] / [[minhashPairsPortable]])
-    * is the default — candidate generation bounded by band-bucket
-    * occupancy — while the exact ngram-Jaccard inverted index's
-    * posting-intersection cost tracks pair count; both ship as oracle
+    * banded-LSH emitter ([[minhashPairsPortable]]) is the default —
+    * candidate generation bounded by band-bucket occupancy — while the
+    * exact ngram-Jaccard inverted index's posting-intersection cost
+    * tracks pair count; both ship as oracle
     * rows (dedup_keep_best / dedup_keep_best_lsh, the
     * dedup_clusters/dedup_clusters_lsh split at keep-best grain).
     */
@@ -1357,16 +1176,6 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         col("quality_score"), col("keep_id"),
         (col("doc_id") === col("keep_id")).cast("int").as("is_kept"))
-  }
-
-  /** Signature table (doc_id, mh_0..mh_{Perms−1}) via codegen'd min
-    * aggregates over the posting rows — one shuffle on doc_id carrying
-    * fixed-width partial minima (map-side combined).
-    */
-  def minhashSignatures(postings: DataFrame): DataFrame = {
-    val mhCols = (0 until Perms).map(i =>
-      min(xxhash64(col("h") + lit(i.toLong))).as(s"mh_$i"))
-    postings.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
   }
 
   /** Bounded pair expansion within an LSH bucket: buckets at or under
@@ -1394,30 +1203,6 @@ object Dedup {
           struct(x.as("a"), y.as("b"))))))
       .otherwise(transform(slice(xs, lit(2), size(xs)), y =>
         struct(element_at(xs, 1).as("a"), y.as("b"))))
-
-  /** #38 dedup_minhash: LSH candidate pairs verified by exact Jaccard.
-    * Signatures band into Bands keys; docs sharing any (band, key) bucket
-    * become candidates; candidates are verified against the true shingle
-    * Jaccard. The join carries only (band, key, doc_id) — never text —
-    * and the expensive posting pipeline is evaluated once: the verify
-    * branch rebuilds shingle arrays only for the (tiny) candidate set.
-    * Buckets larger than `maxBucket` expand as stars, not all-pairs
-    * (see [[cappedPairs]]) — the guard that keeps one degenerate band
-    * bucket from going quadratic at 100 TB.
-    */
-  def minhashPairs(documents: DataFrame, minJaccard: Double = 0.3,
-                   maxBucket: Int = 1024): DataFrame = {
-    val banded = minhashSignatures(shinglePostings(documents).select(col("doc_id"), col("h")))
-      .select(
-        col("doc_id"),
-        explode(array((0 until Bands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64((b * RowsPerBand until (b + 1) * RowsPerBand)
-              .map(i => col(s"mh_$i")): _*).as("band_key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    minhashVerify(banded, documents, minJaccard, maxBucket)
-  }
 
   /** Row-form shingle postings carrying the shingle STRING — the
     * portable-hash twin of [[shinglePostings]] (same posexplode + lead
@@ -1462,21 +1247,24 @@ object Dedup {
   private[graft] def permA(i: Int): Long = 1L + permConst(s"a#$i", PermM - 1)
   private[graft] def permB(i: Int): Long = permConst(s"b#$i", PermM)
 
-  /** #38 dedup_minhash (cross-engine form): [[minhashPairs]] with the
-    * permutation family swapped from seeded xxhash64 to one md5 per
-    * shingle folded to 32 bits (first 8 hex chars — Spark `conv`,
-    * DuckDB `CAST('0x…' AS BIGINT)`, same value) followed by `Perms`
-    * affine permutations (a_i·h + b_i) mod (2^31−1) — plain codegen'd
-    * BIGINT arithmetic both engines evaluate identically (see
-    * [[permA]]/[[permB]] for the overflow-freedom argument). Band keys
-    * are md5-of-concatenated-mins (Bands doc-grain hashes, noise).
-    * Byte-for-byte reproducible in DuckDB, so this variant carries the
-    * oracle; the xxhash64 family stays the production default (hash
-    * family is pluggable config, and xxhash64 skips the hex decode).
-    * Cost is ONE md5 per posting — the earlier portable form computed
-    * `Perms` md5s per posting and ran 3× the xxhash64 family; this one
-    * benches within ~25% of it (1.7 s vs 1.4 s in-run at sf0.1, the
-    * md5+hex-decode per posting being the remaining gap).
+  /** #38 dedup_minhash: LSH candidate pairs verified by exact Jaccard.
+    * Each document's `Perms`-wide MinHash signature bands into `Bands`
+    * keys ([[portableBandKeys]]); docs sharing any (band, key) bucket
+    * become candidates, and candidates are verified against the true
+    * shingle Jaccard ([[minhashVerify]]). The join carries only (band,
+    * key, doc_id) — never text — and the verify branch builds shingle
+    * arrays only for the (tiny) candidate set. Buckets larger than
+    * `maxBucket` expand as stars, not all-pairs (see [[cappedPairs]]) —
+    * the guard that keeps one degenerate band bucket from going
+    * quadratic at 100 TB.
+    *
+    * Permutation family: one md5 per shingle folded to 32 bits, then
+    * `Perms` affine permutations (a_i·h + b_i) mod (2^31−1) — plain
+    * BIGINT arithmetic that DuckDB evaluates identically (see
+    * [[permA]]/[[permB]] for the overflow-freedom argument); band keys
+    * are md5 of the concatenated minima. The oracle therefore replays
+    * this plan byte for byte, and it is the `pairsOf` default of
+    * [[graft.CorpusPipeline.curate]].
     */
   def minhashPairsPortable(documents: DataFrame, minJaccard: Double = 0.3,
                            maxBucket: Int = 1024): DataFrame =
@@ -1674,82 +1462,22 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** 64-bit SimHash from a (materialized) token-hash column: bit j is set
-    * when more than half the token hashes have bit j set.
-    */
-  def simhashFromHashes(thash: Column): Column = {
-    val n = size(thash)
-    val bits = (0 until 64).map { j =>
-      val cnt = size(filter(thash, h => shiftright(h, j).bitwiseAND(lit(1L)) === 1))
-      when(cnt * 2 > n, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Convenience: SimHash straight from text (fixture/spec use — operator
-    * paths materialize the token hashes first).
-    */
-  def simhash(text: Column): Column =
-    simhashFromHashes(transform(tokens(text), w => xxhash64(w)))
-
-  /** #39 dedup_simhash: candidate pairs share at least one of four
-    * 16-bit signature chunks (exact for hamming ≤ 3 by pigeonhole;
-    * recall above hamming 3 is partial — candidates still need SOME
-    * chunk to collide); verified by full hamming distance ≤ maxHamming.
-    * Chunk buckets are collected and pair-expanded locally (computing
-    * the signature aggregation once, where the former self-join derived
-    * it twice), with the same `maxBucket` star-expansion guard as
-    * minhash against degenerate buckets.
-    */
-  def simhashPairs(documents: DataFrame, maxHamming: Int = 8,
-                   maxBucket: Int = 1024): DataFrame = {
-    // Explode + codegen'd bit-count aggregates (the HOF twin
-    // simhashFromHashes evaluates interpreted — fine for fixtures, 64
-    // interpreted array scans per row in the hot path are not).
-    val exploded = documents
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .select(col("doc_id"), xxhash64(col("w")).as("h"))
-    val bitSums = (0 until 64).map(j =>
-      sum(shiftright(col("h"), j).bitwiseAND(lit(1L))).as(s"b_$j")) :+
-      count(lit(1)).as("n")
-    val counts = exploded.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-    val sig = counts.select(col("doc_id"),
-      (0 until 64).map(j =>
-        when(col(s"b_$j") * 2 > col("n"), lit(1L << j)).otherwise(lit(0L)))
-        .reduce(_ + _).as("sim"))
-    val chunked = sig.select(
-      col("doc_id"), col("sim"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("sim"), c * 16).bitwiseAND(lit(0xFFFFL)).as("chunk_key"))
-      }: _*)).as("ck"))
-      .select(col("doc_id"), col("sim"),
-        col("ck.chunk").as("chunk"), col("ck.chunk_key").as("chunk_key"))
-    chunked
-      .groupBy(col("chunk"), col("chunk_key"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sim")))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .select(explode(cappedPairs(col("ms"), maxBucket)).as("p"))
-      .select(col("p.a.doc_id").as("id1"), col("p.b.doc_id").as("id2"),
-        col("p.a.sim").as("sim1"), col("p.b.sim").as("sim2"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("sim1").bitwiseXOR(col("sim2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id1"), col("id2"), col("hamming"))
-  }
-
-  /** #39 dedup_simhash (cross-engine form): [[simhashPairs]] with the
-    * token hash swapped from xxhash64 to md5 — bit j (0..63) of a token
-    * is bit (3 − j mod 4) of hex digit ⌊j/4⌋ of md5(token), extracted
-    * with `conv(digit, 16, 10)` here and `strpos('0123456789abcdef', …)`
-    * in DuckDB (different functions, identical values). The signature is
-    * published as four 16-bit chunk keys (k0..k3) instead of one 64-bit
-    * long — bit 63 as 1L<<63 would overflow DuckDB's checked BIGINT
-    * arithmetic, and the chunks are what the bucketing uses anyway.
-    * Hamming = Σ bit_count(k_a XOR k_b) over the four chunks. Empty
-    * tokens are dropped on both engines (split edge artifacts, not
-    * content). Same bucket-collect + [[cappedPairs]] plan shape as the
-    * production xxhash64 path.
+  /** #39 dedup_simhash: 64-bit SimHash near-dup pairs. Bit j of a
+    * document's signature is set when more than half its tokens have
+    * bit j set in their token hash — bit j (0..63) of a token is bit
+    * (3 − j mod 4) of hex digit ⌊j/4⌋ of md5(token), which DuckDB
+    * extracts with `strpos('0123456789abcdef', …)` to the identical
+    * value, so the oracle replays this plan byte for byte. The
+    * signature is published as four 16-bit chunk keys (k0..k3) instead
+    * of one 64-bit long — bit 63 as 1L<<63 would overflow DuckDB's
+    * checked BIGINT arithmetic, and the chunks are what the bucketing
+    * uses anyway. Candidate pairs share at least one chunk (exact for
+    * hamming ≤ 3 by pigeonhole; recall above hamming 3 is partial) and
+    * are verified by the full hamming distance Σ bit_count(k_a XOR k_b)
+    * ≤ maxHamming ([[hammingBandPairs]]). Chunk buckets are collected
+    * and pair-expanded locally under the [[cappedPairs]] star guard, so
+    * one degenerate bucket cannot go quadratic. Empty tokens are dropped
+    * on both engines (split edge artifacts, not content).
     */
   def simhashPairsPortable(documents: DataFrame, maxHamming: Int = 8,
                            maxBucket: Int = 1024): DataFrame = {
@@ -1827,47 +1555,18 @@ object Dedup {
       .select(col("id1"), col("id2"), col("hamming"))
   }
 
-  /** #40 ngram_jaccard: exact bigram-shingle Jaccard for candidate pairs
-    * sharing (source, lang) metadata buckets, at or above minJaccard.
-    *
-    * All-pairs-within-bucket with one fixed-width set intersection per
-    * pair. Right when buckets are modest (the metadata buckets here);
-    * for huge buckets / long documents switch to
-    * [[ngramJaccardInvertedIndex]] — identical results, posting-join
-    * plan, no quadratic intersect work.
-    */
-  def ngramJaccard(documents: DataFrame, minJaccard: Double = 0.05): DataFrame = {
-    // Arrays assembled from the codegen posting pipeline (collect_list
-    // over distinct posting rows) rather than the interpreted HOF
-    // shingle path; intersection ignores element order.
-    val d = shinglePostings(documents)
-      .groupBy(col("doc_id"), col("source"), col("lang"))
-      .agg(collect_list(col("h")).as("sh"))
-    d.as("a").join(d.as("b"),
-        col("a.source") === col("b.source") && col("a.lang") === col("b.lang") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        size(array_intersect(col("a.sh"), col("b.sh"))).as("n_common"),
-        (size(col("a.sh")) + size(col("b.sh"))).as("n_total"))
-      .select(col("id1"), col("id2"), col("n_common"),
-        (col("n_total") - col("n_common")).as("n_union"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") / nullif(col("n_union").cast("double"), lit(0.0)))
-      .filter(col("jaccard") >= minJaccard)
-  }
-
   /** #40v minhash_recall: banding recall of the minhash LSH pipeline
     * against exact ground truth — the dedup-tier twin of
     * [[Similarity.annRecall]], and the dial (bands × rows-per-band vs
     * threshold) every production near-dup run is tuned by before it is
     * trusted to DELETE data.
     *
-    * Truth = [[ngramJaccard]]'s metadata-blocked exact pairs at the same
-    * threshold (the labeled subset — corpus-wide exact all-pairs is the
-    * quadratic the LSH exists to avoid, so recall is measured on the
-    * blocked universe where exactness is affordable; a banding miss
-    * there is a banding miss, the blocking only bounds which pairs we
-    * can GRADE). Found = [[minhashPairsPortable]]'s verified pairs.
+    * Truth = [[ngramJaccardInvertedIndex]]'s metadata-blocked exact
+    * pairs at the same threshold (the labeled subset — corpus-wide
+    * exact all-pairs is the quadratic the LSH exists to avoid, so
+    * recall is measured on the blocked universe where exactness is
+    * affordable; a banding miss there is a banding miss, the blocking
+    * only bounds which pairs we can GRADE). Found = [[minhashPairsPortable]]'s verified pairs.
     * Output is one row: n_truth, n_hits (= |truth ∩ found| — the
     * intersection, NOT the banding's own pair count), n_banding_pairs
     * (the banding's full verified count, which includes cross-block
@@ -1880,7 +1579,7 @@ object Dedup {
     */
   def minhashRecall(documents: DataFrame, minJaccard: Double = 0.3,
                     maxBucket: Int = 1024): DataFrame = {
-    val truth = ngramJaccard(documents, minJaccard)
+    val truth = ngramJaccardInvertedIndex(documents, minJaccard)
       .select(col("id1"), col("id2"), lit(1L).as("t"))
     val found = minhashPairsPortable(documents, minJaccard, maxBucket)
       .select(col("id1"), col("id2"), lit(1L).as("f"))
@@ -1925,7 +1624,6 @@ object Dedup {
     */
   private def guardedShinglePostings(documents: DataFrame, maxPostingDf: Int,
                                      stopShingleDf: Option[Int]): DataFrame = {
-    require(maxPostingDf > 0, "maxPostingDf must be positive")
     // The guarded frame feeds THREE consumers (self-join side a, side
     // b, per-doc sizes) and Spark does not reuse the exchanges across
     // them (verified r8: 0 ReusedExchange, the full scan→window→
@@ -1934,48 +1632,29 @@ object Dedup {
     // the postings ONCE; the joins read the stored rows.
     //
     // r12: the RAW postings checkpoint first and the df guard reads the
-    // STORED rows — [[guardedShinglePostingsPlan]]'s single-plan shape
-    // put the guard aggregate UNDER the checkpoint, so materialization
-    // ran the full scan→tokenize→gram→hash derivation twice (once for
-    // the guard's 1-row max-df, once for the posting rows: measured
-    // 11 s of the 29 s summed task time on containment_pairs). The
-    // 1-row guard overlay per consumer is a broadcast crossJoin over an
-    // in-memory scan — noise. Semantics unchanged: the guard still
-    // fires before any consumer's self-join expands, because every
-    // consumer reads the overlaid frame.
-    val p0 = shinglePostings(documents).localCheckpoint()
-    stopShingleDf match {
-      case Some(cut) =>
-        require(cut > 0, "stopShingleDf cutoff must be positive")
-        val keep = p0.groupBy(col("source"), col("lang"), col("h"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cut)
-        // The df-filtered frame is what the consumers fan out over —
-        // materialize it too, or each consumer re-runs the keep join.
-        p0.join(keep, Seq("source", "lang", "h")).drop("__df")
-          .localCheckpoint()
-      case None =>
-        val guard = p0.groupBy(col("source"), col("lang"), col("h"))
-          .agg(count(lit(1)).as("__df"))
-          .agg(max(col("__df")).as("__maxdf"))
-          .withColumn("__chk",
-            when(col("__maxdf") > maxPostingDf, raise_error(concat(
-              lit(s"shingle postings: a shingle's document frequency exceeds maxPostingDf=$maxPostingDf (df="),
-              col("__maxdf").cast("string"),
-              lit(") — the (source, lang, h) self-join would emit df^2/2 rows from that key; " +
-                "drop boilerplate via stopShingleDf, or raise maxPostingDf knowingly"))))
-              .otherwise(lit(1)))
-        p0.crossJoin(broadcast(guard))
-          .filter(col("__chk") === 1)
-          .drop("__maxdf", "__chk")
-    }
+    // STORED rows — a guard aggregate UNDER the checkpoint made
+    // materialization run the full scan→tokenize→gram→hash derivation
+    // twice (once for the guard's 1-row max-df, once for the posting
+    // rows: measured 11 s of the 29 s summed task time on
+    // containment_pairs). The 1-row guard overlay per consumer is a
+    // broadcast crossJoin over an in-memory scan — noise. Semantics
+    // unchanged: the guard still fires before any consumer's self-join
+    // expands, because every consumer reads the overlaid frame.
+    val guarded = guardOver(shinglePostings(documents).localCheckpoint(),
+      maxPostingDf, stopShingleDf)
+    // Stop-shingle mode: the df-filtered frame is what the consumers
+    // fan out over — materialize it too, or each consumer re-runs the
+    // keep join.
+    if (stopShingleDf.isDefined) guarded.localCheckpoint() else guarded
   }
 
-  /** The un-checkpointed plan (separate for plan-shape tests). */
-  private[graft] def guardedShinglePostingsPlan(
-      documents: DataFrame, maxPostingDf: Int,
-      stopShingleDf: Option[Int]): DataFrame = {
-    val postings = shinglePostings(documents)
+  /** The df guard / stop-shingle filter of [[guardedShinglePostings]]
+    * over any (doc_id, source, lang, h) posting frame — un-checkpointed
+    * postings give the single plan the plan-shape tests inspect.
+    */
+  private[graft] def guardOver(postings: DataFrame, maxPostingDf: Int,
+                               stopShingleDf: Option[Int]): DataFrame = {
+    require(maxPostingDf > 0, "maxPostingDf must be positive")
     stopShingleDf match {
       case Some(cut) =>
         require(cut > 0, "stopShingleDf cutoff must be positive")
@@ -2002,11 +1681,13 @@ object Dedup {
     }
   }
 
-  /** Inverted-index twin of [[ngramJaccard]]: explode shingles, equi-join
-    * postings on (bucket, shingle-hash), count matches per pair — the
-    * per-pair work is a codegen'd count and zero-overlap pairs never
-    * materialize. Scales to buckets where all-pairs intersection cannot;
-    * requires minJaccard > 0. Postings are density-guarded (see
+  /** #40 ngram_jaccard: exact bigram-shingle Jaccard for every pair
+    * sharing (source, lang) metadata buckets, at or above minJaccard.
+    * Inverted index: explode shingles, equi-join postings on (bucket,
+    * shingle-hash), count matches per pair — the per-pair work is a
+    * codegen'd count and zero-overlap pairs never materialize, so no
+    * bucket goes all-pairs; requires minJaccard > 0. Postings are
+    * density-guarded (see
     * [[guardedShinglePostings]]): a shingle whose document frequency
     * exceeds `maxPostingDf` raises before the self-join expands, or is
     * dropped as a stop shingle when `stopShingleDf` opts in.

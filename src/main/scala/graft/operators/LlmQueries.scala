@@ -10,8 +10,9 @@ import graft.sources.Tables
   * cross-engine oracle: the hash-seeded operators either embed their
   * driver-deterministic constants as literals the SQL replays
   * (hyperplane LSH, IVF seeded quantizer) or run a portable hash family
-  * (md5-based minhash/simhash, string-keyed exact spans); the xxhash64
-  * variants stay the production defaults, spec-asserted equivalent.
+  * (md5-based minhash/simhash — the only near-dup emitters, so the
+  * curation default is the checked path — and string-keyed exact
+  * spans, whose xxhash64-key default is spec-asserted equivalent).
   */
 object LlmQueries {
 
@@ -72,18 +73,6 @@ object LlmQueries {
       val (merges, _) = Bpe.trainBatched(documents, merges = BpeTokenizeMerges)
       () => Bpe.fertility(documents, merges).orderBy(col("lang"))
     }))
-
-  /** Maximal-repeat span source honoring the `spark.graft.spans.pd`
-    * session conf: `false` (default) = the string-sort plan (wins at
-    * bench scale), `true` = the Manber–Myers prefix-doubling twin (the
-    * long-island / corpus-scale path). The twins are spec-asserted
-    * output-identical, so every consuming oracle row holds in both
-    * modes — the flag swaps the PHYSICAL plan only.
-    */
-  private def maximalSpansMode(s: SparkSession, d: String, minLen: Int): DataFrame =
-    if (s.conf.get("spark.graft.spans.pd", "false").toBoolean)
-      Dedup.maximalSpansPD(docs(s, d), minLen = minLen)
-    else Dedup.maximalSpans(docs(s, d), minLen = minLen)
 
   /** Shared CTE body for the DSIR oracles: hashed unigram+bigram bucket
     * fit against the lang='en' target, per-doc log-weights in `w`.
@@ -164,9 +153,8 @@ object LlmQueries {
         .orderBy(col("content_hash"))
     }),
 
-    // Portable md5-permutation form carries the oracle (round 6); the
-    // xxhash64 family stays the production default (8-byte shuffle keys),
-    // spec-gated by DedupTextSpec's ground-truth fixtures.
+    // The md5-permutation family: the oracle replays it byte for byte,
+    // and it is CorpusPipeline.curate's default pair emitter.
     "dedup_minhash" -> ((s, d) =>
       Dedup.minhashPairsPortable(docs(s, d))
         .withColumn("jaccard", round(col("jaccard"), 6))
@@ -347,18 +335,14 @@ object LlmQueries {
 
     // Suffix-grade maximal repeats (Lee et al. span statistics); the
     // window-exact row above stays as the cheap detection tier.
-    // `spark.graft.spans.pd=true` swaps in the prefix-doubling twin on
-    // every maximal-grain row (output-identical, spec-asserted, so the
-    // oracle holds in both modes) — the opt-in 100 TB path whose
-    // fixed-width shuffles win past the long-island crossover (§5).
     "dedup_spans_maximal" -> ((s, d) =>
-      maximalSpansMode(s, d, minLen = 40)
+      Dedup.maximalSpans(docs(s, d), minLen = 40)
         .orderBy(col("doc_id"), col("span_start"))),
 
     // Corpus-level duplication profile over the maximal repeats — the
     // report a curation run reads before picking a removal threshold.
     "span_stats" -> ((s, d) =>
-      Dedup.spanStats(maximalSpansMode(s, d, minLen = 40))
+      Dedup.spanStats(Dedup.maximalSpans(docs(s, d), minLen = 40))
         .orderBy(col("len_bucket"))),
 
     // Removal at the SAME grain the statistics tier reports: cut the
@@ -367,7 +351,7 @@ object LlmQueries {
     // maximal lengths).
     "dedup_spans_maximal_clean" -> ((s, d) =>
       Dedup.cutSpans(docs(s, d),
-          Dedup.mergeSpans(maximalSpansMode(s, d, minLen = 40)))
+          Dedup.mergeSpans(Dedup.maximalSpans(docs(s, d), minLen = 40)))
         .orderBy(col("doc_id"))),
 
     // Quality-aware canonical selection over the oracle-friendly ngram
@@ -685,8 +669,9 @@ object LlmQueries {
     "length_profile" -> ((s, d) =>
       TextAnalysis.lengthProfile(docs(s, d)).orderBy(col("lang"))),
 
-    // The composed curation DAG with the oracle-friendly pair emitter
-    // (ngram Jaccard; the minhash default is seeded-hash → rows-only).
+    // The composed curation DAG with the exact ngram-Jaccard pair
+    // emitter (the minhash default is oracle-checked on its own rows:
+    // dedup_minhash, dedup_keep_best_lsh).
     // The split column is deterministic engine-side hashing — excluded
     // here, covered by the splitByHash spec.
     "corpus_pipeline" -> ((s, d) =>

@@ -110,8 +110,8 @@ object ScaleProbe {
             (x, j) => x * when(pmod(hash(lit(i), j), lit(2)) === 0, lit(1.0f))
               .otherwise(lit(-1.0f)))))
         .reduce(_ unionByName _)
-      val tMinhash = noopTime(Dedup.minhashPairs(docs))
-      val tSimhash = noopTime(Dedup.simhashPairs(docs))
+      val tMinhash = noopTime(Dedup.minhashPairsPortable(docs))
+      val tSimhash = noopTime(Dedup.simhashPairsPortable(docs))
       val tNgram = noopTime(Dedup.ngramJaccardInvertedIndex(docs))
       val tAnnBrute = noopTime(Similarity.cosineTopK(emb))
       val tAnnLsh = noopTime(Similarity.lshTopK(emb))
@@ -175,13 +175,9 @@ object ScaleProbe {
       // (pair source bounded by band-bucket occupancy).
       val tSpansMax = noopTime(Dedup.maximalSpans(docs))
       val tKeepBestLsh = noopTime(Dedup.keepBest(docs,
-        Dedup.minhashPairs(docs, minJaccard = 0.5)))
-      // Prefix-doubling twin: shuffles O(positions·log cap) fixed-width
-      // rows where the string-sort form ships O(island²/2) suffix chars
-      // — the crossover favors PD as island length grows.
-      val tSpansPD = noopTime(Dedup.maximalSpansPD(docs))
+        Dedup.minhashPairsPortable(docs, minJaccard = 0.5)))
       println(f"[scale-r7] k=$k spans_maximal=$tSpansMax%.2f " +
-        f"keep_best_lsh=$tKeepBestLsh%.2f spans_maximal_pd=$tSpansPD%.2f")
+        f"keep_best_lsh=$tKeepBestLsh%.2f")
       // Round-7 curation reports: sentence-grain count-by-hash,
       // asymmetric containment (posting self-join), per-bench rollup
       // (broadcast-asymmetric), span profile (maximal pipeline + agg).

@@ -21,16 +21,13 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ngram jaccard: hand-computed bigram overlap") {
-    val out = Dedup.ngramJaccard(docs(1L -> "a b c d", 2L -> "a b c e"), 0.01).collect()
+    val out = Dedup.ngramJaccardInvertedIndex(
+      docs(1L -> "a b c d", 2L -> "a b c e"), 0.01).collect()
     // shingles {a b, b c, c d} vs {a b, b c, c e}: |∩|=2, |∪|=4 → J=0.5
     assert(out.length == 1)
     val r = out.head
-    assert(r.getAs[Int]("n_common") == 2 && r.getAs[Int]("n_union") == 4)
+    assert(r.getAs[Long]("n_common") == 2 && r.getAs[Long]("n_union") == 4)
     assert(r.getAs[Double]("jaccard") == 0.5)
-    // The inverted-index twin must agree exactly.
-    val inv = Dedup.ngramJaccardInvertedIndex(
-      docs(1L -> "a b c d", 2L -> "a b c e"), 0.01).collect().head
-    assert(inv.getAs[Long]("n_common") == 2 && inv.getAs[Double]("jaccard") == 0.5)
   }
 
   test("shingle postings equal the array-form shingle sets") {
@@ -49,7 +46,7 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = base.replace("tok7", "changed")
     val other = (1 to 40).map(i => s"zzz$i").mkString(" ")
-    val out = Dedup.minhashPairs(docs(1L -> base, 2L -> nearDup, 3L -> other), 0.3)
+    val out = Dedup.minhashPairsPortable(docs(1L -> base, 2L -> nearDup, 3L -> other), 0.3)
       .collect()
     assert(out.length == 1)
     assert(out.head.getAs[Long]("id1") == 1L && out.head.getAs[Long]("id2") == 2L)
@@ -58,32 +55,14 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
 
   test("simhash: identical docs at hamming 0, unrelated docs filtered") {
     val a = (1 to 30).map(i => s"w$i").mkString(" ")
-    val out = Dedup.simhashPairs(docs(1L -> a, 2L -> a), maxHamming = 8).collect()
+    val out = Dedup.simhashPairsPortable(docs(1L -> a, 2L -> a), maxHamming = 8).collect()
     assert(out.length == 1 && out.head.getAs[Int]("hamming") == 0)
-  }
-
-  test("portable (md5) minhash/simhash match the ground truth the xxhash64 family finds") {
-    // Same fixtures as the production-hash tests: the hash family changes
-    // the bucketing, never the verified verdicts on clear dups/non-dups.
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val nearDup = base.replace("tok7", "changed")
+    // An unrelated doc pairs with neither of the identical two.
     val other = (1 to 40).map(i => s"zzz$i").mkString(" ")
-    val mh = Dedup.minhashPairsPortable(docs(1L -> base, 2L -> nearDup, 3L -> other), 0.3)
-      .collect()
-    assert(mh.length == 1)
-    assert(mh.head.getAs[Long]("id1") == 1L && mh.head.getAs[Long]("id2") == 2L)
-    assert(mh.head.getAs[Double]("jaccard") > 0.8)
-
-    val a = (1 to 30).map(i => s"w$i").mkString(" ")
-    val sh = Dedup.simhashPairsPortable(docs(1L -> a, 2L -> a, 3L -> other), maxHamming = 8)
-      .collect().filter(r => r.getAs[Long]("id1") == 1L && r.getAs[Long]("id2") == 2L)
-    assert(sh.length == 1 && sh.head.getAs[Int]("hamming") == 0)
-
-    // Star-capping applies identically to the portable buckets.
-    val same = (1 to 30).map(i => s"dup$i").mkString(" ")
-    val many = docs((1L to 100L).map(i => i -> same): _*)
-    val capped = Dedup.minhashPairsPortable(many, minJaccard = 0.3, maxBucket = 10).collect()
-    assert(capped.length == 99 && capped.forall(_.getAs[Long]("id1") == 1L))
+    val withOther = Dedup.simhashPairsPortable(
+      docs(1L -> a, 2L -> a, 3L -> other), maxHamming = 8).collect()
+      .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"), r.getAs[Int]("hamming")))
+    assert(withOther.toSeq == Seq((1L, 2L, 0)), withOther.mkString(","))
   }
 
   test("portable minhash permutations vary their argmin (no monotonic-map collapse)") {
@@ -115,15 +94,15 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     // bucket minimum: 99 pairs, every doc still reachable from doc 1.
     val same = (1 to 30).map(i => s"dup$i").mkString(" ")
     val many = docs((1L to 100L).map(i => i -> same): _*)
-    val mh = Dedup.minhashPairs(many, minJaccard = 0.3, maxBucket = 10).collect()
+    val mh = Dedup.minhashPairsPortable(many, minJaccard = 0.3, maxBucket = 10).collect()
     assert(mh.length == 99, s"expected 99 star pairs, got ${mh.length}")
     assert(mh.forall(_.getAs[Long]("id1") == 1L))
     assert(mh.forall(_.getAs[Double]("jaccard") == 1.0))
-    val sh = Dedup.simhashPairs(many, maxHamming = 8, maxBucket = 10).collect()
+    val sh = Dedup.simhashPairsPortable(many, maxHamming = 8, maxBucket = 10).collect()
     assert(sh.length == 99, s"expected 99 star pairs, got ${sh.length}")
     assert(sh.forall(r => r.getAs[Long]("id1") == 1L && r.getAs[Int]("hamming") == 0))
     // Small buckets are untouched: full expansion under the cap.
-    val full = Dedup.minhashPairs(docs((1L to 5L).map(i => i -> same): _*),
+    val full = Dedup.minhashPairsPortable(docs((1L to 5L).map(i => i -> same): _*),
       minJaccard = 0.3, maxBucket = 10).collect()
     assert(full.length == 10) // C(5,2)
   }
@@ -499,26 +478,6 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       // periodic doc: spans [0,7) and [1,8) union to the whole doc
       (4L, "", 1L, 8L),
       (5L, "", 1L, 8L)), out.toString)
-    // The PD twin cuts identically (flag path).
-    val pd = Dedup.removeMaximalSpans(docs, minLen = 4, pd = true)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(pd == out)
-  }
-
-  test("spans.pd conf flips the physical plan, not the rows, on the query surface") {
-    val sfDir = "/root/testdata/sf0.001"
-    def run(name: String) = graft.SparkEntry.queries(name)(spark, sfDir)
-      .collect().map(_.toString).toSeq
-    val conf = spark.conf
-    val base = Seq("dedup_spans_maximal", "span_stats",
-      "dedup_spans_maximal_clean").map(n => n -> run(n)).toMap
-    conf.set("spark.graft.spans.pd", "true")
-    try {
-      base.foreach { case (n, rows) =>
-        assert(run(n) == rows, s"$n drifted under spans.pd=true")
-      }
-    } finally conf.unset("spark.graft.spans.pd")
   }
 
   test("maximal spans: island over the levels cap fails loudly") {
@@ -528,7 +487,7 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e.getMessage.contains("cap"))
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.maximalSpansPD(docs, minLen = 4, levels = 5)
+      MaximalSpansPD(docs, minLen = 4, levels = 5)
     }
     assert(e2.getMessage.contains("cap"))
   }
@@ -544,7 +503,7 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       (1L, "ghABCDEFij"), (2L, "klABCDEmn"), (3L, "opBCDEFqr"),
       (4L, "aaaaaaaa"), (5L, "aaaaaaaa"), (6L, "zzqqqqqqqqzz")
     ).toDF("doc_id", "text")
-    assert(collectSpans(Dedup.maximalSpansPD(shaped, minLen = 4)) ==
+    assert(collectSpans(MaximalSpansPD(shaped, minLen = 4)) ==
       collectSpans(Dedup.maximalSpans(shaped, minLen = 4)))
     // A seeded composite corpus: shared phrases at varied offsets build
     // islands well past the 8-char seed window, so the ladder actually
@@ -561,18 +520,18 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
         .map(_ => phrases(rnd.nextInt(phrases.size))).mkString(" | ")
       (id, s"<$id> $body <end$id>")
     }.toDF("doc_id", "text")
-    val pd = collectSpans(Dedup.maximalSpansPD(docs, minLen = 6))
+    val pd = collectSpans(MaximalSpansPD(docs, minLen = 6))
     val ss = collectSpans(Dedup.maximalSpans(docs, minLen = 6))
     assert(pd.nonEmpty && pd == ss,
       s"pd=${pd.size} ss=${ss.size} firstDiff=${pd.zip(ss).find(t => t._1 != t._2)}")
     // No-duplicate corpus: both plans agree on empty.
     val clean = Seq((1L, "abcdefghij"), (2L, "KLMNOPQRST")).toDF("doc_id", "text")
-    assert(collectSpans(Dedup.maximalSpansPD(clean, minLen = 4)).isEmpty)
+    assert(collectSpans(MaximalSpansPD(clean, minLen = 4)).isEmpty)
     // Real data: the sf0.001 documents table carries ~6k duplicated
     // 40-char windows — identity must hold beyond hand-built fixtures.
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val rs = collectSpans(Dedup.maximalSpans(real))
-    val rp = collectSpans(Dedup.maximalSpansPD(real))
+    val rp = collectSpans(MaximalSpansPD(real))
     assert(rs.nonEmpty && rp == rs,
       s"sf0.001 identity: pd=${rp.size} ss=${rs.size}")
   }
@@ -654,7 +613,7 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2"))).toSet
-    val truth = pairs(Dedup.ngramJaccard(docs, minJaccard = 0.3))
+    val truth = pairs(Dedup.ngramJaccardInvertedIndex(docs, minJaccard = 0.3))
     val found = pairs(Dedup.minhashPairsPortable(docs, minJaccard = 0.3))
     val row = Dedup.minhashRecall(docs).collect()
     assert(row.length == 1)
@@ -1539,6 +1498,21 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       .orderBy("doc_id").collect().map(_.getAs[Long]("doc_id")).toSeq
     assert(best == Seq(bestOf13, 6L).sorted,
       s"expected best-quality survivor $bestOf13 and 6, got $best")
+  }
+
+  test("corpus pipeline: the default near-dup emitter is the oracle-checked minhash") {
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val explicit = rows(CorpusPipeline.curate(docs,
+      pairsOf = Dedup.minhashPairsPortable(_)))
+    assert(rows(CorpusPipeline.curate(docs)) == explicit)
+    assert(rows(CurateConfig.from(GraftConfig.parse("")).curate(docs)) == explicit)
+    // The near-dup stage does work on this corpus: with no pairs at all,
+    // the same gates keep a strict superset.
+    val noNearDup = rows(CorpusPipeline.curate(docs,
+      pairsOf = d => Dedup.minhashPairsPortable(d).limit(0)))
+    assert(explicit.subsetOf(noNearDup) && noNearDup.size > explicit.size,
+      s"no near-dup dropped: ${explicit.size} kept vs ${noNearDup.size} without pairs")
   }
 
   test("embed outliers: off-cluster member z-flags; singleton cell never flags") {

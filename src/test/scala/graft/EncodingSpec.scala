@@ -122,10 +122,10 @@ class EncodingSpec extends AnyFunSuite with SparkSpec {
       .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val without = CorpusPipeline.curate(docs,
-      pairsOf = d => Dedup.ngramJaccard(d, 0.5))
+      pairsOf = d => Dedup.ngramJaccardInvertedIndex(d, 0.5))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val withFix = CorpusPipeline.curate(docs,
-      pairsOf = d => Dedup.ngramJaccard(d, 0.5), fixEncoding = true)
+      pairsOf = d => Dedup.ngramJaccardInvertedIndex(d, 0.5), fixEncoding = true)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // with repair doc 2 is doc 1's exact dup and drops; without, the
     // mojibake variant survives as a distinct (poisoned) document —

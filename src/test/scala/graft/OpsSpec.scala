@@ -398,6 +398,21 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(missing.isEmpty, s"queries without a SURVEY mention: $missing")
   }
 
+  test("knob lint: the only session confs graft reads are the checkpoint seam's") {
+    // A session conf is an option every user inherits and every
+    // oracle row must hold under; adding one has to edit this list.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val knobs = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        "\"(spark\\.graft\\.[^\"]*)\"".r.findAllMatchIn(text).map(_.group(1))
+      }.toSet finally files.close()
+    assert(knobs == Set("spark.graft.checkpoint", "spark.graft.checkpointDir"),
+      s"session confs under src/main: $knobs")
+  }
+
   test("driver contract: every oracle belongs to a query, entry smoke-runs") {
     // A dangling oracle key would silently never be compared — the
     // driver only checks oracles for names it has results for.

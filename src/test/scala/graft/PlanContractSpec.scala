@@ -293,7 +293,7 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     // topk checkpoints the tf posting (it feeds the df fold AND the
     // scorer join), which hides this sub-plan from the row plan — the
     // contract is asserted on the un-checkpointed tfPlan form, the
-    // guardedShinglePostingsPlan pattern.
+    // guardOver-over-raw-postings pattern.
     val tp = plan(graft.operators.Bm25.tfPlan(docs, Seq("table", "scan")))
     val gen = tp.linesIterator.find(l =>
       l.contains("Generate explode") && l.contains("filter")).getOrElse("")
@@ -437,16 +437,15 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     // The guard subplan itself: the 1-row max-df aggregate must survive
     // column pruning (raise_error referenced by the filter) and ride a
     // broadcast, never a cartesian.
-    val pg = plan(graft.operators.Dedup.guardedShinglePostingsPlan(
-      docs, 10000, None))
+    val postings = graft.operators.Dedup.shinglePostings(docs)
+    val pg = plan(graft.operators.Dedup.guardOver(postings, 10000, None))
     assert(pg.contains("raise_error"),
       s"the maxPostingDf guard must stay alive in the plan:\n$pg")
     assert(!pg.contains("CartesianProduct"),
       s"the 1-row guard must broadcast, not cartesian:\n$pg")
     // Stop-shingle mode: the df filter joins on the same key as the pair
     // self-join — no raise_error, no cartesian, still posting-keyed.
-    val ps = plan(graft.operators.Dedup.guardedShinglePostingsPlan(
-      docs, 10000, Some(1000)))
+    val ps = plan(graft.operators.Dedup.guardOver(postings, 10000, Some(1000)))
     assert(!ps.contains("raise_error") && !ps.contains("Cartesian"),
       s"stop-shingle mode is a keyed df filter, not a guard:\n$ps")
     // The consuming operators read the MATERIALIZED guarded frame: the

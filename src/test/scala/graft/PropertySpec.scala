@@ -309,7 +309,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(bytes(ms) == bytes(we), s"trial $trial byte cover mismatch")
       // The prefix-doubling twin is output-identical on arbitrary data.
-      val pd = Dedup.maximalSpansPD(df, minLen = minLen)
+      val pd = MaximalSpansPD(df, minLen = minLen)
         .orderBy("doc_id", "span_start").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(pd == ms, s"trial $trial PD twin diverged")

@@ -535,7 +535,7 @@ class TextSignalsSpec extends AnyFunSuite with SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     def run(bl: Option[Seq[String]], scrub: Boolean) =
       graft.CorpusPipeline.curate(d, minQuality = 0.0,
-          pairsOf = dd => graft.operators.Dedup.ngramJaccard(dd),
+          pairsOf = dd => graft.operators.Dedup.ngramJaccardInvertedIndex(dd),
           blocklistTerms = bl, blocklistMaxRatio = 0.2, scrubPii = scrub)
         .select(col("doc_id"), col("text")).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -568,7 +568,7 @@ class TextSignalsSpec extends AnyFunSuite with SparkSpec {
     // some same-vocab docs either way), the trained gate removes
     // exactly the bad-vocab class and keeps the good survivors.
     def run(gated: Boolean) = graft.CorpusPipeline.curate(d, minQuality = 0.0,
-        pairsOf = dd => graft.operators.Dedup.ngramJaccard(dd),
+        pairsOf = dd => graft.operators.Dedup.ngramJaccardInvertedIndex(dd),
         classifierGate = gated,
         classifierWeights = if (gated) Some(w) else None)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -579,7 +579,7 @@ class TextSignalsSpec extends AnyFunSuite with SparkSpec {
     // r9 review finding: supplying a trained artifact IMPLIES the gate
     // — weights without classifierGate=true must still filter.
     val implied = graft.CorpusPipeline.curate(d, minQuality = 0.0,
-        pairsOf = dd => graft.operators.Dedup.ngramJaccard(dd),
+        pairsOf = dd => graft.operators.Dedup.ngramJaccardInvertedIndex(dd),
         classifierWeights = Some(w))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(implied == ungated.filter(_ <= 3L), implied.toString)

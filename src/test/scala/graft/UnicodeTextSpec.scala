@@ -154,7 +154,7 @@ class UnicodeTextSpec extends AnyFunSuite with SparkSpec {
     val base = (1 to 40).map(i => s"từ$i").mkString(" ")
     val nearDup = base.replace("từ7 ", "khác ")
     val other = (1 to 40).map(i => s"đơn$i").mkString(" ")
-    val out = Dedup.minhashPairs(docs(1L -> base, 2L -> nearDup, 3L -> other), 0.3)
+    val out = Dedup.minhashPairsPortable(docs(1L -> base, 2L -> nearDup, 3L -> other), 0.3)
       .collect()
     assert(out.length == 1)
     assert(out.head.getAs[Long]("id1") == 1L && out.head.getAs[Long]("id2") == 2L)
