@@ -1,6 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of wall-times.
@@ -9,6 +20,9 @@ import org.apache.spark.sql.SparkSession
   * (windows, folds, final sort) executes — a bare `count()` lets Catalyst
   * prune unreferenced projections and under-measures indicator work.
   * Failures are recorded as -1 (and logged), never as a fast success.
+  *
+  * Each row also records where its time went: `layers`, keyed like
+  * `queries`, holds the [[Layers]] of its last main pass.
   *
   * Regression gate: BASELINE.md's fenced `baseline` block freezes the
   * best demonstrated per-query time at sf0.1. A query slower than
@@ -53,6 +67,174 @@ object Bench {
 
   def regressionThreshold(base: Double): Double = math.max(2 * base, base + 1.0)
 
+  /** Passes per row; a row reports the minimum (steady state, not
+    * first-run codegen), and a failure in any pass is a failure.
+    */
+  val Passes = 2
+
+  /** Where one measured pass's time went. `jobs`, `stages` (completed)
+    * and `tasks` count what the pass launched, eager jobs run while the
+    * frame was built included; a job over zero partitions runs no stage,
+    * so `stages` can read below `jobs`. `taskS`/`gcS` sum executor run
+    * and GC time over its tasks and `maxTaskS` is its longest task.
+    * `planMs` sums the Catalyst phases of the write's `QueryExecution`,
+    * and `plan` counts [[PlanKinds]] in the plan the write executed.
+    */
+  final case class Layers(jobs: Int, stages: Int, tasks: Int, taskS: Double, gcS: Double,
+                          maxTaskS: Double, planMs: Long, plan: Map[String, Int]) {
+    def json: String =
+      f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":$taskS%.3f,""" +
+        f""""gc_s":$gcS%.3f,"max_task_s":$maxTaskS%.3f,"plan_ms":$planMs""" +
+        PlanKinds.map(k => s""","$k":${plan(k)}""").mkString + "}"
+  }
+
+  /** Executed-plan node kinds counted per row: file scans, scans of
+    * materialized RDDs (checkpointed frames), live and reused shuffle
+    * exchanges, broadcasts, windows, sorts, in-memory cache reads, and
+    * Cartesian or nested-loop joins.
+    */
+  val PlanKinds: Seq[String] = Seq("file_scans", "rdd_scans", "exchanges", "reused",
+    "broadcasts", "windows", "sorts", "cache_reads", "nested_loops")
+
+  /** [[PlanKinds]] counts over an executed plan. The walk enters what
+    * plain children hide — AQE's current plan and its query stages,
+    * subqueries, and each cached relation's plan once (a frame cached
+    * and read twice is computed once) — but not a reused exchange,
+    * which is counted as such.
+    */
+  def planCounts(plan: SparkPlan): Map[String, Int] = {
+    val caches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val hidden = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec if caches.add(m.relation.cacheBuilder) =>
+          Seq(m.relation.cachedPlan)
+        case _ => Nil
+      }
+      p +: (p.children ++ p.subqueries ++ hidden).flatMap(walk)
+    }
+    val found = walk(plan).collect {
+      case _: FileSourceScanExec => "file_scans"
+      case _: RDDScanExec => "rdd_scans"
+      case _: ShuffleExchangeExec => "exchanges"
+      case _: ReusedExchangeExec => "reused"
+      case _: BroadcastExchangeExec => "broadcasts"
+      case _: WindowExec => "windows"
+      case _: SortExec => "sorts"
+      case _: InMemoryTableScanExec => "cache_reads"
+      case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => "nested_loops"
+    }
+    PlanKinds.map(k => k -> found.count(_ == k)).toMap
+  }
+
+  /** A row's minimum over [[Passes]] (-1 if one failed) and its last pass's layers. */
+  final case class Row(name: String, secs: Double, layers: Option[Layers])
+
+  /** `{"name":layers,...}` in row order; a failed pass reads null. */
+  def layersJson(rows: Seq[Row]): String =
+    rows.map(r => "\"" + r.name + "\":" + r.layers.fold("null")(_.json))
+      .mkString("{", ",", "}")
+
+  /** Times noop-sink passes and records each one's [[Layers]], through
+    * one `SparkListener` (jobs, stages, tasks) and one
+    * `QueryExecutionListener` (the write's plan). The plan must come
+    * from the listener: the write runs its own `QueryExecution`, and the
+    * frame's `queryExecution.executedPlan` is, under AQE, an initial
+    * plan that never ran — no stage reuse is decided in it.
+    */
+  final class Meter(spark: SparkSession) extends SparkListener with QueryExecutionListener {
+    private val jobs, stages, tasks = new AtomicInteger
+    private val taskMs, gcMs, maxTaskMs = new AtomicLong
+    @volatile private var lastQe: QueryExecution = null
+    var failures = 0
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(this)
+      spark.listenerManager.unregister(this)
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = { stages.incrementAndGet(); () }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (e.taskMetrics != null) {
+        val ms = e.taskMetrics.executorRunTime
+        taskMs.addAndGet(ms)
+        gcMs.addAndGet(e.taskMetrics.jvmGCTime)
+        maxTaskMs.accumulateAndGet(ms, (a, b) => math.max(a, b))
+      }
+    }
+    // The write is a pass's last action, so its execution arrives last.
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = lastQe = qe
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+
+    /** One pass: seconds to build `mk` and write it to the noop sink.
+      * The listener bus is drained before and after, outside the timer.
+      */
+    def pass(mk: () => DataFrame): (Double, Layers) = {
+      Bus.drain(spark.sparkContext)
+      jobs.set(0); stages.set(0); tasks.set(0)
+      taskMs.set(0L); gcMs.set(0L); maxTaskMs.set(0L); lastQe = null
+      val t0 = System.nanoTime()
+      mk().write.format("noop").mode("overwrite").save()
+      val secs = (System.nanoTime() - t0) / 1e9
+      Bus.drain(spark.sparkContext)
+      val qe = Option(lastQe).getOrElse(sys.error("the noop write reported no query execution"))
+      (secs, Layers(jobs.get, stages.get, tasks.get, taskMs.get / 1e3, gcMs.get / 1e3,
+        maxTaskMs.get / 1e3, qe.tracker.phases.values.map(_.durationMs).sum,
+        planCounts(qe.executedPlan)))
+    }
+
+    /** [[pass]], with a failure logged, counted and read as -1. */
+    def run(name: String, mk: () => DataFrame): (Double, Option[Layers]) =
+      try pass(mk) match { case (secs, layers) => (secs, Some(layers)) }
+      catch {
+        case e: Throwable =>
+          failures += 1
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          (-1.0, None)
+      } finally
+        // Several operators persist() intermediates they cannot safely
+        // unpersist themselves (the caller owns the returned frame's
+        // lifetime). In a 60+ query shared JVM those leak and one query's
+        // cache pressure degrades another's timing — drop them between
+        // measurements so every query starts from the same storage state.
+        spark.catalog.clearCache()
+
+    def row(name: String, mk: () => DataFrame): Row = {
+      val runs = (1 to Passes).map(_ => run(name, mk))
+      Row(name, if (runs.exists(_._1 < 0)) -1.0 else runs.map(_._1).min, runs.last._2)
+    }
+  }
+
+  /** A run's rows, optionally filtered by name: SparkEntry queries,
+    * then the report-over-frame twins (r7 item 8), whose setup runs
+    * here, UNTIMED (builds + eagerly checkpoints the upstream frame,
+    * which survives clearCache()), so the row times the report alone.
+    * A setup failure surfaces as that row's -1 through [[Meter.run]],
+    * never as a crash before the JSON line prints.
+    */
+  def rowThunks(spark: SparkSession, sfDir: String,
+                only: Option[Set[String]]): Seq[(String, () => DataFrame)] = {
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .map { case (n, fn) => n -> (() => fn(spark, sfDir)) }
+    val reports = graft.operators.LlmQueries.reportQueries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .map { case (n, setup) =>
+        n -> (try setup(spark, sfDir) catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $n setup FAILED: ${e.getMessage}")
+            () => throw new RuntimeException(s"report setup failed: ${e.getMessage}", e)
+        })
+      }
+    selected ++ reports
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -70,67 +252,19 @@ object Bench {
          else graft.sources.Tables.load(spark, sfDir, t)).count()
       } catch { case _: Throwable => () }
     }
-    var failures = 0
-    // Two passes, report the per-query minimum: steady-state numbers,
-    // not first-run codegen compilation. A failure in either pass is a
-    // failure.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    def timeThunk(name: String, mk: () => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        mk().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          failures += 1
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
-      } finally
-        // Several operators persist() intermediates they cannot safely
-        // unpersist themselves (the caller owns the returned frame's
-        // lifetime). In a 60+ query shared JVM those leak and one query's
-        // cache pressure degrades another's timing — drop them between
-        // measurements so every query starts from the same storage state.
-        spark.catalog.clearCache()
-    }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      timeThunk(name, () => fn(spark, sfDir))
+    val meter = new Meter(spark)
     // Optional name filter (local profiling: `runMain graft.Bench q1,q2`);
     // a filtered run never arms the regression gate.
     val only = args.headOption.map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Report-over-frame twins (r7 item 8): setup runs UNTIMED (builds +
-    // eagerly checkpoints the upstream frame); the thunk timed below is
-    // the report alone, so the artifact splits pipeline cost from
-    // report cost. localCheckpoint frames survive clearCache().
-    // A setup failure must surface as that row's -1, never crash the
-    // run before the JSON line prints (the driver parses it even on a
-    // gated round) — the failing thunk reports through timeThunk's
-    // existing catch.
-    val reportFns: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-      graft.operators.LlmQueries.reportQueries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .map { case (n, setup) =>
-          n -> (try setup(spark, sfDir) catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $n setup FAILED: ${e.getMessage}")
-              () => throw new RuntimeException(s"report setup failed: ${e.getMessage}", e)
-          })
-        }
+    val thunks = rowThunks(spark, sfDir, only)
     // In a full run the 60+ earlier queries amortize JVM/codegen warmup;
     // a filtered run has no such cushion and its first timed pass reads
-    // 1.5–2× hot (observed repeatedly) — warm each selected query once
+    // 1.5–2× hot (observed repeatedly) — warm each selected row once
     // untimed so solo numbers are comparable to in-run ones.
-    if (only.isDefined) selected.foreach { case (name, fn) => timeOnce(name, fn) }
-    failures = 0
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to passes).map(_ => timeOnce(name, fn))
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
-    } ++ reportFns.map { case (name, thunk) =>
-      val times = (1 to passes).map(_ => timeThunk(name, thunk))
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
-    }
+    if (only.isDefined) thunks.foreach { case (name, mk) => meter.run(name, mk) }
+    meter.failures = 0
+    val rows = thunks.map { case (name, mk) => meter.row(name, mk) }
+    val results = rows.map(r => r.name -> r.secs)
     val baseline = loadBaseline()
     // Run-wide drift: median of time/baseline over baselined queries,
     // clamped to ≥1 (a fast environment never tightens the gate). Printed
@@ -148,7 +282,7 @@ object Bench {
       System.err.println(
         f"[bench] WARNING run-wide drift $rawDrift%.2f exceeds the 1.5 cap — " +
           "either the machine is badly loaded or a shared-path change slowed everything")
-    val mainFailures = failures
+    val mainFailures = meter.failures
     val gateArmed = mainFailures == 0 && only.isEmpty && sfDir.contains("sf0.1") &&
       !sys.env.get("SPARK_GRAFT_BASELINE").contains("off")
     def over(name: String, t: Double): Boolean =
@@ -175,12 +309,8 @@ object Bench {
     final case class Reprobe(name: String, t: Double, t2: Double,
                              t3: Option[Double], confirmed: Boolean,
                              reprobeDrift: Option[Double])
-    val reportFnMap = reportFns.toMap
-    def reprobeOnce(name: String): Double =
-      reportFnMap.get(name) match {
-        case Some(thunk) => timeThunk(name, thunk)
-        case None => timeOnce(name, SparkEntry.queries(name))
-      }
+    val thunkMap = thunks.toMap
+    def reprobeOnce(name: String): Double = meter.run(name, thunkMap(name))._1
     def settledTime(name: String): Double = {
       System.gc(); Thread.sleep(200); System.gc()
       reprobeOnce(name)
@@ -250,7 +380,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = published.collect { case (_, v) if v >= 0 => v }.sum
     val jsonLine =
-      f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reprobes":$rp,"failures":$mainFailures,"drift":$drift%.3f,"raw_drift":$rawDrift%.3f,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"layers":${layersJson(rows)},"reprobes":$rp,"failures":$mainFailures,"drift":$drift%.3f,"raw_drift":$rawDrift%.3f,"sf":"$sfDir"}"""
     println(jsonLine)
     // The driver's capture lost the JSON line on both gated rounds (r3,
     // r4 record `parsed: null`) — persist it to a file too, and re-print

@@ -292,8 +292,8 @@ object CorpusPipeline {
     * release reduces to its distinct 8-byte key set before the
     * anti-join (never text) — the [[Dedup.incrementalNew]] story, with
     * [[Dedup.seenBloomFilter]] layerable in front at 100 TB.
-    */
-  /** `checkIdMonotonic` (ADVICE r10): the composition law above rests
+    *
+    * `checkIdMonotonic` (ADVICE r10): the composition law above rests
     * on the id-monotonicity PREcondition — every addition doc_id must
     * exceed every prior id, which production gets for free (new crawl
     * docs get new ids) but an ad-hoc caller might not, and a violation

@@ -1625,11 +1625,13 @@ object Dedup {
   private def guardedShinglePostings(documents: DataFrame, maxPostingDf: Int,
                                      stopShingleDf: Option[Int]): DataFrame = {
     // The guarded frame feeds THREE consumers (self-join side a, side
-    // b, per-doc sizes) and Spark does not reuse the exchanges across
-    // them (verified r8: 0 ReusedExchange, the full scan→window→
-    // distinct→guard pipeline executed per consumer — the maximal-span
-    // LCP-pairs lesson at posting grain). localCheckpoint materializes
-    // the postings ONCE; the joins read the stored rows.
+    // b, per-doc sizes). Un-checkpointed, the executed plan scans the
+    // corpus and derives the postings once per consumer: 3 file scans
+    // (`Bench.Meter` on the executed plan, sf0.01 and sf0.1). AQE
+    // reuses 4 of the later exchanges there; the "0 ReusedExchange"
+    // read in r8 came from the frame's unexecuted initial plan. localCheckpoint
+    // materializes the postings ONCE; the joins read the stored rows
+    // (4 RDD scans, 0 file scans, 3 reused exchanges).
     //
     // r12: the RAW postings checkpoint first and the df guard reads the
     // STORED rows — a guard aggregate UNDER the checkpoint made

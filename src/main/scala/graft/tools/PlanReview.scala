@@ -1,43 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dump formatted physical plans for named queries (dev diagnostics):
-  * `runMain graft.tools.PlanReview q1 q2 ...` or no args for a pushdown/
-  * broadcast/codegen audit summary of every query.
+  * `runMain graft.tools.PlanReview q1 q2 ...`. The session is the
+  * default one (AQE on, as every query runs), so the dump is AQE's
+  * initial plan (`isFinalPlan=false`). Counts read from the plan that
+  * actually executed are in each Bench row's `layers` entry.
   */
 object PlanReview {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: PlanReview <query> [query ...]")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.GraftSession.builder("graft-planreview")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      // AQE defers physical planning, so codegen spans never print on an
-      // unexecuted plan; the audit wants the static plan with *(n) marks.
-      .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (args.nonEmpty) {
-      args.foreach { name =>
-        println(s"\n======== $name ========")
-        SparkEntry.queries(name)(spark, d).explain("formatted")
-      }
-    } else {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val plan = fn(spark, d).queryExecution.executedPlan.toString()
-        val nShuffle = "Exchange hashpartitioning".r.findAllIn(plan).length
-        val nSingle = "Exchange SinglePartition".r.findAllIn(plan).length
-        val nBcast = "BroadcastExchange".r.findAllIn(plan).length
-        val nSort = "Sort ".r.findAllIn(plan).length
-        val nScan = "FileScan".r.findAllIn(plan).length
-        // codegen'd operators print as "*(n) Op" in executedPlan.toString
-        val nWscg = """\*\(\d+\)""".r.findAllIn(plan).toSeq.distinct.length
-        val cartesian = if (plan.contains("Cartesian")) " CARTESIAN!" else ""
-        val bnl = if (plan.contains("BroadcastNestedLoop")) " BNLJ" else ""
-        println(f"$name%-26s shuffles=$nShuffle%2d single=$nSingle%2d bcast=$nBcast%2d sorts=$nSort%2d scans=$nScan%2d wscg=$nWscg%2d$cartesian$bnl")
-      }
+    args.foreach { name =>
+      println(s"\n======== $name ========")
+      SparkEntry.queries(name)(spark, d).explain("formatted")
     }
     spark.stop()
   }

@@ -10,8 +10,11 @@ import graft.sources.Tables
 /** Scaling sweep (dev diagnostics): times the dominant pipelines on
   * 1×/2×/4× the sf0.1 event feed, each copy user-shifted so key
   * cardinality grows with the data (more symbols, same per-key history —
-  * the real 100 TB shape). Linear wall-time across the sweep is the
+  * the real 100 TB shape), then the text, embedding and media operators
+  * on 1×/2×/4× the corpus. Linear wall-time across the sweep is the
   * empirical check behind SURVEY §5's partition-parallel claims.
+  *
+  *   sbt "runMain graft.tools.ScaleProbe"
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -22,12 +25,9 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("WARN")
     // By-name: operators with driver-side orchestration (the CC loop)
     // do real work while the DataFrame is being BUILT — that belongs
-    // inside the timer.
-    def noopTime(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // inside the timer, which is a Bench pass.
+    val meter = new graft.Bench.Meter(spark)
+    def noopTime(df: => DataFrame): Double = meter.pass(() => df)._1
     val base = Tables.events(spark, d)
     base.count() // warm scan
     // First k=1 pass is codegen/JIT warmup — discard its line.
@@ -85,7 +85,7 @@ object ScaleProbe {
     val upper = lower.toUpperCase
     def rot(s: String, i: Int) = s.drop(i % 26) + s.take(i % 26)
     val docsBase = Tables.documents(spark, d)
-    docsBase.count()
+    val nDocs = docsBase.count()
     // Embedding copies: flip a per-(copy, dim) pseudo-random sign.
     // cos(s⊙x, s⊙y) = cos(x, y) within a copy; across copies the sign
     // patterns decorrelate the vectors, so near-dup structure stays
@@ -123,7 +123,7 @@ object ScaleProbe {
       val tClustersLsh = noopTime(Components.dedupClusters(
         Similarity.nearDupPairsLsh(emb, minCosine = 0.3), "id1", "id2",
         pointerJump = true))
-      println(f"[scale-llm] k=$k docs=${k * docsBaseCount(docsBase)} " +
+      println(f"[scale-llm] k=$k docs=${k * nDocs} " +
         f"minhash=$tMinhash%.2f simhash=$tSimhash%.2f ngram=$tNgram%.2f " +
         f"ann_brute=$tAnnBrute%.2f ann_lsh=$tAnnLsh%.2f ann_ivf=$tAnnIvf%.2f " +
         f"near_dup=$tNearDup%.2f clusters=$tClusters%.2f clusters_lsh=$tClustersLsh%.2f")
@@ -197,7 +197,7 @@ object ScaleProbe {
       // The gate is a pure projection — parallelism comes from the
       // input's partitioning, and the unioned sweep frame reads as a
       // couple of partitions (the exactSpans lesson). Spread it as a
-      // deployment would; FuzzyGateProbe sweeps bench-artifact size.
+      // deployment would.
       val tFuzzyGate = noopTime(Dedup.withContaminationFuzzy(
         docs.repartition(32, col("doc_id")), fk, fs))
       println(f"[scale-r8] k=$k spans_maximal_clean=$tMaxClean%.2f " +
@@ -231,6 +231,27 @@ object ScaleProbe {
       println(f"[scale-r8c] k=$k sentence_clean=$tSentClean%.2f " +
         f"bpe_segment=$tBpeSeg%.2f bpe_fertility=$tFert%.2f")
     }
+    // ---- Media/encoding sweep (r11) ------------------------------------
+    // A copy tag on each copy's text keeps copies from being near dups
+    // of each other, so pair density stays constant instead of growing
+    // with k². Linear wall-time backs the §5 claims: signatures are
+    // payload-local, banding shuffles 20-byte rows, repair is a projection.
+    Seq(1, 1, 2, 4).foreach { k =>
+      val docs = (0 until k).map(i =>
+        docsBase.select(col("doc_id"), col("text"))
+          .withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
+          .withColumn("text", concat(lit("copy" + i + " "), col("text"))))
+        .reduce(_ unionByName _)
+      val media = graft.ops.Multimodal.asMedia(docs)
+      val tSig = noopTime(graft.ops.Multimodal.perceptualSig(media).toDF())
+      val tPairs = noopTime(graft.ops.Multimodal.mediaNearDup(media))
+      val tClusters = noopTime(Components.dedupClusters(
+        graft.ops.Multimodal.mediaNearDup(media).select(col("id1"), col("id2")),
+        "id1", "id2"))
+      val tFix = noopTime(Encoding.withFixedEncoding(docs))
+      println(f"[scale-media] k=$k docs=${k * nDocs} sig=$tSig%.2f " +
+        f"pairs=$tPairs%.2f clusters=$tClusters%.2f fix_encoding=$tFix%.2f")
+    }
     // BPE batching: job-round collapse on the real corpus — the r6
     // verdict's "32k merges = 32k jobs" fix, measured.
     locally {
@@ -244,11 +265,5 @@ object ScaleProbe {
         f"batched=$tB%.2fs sequential=$tS%.2fs sequential_equal=${bm == sm}")
     }
     spark.stop()
-  }
-
-  private var cachedDocCount = -1L
-  private def docsBaseCount(docs: DataFrame): Long = {
-    if (cachedDocCount < 0) cachedDocCount = docs.count()
-    cachedDocCount
   }
 }

@@ -398,19 +398,32 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(missing.isEmpty, s"queries without a SURVEY mention: $missing")
   }
 
-  test("knob lint: the only session confs graft reads are the checkpoint seam's") {
-    // A session conf is an option every user inherits and every
-    // oracle row must hold under; adding one has to edit this list.
+  /** Every string literal under src/main matching `pattern`'s group 1. */
+  private def srcMainLiterals(pattern: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val knobs = try files.iterator.asScala
+    try files.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        "\"(spark\\.graft\\.[^\"]*)\"".r.findAllMatchIn(text).map(_.group(1))
+        pattern.r.findAllMatchIn(text).map(_.group(1))
       }.toSet finally files.close()
+  }
+
+  test("knob lint: the only session confs graft reads are the checkpoint seam's") {
+    // A session conf is an option every user inherits and every
+    // oracle row must hold under; adding one has to edit this list.
+    val knobs = srcMainLiterals("\"(spark\\.graft\\.[^\"]*)\"")
     assert(knobs == Set("spark.graft.checkpoint", "spark.graft.checkpointDir"),
       s"session confs under src/main: $knobs")
+  }
+
+  test("knob lint: the only env vars graft reads are the data dir, cores and gate switch") {
+    // An env var is one more way for two runs of the same code to
+    // differ unseen; adding one has to edit this list.
+    val envs = srcMainLiterals("\"(SPARK_GRAFT_[^\"]*)\"")
+    assert(envs == Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BASELINE"),
+      s"env vars under src/main: $envs")
   }
 
   test("driver contract: every oracle belongs to a query, entry smoke-runs") {
