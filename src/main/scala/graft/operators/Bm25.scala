@@ -27,8 +27,7 @@ object Bm25 {
     */
   private def toks(documents: DataFrame): DataFrame =
     documents
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("__t"))
-      .withColumn("__t", filter(col("__t"), t => t =!= ""))
+      .select(col("doc_id"), Dedup.nonEmptyTokens(col("text")).as("__t"))
       .select(col("doc_id"), col("__t"), size(col("__t")).as("dl"))
 
   /** The query-filtered term-frequency posting, UN-checkpointed — the

@@ -36,13 +36,13 @@ object Bpe {
   case class Merge(round: Int, lhs: String, rhs: String,
                    merged: String, pair_count: Long)
 
-  /** [[Dedup.tokens]] with NULL text folded to the empty document, so
+  /** [[Dedup.nonEmptyTokens]] with NULL text folded to the empty document, so
     * every Bpe entry point treats a null `text` exactly like "" (a
     * bare `size(tokens(NULL))` is -1 and silently corrupts sums; the
     * projection/vocab twins would also disagree on the row).
     */
   private def docWords: Column =
-    filter(Dedup.tokens(coalesce(col("text"), lit(""))), w => w =!= "")
+    Dedup.nonEmptyTokens(coalesce(col("text"), lit("")))
 
   /** Word-frequency vocabulary over [[Dedup.tokens]] words. */
   def wordFreqs(documents: DataFrame): DataFrame =

@@ -35,28 +35,34 @@ object Dedup {
     * top finding — the ASCII rule silently no-op'd dedup/decontamination/
     * quality on exactly the multilingual corpus a 100 TB pipeline curates).
     * `\p{L}`/`\p{N}` are the Unicode general categories, spelled the same
-    * in Java regex (Spark) and RE2 (the DuckDB oracle) — the pii_scrub
+    * in Java regex and RE2 (the DuckDB oracle) — the pii_scrub
     * portability rule. Scripts written without word separators segment
-    * at CHARACTER grain (the Lucene CJKAnalyzer convention, r8): a
-    * space is injected around every Han/Hiragana/Katakana/Hangul char
-    * before the class split, so CJK text yields per-char tokens — and
-    * the bigram shingles every dedup/decontamination op builds become
-    * character bigrams, the standard CJK n-gram unit. One extra
-    * codegen'd regex pass per document; identity on non-CJK text. The
-    * oracle replays it with RE2's `\p{Han}`-family script classes
-    * (spelling differs from Java's `IsHan`, semantics match). Word-
-    * SHAPE profile rules (letter-token stopword hits, whitespace word
-    * lengths) deliberately stay run-grain — they measure layout, not
-    * content identity.
+    * at CHARACTER grain (the Lucene CJKAnalyzer convention, r8): every
+    * Han/Hiragana/Katakana/Hangul letter is a token of its own, so CJK
+    * text yields per-char tokens — and the bigram shingles every
+    * dedup/decontamination op builds become character bigrams, the
+    * standard CJK n-gram unit. The oracle replays it with RE2's
+    * `\p{Han}`-family script classes (spelling differs from Java's
+    * `IsHan`, semantics match). Word-SHAPE profile rules (letter-token
+    * stopword hits, whitespace word lengths) deliberately stay
+    * run-grain — they measure layout, not content identity.
+    *
+    * One native pass over `lower(text)`
+    * ([[graft.functions.TextKernels.wordTokens]]), element-equal to the
+    * regex form it replaced (`split(regexp_replace(lower(text),
+    * "([\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}])", " $1 "),
+    * "[^\p{L}\p{N}]+")`, kept in the test tree as the reference),
+    * including Java `split(…, -1)`'s edge empties: a leading and a
+    * trailing `""` around separator or CJK edges, and `[""]` for `""`.
     */
   def tokens(text: Column): Column =
-    split(regexp_replace(lower(text), CjkCharClass, " $1 "), "[^\\p{L}\\p{N}]+")
+    graft.functions.TextKernels.wordTokens(text, dropEmpty = false)
 
-  /** One capture group around any char of the no-separator CJK scripts
-    * (Java spelling; the SQL oracles embed the RE2 spelling verbatim).
+  /** [[tokens]] without the empty edge elements — what every consumer
+    * that counts or hashes words wants; same single pass.
     */
-  private val CjkCharClass =
-    "([\\p{IsHan}\\p{IsHiragana}\\p{IsKatakana}\\p{IsHangul}])"
+  def nonEmptyTokens(text: Column): Column =
+    graft.functions.TextKernels.wordTokens(text, dropEmpty = true)
 
   /** Sentence-terminator class shared by [[sentenceDedup]] and
     * [[TextSignals.sentenceStats]] (and their oracles verbatim): ASCII
@@ -136,7 +142,7 @@ object Dedup {
     * `\p{L}\p{N}`-class tokens).
     */
   def canonicalKey(text: Column): Column =
-    concat_ws(" ", array_sort(array_distinct(filter(tokens(text), t => t =!= ""))))
+    concat_ws(" ", array_sort(array_distinct(nonEmptyTokens(text))))
 
   /** #37d dedup_incremental: batch-against-corpus dedup — the shape a
     * production pipeline actually runs daily: not "dedup this corpus
@@ -1482,8 +1488,7 @@ object Dedup {
   def simhashPairsPortable(documents: DataFrame, maxHamming: Int = 8,
                            maxBucket: Int = 1024): DataFrame = {
     val exploded = Skew.fanOutScan(documents, "doc_id")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "")
+      .select(col("doc_id"), explode(nonEmptyTokens(col("text"))).as("w"))
       // r11: parse the 16 signature nibbles into two ints ONCE per token
       // — the per-bit form re-ran conv(substring(hex)) 64× per row; bit
       // j of the big-endian halves is (hi >> 31−j) & 1 / (lo >> 63−j) & 1,

@@ -39,8 +39,7 @@ object Dsir {
   private def bucketPostings(documents: DataFrame, isTarget: Column): DataFrame = {
     val toks = Skew.fanOutScan(documents, "doc_id")
       .select(col("doc_id"), isTarget.as("__is_target"),
-        Dedup.tokens(col("text")).as("__t"))
-      .withColumn("__t", filter(col("__t"), t => t =!= ""))
+        Dedup.nonEmptyTokens(col("text")).as("__t"))
     // r11: unigrams and bigrams ride ONE explode — array_concat of the
     // token array with the native TokenKgrams bigram array (ordered,
     // non-distinct: multiplicity feeds the bucket counts) halves the

@@ -39,14 +39,18 @@ object Skew {
     * coalescing, while a byte-based coalesce would immediately re-fuse
     * a small-but-CPU-heavy frame back to one partition.
     *
-    * PRECONDITION (ADVICE r11): `df` must be a scan/projection-only
+    * PRECONDITION (ADVICE r11): `df` should be a scan/projection-only
     * frame. The partition-count probe reads `df.rdd` at plan-build
     * time, and under AQE `Dataset.rdd` eagerly materializes upstream
     * query stages — on a frame whose plan contains exchanges that
     * would run upstream jobs whose results the subsequent execution
-    * does not reuse. Every current call site passes a bare scan or a
-    * scan+projection; keep it that way (or switch the probe to the
-    * file-scan relation's split count before passing anything wider).
+    * does not reuse. Not every call site keeps to it:
+    * [[graft.CorpusPipeline.curate]] hands its persisted exact-dedup
+    * frame (content-hash shuffle + window) to the pair emitter, e.g.
+    * [[Dedup.ngramJaccardInvertedIndex]] → [[Dedup.shinglePostings]],
+    * and there the `df.rdd` probe runs a job of its own (`rdd at
+    * Skew.scala`, one task per cached partition). Replacing the probe
+    * with the file-scan relation's split count is still open.
     */
   def fanOutScan(df: DataFrame, key: String): DataFrame = {
     val width = df.sparkSession.sessionState.conf.numShufflePartitions

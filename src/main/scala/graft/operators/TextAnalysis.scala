@@ -5,8 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Text analysis for LLM-training-data pipelines (SURVEY §2 #44–47):
   * language identification, quality scoring, token counting and document
-  * fingerprinting. All pure Catalyst expressions (regex + HOF folds) —
-  * codegen'd, embarrassingly parallel across documents, no per-row UDFs.
+  * fingerprinting. All Catalyst expressions, embarrassingly parallel
+  * across documents, no per-row UDFs: the curation gate's text work
+  * (word tokens, letter-token stop-word hits, quality counts, blocklist
+  * counts) runs as native one-pass kernels
+  * ([[graft.functions.TextKernels]]); the remaining report operators
+  * are regex and HOF folds.
   */
 object TextAnalysis {
 
@@ -38,11 +42,6 @@ object TextAnalysis {
     "nl" -> Seq("de", "het", "een", "van", "op", "te", "voor", "niet"),
     "id" -> Seq("yang", "dan", "di", "ke", "untuk", "ini", "dengan", "itu"))
 
-  private def letterTokens(text: Column): Column = split(lower(text), "[^\\p{L}]+")
-
-  private def hits(tokens: Column, words: Seq[String]): Column =
-    size(filter(tokens, t => t.isin(words: _*)))
-
   /** #44 lang_id: stopword-profile hit counts per language; prediction =
     * argmax with alphabetical tie-break (de, en, es, fr order).
     *
@@ -57,16 +56,16 @@ object TextAnalysis {
     */
   def langId(documents: DataFrame): DataFrame = {
     val langs = LangProfiles.keys.toSeq.sorted
-    val t = letterTokens(col("text"))
     val letters = length(regexp_replace(col("text"), "[^\\p{L}]", ""))
     val nonLatin = length(regexp_replace(col("text"), "[^\\p{L}]|[\\p{IsLatin}]", ""))
-    // One native pass for ALL profiles (r12, [[graft.functions.ProfileHits]]):
-    // the per-lang `size(filter(tokens, isin(…)))` form ran 12
-    // interpreted HOF lambdas per document, each a full token walk
-    // against a linear In list — count-identical, spec-pinned.
+    // One native letter-token pass for ALL profiles
+    // ([[graft.functions.ProfileHits]], the walk withQuality's stop
+    // count uses): each token is one hash lookup, count-identical to
+    // `size(filter(split(lower(text), "[^\\p{L}]+"), isin(…)))` per
+    // profile (spec-pinned).
     val withHits = documents
-      .withColumn("__lh",
-        graft.functions.ProfileHits.profileHits(t, langs.map(LangProfiles)))
+      .withColumn("__lh", graft.functions.TextKernels.profileHits(
+        col("text"), langs.map(LangProfiles)))
       .select(
       (col("doc_id") +: col("lang").as("labeled_lang") +:
         round(coalesce(nonLatin.cast("double") /
@@ -90,31 +89,36 @@ object TextAnalysis {
   /** Quality columns appended in place (originals kept) — the composable
     * form [[CorpusPipeline]] gates on without a doc-grain self-join.
     * NOTE: replaces any incoming `n_chars` with length(text).
+    *
+    * Every ratio derives from ONE struct of integer counts
+    * ([[graft.functions.QualityCounts]]: one pass over `text`, one
+    * letter-token pass over `lower(text)` for the `en` stop-word hits)
+    * by unchanged arithmetic, so each double is bit-identical to the
+    * regex form it replaced: `n_words` is the size of
+    * `split(text, "\\s+")` (whitespace runs + 1), `avg_word_len` reads
+    * the non-`\\s` code points, `punct_ratio` the code points outside
+    * `[\\p{L}\\p{N}\\s]`, `upper_ratio` the `\\p{Lu}` ones and
+    * `stop_ratio` the stop-word hits over `[^\\p{L}]+` letter tokens.
     */
   def withQuality(documents: DataFrame): DataFrame = {
-    val nChars = length(col("text"))
-    val words = split(col("text"), "\\s+")
-    val nWords = size(words)
-    val punct = nChars - length(regexp_replace(col("text"), "[^\\p{L}\\p{N}\\s]", ""))
-    val uppers = length(regexp_replace(col("text"), "[^\\p{Lu}]", ""))
-    // Native single-profile count (r12) — this column rides every
-    // quality-gated pipeline row, and the HOF isin form walked the
-    // token array through an interpreted lambda per document.
-    val stops = element_at(graft.functions.ProfileHits.profileHits(
-      letterTokens(col("text")), Seq(Stopwords("en"))), 1)
+    val q = col("__qc")
+    val nChars = q("n_chars")
+    val nWords = q("n_words")
     documents
+      .withColumn("__qc", graft.functions.TextKernels.qualityCounts(
+        col("text"), Stopwords("en")))
       .withColumn("n_chars", nChars)
       .withColumn("n_words", nWords)
       .withColumn("avg_word_len",
-        length(regexp_replace(col("text"), "\\s", "")).cast("double") /
-          nullif(nWords.cast("double"), lit(0.0)))
-      .withColumn("punct_ratio", punct.cast("double") / nullif(nChars.cast("double"), lit(0.0)))
-      .withColumn("upper_ratio", uppers.cast("double") / nullif(nChars.cast("double"), lit(0.0)))
-      .withColumn("stop_ratio", stops.cast("double") / nullif(nWords.cast("double"), lit(0.0)))
+        q("n_nonspace").cast("double") / nullif(nWords.cast("double"), lit(0.0)))
+      .withColumn("punct_ratio", q("n_punct").cast("double") / nullif(nChars.cast("double"), lit(0.0)))
+      .withColumn("upper_ratio", q("n_upper").cast("double") / nullif(nChars.cast("double"), lit(0.0)))
+      .withColumn("stop_ratio", q("n_stop").cast("double") / nullif(nWords.cast("double"), lit(0.0)))
       .withColumn("quality_score",
         round(least(lit(1.0), nWords.cast("double") / 50) * 0.4 +
           (lit(1.0) - col("punct_ratio")) * 0.3 +
           least(lit(1.0), col("stop_ratio") * 5) * 0.3, 6))
+      .drop("__qc")
   }
 
   /** #45 text_quality: length/punctuation/stopword/case ratios combined
@@ -277,8 +281,7 @@ object TextAnalysis {
     */
   def vocabTopK(documents: DataFrame, k: Int = 20): DataFrame = {
     val counts = documents
-      .select(col("lang"), explode(Dedup.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+      .select(col("lang"), explode(Dedup.nonEmptyTokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("n_occurrences"))
     TopK.groupedWithRank(counts, Seq(col("lang")), k,
@@ -401,21 +404,23 @@ object TextAnalysis {
   /** #47i blocklist_filter: banned-term filtering — per document, how
     * many tokens hit a blocklist, the blocked share, and a keep/drop
     * decision (`keep` = blocked share ≤ `maxRatio`; empty docs keep).
-    * The list folds into an `isin` predicate inside one array-filter
-    * projection — codegen'd, zero shuffle, the right shape for the
-    * O(100)-term curated lists this models. For vocabulary-scale lists
-    * (LHS millions of terms) use [[blocklistFilterJoined]]: `isin`
-    * compiles a linear scan per token, a broadcast join hashes.
+    * Both counts come from one native pass over the non-empty
+    * [[Dedup.tokens]] words ([[graft.functions.BlocklistCounts]]: a
+    * hash-set probe per token) — zero shuffle, the right shape for the
+    * curated lists this models, which travel with the plan. For
+    * vocabulary-scale lists (millions of terms) use
+    * [[blocklistFilterJoined]], which broadcasts the term table instead
+    * of embedding it in every task's closure.
     */
   def blocklistFilter(documents: DataFrame, terms: Seq[String] = DefaultBlocklist,
                       maxRatio: Double = 0.05): DataFrame = {
     require(terms.nonEmpty, "blocklist must not be empty")
     documents
       .select(col("doc_id"),
-        filter(Dedup.tokens(col("text")), t => t =!= "").as("__toks"))
+        graft.functions.TextKernels.blocklistCounts(col("text"), terms).as("__bc"))
       .select(col("doc_id"),
-        size(col("__toks")).cast("bigint").as("n_tokens"),
-        size(filter(col("__toks"), t => t.isin(terms: _*))).cast("bigint").as("n_blocked"))
+        col("__bc.n_tokens").cast("bigint").as("n_tokens"),
+        col("__bc.n_blocked").cast("bigint").as("n_blocked"))
       .select(col("doc_id"), col("n_tokens"), col("n_blocked"),
         round(col("n_blocked").cast("double") /
           nullif(col("n_tokens").cast("double"), lit(0.0)), 6).as("blocked_ratio"),
@@ -425,17 +430,16 @@ object TextAnalysis {
   }
 
   /** The keep verdict as ONE boolean column — [[blocklistFilter]]'s
-    * decision (same tokens, same empty-doc-keeps rule) in the
+    * decision (same counts, same empty-doc-keeps rule) in the
     * projection form [[graft.CorpusPipeline]] ANDs into its single
     * gate pass.
     */
   def blocklistKeepCol(text: Column, terms: Seq[String],
                        maxRatio: Double = 0.05): Column = {
     require(terms.nonEmpty, "blocklist must not be empty")
-    val toks = filter(Dedup.tokens(text), t => t =!= "")
-    val blocked = size(filter(toks, t => t.isin(terms: _*)))
-    size(toks) === 0 ||
-      blocked.cast("double") <= size(toks).cast("double") * maxRatio
+    val c = graft.functions.TextKernels.blocklistCounts(text, terms)
+    val nTokens = c("n_tokens")
+    nTokens === 0 || c("n_blocked").cast("double") <= nTokens.cast("double") * maxRatio
   }
 
   /** Large-blocklist twin of [[blocklistFilter]]: explode tokens, LEFT
@@ -446,8 +450,7 @@ object TextAnalysis {
   def blocklistFilterJoined(documents: DataFrame, terms: DataFrame,
                             maxRatio: Double = 0.05): DataFrame = {
     val marked = documents
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+      .select(col("doc_id"), explode(Dedup.nonEmptyTokens(col("text"))).as("token"))
       .join(broadcast(terms.select(col("term").as("token"),
         lit(1L).as("__hit"))), Seq("token"), "left_outer")
       .groupBy(col("doc_id"))
@@ -482,7 +485,7 @@ object TextAnalysis {
     val pcts = array(lit(0.25), lit(0.5), lit(0.75), lit(0.9))
     documents
       .select(col(stratumCol),
-        size(filter(Dedup.tokens(col("text")), t => t =!= "")).as("__w"),
+        size(Dedup.nonEmptyTokens(col("text"))).as("__w"),
         length(col("text")).as("__c"))
       .groupBy(col(stratumCol))
       .agg(
@@ -511,7 +514,7 @@ object TextAnalysis {
                           accuracy: Int = 10000): DataFrame =
     documents
       .select(col(stratumCol),
-        size(filter(Dedup.tokens(col("text")), t => t =!= "")).as("__w"))
+        size(Dedup.nonEmptyTokens(col("text"))).as("__w"))
       .groupBy(col(stratumCol))
       .agg(count(lit(1)).as("n_docs"),
         percentile_approx(col("__w"), array(lit(0.25), lit(0.5), lit(0.75), lit(0.9)),
@@ -556,8 +559,7 @@ object TextAnalysis {
     // fan-out is a no-op, so the serial stage is a bench-size artifact,
     // not a scale risk.
     val toks = documents
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("__t"))
-      .withColumn("__t", filter(col("__t"), t => t =!= ""))
+      .select(col("doc_id"), Dedup.nonEmptyTokens(col("text")).as("__t"))
     // Per-doc bigram multiplicities: the ONLY pass over raw postings —
     // made physically true by the localCheckpoint: dbg feeds THREE
     // consumers (bc, cc via bc, the scorer join) and without
@@ -631,8 +633,7 @@ object TextAnalysis {
     // No fanOutScan — the lmScore negative-result note.
     val toks = documents
       .select(col("doc_id"), coalesce(refFilter, lit(false)).as("__ref"),
-        Dedup.tokens(col("text")).as("__t"))
-      .withColumn("__t", filter(col("__t"), t => t =!= ""))
+        Dedup.nonEmptyTokens(col("text")).as("__t"))
     // Native bigram walk — the lmScore r12 rewrite, ref flag riding.
     val dbg = toks.filter(size(col("__t")) >= 2)
       .select(col("doc_id"), col("__ref"), explode(graft.functions.TokenKgrams

@@ -33,7 +33,7 @@ object TextSignals {
   def h32(c: Column): Column = graft.functions.Md5Prefix.md5Prefix32(c)
 
   /** The canonical token-array expression every signal folds over:
-    * [[Dedup.tokens]] with empties removed. Public so composition sites
+    * [[Dedup.nonEmptyTokens]] (the tokenizer's empty-dropping form). Public so composition sites
     * (the [[graft.CorpusPipeline]] classifier gate) use THIS expression
     * rather than re-deriving it — a tokenizer change must move every
     * consumer together. NULL text tokenizes as the EMPTY ARRAY, not
@@ -44,7 +44,7 @@ object TextSignals {
     * depend on text nullability).
     */
   def tokensCol(text: Column): Column =
-    filter(Dedup.tokens(coalesce(text, lit(""))), t => t =!= "")
+    Dedup.nonEmptyTokens(coalesce(text, lit("")))
 
   private def tokens(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), tokensCol(col("text")).as("__t"))
@@ -394,7 +394,6 @@ object TextSignals {
     val allStops = TextAnalysis.Stopwords.values.flatten.toSeq.distinct.sorted
     val base = documents
       .withColumn("__w", filter(split(col("text"), "[ \\t\\n\\r\\f]+"), w => w =!= ""))
-      .withColumn("__lt", filter(split(lower(col("text")), "[^\\p{L}]+"), t => t =!= ""))
     val nWords = size(col("__w"))
     val wordChars = length(regexp_replace(col("text"), "[ \\t\\n\\r\\f]+", ""))
     val m = base
@@ -409,10 +408,11 @@ object TextSignals {
           round(size(filter(col("__w"), w => w.rlike("\\p{L}"))).cast("double") / nWords, 6))
           .otherwise(lit(0.0)))
       .withColumn("stop_hits",
-        // Native single-profile count (r12, count-identical to the
-        // interpreted filter+isin form — see ProfileHits).
-        element_at(graft.functions.ProfileHits.profileHits(
-          col("__lt"), Seq(allStops)), 1))
+        // The native letter-token walk langId and withQuality use
+        // (count-identical to filter+isin over `[^\\p{L}]+` tokens —
+        // see ProfileHits).
+        element_at(graft.functions.TextKernels.profileHits(
+          col("text"), Seq(allStops)), 1))
       .withColumn("symbol_share",
         when(length(col("text")) > 0,
           round(length(regexp_replace(col("text"), "[\\p{L}\\p{N} \\t\\n\\r\\f]", ""))
@@ -430,7 +430,7 @@ object TextSignals {
       .withColumn("n_fail", size(col("__f")))
       .withColumn("gopher_keep", size(col("__f")) === 0)
       .withColumn("reasons", array_join(col("__f"), ","))
-      .drop("__w", "__lt", "__f")
+      .drop("__w", "__f")
   }
 
   /** Inline (projection-form) classifier keep verdict over a MATERIALIZED

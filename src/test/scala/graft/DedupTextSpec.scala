@@ -891,25 +891,29 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ProfileHits equals the interpreted filter+isin count (spec-pin)") {
-    // The r12 native one-pass counter replaced size(filter(t, isin(…)))
-    // on langId / stop-ratio paths; pin the two count-for-count on the
-    // edges: duplicate tokens (count every occurrence), a word shared
-    // by two profiles, the empty token, zero-hit docs, empty arrays.
+    // The native letter-token counter replaced
+    // size(filter(split(lower(text), "[^\\p{L}]+"), isin(…))) on the
+    // langId / stop-ratio / Gopher paths; pin the two count-for-count
+    // on the edges: duplicate tokens (count every occurrence), a word
+    // shared by two profiles, separator edges, case, zero-hit docs,
+    // empty and null text.
     import org.apache.spark.sql.functions._
     val profiles = Seq(Seq("the", "and", "of"), Seq("der", "und", "the"))
-    val df = Seq(
-      (1L, Seq("the", "cat", "and", "the", "", "und")),
-      (2L, Seq[String]()),
-      (3L, Seq("none", "here")),
-      (4L, Seq("the", "the", "the"))).toDF("id", "toks")
-    val native = df.select(col("id"),
-        graft.functions.ProfileHits.profileHits(col("toks"), profiles).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val interp = df.select(col("id"),
-        array(profiles.map(ws =>
-          size(filter(col("toks"), t => t.isin(ws: _*)))): _*).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(native == interp)
+    val df = Seq[(Long, String)](
+      (1L, "The cat, and THE ... und!"),
+      (2L, ""),
+      (3L, "none here 42"),
+      (4L, " the the3the "),
+      (5L, null)).toDF("id", "text")
+    // Per-profile hits as the operators read them (element_at): null
+    // text reads null in both forms.
+    def hits(h: org.apache.spark.sql.Column) =
+      df.select(col("id") +: profiles.indices.map(i => element_at(h, i + 1)): _*)
+        .collect().map(r => r.getLong(0) -> (1 to profiles.size).map(r.get)).toMap
+    val native = hits(graft.functions.TextKernels.profileHits(col("text"), profiles))
+    assert(native == hits(TextReference.profileHits(col("text"), profiles)))
+    assert(native(1L) == Seq(3, 3) && native(4L) == Seq(3, 3) &&
+      native(5L) == Seq(null, null), native.toString)
   }
 
   test("token counts: whitespace vs BPE-ish regex vs chars/4") {

@@ -533,4 +533,31 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     assert(p.contains("minhash_sig"),
       s"signature must ride the native codegen'd expression:\n$p")
   }
+
+  test("curation gate: native text kernels, no tokenizer or quality regex in its plan") {
+    // curate's gate (withQuality + the language/quality/blocklist
+    // filter) and the exact dedup live in the persisted frame the
+    // release reads back; its executed plan is the gate as it ran, after
+    // Catalyst pushed the Filter below withQuality's projections. The
+    // regex forms put 7 regexp_replace and 12 split calls there; the
+    // kernels must replace every one of them.
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val released = CorpusPipeline.curate(docs, blocklistTerms = Some(Seq("slow", "merge")))
+    val gates = released.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        m.cacheBuilder.cachedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan.toString
+          case other => other.toString
+        }
+    }
+    assert(gates.size == 1, s"expected one persisted gate frame, got ${gates.size}")
+    val p = gates.head
+    def count(token: String) = token.r.findAllMatchIn(p).size
+    assert(count("regexp_replace\\(") == 0 && count("\\bsplit\\(") == 0,
+      s"gate must not run the regex tokenizer or quality regexes:\n$p")
+    val kernels = Seq("quality_counts", "blocklist_counts").map(k => k -> count(k + "\\("))
+    assert(kernels.forall(_._2 >= 1), s"gate must run the native kernels ($kernels):\n$p")
+    info(s"kernel occurrences in the gate plan: ${kernels.mkString(", ")}")
+  }
 }

@@ -18,6 +18,28 @@ import graft.operators.{Dedup, Similarity, Snapshot, TopK}
 class PropertySpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
+  test("native text kernels equal the regex forms on random Unicode strings") {
+    // Code points from every class the kernels distinguish: ASCII
+    // letters/digits/punctuation, each \s char plus NBSP, Latin-1 and
+    // Turkish/Greek/German case traps, combining marks, Nd/Nl/No
+    // numbers, CJK (Han incl. Ext-B, kana, Hangul, a Han radical and a
+    // Hangul tone mark, which are CJK-script separators), supplementary
+    // letters and symbols.
+    val pool: Seq[Int] = Seq(
+      'a', 'b', 'Z', 'Q', '0', '7', '.', ',', '-', '!', ' ', ' ', '\t', '\n',
+      0x0B, 0x0C, '\r', 0xA0, 0xDF, 0x130, 0x131, 0x3A3, 0x3C2, 0x301, 0x663,
+      0x216B, 0xB2, 0x6F22, 0x5B57, 0x3072, 0x30AB, 0xD55C, 0x2E80, 0x302E,
+      0x30FC, 0xFF71, 0x20000, 0x1D400, 0x1F600, 0x10400)
+    val rnd = new Random(2026)
+    val texts = (0 until 400).map { _ =>
+      val n = rnd.nextInt(24)
+      new String((0 until n).flatMap(_ =>
+        Character.toChars(pool(rnd.nextInt(pool.size)))).toArray)
+    }
+    val bad = TextReference.mismatches(spark, texts)
+    assert(bad.isEmpty, bad.take(20).mkString("\n"))
+  }
+
   test("exactSpans + removeSpans equal a brute-force substring oracle") {
     val rnd = new Random(42)
     for (trial <- 1 to 8) {

@@ -72,6 +72,27 @@ class UnicodeTextSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("native text kernels equal the regex forms on the Unicode edge cases") {
+    def cp(c: Int*): String = new String(c.flatMap(Character.toChars(_)).toArray)
+    val vt = cp(0x0B)            // \s in Java regex
+    val nbsp = cp(0xA0)          // not \s: punctuation
+    val boldA = cp(0x1D400)      // supplementary Lu
+    val extB = cp(0x20000)       // CJK Ext-B, Han script
+    val edges = Seq(
+      null, "", " ", "   ", "\t\n", vt, nbsp, " lead", "trail ", " both ",
+      "..a..", "a--b", s"a${vt}b", s"a${nbsp}b", s"${nbsp}x$nbsp",
+      s"x${boldA}y", boldA, extB, s"a${extB}b", s"$extB$extB",
+      "漢abc", "abc漢", "漢字", "漢 字", "한국어", "한국어123", "漢字テスト abc 한국어123",
+      "ひらがなとカタカナ、漢字。", "Tỷ giá 25枚!",
+      cp(0x2E80), cp(0x61, 0x2E80, 0x62), cp(0x302E), cp(0x30FC), cp(0xFF71, 0x61),
+      "İstanbul", "İ", "Straße", "STRASSE ß", "ΟΔΟΣ ΣΟΦΟΣ", "όρος.",
+      cp(0x663, 0x664, 0x665), "Ⅻ", "x²", "² ³", cp(0x1F600), s"a${cp(0x301)}b",
+      "The cat and THE dog of it is in a", "SPAM spam xxx, ab AB",
+      "\r\n\f", cp(0x61, 0, 0x62))
+    val bad = TextReference.mismatches(spark, edges)
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("lang id flags majority-non-Latin documents as 'other', not a fabricated language") {
     // All four stopword profiles are European — before the guard a CJK
     // doc scored 0 everywhere and the argmax tie-break confidently
