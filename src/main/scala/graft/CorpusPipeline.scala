@@ -202,11 +202,11 @@ object CorpusPipeline {
     //    (lmScore's count and vocab folds, lmBuckets' lang join, the
     //    anti-join left side) — without materialization the whole
     //    annotate+gate chain re-derives per consumer (the
-    //    guarded-postings rule), so it localCheckpoints first.
+    //    guarded-postings rule), so it checkpoints first.
     val gated =
       if (!lmDropTail) gated0
       else {
-        val g = gated0.localCheckpoint()
+        val g = gated0.transform(Ckpt.frame)
         g.join(
           TextAnalysis.lmBuckets(g)
             .filter(col("bucket") === "tail").select(col("doc_id")),

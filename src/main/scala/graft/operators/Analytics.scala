@@ -56,11 +56,11 @@ object Analytics {
     // The active frame feeds BOTH self-join sides and Spark reuses no
     // exchanges across them (ReuseProbe r12: the whole bars→cleaning→
     // returns derivation executed once per side, scans=4/windows=8 on a
-    // two-table query) — localCheckpoint materializes the K×day-grain
+    // two-table query) — the checkpoint materializes the K×day-grain
     // rows once (bounded: topK users × trading days), the guarded-
     // postings idiom.
     val active = returns.join(broadcast(topUsers), Seq("user_id"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val a = active.select(col("user_id").as("u1"), col("date"), col("ret").as("ret1"))
     val b = active.select(col("user_id").as("u2"), col("date"), col("ret").as("ret2"))
     a.join(b, Seq("date"))
@@ -100,7 +100,7 @@ object Analytics {
     val pairs = correlationPairs(bars, topK, minDays)
       .filter(col("correlation").isNotNull && !isnan(col("correlation")))
       .withColumn("correlation", round(col("correlation"), 6))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val sym = pairs.select(col("u1").as("user_id"), col("u2").as("neighbor_id"),
         col("correlation"), col("n_days"))
       .unionByName(pairs.select(col("u2").as("user_id"), col("u1").as("neighbor_id"),
@@ -128,7 +128,7 @@ object Analytics {
     // K×day-grain frame once instead of re-deriving the bars pipeline
     // per side (ReuseProbe r12: scans=4/windows=9 before).
     val active = returns.join(broadcast(topUsers), Seq("user_id"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val a = active.select(col("user_id").as("u1"), col("date"), col("ret").as("ret1"))
     val b = active.select(col("user_id").as("u2"), col("date"), col("ret").as("ret2"))
     val w = Window.partitionBy(col("u1"), col("u2")).orderBy(col("date"))
@@ -332,7 +332,7 @@ object Analytics {
     val typed = cleanEvents
       .filter(col("event_type").isin(leftType, rightType))
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     def side(tpe: String, prefix: String) = typed
       .filter(col("event_type") === tpe)
       .select(col("user_id"), col("event_id").as(s"${prefix}_id"),

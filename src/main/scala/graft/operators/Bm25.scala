@@ -56,7 +56,7 @@ object Bm25 {
     // are the query-filtered posting (q · |matching docs|, the scale
     // note's bound), so the checkpoint is retrieval-sized, not
     // corpus-sized. stats keeps its own pass — it must see every doc.
-    val tf = tfPlan(documents, terms).localCheckpoint()
+    val tf = tfPlan(documents, terms).transform(graft.Ckpt.frame)
     // q-row document frequencies, folded from per-doc matches.
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf

@@ -166,7 +166,7 @@ object Dedup {
     // (ids + 8-byte key + flags), never text — safe to pin at scale.
     val keyed = documents.select(col("doc_id"), col("source"), col("lang"),
       xxhash64(canonicalKey(col("text"))).as("__ck"), seenPred.as("__seen"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val seenKeys = keyed.filter(col("__seen"))
       .select(col("__ck")).distinct()
       .withColumn("__hit", lit(1))
@@ -242,7 +242,7 @@ object Dedup {
     // 4 → 1; the held rows carry no text).
     val keyed = documents.select(col("doc_id"), col("source"), col("lang"),
       xxhash64(canonicalKey(col("text"))).as("__ck"), seenPred.as("__seen"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     // stat.bloomFilter aggregates zero rows to a null sketch and then
     // NPEs deserializing it: an empty seen-set is an empty sketch, so
     // every incoming row is definite-new.
@@ -946,7 +946,7 @@ object Dedup {
       .select(col("doc_id"), col("span_start").as("island"),
         col("text").substr((col("span_start") + 1).cast("int"),
           col("span_len").cast("int")).as("itext"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
 
   /** Shared tail of the maximal-span plans: from per-position
     * neighbor-LCP maxima `m(p)` to maximal span rows — left-maximality
@@ -1051,7 +1051,7 @@ object Dedup {
     val spark = documents.sparkSession
     val sorted = pos.orderBy(col("sfx"), col("doc_id"), col("pos"))
       .select(col("doc_id"), col("island"), col("pos"), col("sfx"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val rdd = sorted.rdd
     import org.apache.spark.unsafe.types.UTF8String
     val seams = rdd.mapPartitionsWithIndex { (p, it) =>
@@ -1353,11 +1353,11 @@ object Dedup {
     // it re-derives the ENTIRE two-branch banding pipeline per consumer
     // (r8 ReuseProbe: 6 posting windows, 9 corpus scans; AQE reuses no
     // exchange across the branches), silently defeating the
-    // one-corpus-pass claim above. localCheckpoint restores it.
+    // one-corpus-pass claim above. The checkpoint restores it.
     val cand = banded.filter(pmod(col("doc_id"), lit(benchMod.toLong)) =!= 0)
       .join(broadcast(benchKeys), Seq("band", "band_key"))
       .select(col("doc_id"), col("bench_id")).distinct()
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val candDocs = cand.select(col("doc_id")).distinct()
     val candBench = cand.select(col("bench_id").as("doc_id")).distinct()
     val shC = withHashedShingles(
@@ -1440,7 +1440,7 @@ object Dedup {
       .select(explode(cappedPairs(col("ids"), maxBucket)).as("p"))
       .select(col("p.a").as("id1"), col("p.b").as("id2"))
       .distinct()
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     // Exact-Jaccard verification: shingle ARRAYS are built only for docs
     // that appear in a candidate pair (left-semi on the candidate ids),
     // so the array path costs O(candidates), not O(corpus).
@@ -1454,7 +1454,7 @@ object Dedup {
     val candidateShingles = withHashedShingles(
         documents.join(broadcast(candidateIds), Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), col("hs"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     candidates
       .join(candidateShingles.select(col("doc_id").as("id1"), col("hs").as("sh1")), Seq("id1"))
       .join(candidateShingles.select(col("doc_id").as("id2"), col("hs").as("sh2")), Seq("id2"))
@@ -1634,7 +1634,7 @@ object Dedup {
     // corpus and derives the postings once per consumer: 3 file scans
     // (`Bench.Meter` on the executed plan, sf0.01 and sf0.1). AQE
     // reuses 4 of the later exchanges there; the "0 ReusedExchange"
-    // read in r8 came from the frame's unexecuted initial plan. localCheckpoint
+    // read in r8 came from the frame's unexecuted initial plan. The checkpoint
     // materializes the postings ONCE; the joins read the stored rows
     // (4 RDD scans, 0 file scans, 3 reused exchanges).
     //
@@ -1647,12 +1647,12 @@ object Dedup {
     // broadcast crossJoin over an in-memory scan — noise. Semantics
     // unchanged: the guard still fires before any consumer's self-join
     // expands, because every consumer reads the overlaid frame.
-    val guarded = guardOver(shinglePostings(documents).localCheckpoint(),
+    val guarded = guardOver(shinglePostings(documents).transform(graft.Ckpt.frame),
       maxPostingDf, stopShingleDf)
     // Stop-shingle mode: the df-filtered frame is what the consumers
     // fan out over — materialize it too, or each consumer re-runs the
     // keep join.
-    if (stopShingleDf.isDefined) guarded.localCheckpoint() else guarded
+    if (stopShingleDf.isDefined) guarded.transform(graft.Ckpt.frame) else guarded
   }
 
   /** The df guard / stop-shingle filter of [[guardedShinglePostings]]

@@ -40,7 +40,7 @@ object LlmQueries {
     * their full upstream pipelines each run so the DuckDB oracle can
     * check them end-to-end; in production those reports read an
     * already-materialized frame. Each entry here SETS UP untimed (outer
-    * call: build + eagerly localCheckpoint the upstream frame) and
+    * call: build + eagerly checkpoint the upstream frame) and
     * returns a thunk that is the report alone — [[graft.Bench]] times
     * the thunk, so BENCH_r*.json splits pipeline cost from report cost
     * as two rows per operator. Not part of the Verify/oracle surface
@@ -50,17 +50,17 @@ object LlmQueries {
     "cluster_stats_report" -> ((s, d) => {
       val clusters = Components.dedupClusters(
         Similarity.nearDupPairs(emb(s, d), minCosine = 0.3), "id1", "id2",
-        pointerJump = true).localCheckpoint()
+        pointerJump = true).transform(graft.Ckpt.frame)
       () => Components.clusterStats(clusters).orderBy(col("cluster_size"))
     }),
     "span_stats_report" -> ((s, d) => {
-      val spans = Dedup.maximalSpans(docs(s, d), minLen = 40).localCheckpoint()
+      val spans = Dedup.maximalSpans(docs(s, d), minLen = 40).transform(graft.Ckpt.frame)
       () => Dedup.spanStats(spans).orderBy(col("len_bucket"))
     }),
     "dedup_keep_best_report" -> ((s, d) => {
       val documents = docs(s, d)
       val pairs = Dedup.ngramJaccardInvertedIndex(documents, minJaccard = 0.5)
-        .localCheckpoint()
+        .transform(graft.Ckpt.frame)
       () => Dedup.keepBest(documents, pairs)
         .orderBy(col("cluster_id"), col("doc_id"))
     }),
@@ -728,7 +728,7 @@ object LlmQueries {
       // re-running the gate+window per consumer (ReuseProbe r10:
       // scans 3 → 2, windows 3 → 2).
       graft.CorpusPipeline.curateIncremental(
-          graft.CorpusPipeline.curateLite(dd.filter(seen)).localCheckpoint(),
+          graft.CorpusPipeline.curateLite(dd.filter(seen)).transform(graft.Ckpt.frame),
           additions)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("quality_score"))

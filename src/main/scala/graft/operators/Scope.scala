@@ -91,14 +91,14 @@ object Scope {
                              primary: Seq[String], capped: String,
                              capN: Int): DataFrame = {
     require(capN >= 1, s"capN must be >= 1, got $capN")
-    // Lazy localCheckpoint, not persist (ADVICE r8): a persist here
+    // Lazy checkpoint, not persist (ADVICE r8): a persist here
     // registers a CacheManager entry the caller holds no handle to
     // unpersist, so repeated invocations in a long session accumulate
     // cached plans until LRU eviction. The checkpoint RDD is
     // ContextCleaner-collected once unreferenced, and eager=false
     // keeps the operator lazy (no driver action at construction).
     val u = universe.join(activity, Seq("entity_id"), "left")
-      .localCheckpoint(eager = false)
+      .transform(graft.Ckpt.frame(_, eager = false))
     val keep = u.filter(col("exchange").isin(primary: _*))
     val cap = u.filter(col("exchange") === capped)
     val cnt = cap.agg(count(col("liquidity")).as("__nliq"))

@@ -561,7 +561,7 @@ object TextAnalysis {
     val toks = documents
       .select(col("doc_id"), Dedup.nonEmptyTokens(col("text")).as("__t"))
     // Per-doc bigram multiplicities: the ONLY pass over raw postings —
-    // made physically true by the localCheckpoint: dbg feeds THREE
+    // made physically true by the checkpoint: dbg feeds THREE
     // consumers (bc, cc via bc, the scorer join) and without
     // materialization each re-derives the tokenize+explode+count from
     // the corpus scan (ReuseProbe read scans=4, liveShuffles=10 — the
@@ -581,7 +581,7 @@ object TextAnalysis {
         substring_index(col("__g"), " ", -1).as("w2"))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("m"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     // Model counts fold out of the per-doc counts (smaller input).
     val bc = dbg.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("c12"))
     val cc = bc.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
@@ -645,7 +645,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("m"), bool_or(col("__ref")).as("__ref"))
       // Four consumers here (bc, cc via bc, the bigram guard, the
       // scorer) — the lmScore checkpoint rule, see that method's note.
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val bc = dbg.filter(col("__ref"))
       .groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("c12"))
     val cc = bc.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
@@ -704,7 +704,7 @@ object TextAnalysis {
     // (doc_id, lang, ppl), so the checkpoint is doc-count × ~30 bytes.
     val ppl = lmScore(documents).select(col("doc_id"), col("ppl"))
       .join(documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val th = ppl.groupBy(col("lang")).agg(
       round(percentile(col("ppl"), lit(1.0 / 3)), 6).as("t33"),
       round(percentile(col("ppl"), lit(2.0 / 3)), 6).as("t66"))

@@ -152,11 +152,11 @@ object TextSignals {
     // hash → window → distinct) executes once PER consumer (ReuseProbe
     // r12: scans=3, windows=3, reused=0; JobProbe read the derivation
     // stages at 14.6 + 9.3 s of the row's 30 s summed task time). The
-    // guarded-postings localCheckpoint idiom: narrow (doc_id, fp_hash)
+    // guarded-postings checkpoint idiom: narrow (doc_id, fp_hash)
     // rows, far smaller than the gram stream that builds them.
     val byHash = winnowSelect(documents, k, w)
       .select(col("doc_id"), col("fp_hash")).distinct()
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     val sizes = byHash.groupBy("doc_id").agg(count(lit(1)).as("__nf"))
     val pairs = byHash.groupBy("fp_hash")
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))

@@ -662,14 +662,14 @@ object Multimodal {
     * Scale shape (r11 ReuseProbe finding, fixed): ONE payload pass —
     * the signature pass carries n_bytes, and the materialized
     * signature frame feeds both the banding and the size join (two
-    * consumers — the guarded-postings localCheckpoint rule; the held
+    * consumers — the guarded-postings checkpoint rule; the held
     * rows are fixed-width signatures, never payloads).
     */
   def mediaKeepBest(media: Dataset[MediaRecord],
                     codec: MediaCodec = StubCodec,
                     maxHamming: Int = 3,
                     maxBucket: Int = 4096): DataFrame = {
-    val sig = perceptualSig(media, codec).toDF().localCheckpoint()
+    val sig = perceptualSig(media, codec).toDF().transform(graft.Ckpt.frame)
     val pairs = graft.operators.Dedup.hammingBandPairs(sig, maxHamming, maxBucket)
       .select(col("id1"), col("id2"))
     val clusters = graft.operators.Components.dedupClusters(pairs, "id1", "id2")
@@ -716,7 +716,7 @@ object Multimodal {
     // materialization rule (20-byte rows, never payloads).
     val sig = perceptualSig(media, codec).toDF()
       .withColumn("__seen", seenPred)
-      .localCheckpoint()
+      .transform(graft.Ckpt.frame)
     def chunksOf(df: DataFrame, prefix: String): DataFrame =
       df.select(
         col("doc_id").as(s"${prefix}_id"),

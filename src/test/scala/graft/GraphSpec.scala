@@ -98,14 +98,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       micro = 1000000L).collect().map(_.toSeq).toSet
     val local = ladder()
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set(graft.Ckpt.ModeKey, "reliable")
-    spark.conf.set(graft.Ckpt.DirKey, dir)
-    try assert(ladder() == local)
-    finally spark.conf.set(graft.Ckpt.ModeKey, "local")
+    withCkptMode("reliable", dir)(assert(ladder() == local))
     // an unknown mode raises loudly rather than silently localizing
-    spark.conf.set(graft.Ckpt.ModeKey, "bogus")
-    try intercept[IllegalArgumentException](ladder())
-    finally spark.conf.set(graft.Ckpt.ModeKey, "local")
+    withCkptMode("bogus", dir)(intercept[IllegalArgumentException](ladder()))
   }
 
   test("pagerank stochastic: dangling mass redistributes, ranks conserve to micro") {

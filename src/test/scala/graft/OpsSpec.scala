@@ -398,16 +398,30 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(missing.isEmpty, s"queries without a SURVEY mention: $missing")
   }
 
-  /** Every string literal under src/main matching `pattern`'s group 1. */
-  private def srcMainLiterals(pattern: String): Set[String] = {
+  /** Every (file, group 1) of `pattern`'s matches in src/main's Scala. */
+  private def srcMainMatches(pattern: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     try files.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        pattern.r.findAllMatchIn(text).map(_.group(1))
-      }.toSet finally files.close()
+        pattern.r.findAllMatchIn(text).map(m => p.getFileName.toString -> m.group(1))
+      }.toList finally files.close()
+  }
+
+  /** Every string literal under src/main matching `pattern`'s group 1. */
+  private def srcMainLiterals(pattern: String): Set[String] =
+    srcMainMatches(pattern).map(_._2).toSet
+
+  test("seam lint: every lineage cut under src/main goes through Ckpt.frame") {
+    // A raw localCheckpoint ignores spark.graft.checkpoint=reliable, so
+    // its blocks stay unrecoverable on executor loss whatever the user
+    // configured; the seam is the one place that chooses.
+    val raw = srcMainMatches("(\\.localCheckpoint\\()").map(_._1)
+      .filterNot(_ == "Ckpt.scala")
+    assert(raw.isEmpty, s"${raw.size} raw localCheckpoint calls: " +
+      raw.groupBy(identity).map { case (f, n) => s"$f x${n.size}" }.mkString(", "))
   }
 
   test("knob lint: the only session confs graft reads are the checkpoint seam's") {

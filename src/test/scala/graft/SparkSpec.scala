@@ -12,6 +12,21 @@ trait SparkSpec {
     */
   def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Run `body` with the checkpoint seam in `mode` against `dir`, then
+    * restore both [[Ckpt.ModeKey]] and [[Ckpt.DirKey]] to what they were
+    * (unset stays unset), so no later suite inherits the mode or dir.
+    */
+  def withCkptMode[T](mode: String, dir: String)(body: => T): T = {
+    val keys = Seq(Ckpt.ModeKey -> mode, Ckpt.DirKey -> dir)
+    val before = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -9,10 +9,16 @@ DuckDB views, runs the oracle SQL, loads the Spark parquet result, sorts
 columns by name and rows by all columns, and compares cell-by-cell.
 Exact match required for non-floats; floats report max abs diff and fail
 when any bit differs (strictest interpretation of a hash compare).
+
+Each result line ends with the query's seconds in three steps: `oracle`
+(DuckDB runs the oracle SQL), `load` (the Spark parquet result is read)
+and `compare` (canonical sort plus the cell compare). The last lines
+name the five slowest queries.
 """
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -36,22 +42,41 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    timings = []
     for name, sql in sorted(oracle.items()):
+        secs = {}
+        t0 = time.perf_counter()
+
+        def step(label):
+            nonlocal t0
+            t1 = time.perf_counter()
+            secs[label] = t1 - t0
+            t0 = t1
+
+        def took():
+            timings.append((sum(secs.values()), name, dict(secs)))
+            return " [" + " ".join(f"{k} {v:.2f}s" for k, v in secs.items()) + "]"
+
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
+            step("load")
             want = con.execute(sql).df()
+            step("oracle")
         except Exception as exc:
-            print(f"FAIL {name}: load/exec error: {exc}")
+            step("error")
+            print(f"FAIL {name}: load/exec error: {exc}{took()}")
             n_fail += 1
             continue
         got, want = canon(got), canon(want)
         if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
+            step("compare")
+            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}{took()}")
             n_fail += 1
             continue
         if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
+            step("compare")
+            print(f"FAIL {name}: rows {len(got)} != {len(want)}{took()}")
             n_fail += 1
             continue
         bad = []
@@ -74,12 +99,17 @@ def main() -> int:
                     if str(gv) != str(wv):
                         if len(bad) < 3:
                             bad.append(f"{col}[{i}]: {gv!r} != {wv!r}")
+        step("compare")
         if bad:
-            print(f"FAIL {name}: {len(bad)}+ cell diffs, max_float_diff={max_diff:g}; e.g. {bad}")
+            print(f"FAIL {name}: {len(bad)}+ cell diffs, max_float_diff={max_diff:g}; e.g. {bad}{took()}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(got)} rows)")
+            print(f"PASS {name} ({len(got)} rows){took()}")
             n_pass += 1
+    slowest = sorted(timings, reverse=True)[:5]
+    print("slowest: " + ", ".join(
+        f"{name} {total:.1f}s (" + " ".join(f"{k} {v:.1f}" for k, v in secs.items()) + ")"
+        for total, name, secs in slowest))
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
