@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators._
 import graft.ops.{Export, Report}
@@ -15,12 +18,16 @@ import graft.sources.Tables
   * retries), which is the isolation model that actually survives a
   * 1000-executor run.
   *
-  * Every stage below derives from the single cleaned feed; [[runDaily]]
-  * persists the two shared cut points (bars, enriched) for the span of
-  * the run — each output is its own Spark action, and without the cut
-  * every one would re-derive the feed→clean→bars lineage. At production
-  * scale the same cut points are checkpoint/bucketed-table candidates
-  * (`Export.bucketedTable`).
+  * Every stage below derives from the single cleaned feed. [[runDaily]]
+  * persists its cuts for the span of the run: bars and enriched, which
+  * every output branches from (without them each output re-derives the
+  * feed→clean→bars lineage), and breadth and movers, the day-grain frames
+  * more than one output reads. Its seven exports and the report are then
+  * independent branches over those cuts, run concurrently ([[branches]]):
+  * most of a snapshot's stages are one task wide, so one output at a time
+  * leaves the cluster idle while the driver plans and commits the next.
+  * At production scale the same cut points are checkpoint/bucketed-table
+  * candidates (`Export.bucketedTable`).
   */
 object Pipeline {
 
@@ -120,58 +127,105 @@ object Pipeline {
   def runWeekly(spark: SparkSession, dir: String, outDir: String,
                 yearWeek: String): String = {
     val bars = Bars.daily(Cleaning.cleanEvents(Tables.events(spark, dir)))
-    // Two actions (write + the markdown collect) — cut once.
     val perf = Report.weeklyPerformance(bars)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Export.parquet(perf, s"${Export.snapshotPath(outDir, yearWeek)}/weekly",
-        maxFiles = 1)
-      Report.weeklyMarkdown(perf, yearWeek)
-    } finally perf.unpersist()
+    val path = s"${Export.snapshotPath(outDir, yearWeek)}/weekly"
+    var md: String = null
+    // Two actions (write + the markdown collect) over one cut. The weekly
+    // run neither notifies nor retries.
+    branches("weekly", s"weekly summary $path", Seq(perf), Notify.silent, retryAttempts = 1)(
+      "weekly" -> (() => Export.parquet(perf, path, maxFiles = 1)),
+      "report" -> (() => md = Report.weeklyMarkdown(perf, yearWeek)))
+    md
   }
 
   /** Run the daily snapshot: parquet every output under
-    * `outDir/snapshot=<stamp>`, return the markdown report.
+    * `outDir/snapshot=<stamp>`, return the markdown report. Notifies
+    * "info" once on success; on failure notifies "error" once and
+    * rethrows (see [[branches]]).
     */
   def runDaily(spark: SparkSession, dir: String, outDir: String, stamp: String,
-               notify: Notifier = Notify.log, retryAttempts: Int = 3): String =
-    try {
-      val o = build(spark, dir)
-      // The run fires ~10 actions (7 exports + the report's collects);
-      // without a cut each one re-derives the raw feed → clean → bars
-      // (→ indicators) lineage from scratch. Persist the two frames
-      // every downstream output branches from — the same caller-owned
-      // cut CorpusPipeline.curate uses — and release them on exit.
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      o.bars.persist(lvl); o.enriched.persist(lvl)
-      try {
-        val base = Export.snapshotPath(outDir, stamp)
-        // Per-stage retry (reference daily loop + _run_with_retries):
-        // every export is an Overwrite write, so a retry is idempotent.
-        def stage(name: String)(a: => Unit): Unit =
-          withRetries(s"daily/$name", maxAttempts = retryAttempts, notify = notify)(a)
-        // One writer task per date: without the repartition every task
-        // holds every date and the partitioned write fans out
-        // tasks × dates small files (120 of a 30-day snapshot's 135).
-        stage("bars")(Export.parquet(o.bars.repartition(col("date")), s"$base/bars",
-          partitionCols = Seq("date")))
-        stage("indicators")(Export.parquet(o.enriched, s"$base/indicators"))
-        stage("breadth")(Export.parquet(o.breadth, s"$base/breadth"))
-        stage("health")(Export.parquet(o.health, s"$base/health", maxFiles = 1))
-        stage("movers")(Export.parquet(o.movers, s"$base/movers", maxFiles = 1))
-        stage("signals")(Export.parquet(o.signals, s"$base/signals"))
-        stage("breakouts")(Export.parquet(o.breakouts, s"$base/breakouts"))
-        val md = Report.dailyMarkdown(
-          Breadth.marketSummary(o.breadth, o.bars), o.movers,
-          Breadth.marketRegime(o.breadth))
-        notify("info", s"daily snapshot $stamp complete: $base")
-        md
-      } finally {
-        o.bars.unpersist(); o.enriched.unpersist()
-      }
-    } catch {
+               notify: Notifier = Notify.log, retryAttempts: Int = 3): String = {
+    val base = Export.snapshotPath(outDir, stamp)
+    val run = s"daily snapshot $base"
+    val o = try build(spark, dir) catch {
       case e: Throwable =>
-        notify("error", s"daily snapshot $stamp failed: ${e.getMessage}")
+        notify("error", s"$run failed: ${e.getMessage}")
         throw e
     }
+    var md: String = null
+    // The cuts, in dependency order so each later one caches over the
+    // earlier ones. bars and enriched carry the feed → clean → bars
+    // (→ indicators) lineage every output branches from; without them
+    // each branch re-derives it from the raw feed. breadth (its own and
+    // health's export, the report's summary and regime) and movers (its
+    // export and the report) are day-grain frames read by more than one
+    // branch.
+    branches("daily", run, Seq(o.bars, o.enriched, o.breadth, o.movers), notify,
+        retryAttempts)(
+      // One writer task per date: without the repartition every task
+      // holds every date and the partitioned write fans out
+      // tasks × dates small files (120 of a 30-day snapshot's 135).
+      "bars" -> (() => Export.parquet(o.bars.repartition(col("date")), s"$base/bars",
+        partitionCols = Seq("date"))),
+      "indicators" -> (() => Export.parquet(o.enriched, s"$base/indicators")),
+      "breadth" -> (() => Export.parquet(o.breadth, s"$base/breadth")),
+      "health" -> (() => Export.parquet(o.health, s"$base/health", maxFiles = 1)),
+      "movers" -> (() => Export.parquet(o.movers, s"$base/movers", maxFiles = 1)),
+      "signals" -> (() => Export.parquet(o.signals, s"$base/signals")),
+      "breakouts" -> (() => Export.parquet(o.breakouts, s"$base/breakouts")),
+      "report" -> (() => md = Report.dailyMarkdown(
+        Breadth.marketSummary(o.breadth, o.bars), o.movers,
+        Breadth.marketRegime(o.breadth))))
+    md
+  }
+
+  /** Run a snapshot's independent outputs concurrently over its cuts.
+    *
+    * Persists `cuts` (in order), runs every named branch on its own pool
+    * thread under [[withRetries]] (the reference's per-stage
+    * `_run_with_retries`, label `<label>/<name>`; every output is an
+    * Overwrite write or a read, so a retry is idempotent), and waits for
+    * all of them. Only then are the cuts released: a branch still
+    * running when another fails keeps its cuts. If any branch failed,
+    * the first failure in declaration order is notified once at "error"
+    * (`<run> failed: …`) and rethrown; otherwise "info" (`<run> complete`)
+    * is notified. Notifications go through one lock per call, so the
+    * caller's sink never sees concurrent calls; the retries' final
+    * "error"s are left to the single run-level one.
+    *
+    * One thread per branch: the width is the DAG's, not a setting. The
+    * pool is created inside the call, so its threads inherit the
+    * caller's Spark local properties (job group, description, scheduler
+    * pool) and `cancelJobGroup` still reaches every branch.
+    */
+  private[graft] def branches(label: String, run: String, cuts: Seq[DataFrame],
+                              notify: Notifier, retryAttempts: Int)
+                             (named: (String, () => Unit)*): Unit = {
+    val lock = new Object
+    val note: Notifier = (severity, message) => lock.synchronized(notify(severity, message))
+    val retryNote: Notifier = (severity, message) => if (severity != "error") note(severity, message)
+    cuts.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    val pool = Executors.newFixedThreadPool(named.size)
+    val failures = try {
+      val running = named.map { case (name, body) =>
+        pool.submit[Unit](() =>
+          withRetries(s"$label/$name", maxAttempts = retryAttempts, notify = retryNote)(body()))
+      }
+      running.map { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+    } finally {
+      pool.shutdownNow()
+      // Reverse order: a cut released before one cached over it would
+      // make Spark re-plan the dependent cache.
+      cuts.reverse.foreach(_.unpersist())
+    }
+    failures.flatten.headOption match {
+      case Some(e) =>
+        note("error", s"$run failed: ${e.getMessage}")
+        throw e
+      case None => note("info", s"$run complete")
+    }
+  }
 }

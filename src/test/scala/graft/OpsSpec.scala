@@ -294,6 +294,114 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(notes.toSeq.map(_._1) == Seq("error"), s"error notification expected, got $notes")
   }
 
+  test("pipeline: the concurrent snapshot writes exactly the built frames and the sequential report") {
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    val out = Files.createTempDirectory("graft-equiv").toString
+    val md = Pipeline.runDaily(spark, dir, out, "2024-01-31", notify = Pipeline.Notify.silent)
+    val o = Pipeline.build(spark, dir)
+    val base = s"$out/snapshot=2024-01-31"
+    Seq("bars" -> o.bars, "indicators" -> o.enriched, "breadth" -> o.breadth,
+      "health" -> o.health, "movers" -> o.movers, "signals" -> o.signals,
+      "breakouts" -> o.breakouts).foreach { case (name, want) =>
+      // bars' partition column comes back last; compare in build's order.
+      val got = spark.read.parquet(s"$base/$name").select(want.columns.map(col): _*)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"$name differs from Pipeline.build")
+    }
+    assert(md == Report.dailyMarkdown(Breadth.marketSummary(o.breadth, o.bars), o.movers,
+      Breadth.marketRegime(o.breadth)))
+  }
+
+  test("pipeline: every job of a snapshot carries the caller's job group") {
+    // cancelJobGroup reaches a snapshot only if the branch threads
+    // inherit the caller's local properties.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val out = Files.createTempDirectory("graft-group").toString
+    sc.addSparkListener(listener)
+    sc.setJobGroup("graft-daily-spec", "daily snapshot under a caller's job group")
+    try Pipeline.runDaily(spark, "/root/testdata/sf0.001", out, "2024-01-31",
+      notify = Pipeline.Notify.silent)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.Bus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.size >= 8, s"one job per output at least, got ${seen.size}")
+    assert(seen.toSet == Set("graft-daily-spec"),
+      s"job groups seen: ${seen.groupBy(identity).map { case (g, n) => g -> n.size }}")
+  }
+
+  test("pipeline: a failed branch lets the others finish over live cuts, then rethrows the first declared failure") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
+    import org.apache.spark.storage.StorageLevel
+    val cut = spark.range(0, 1000, 1, 4).toDF("x")
+    val notes = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val first = new RuntimeException("declared first, fails second")
+    val later = new RuntimeException("declared later, fails first")
+    val laterFailing = new CountDownLatch(1)
+    val bothFailing = new CountDownLatch(2)
+    val cutLive = new ConcurrentHashMap[String, java.lang.Boolean]
+    def survivor(name: String): (String, () => Unit) = name -> (() => {
+      bothFailing.await()
+      Thread.sleep(300) // a runner that stopped at the first failure has released the cut by now
+      cutLive.put(name, cut.storageLevel != StorageLevel.NONE)
+      assert(cut.count() == 1000L)
+    })
+    val thrown = intercept[RuntimeException] {
+      Pipeline.branches("daily", "spec run", Seq(cut), (sev, msg) => notes += ((sev, msg)),
+          retryAttempts = 1)(
+        survivor("a"),
+        "first" -> (() => { laterFailing.await(); Thread.sleep(100); bothFailing.countDown(); throw first }),
+        "later" -> (() => { laterFailing.countDown(); bothFailing.countDown(); throw later }),
+        survivor("b"))
+    }
+    assert(thrown eq first)
+    import scala.jdk.CollectionConverters._
+    assert(cutLive.asScala.toMap == Map("a" -> true, "b" -> true),
+      s"every other branch completes with the cut still cached: $cutLive")
+    assert(cut.storageLevel == StorageLevel.NONE, "the cut is released once every branch is done")
+    assert(notes.toSeq.map(_._1) == Seq("error"), s"one error notification expected, got $notes")
+    assert(notes.head._2.contains(first.getMessage))
+  }
+
+  test("pipeline: concurrent retries notify one at a time, each under its own label") {
+    import java.util.concurrent.CyclicBarrier
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val notes = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val inSink = new AtomicInteger
+    val overlapped = new AtomicBoolean
+    val sink: Pipeline.Notifier = (sev, msg) => {
+      if (inSink.incrementAndGet() > 1) overlapped.set(true)
+      Thread.sleep(100) // widens the window two unserialized calls would overlap in
+      notes += ((sev, msg))
+      inSink.decrementAndGet()
+      ()
+    }
+    val together = new CyclicBarrier(2)
+    def flaky(name: String): (String, () => Unit) = {
+      var failed = false
+      name -> (() => if (!failed) {
+        failed = true
+        together.await() // both branches fail at the same moment
+        throw new RuntimeException(s"$name flaked")
+      })
+    }
+    Pipeline.branches("daily", "spec run", Nil, sink, retryAttempts = 2)(flaky("a"), flaky("b"))
+    assert(!overlapped.get, "the notifier was entered by two threads at once")
+    assert(notes.toSeq.map(_._1) == Seq("warning", "warning", "info"), s"$notes")
+    assert(notes.take(2).map(_._2.takeWhile(_ != ' ')).toSet == Set("daily/a", "daily/b"))
+  }
+
   test("pipeline: weekly summary writes the performance table and renders") {
     val out = Files.createTempDirectory("graft-weekly").toString
     val md = Pipeline.runWeekly(spark, "/root/testdata/sf0.001", out, "2024-W05")
