@@ -7,8 +7,9 @@ import org.apache.spark.sql.DataFrame
   * goes through [[frame]] — the multi-round loops (connected
   * components, the PageRank ladder, BPE merge rounds, the perceptron
   * fit, Lloyd iterations) and every single-pass materialization of a
-  * multi-consumer frame (the guarded postings, the incremental-dedup
-  * keyed frames, the curation gate's LM-tail input, …). The sites keep
+  * multi-consumer frame (the LSH candidate pairs and their shingle
+  * arrays, the incremental-dedup keyed frames, the curation gate's
+  * LM-tail input, …). The sites keep
   * their own notes on WHY they materialize; this object decides HOW.
   *
   * `localCheckpoint` (the default) materializes to EXECUTOR-LOCAL

@@ -31,7 +31,7 @@ object Bm25 {
       .select(col("doc_id"), col("__t"), size(col("__t")).as("dl"))
 
   /** The query-filtered term-frequency posting, UN-checkpointed — the
-    * plan-shape test target (the [[Dedup.guardOver]] pattern:
+    * plan-shape test target (the [[Dedup.portableBandKeys]] pattern:
     * [[topk]] checkpoints this frame, which hides the filter-precedes-
     * explode contract from the row plan).
     */

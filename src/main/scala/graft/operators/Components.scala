@@ -20,7 +20,7 @@ object Components {
     * neighbors; at fixpoint every node carries the minimum id reachable
     * in its component. Converges in O(component diameter) rounds —
     * duplicate clusters are near-cliques (or stars, under
-    * Dedup.cappedPairs), so 3–5 rounds in practice.
+    * graft.functions.ListPairs), so 3–5 rounds in practice.
     *
     * `pointerJump = true` additionally folds in the previous round's
     * label-of-label each round (labels are node ids, so the previous

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.ListPairs
+
 /** Document deduplication for LLM-training-data pipelines (SURVEY §2
   * #37–40): exact hashing, MinHash-LSH banding, SimHash, and n-gram
   * Jaccard verification.
@@ -292,15 +294,18 @@ object Dedup {
   val Bands = 8
   private val RowsPerBand = Perms / Bands
 
-  /** Row-form shingle postings: one (doc_id, source, lang,
-    * shingle-hash) row per PER-DOCUMENT-DISTINCT shingle — the dedup is
-    * per-doc on the gram strings BEFORE hashing (TokenKgrams'
-    * first-occurrence set), not a global post-hash `.distinct()`
-    * (ADVICE r11 #2): output distinctness therefore relies on `doc_id`
-    * being unique in the input — a duplicated doc row would emit
-    * duplicate postings. Every caller feeds a primary-keyed documents
-    * table (oracle-confirmed 172/172). Produces the same shingle sets
-    * as [[withHashedShingles]] (spec-checked).
+  /** Row-form shingle postings: one (doc_id, source, lang, n,
+    * shingle-hash h) row per PER-DOCUMENT-DISTINCT shingle, where `n` is
+    * the document's shingle count (the size of its distinct gram array,
+    * so every posting carries its doc's set size and no per-doc count
+    * aggregate is needed). The dedup is per-doc on the gram strings
+    * BEFORE hashing (TokenKgrams' first-occurrence set), not a global
+    * post-hash `.distinct()` (ADVICE r11 #2): output distinctness
+    * therefore relies on `doc_id` being unique in the input — a
+    * duplicated doc row would emit duplicate postings. Every caller
+    * feeds a primary-keyed documents table (oracle-confirmed 172/172).
+    * Produces the same shingle sets as [[withHashedShingles]]
+    * (spec-checked).
     */
   def shinglePostings(documents: DataFrame): DataFrame =
     // r11: TokenKgrams(distinct) — see [[shinglePostingsRaw]]; the
@@ -309,9 +314,16 @@ object Dedup {
     // preserved exactly.
     Skew.fanOutScan(documents, "doc_id")
       .select(col("doc_id"), col("source"), col("lang"),
-        explode(graft.functions.TokenKgrams.tokenKgrams(tokens(col("text")), 2,
-          distinct = true)).as("s"))
+        graft.functions.TokenKgrams.tokenKgrams(tokens(col("text")), 2,
+          distinct = true).as("g"))
+      // explode_outer + a filter on the gram: a plain explode makes
+      // Catalyst infer `size(g) > 0` and push it through the projection
+      // into the scan, where it tokenizes every document a second time.
       .select(col("doc_id"), col("source"), col("lang"),
+        coalesce(size(col("g")), lit(0)).cast("long").as("n"),
+        explode_outer(col("g")).as("s"))
+      .filter(col("s").isNotNull)
+      .select(col("doc_id"), col("source"), col("lang"), col("n"),
         xxhash64(col("s")).as("h"))
 
   /** Row-form n-gram postings: one (doc_id, gram-hash) row per
@@ -1184,32 +1196,6 @@ object Dedup {
         (col("doc_id") === col("keep_id")).cast("int").as("is_kept"))
   }
 
-  /** Bounded pair expansion within an LSH bucket: buckets at or under
-    * `cap` emit all C(n,2) pairs; an OVERSIZED (degenerate) bucket —
-    * empty documents, boilerplate, the all-same-signature pathology that
-    * appears at corpus scale — emits a star against the bucket minimum
-    * instead: O(n) pairs that keep every member connected to one
-    * canonical representative (so duplicate CLUSTERS survive intact for
-    * connected-components grouping) without the quadratic blowup.
-    * `xs` must be sorted ascending so pair order and the star root are
-    * deterministic.
-    *
-    * Recall contract: downstream exact verification (Jaccard/hamming)
-    * runs PER PAIR, so in an oversized bucket that is NOT homogeneous,
-    * a spoke whose similarity to the star root fails the threshold is
-    * disconnected even if it is a genuine duplicate of another non-root
-    * member — star expansion trades that recall tail for the quadratic
-    * bound. Callers can measure exposure by counting buckets over `cap`
-    * (`groupBy(bucket).count.filter(count > cap)`) before emitting.
-    */
-  private[operators] def cappedPairs(xs: Column, cap: Int): Column =
-    when(size(xs) <= lit(cap),
-      flatten(transform(xs, (x, i) =>
-        transform(slice(xs, i + lit(2), size(xs)), y =>
-          struct(x.as("a"), y.as("b"))))))
-      .otherwise(transform(slice(xs, lit(2), size(xs)), y =>
-        struct(element_at(xs, 1).as("a"), y.as("b"))))
-
   /** Row-form shingle postings carrying the shingle STRING — the
     * portable-hash twin of [[shinglePostings]] (same posexplode + lead
     * plan, no xxhash64 collapse). Portable operators hash these with md5,
@@ -1260,7 +1246,7 @@ object Dedup {
     * shingle Jaccard ([[minhashVerify]]). The join carries only (band,
     * key, doc_id) — never text — and the verify branch builds shingle
     * arrays only for the (tiny) candidate set. Buckets larger than
-    * `maxBucket` expand as stars, not all-pairs (see [[cappedPairs]]) —
+    * `maxBucket` expand as stars, not all-pairs (see [[ListPairs]]) —
     * the guard that keeps one degenerate band bucket from going
     * quadratic at 100 TB.
     *
@@ -1429,16 +1415,17 @@ object Dedup {
     // computes the signature pipeline ONCE and emits each bucket's pair
     // combinations locally (a self-join would re-derive the full
     // signature plan on both sides). Expansion is bounded by maxBucket.
-    // The candidate pair frame is SMALL (bounded by cappedPairs) but
-    // feeds three consumers (candidateIds + the two verify joins) —
-    // un-materialized, each re-derives the full signature + bucket
-    // pipeline (r8 ReuseProbe: zero exchange reuse across consumers).
+    // The candidate pair frame is SMALL (bounded by the ListPairs star
+    // cap) but feeds three consumers (candidateIds + the two verify
+    // joins) — un-materialized, each re-derives the full signature +
+    // bucket pipeline (r8 ReuseProbe: zero exchange reuse across
+    // consumers).
     val candidates = banded
       .groupBy(col("band"), col("band_key"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(cappedPairs(col("ids"), maxBucket)).as("p"))
-      .select(col("p.a").as("id1"), col("p.b").as("id2"))
+      .select(ListPairs.listPairs(col("ids"), maxBucket))
+      .select(col("a").as("id1"), col("b").as("id2"))
       .distinct()
       .transform(graft.Ckpt.frame)
     // Exact-Jaccard verification: shingle ARRAYS are built only for docs
@@ -1481,7 +1468,7 @@ object Dedup {
     * hamming ≤ 3 by pigeonhole; recall above hamming 3 is partial) and
     * are verified by the full hamming distance Σ bit_count(k_a XOR k_b)
     * ≤ maxHamming ([[hammingBandPairs]]). Chunk buckets are collected
-    * and pair-expanded locally under the [[cappedPairs]] star guard, so
+    * and pair-expanded locally under the [[ListPairs]] star guard, so
     * one degenerate bucket cannot go quadratic. Empty tokens are dropped
     * on both engines (split edge artifacts, not content).
     */
@@ -1520,7 +1507,7 @@ object Dedup {
     * dHash signatures — [[graft.ops.Multimodal.mediaNearDup]]): `sig`
     * carries (doc_id, k0..k3); docs sharing any chunk bucket become
     * candidates (exact for hamming ≤ 3 by pigeonhole), buckets collect
-    * locally and pair-expand under the [[cappedPairs]] star guard, and
+    * locally and pair-expand under the [[ListPairs]] star guard, and
     * the verify is the exact four-chunk hamming sum. Identical plan to
     * the pre-factor simhashPairsPortable tail.
     */
@@ -1549,10 +1536,10 @@ object Dedup {
       .groupBy(col("chunk"), col("chunk_key"))
       .agg(sort_array(collect_list(struct(col("doc_id") +: kCols: _*))).as("ms"))
       .filter(size(col("ms")) > 1)
-      .select(explode(cappedPairs(col("ms"), maxBucket)).as("p"))
-      .select(Seq(col("p.a.doc_id").as("id1"), col("p.b.doc_id").as("id2")) ++
+      .select(ListPairs.listPairs(col("ms"), maxBucket))
+      .select(Seq(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")) ++
         (0 until nChunks).map(c =>
-          bit_count(col(s"p.a.k$c").bitwiseXOR(col(s"p.b.k$c"))).as(s"hx$c")): _*)
+          bit_count(col(s"a.k$c").bitwiseXOR(col(s"b.k$c"))).as(s"hx$c")): _*)
       .distinct()
       .withColumn("hamming",
         (0 until nChunks).map(c => col(s"hx$c")).reduce(_ + _).cast("int"))
@@ -1599,122 +1586,113 @@ object Dedup {
           col("n_hits").cast("double") / col("n_truth")), 6))
   }
 
-  /** Posting-frame hardening for the inverted-index self-join family
-    * (round-8, closing the round-7 verdict's one new scale finding).
+  /** Exact shingle-pair overlaps by the postings-list form (Elsayed,
+    * Lin & Oard, "Pairwise Document Similarity in Large Collections with
+    * MapReduce", ACL 2008): one (id1, id2, n1, n2, n_common) row for
+    * every id1 < id2 document pair of one (source, lang) bucket that
+    * shares at least one bigram shingle, where n1/n2 are the two
+    * documents' shingle counts and n_common the shared count. The shared
+    * front of [[ngramJaccardInvertedIndex]] and [[containmentPairs]].
     *
-    * The self-join on (source, lang, h) emits df²/2 rows for a shingle
-    * shared by df documents of one bucket — a cookie-banner shingle at
-    * df=10⁶ is 5·10¹¹ join rows from ONE key, and AQE skew-split only
-    * spreads the explosion across tasks, it cannot shrink it. Invisible
-    * at test scale (small bucket occupancy), catastrophic at corpus
-    * scale — exactly the case that must fail loudly instead of running
-    * for a week (the [[Similarity.nearDupPairs]] `maxLabelRows` /
-    * [[cappedPairs]] fail-don't-degrade contract; exactness forbids
-    * silently capping here, because the operators promise EVERY
-    * qualifying pair).
+    * Shape: the postings ([[shinglePostings]], each row already carrying
+    * its doc's count `n`) are derived ONCE and shuffled ONCE, on the key
+    * (h, source, lang), into one window ordered by doc_id. Each posting
+    * collects the (doc_id, n) of the postings before it in its key's
+    * list, and exploding that prefix emits each of the list's pairs
+    * exactly once, inside the task that holds the list; one
+    * map-side-combinable count per pair gives n_common. A posting
+    * self-join on the same key emits the same pairs, but it sends every
+    * posting to both join sides (AQE broadcast the whole frame), feeds a
+    * separate per-doc size aggregate joined back twice, and needs the
+    * postings materialized so its three consumers do not re-derive them.
+    * Here the postings have one consumer, so nothing is materialized and
+    * building the frame runs no job. A groupBy-collect of each list
+    * followed by a pair generator ([[ListPairs]]) was measured slower on
+    * the curate workload (1 515 vs 1 190 ms, seed 7, 4 cores): the
+    * collect aggregate over ~10⁵ keys falls back to sorting, twice, rows
+    * the window has already sorted. The hash comes first in the key so
+    * the sort's prefix comparator decides on a long, not on two strings.
     *
-    * Two modes:
-    *  - default: a 1-row max-df aggregate rides a broadcast crossJoin
-    *    into the posting frame; any shingle with df > `maxPostingDf`
-    *    raises before the join expands. Cost = one extra map-side-
-    *    combinable fold over postings, zero rows added.
-    *  - `stopShingleDf = Some(cut)`: degrade-don't-abort — shingles
-    *    with df > cut are DROPPED from the vocabulary (the standard
-    *    MOSS/Broder "stop shingle" practice: boilerplate that common
-    *    carries no similarity signal). Overlaps AND per-doc sizes are
-    *    then both measured over the kept vocabulary, so jaccard/
-    *    containment stay internally consistent. The df filter joins on
-    *    the SAME (source, lang, h) key as the pair self-join, so the
-    *    shuffle partitioning is reused.
+    * Guard: a shingle shared by df documents of one bucket emits
+    * df(df−1)/2 pairs — a cookie-banner shingle at df=10⁶ is 5·10¹¹
+    * rows from ONE key, which AQE cannot split because one list expands
+    * in one task. Exactness forbids capping (the operators promise
+    * EVERY qualifying pair), so an oversized key fails loudly with a
+    * named raise_error instead of running for a week. The check is a
+    * whole-list count in the same window (the [[Indicators]]
+    * collectSeries pattern: one exchange, rows held in a spill-safe
+    * buffer, never an array), computed before the list's first row is
+    * emitted, so the error fires at that row, whose prefix is empty. A
+    * key at exactly `maxPostingDf` passes and still expands up to
+    * maxPostingDf²/2 pairs in one task — the guard is also the pair
+    * stage's skew bound. Rows with a NULL `source` or `lang` are counted
+    * by the guard (they share one NULL key) and never paired, as the
+    * equi-join on the bucket never matched them.
+    *
+    * `stopShingleDf = Some(cut)` degrades instead of aborting: shingles
+    * with df > cut are DROPPED from the vocabulary (the MOSS/Broder
+    * "stop shingle" practice — boilerplate that common carries no
+    * similarity signal), and each doc's `n` is recounted over the kept
+    * vocabulary (a doc-keyed window), so jaccard/containment stay
+    * internally consistent. That mode adds two exchanges (the doc
+    * recount, then the key again) and does not apply `maxPostingDf`.
     */
-  private def guardedShinglePostings(documents: DataFrame, maxPostingDf: Int,
-                                     stopShingleDf: Option[Int]): DataFrame = {
-    // The guarded frame feeds THREE consumers (self-join side a, side
-    // b, per-doc sizes). Un-checkpointed, the executed plan scans the
-    // corpus and derives the postings once per consumer: 3 file scans
-    // (`Bench.Meter` on the executed plan, sf0.01 and sf0.1). AQE
-    // reuses 4 of the later exchanges there; the "0 ReusedExchange"
-    // read in r8 came from the frame's unexecuted initial plan. The checkpoint
-    // materializes the postings ONCE; the joins read the stored rows
-    // (4 RDD scans, 0 file scans, 3 reused exchanges).
-    //
-    // r12: the RAW postings checkpoint first and the df guard reads the
-    // STORED rows — a guard aggregate UNDER the checkpoint made
-    // materialization run the full scan→tokenize→gram→hash derivation
-    // twice (once for the guard's 1-row max-df, once for the posting
-    // rows: measured 11 s of the 29 s summed task time on
-    // containment_pairs). The 1-row guard overlay per consumer is a
-    // broadcast crossJoin over an in-memory scan — noise. Semantics
-    // unchanged: the guard still fires before any consumer's self-join
-    // expands, because every consumer reads the overlaid frame.
-    val guarded = guardOver(shinglePostings(documents).transform(graft.Ckpt.frame),
-      maxPostingDf, stopShingleDf)
-    // Stop-shingle mode: the df-filtered frame is what the consumers
-    // fan out over — materialize it too, or each consumer re-runs the
-    // keep join.
-    if (stopShingleDf.isDefined) guarded.transform(graft.Ckpt.frame) else guarded
-  }
-
-  /** The df guard / stop-shingle filter of [[guardedShinglePostings]]
-    * over any (doc_id, source, lang, h) posting frame — un-checkpointed
-    * postings give the single plan the plan-shape tests inspect.
-    */
-  private[graft] def guardOver(postings: DataFrame, maxPostingDf: Int,
-                               stopShingleDf: Option[Int]): DataFrame = {
+  private def shinglePairCounts(documents: DataFrame, maxPostingDf: Int,
+                                stopShingleDf: Option[Int]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     require(maxPostingDf > 0, "maxPostingDf must be positive")
-    stopShingleDf match {
+    val byKey = Window.partitionBy(col("h"), col("source"), col("lang"))
+      .orderBy(col("doc_id"))
+    val keyCount = count(lit(1)).over(
+      byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val prefix = collect_list(struct(col("doc_id"), col("n"))).over(
+      byKey.rowsBetween(Window.unboundedPreceding, -1))
+    val bucketed = col("source").isNotNull && col("lang").isNotNull
+    val postings = shinglePostings(documents)
+    val listed = stopShingleDf match {
       case Some(cut) =>
         require(cut > 0, "stopShingleDf cutoff must be positive")
-        val keep = postings.groupBy(col("source"), col("lang"), col("h"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cut)
-        postings.join(keep, Seq("source", "lang", "h")).drop("__df")
+        postings.filter(bucketed)
+          .withColumn("__df", keyCount).filter(col("__df") <= cut)
+          .withColumn("n", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+          .withColumn("__prev", prefix)
       case None =>
-        // Tiny 1-row frame; the raise_error stays alive because the
-        // filter references __chk (the nearDupPairs guard pattern).
-        val guard = postings.groupBy(col("source"), col("lang"), col("h"))
-          .agg(count(lit(1)).as("__df"))
-          .agg(max(col("__df")).as("__maxdf"))
-          .withColumn("__chk",
-            when(col("__maxdf") > maxPostingDf, raise_error(concat(
-              lit(s"shingle postings: a shingle's document frequency exceeds maxPostingDf=$maxPostingDf (df="),
-              col("__maxdf").cast("string"),
-              lit(") — the (source, lang, h) self-join would emit df^2/2 rows from that key; " +
-                "drop boilerplate via stopShingleDf, or raise maxPostingDf knowingly"))))
-              .otherwise(lit(1)))
-        postings.crossJoin(broadcast(guard))
-          .filter(col("__chk") === 1)
-          .drop("__maxdf", "__chk")
+        // One predicate, so the NULL-bucket drop cannot be pushed below
+        // the window that must count those rows.
+        postings.withColumn("__df", keyCount).withColumn("__prev", prefix)
+          .filter(when(col("__df") > maxPostingDf, raise_error(concat(
+            lit(s"shingle postings: a shingle's document frequency exceeds maxPostingDf=$maxPostingDf (df="),
+            col("__df").cast("string"),
+            lit(") — its posting list would emit df^2/2 pairs from that key; " +
+              "drop boilerplate via stopShingleDf, or raise maxPostingDf knowingly"))))
+            .otherwise(bucketed))
     }
+    listed
+      .select(col("doc_id").as("id2"), col("n").as("n2"), explode(col("__prev")).as("p"))
+      .select(col("p.doc_id").as("id1"), col("id2"), col("p.n").as("n1"), col("n2"))
+      // Strict order, as the join's a.doc_id < b.doc_id: a doc listed
+      // twice under one key (two of its shingles colliding in xxhash64)
+      // follows itself in the list and is dropped here.
+      .filter(col("id1") < col("id2"))
+      .groupBy(col("id1"), col("id2"), col("n1"), col("n2"))
+      .agg(count(lit(1)).as("n_common"))
   }
 
   /** #40 ngram_jaccard: exact bigram-shingle Jaccard for every pair
     * sharing (source, lang) metadata buckets, at or above minJaccard.
-    * Inverted index: explode shingles, equi-join postings on (bucket,
-    * shingle-hash), count matches per pair — the per-pair work is a
-    * codegen'd count and zero-overlap pairs never materialize, so no
-    * bucket goes all-pairs; requires minJaccard > 0. Postings are
-    * density-guarded (see
-    * [[guardedShinglePostings]]): a shingle whose document frequency
-    * exceeds `maxPostingDf` raises before the self-join expands, or is
-    * dropped as a stop shingle when `stopShingleDf` opts in.
+    * Inverted index: pairs come from the shingle posting lists
+    * ([[shinglePairCounts]]), so the per-pair work is a codegen'd count
+    * and zero-overlap pairs never materialize — no bucket goes
+    * all-pairs; requires minJaccard > 0. Postings are density-guarded:
+    * a shingle whose document frequency exceeds `maxPostingDf` raises
+    * before its list is built, or is dropped as a stop shingle when
+    * `stopShingleDf` opts in.
     */
   def ngramJaccardInvertedIndex(documents: DataFrame, minJaccard: Double = 0.05,
                                 maxPostingDf: Int = 10000,
                                 stopShingleDf: Option[Int] = None): DataFrame = {
     require(minJaccard > 0, "inverted-index plan only emits overlapping pairs")
-    val postings = guardedShinglePostings(documents, maxPostingDf, stopShingleDf)
-    val sizes = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val common = postings.as("a")
-      .join(postings.as("b"),
-        col("a.source") === col("b.source") && col("a.lang") === col("b.lang") &&
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col("doc_id").as("id1"), col("n_sh").as("n1")), Seq("id1"))
-      .join(sizes.select(col("doc_id").as("id2"), col("n_sh").as("n2")), Seq("id2"))
+    shinglePairCounts(documents, maxPostingDf, stopShingleDf)
       .select(col("id1"), col("id2"), col("n_common"),
         (col("n1") + col("n2") - col("n_common")).as("n_union"))
       .withColumn("jaccard",
@@ -1821,30 +1799,20 @@ object Dedup {
     * directional containments and the max — threshold on the max, read
     * the direction off which side is the snippet (n1 vs n2).
     *
-    * Same inverted-index shape as [[ngramJaccardInvertedIndex]]: one
-    * posting self-join on (bucket, shingle-hash) counts intersections,
-    * sizes join back, filter AFTER the cheap arithmetic. Shares
-    * [[shinglePostings]] so the two dup metrics see identical shingle
-    * sets, and the same [[guardedShinglePostings]] density guard
-    * (loud `maxPostingDf` raise / opt-in stop-shingle drop).
+    * Same inverted-index shape as [[ngramJaccardInvertedIndex]]: pairs
+    * and their intersection counts come from the shingle posting lists
+    * ([[shinglePairCounts]]), each posting already carrying its doc's
+    * shingle count, and the filter runs AFTER the cheap arithmetic.
+    * Shares [[shinglePostings]] so the two dup metrics see identical
+    * shingle sets, and the same density guard (loud `maxPostingDf`
+    * raise / opt-in stop-shingle drop).
     */
   def containmentPairs(documents: DataFrame,
                        minContainment: Double = 0.5,
                        maxPostingDf: Int = 10000,
                        stopShingleDf: Option[Int] = None): DataFrame = {
     require(minContainment > 0, "inverted-index plan only emits overlapping pairs")
-    val postings = guardedShinglePostings(documents, maxPostingDf, stopShingleDf)
-    val sizes = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val common = postings.as("a")
-      .join(postings.as("b"),
-        col("a.source") === col("b.source") && col("a.lang") === col("b.lang") &&
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col("doc_id").as("id1"), col("n_sh").as("n1")), Seq("id1"))
-      .join(sizes.select(col("doc_id").as("id2"), col("n_sh").as("n2")), Seq("id2"))
+    shinglePairCounts(documents, maxPostingDf, stopShingleDf)
       .select(col("id1"), col("id2"), col("n_common"), col("n1"), col("n2"),
         round(col("n_common").cast("double") / col("n1"), 6).as("c1_in_2"),
         round(col("n_common").cast("double") / col("n2"), 6).as("c2_in_1"),

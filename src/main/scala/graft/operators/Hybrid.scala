@@ -47,7 +47,7 @@ object Hybrid {
     // missing or zero-norm query vector would make the dense arm
     // empty and fuse would still return top-k — silently
     // lexical-only. The guard rides INSIDE the plan as the broadcast
-    // 1-row raise_error (the guardedShinglePostings idiom): the
+    // 1-row raise_error (the Similarity.nearDupPairs idiom): the
     // keyed agg always yields exactly one row (count 0 on no match),
     // so the crossJoin never silently drops, and the filter
     // referencing __chk keeps the raise_error alive. No eager

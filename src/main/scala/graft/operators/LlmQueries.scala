@@ -216,7 +216,7 @@ object LlmQueries {
     // variant is quadratic in dense labels; SURVEY §5 caveat).
     // Oracle-checked since round 6: the hyperplanes are driver-side
     // literals, so the oracle embeds the exact values and replays the
-    // banding + cappedPairs + verify + CC pipeline in SQL.
+    // banding + ListPairs + verify + CC pipeline in SQL.
     // pointerJump: the banded emitter's recall<1 yields sparse chains
     // (19 plain hash-min rounds measured); the jump halves the rounds.
     "dedup_clusters_lsh" -> ((s, d) =>

@@ -44,7 +44,7 @@ object Similarity {
     * degenerate label silently turns this into all-pairs. The guard
     * makes that misuse fail loudly: any label wider than `maxLabelRows`
     * raises before the join expands (the same fail-don't-degrade
-    * contract as `Dedup.cappedPairs`, except exactness here forbids
+    * contract as `graft.functions.ListPairs`, except exactness here forbids
     * star-capping — capped output would break the operator's "every
     * qualifying pair" semantics and its oracle). For corpora past the
     * guard, [[nearDupPairsLsh]] is the scale path.
@@ -117,10 +117,10 @@ object Similarity {
       .groupBy(col("band"), col("bsig"))
       .agg(sort_array(collect_list(col("vec_id"))).as("xs"))
       .filter(size(col("xs")) >= 2)
-      .select(explode(Dedup.cappedPairs(col("xs"), maxBucket)).as("pr"))
+      .select(graft.functions.ListPairs.listPairs(col("xs"), maxBucket))
       // A pair can agree in several bands — dedupe before the (heavier)
       // vector verify so the dot product runs once per pair.
-      .select(col("pr.a").as("id1"), col("pr.b").as("id2")).distinct()
+      .select(col("a").as("id1"), col("b").as("id2")).distinct()
     val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
     cands
       .join(vecs.select(col("vec_id").as("id1"), col("v").as("v1"),

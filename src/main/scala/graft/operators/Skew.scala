@@ -39,23 +39,47 @@ object Skew {
     * coalescing, while a byte-based coalesce would immediately re-fuse
     * a small-but-CPU-heavy frame back to one partition.
     *
-    * PRECONDITION (ADVICE r11): `df` should be a scan/projection-only
-    * frame. The partition-count probe reads `df.rdd` at plan-build
-    * time, and under AQE `Dataset.rdd` eagerly materializes upstream
-    * query stages — on a frame whose plan contains exchanges that
-    * would run upstream jobs whose results the subsequent execution
-    * does not reuse. Not every call site keeps to it:
-    * [[graft.CorpusPipeline.curate]] hands its persisted exact-dedup
-    * frame (content-hash shuffle + window) to the pair emitter, e.g.
-    * [[Dedup.ngramJaccardInvertedIndex]] → [[Dedup.shinglePostings]],
-    * and there the `df.rdd` probe runs a job of its own (`rdd at
-    * Skew.scala`, one task per cached partition). Replacing the probe
-    * with the file-scan relation's split count is still open.
+    * The partition count comes from the physical plan, so the probe
+    * runs no job (ADVICE r11 #1; it used to read `df.rdd`, and under
+    * AQE `Dataset.rdd` on a frame with exchanges or a persisted input
+    * runs the upstream stages at plan-build time): a plan whose
+    * `outputPartitioning` states its count (an exchange, a coalesce) is
+    * taken at its word; a scan, through any narrow projection or
+    * filter, reports the split count of its input RDD (file splits, a
+    * checkpointed RDD's partitions, a local relation's slices); a
+    * persisted frame is read through its cached plan. Anything else (a
+    * join or union at the top) is not counted and is fanned out.
+    *
+    * PRECONDITION: `df` should be a scan/projection-only frame. On a
+    * frame whose top is an AQE exchange the count is the PLANNED one;
+    * AQE may coalesce it to fewer partitions at run time.
     */
   def fanOutScan(df: DataFrame, key: String): DataFrame = {
     val width = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= width) df
+    if (plannedPartitions(df).exists(_ >= width)) df
     else df.repartition(width, col(key))
+  }
+
+  /** The partition count `df`'s physical plan states without running a
+    * job, or None when the plan does not state one (see [[fanOutScan]]).
+    */
+  private[graft] def plannedPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.{CodegenSupport, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Option[Int] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case _ if p.outputPartitioning.numPartitions > 0 =>
+        Some(p.outputPartitioning.numPartitions)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case f: FileSourceScanExec => Some(f.inputRDD.getNumPartitions)
+      // RDD and local-relation scans
+      case leaf: CodegenSupport if leaf.children.isEmpty =>
+        leaf.inputRDDs().headOption.map(_.getNumPartitions)
+      case _ if p.children.size == 1 => walk(p.children.head)
+      case _ => None
+    }
+    walk(df.queryExecution.executedPlan)
   }
 
   /** Per-key frequency profile — find the hot keys that justify salting

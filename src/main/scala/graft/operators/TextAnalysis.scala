@@ -621,7 +621,7 @@ object TextAnalysis {
     * (vocabulary but NO bigrams: every doc would silently score the
     * floor ppl 1.0 against an empty model) — is a configuration error
     * and raises loudly from inside the lazy plan (the
-    * guardedShinglePostings pattern), not a silent constant score.
+    * maxPostingDf guard pattern), not a silent constant score.
     *
     * Scale shape: identical to lmScore — the per-doc bigram count is
     * the only raw-posting pass; the ref flag rides the count rows

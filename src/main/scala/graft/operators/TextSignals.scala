@@ -138,7 +138,7 @@ object TextSignals {
     * LOCAL overlap — the license header, the quoted paragraph.
     *
     * Scale shape: the fingerprint frame (≈ n_grams/w rows per doc, a
-    * 4× reduction) groups by hash — bucket-collect + [[Dedup.cappedPairs]]
+    * 4× reduction) groups by hash — bucket-collect + [[graft.functions.ListPairs]]
     * star-capping, the minhash-candidate argument: one degenerate
     * boilerplate fingerprint cannot go quadratic. Shared counts fold
     * map-side per pair; sizes join back on the id keys. Capped buckets
@@ -161,8 +161,8 @@ object TextSignals {
     val pairs = byHash.groupBy("fp_hash")
       .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(Dedup.cappedPairs(col("ids"), maxBucket)).as("p"))
-      .select(col("p.a").as("id1"), col("p.b").as("id2"))
+      .select(graft.functions.ListPairs.listPairs(col("ids"), maxBucket))
+      .select(col("a").as("id1"), col("b").as("id2"))
       .groupBy("id1", "id2").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
     pairs

@@ -701,7 +701,7 @@ object Multimodal {
     * the only match), so an over-`maxSeenBucket` bucket RAISES loudly
     * WHEN PROBED (the raise rides the joined rows, so an oversized
     * bucket no arrival touches costs — and fails — nothing; the guard
-    * bounds actual expansion, the guardedShinglePostings rule). A
+    * bounds actual expansion, the maxPostingDf guard rule). A
     * bucket that hot means near-constant images (test cards, blanks)
     * that belong in a quarantine pass, not a silent recall hole.
     *

@@ -39,7 +39,7 @@ import graft.operators.Dedup
   *    stream length (the dedupDocuments rule).
   *  - bounded buckets: past `maxBucket` members a bucket STAR-CAPS —
   *    new arrivals compare against the bucket ROOT (lowest doc_id)
-  *    only and are not stored, mirroring the batch `cappedPairs`
+  *    only and are not stored, mirroring the batch `ListPairs`
   *    star rule (connectivity through the root survives; state and
   *    per-row work stay O(maxBucket)).
   *  - pairs surface once per COLLIDING BAND (band is an output column);

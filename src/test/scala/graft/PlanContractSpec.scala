@@ -425,43 +425,83 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     val pi = plan(graft.operators.Similarity.ivfStats(emb))
     assert(!pi.contains("Window") && !pi.contains("SortMergeJoin"),
       s"ivf_stats is aggregates + broadcast total only:\n$pi")
-    // containment: same inverted-index join as ngram_jaccard — keyed,
+    // containment: same posting-list pairs as ngram_jaccard — keyed,
     // never cartesian.
     val pc = plan(graft.operators.Dedup.containmentPairs(docs))
     assert(!pc.contains("Cartesian"),
       s"containment must stay posting-keyed:\n$pc")
   }
 
-  test("round-8: posting self-joins carry a live df guard over ONE posting derivation") {
+  test("round-8: posting pairs carry a live df guard over ONE posting derivation") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    // The guard subplan itself: the 1-row max-df aggregate must survive
-    // column pruning (raise_error referenced by the filter) and ride a
-    // broadcast, never a cartesian.
-    val postings = graft.operators.Dedup.shinglePostings(docs)
-    val pg = plan(graft.operators.Dedup.guardOver(postings, 10000, None))
-    assert(pg.contains("raise_error"),
-      s"the maxPostingDf guard must stay alive in the plan:\n$pg")
-    assert(!pg.contains("CartesianProduct"),
-      s"the 1-row guard must broadcast, not cartesian:\n$pg")
-    // Stop-shingle mode: the df filter joins on the same key as the pair
-    // self-join — no raise_error, no cartesian, still posting-keyed.
-    val ps = plan(graft.operators.Dedup.guardOver(postings, 10000, Some(1000)))
-    assert(!ps.contains("raise_error") && !ps.contains("Cartesian"),
-      s"stop-shingle mode is a keyed df filter, not a guard:\n$ps")
-    // The consuming operators read the MATERIALIZED guarded frame: the
-    // posting pipeline (scan → window → distinct → guard) must appear
-    // in NONE of their final plans — it runs once in the checkpoint job
-    // (verified r8: without this, 0 ReusedExchange and the pipeline
-    // executed per consumer: side a, side b, sizes).
+    def lines(p: String, s: String): Int = p.linesIterator.count(_.contains(s))
     Seq(
       "ngram_jaccard" -> graft.operators.Dedup.ngramJaccardInvertedIndex(docs),
       "containment" -> graft.operators.Dedup.containmentPairs(docs)
     ).foreach { case (name, df) =>
       val p = plan(df)
-      assert(!p.contains("FileScan") && !p.contains("Window"),
-        s"$name must read the checkpointed postings, not re-derive them:\n$p")
+      // One posting derivation: the corpus is scanned once, and the
+      // pairs come from the grouped posting lists — no posting
+      // self-join, no broadcast of the postings, no cartesian.
+      assert(lines(p, "FileScan") == 1, s"$name must derive the postings once:\n$p")
+      assert(!p.contains("Join"), s"$name: no posting self-join:\n$p")
+      assert(!p.contains("BroadcastExchange"), s"$name: no posting broadcast:\n$p")
       assert(!p.contains("CartesianProduct"), s"$name: no cartesian:\n$p")
+      // The maxPostingDf guard survives pruning, and its whole-list
+      // count rides the posting lists' one exchange on (h, source, lang).
+      assert(p.contains("raise_error"),
+        s"the maxPostingDf guard must stay alive in the plan:\n$p")
+      assert(lines(p, "Exchange hashpartitioning(h") == 1,
+        s"$name: the guard and the posting lists share one exchange:\n$p")
+      assert(lines(p, "Sort [") == 1, s"$name: the guard and the lists share one sort:\n$p")
     }
+    // Stop-shingle mode: a keyed df filter, not a guard — still one
+    // derivation, no join, no cartesian.
+    val ps = plan(graft.operators.Dedup.ngramJaccardInvertedIndex(docs,
+      stopShingleDf = Some(1000)))
+    assert(lines(ps, "FileScan") == 1 && !ps.contains("raise_error") &&
+      !ps.contains("Join") && !ps.contains("CartesianProduct"),
+      s"stop-shingle mode is a keyed df filter over one derivation:\n$ps")
+  }
+
+  test("fanOutScan: the partition probe runs no job; a single-split scan fans out") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.{Dedup, Skew}
+    val sc = spark.sparkContext
+    val docs = graft.sources.Tables.documents(spark, sf)
+    // A persisted frame over an exchange, as curate hands its exact-dedup
+    // frame to the pair emitter: building the emitter over it must not
+    // run the frame's stages (the old `df.rdd` probe did).
+    val persisted = docs
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(sha2(col("text"), 256)).orderBy(col("doc_id"))))
+      .filter(col("__rn") === 1).drop("__rn")
+      .persist()
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Dedup.ngramJaccardInvertedIndex(persisted, minJaccard = 0.5)
+      Dedup.containmentPairs(persisted)
+      org.apache.spark.graft.Bus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      persisted.unpersist()
+    }
+    assert(jobs.get == 0, s"building the pair frames ran ${jobs.get} jobs")
+    // A scan read as one split still fans out to the session width.
+    val width = spark.sessionState.conf.numShufflePartitions
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout").resolve("d").toString
+    docs.coalesce(1).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    assert(Skew.plannedPartitions(scan) == Some(1))
+    assert(Skew.fanOutScan(scan, "doc_id").rdd.getNumPartitions == width)
+    assert(Skew.plannedPartitions(scan.repartition(width + 1)) == Some(width + 1))
   }
 
   test("round-8: span decontamination marks via semi-join; diff joins hashes") {

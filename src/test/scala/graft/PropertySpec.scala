@@ -498,4 +498,99 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       assert(banded.contains((i, i + 100L, 0)), s"missing twin pair for $i")
     }
   }
+
+  test("posting-list pairs equal the posting self-join on random corpora") {
+    import org.apache.spark.sql.DataFrame
+    // Both exact emitters against the self-join form they replaced
+    // (PairReference), field for field and schema for schema: random
+    // corpora over a small vocabulary (overlaps everywhere), NULL source
+    // or lang rows, several thresholds, stop-shingle mode, and the
+    // maxPostingDf guard at and one below the corpus's largest df.
+    def same(name: String, got: DataFrame, want: DataFrame): Unit = {
+      assert(got.schema == want.schema, s"$name schema:\n${got.schema}\n${want.schema}")
+      def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val (g, w) = (rows(got), rows(want))
+      assert(g == w, s"$name: ${g.size} rows vs reference ${w.size}\n" +
+        s"${g.diff(w).take(5)}\n${w.diff(g).take(5)}")
+    }
+    def raises(name: String, df: => DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      assert(e.getMessage.contains("maxPostingDf"), s"$name: ${e.getMessage}")
+    }
+    Seq(11, 12, 13).foreach { seed =>
+      val rnd = new Random(seed)
+      val words = "a b c d e f g h".split(" ")
+      def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+      val docs = (1 to 40).map { i =>
+        val text = Seq.fill(1 + rnd.nextInt(10))(pick(words)).mkString(" ")
+        (i.toLong, text, pick(Seq("en", "de", null)), pick(Seq("s0", "s1", "s1", null)),
+          text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      Seq(0.05, 0.3, 0.5, 0.9).foreach { t =>
+        same(s"seed $seed jaccard $t", Dedup.ngramJaccardInvertedIndex(docs, t),
+          PairReference.ngramJaccard(docs, t))
+        same(s"seed $seed containment $t", Dedup.containmentPairs(docs, t),
+          PairReference.containment(docs, t))
+      }
+      Seq(2, 4).foreach { cut =>
+        same(s"seed $seed stop $cut jaccard", Dedup.ngramJaccardInvertedIndex(docs, 0.05,
+          stopShingleDf = Some(cut)), PairReference.ngramJaccard(docs, 0.05,
+          stopShingleDf = Some(cut)))
+        same(s"seed $seed stop $cut containment", Dedup.containmentPairs(docs, 0.2,
+          stopShingleDf = Some(cut)), PairReference.containment(docs, 0.2,
+          stopShingleDf = Some(cut)))
+      }
+      // The guard counts every posting of a key, NULL buckets included.
+      val maxDf = Dedup.shinglePostings(docs).groupBy("source", "lang", "h").count()
+        .agg(max("count")).head.getLong(0).toInt
+      same(s"seed $seed at maxPostingDf", Dedup.ngramJaccardInvertedIndex(docs, 0.05,
+        maxPostingDf = maxDf), PairReference.ngramJaccard(docs, 0.05, maxPostingDf = maxDf))
+      same(s"seed $seed containment at maxPostingDf", Dedup.containmentPairs(docs, 0.2,
+        maxPostingDf = maxDf), PairReference.containment(docs, 0.2, maxPostingDf = maxDf))
+      raises(s"seed $seed jaccard", Dedup.ngramJaccardInvertedIndex(docs, 0.05,
+        maxPostingDf = maxDf - 1))
+      raises(s"seed $seed containment", Dedup.containmentPairs(docs, 0.2,
+        maxPostingDf = maxDf - 1))
+    }
+    // A hot key that only NULL-source rows share is counted (it raises)
+    // but never paired (at the budget, no pair comes from it).
+    val nullHot = Seq((1L, "zz qq x1", null), (2L, "zz qq x2", null),
+      (3L, "zz qq x3", null), (4L, "p q r", "s0"), (5L, "p q s", "s0"))
+      .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    raises("null-source hot key", Dedup.ngramJaccardInvertedIndex(nullHot, 0.05,
+      maxPostingDf = 2))
+    val kept = Dedup.ngramJaccardInvertedIndex(nullHot, 0.05, maxPostingDf = 3)
+    same("null-source rows never pair", kept,
+      PairReference.ngramJaccard(nullHot, 0.05, maxPostingDf = 3))
+    assert(kept.select("id1", "id2").as[(Long, Long)].collect().toSeq == Seq((4L, 5L)))
+  }
+
+  test("the pair kernel equals the lambda pair expansion on random sorted lists") {
+    import graft.functions.ListPairs
+    // Long lists and struct lists (the LSH and hamming callers), with
+    // caps below, at and above the list sizes (star and all-pairs).
+    val rnd = new Random(5)
+    val lists = (1 to 60).map { i =>
+      (i.toLong, Seq.fill(rnd.nextInt(9))(rnd.nextInt(20).toLong).sorted)
+    }.toDF("k", "xs")
+      .withColumn("ms", sort_array(transform(col("xs"), x =>
+        struct(x.as("doc_id"), (x % 3).as("k0")))))
+    Seq(1, 3, 8, 1024).foreach { cap =>
+      Seq("xs", "ms").foreach { c =>
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+        val got = lists.select(col("k"), ListPairs.listPairs(col(c), cap))
+        val want = lists.select(col("k"),
+          explode(PairReference.cappedPairs(col(c), cap)).as("p"))
+          .select(col("k"), col("p.a").as("a"), col("p.b").as("b"))
+        // Names and types; the lambda form also marked `a` nullable (its
+        // star root is an element_at), the kernel keeps the list's own
+        // element nullability.
+        def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+        assert(shape(got) == shape(want), s"$c cap $cap:\n${got.schema}\n${want.schema}")
+        assert(rows(got) == rows(want), s"$c cap $cap")
+      }
+    }
+  }
 }
