@@ -25,19 +25,16 @@ object Breadth {
     * high/low counts from the exchange feed; here they are derived from
     * bars directly).
     */
-  private def withMoveFlags(bars: DataFrame, p: Int): DataFrame = {
+  private[graft] def withMoveFlags(bars: DataFrame, p: Int): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("date"))
     val prior = byUser.rowsBetween(-(p - 1), -1)
+    val full = count(col("close")).over(prior) === (p - 1)
     bars
-      .withColumn("__delta", col("close") - lag(col("close"), 1).over(byUser))
-      .withColumn("__prior_max",
-        when(count(col("close")).over(prior) === (p - 1), max(col("close")).over(prior)))
-      .withColumn("__prior_min",
-        when(count(col("close")).over(prior) === (p - 1), min(col("close")).over(prior)))
-      .withColumn("__new_high",
-        (col("close") > col("__prior_max")).cast("int"))
-      .withColumn("__new_low",
-        (col("close") < col("__prior_min")).cast("int"))
+      .select(col("*"), (col("close") - lag(col("close"), 1).over(byUser)).as("__delta"),
+        when(full, max(col("close")).over(prior)).as("__prior_max"),
+        when(full, min(col("close")).over(prior)).as("__prior_min"))
+      .select(col("*"), (col("close") > col("__prior_max")).cast("int").as("__new_high"),
+        (col("close") < col("__prior_min")).cast("int").as("__new_low"))
   }
 
   /** #16 breadth_daily: market breadth per calendar day. Days with no
@@ -145,9 +142,8 @@ object Breadth {
   def topMovers(bars: DataFrame, k: Int = 5): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("date"))
     val lastBar = bars
-      .withColumn("__prev", lag(col("close"), 1).over(byUser))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("date").desc)))
+      .select(col("*"), lag(col("close"), 1).over(byUser).as("__prev"), row_number().over(
+        Window.partitionBy(col("user_id")).orderBy(col("date").desc)).as("__rn"))
       .filter(col("__rn") === 1 && col("__prev").isNotNull)
       .withColumn("return_pct", (col("close") / nullif(col("__prev"), lit(0.0)) - 1) * 100)
       .filter(col("return_pct").isNotNull)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -7,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Technical indicators over per-key ordered bar series.
   *
   * Spark re-expression of the reference's `TechnicalIndicators`
-  * (/root/reference/src/transformers/technical_indicators.py). There each
+  * (src/transformers/technical_indicators.py). There each
   * indicator is a pandas rolling/ewm call on one symbol's frame inside a
   * per-symbol thread loop; here each is a window function over
   * `partitionBy(key).orderBy(date)` — one shuffle on the key shared by
@@ -23,6 +25,27 @@ import org.apache.spark.sql.functions._
   * `aggregate` higher-order function (stays inside Catalyst/codegen),
   * `posexplode` back. Parallelism is across keys; per-key state is the
   * bar-grain series (years of daily bars ≈ KBs), never tick grain.
+  *
+  * Plan shape: every entry point ([[enrichAll]] and each `withX`) is one
+  * call of [[build]], which evaluates any subset of the families in a
+  * fixed number of projections:
+  *  - one series fold for all fold families (EMA, MACD): one guarded
+  *    `collect_list`, the fold arrays in projections of their own (a HOF
+  *    fold is interpreted; below the explode it runs once per key, not
+  *    once per column that reads it), one `posexplode` that reads the bar
+  *    fields back and slices each array;
+  *  - one window projection per dependency level over `(key ORDER BY
+  *    date)`: level 1 over bar columns (lags, gated rolling count / avg /
+  *    stddev, row_number, running first), level 2 over level-1 values
+  *    (RSI gain/loss and ATR true-range averages, the OBV running sum),
+  *    then the month-partitioned first on its own;
+  *  - one projection for every derived column.
+  * Catalyst puts the window functions of one projection that share a
+  * partitioning and an ordering into one `Window` operator, but stacks an
+  * operator per projection: a `withColumn` chain pays a Window, a
+  * re-analysis of the whole plan and its generated code per column. The
+  * level form is bit-equal to the chain, since a sliding frame recomputes
+  * its aggregate from its own rows in order (`PropertySpec` pins it).
   */
 object Indicators {
   val KeyCol = "user_id"
@@ -41,9 +64,8 @@ object Indicators {
 
   /** Full enrichment chain — every indicator family in one call, the
     * Spark twin of the reference applying its whole `TechnicalIndicators`
-    * battery per symbol. Fold-based indicators (MACD, EMA) run first so
-    * their per-key series collection carries only bar-grain columns;
-    * the window families then share one (key)-partitioned sort.
+    * battery per symbol. Columns follow the bars in family order: MACD,
+    * EMA, SMA, RSI, Bollinger, ATR, volume, returns.
     */
   def enrichAll(bars: DataFrame,
                 smaPeriods: Seq[Int] = Seq(5, 10, 20),
@@ -52,23 +74,17 @@ object Indicators {
                 macd: (Int, Int, Int) = (12, 26, 9),
                 bollinger: (Int, Double) = (20, 2.0),
                 atrPeriod: Int = 20,
-                momentumHorizons: Seq[Int] = Seq(5, 10)): DataFrame = {
-    val (f, s, sig) = macd
-    val (bp, bk) = bollinger
-    val afterFolds = withEma(withMacd(bars, f, s, sig), emaSpans)
-    withReturns(
-      withVolumeMetrics(
-        withAtr(
-          withBollinger(
-            withRsi(
-              withSma(afterFolds, smaPeriods), rsiPeriod), bp, bk), atrPeriod)),
-      momentumHorizons)
-  }
+                momentumHorizons: Seq[Int] = Seq(5, 10)): DataFrame =
+    build(bars, Families(macd = Some(macd), ema = Some(emaSpans), sma = smaPeriods,
+      rsi = Some(rsiPeriod), bollinger = Some(bollinger), atr = Some(atrPeriod),
+      volume = true, returns = Some(momentumHorizons)))
 
   def byKey: WindowSpec =
     Window.partitionBy(col(KeyCol)).orderBy(col(OrdCol))
 
   private def rolling(p: Int): WindowSpec = byKey.rowsBetween(-(p - 1), 0)
+
+  private val running: WindowSpec = byKey.rowsBetween(Window.unboundedPreceding, 0)
 
   /** pandas rolling(p, min_periods=p).mean() */
   def gatedAvg(c: Column, p: Int): Column =
@@ -82,84 +98,58 @@ object Indicators {
     * (technical_indicators.py:17 add_moving_averages, :175 dist columns).
     */
   def withSma(bars: DataFrame, periods: Seq[Int]): DataFrame =
-    periods.foldLeft(bars) { (df, p) =>
-      df.withColumn(s"ma_$p", gatedAvg(col("close"), p))
-        .withColumn(s"dist_ma_$p",
-          (col("close") - col(s"ma_$p")) / nullif(col(s"ma_$p"), lit(0.0)))
-    }
-
-  /** SQL fold expression: pandas ewm(span, adjust=False) over an array.
-    * alpha is written as the expression `2.0/(span+1)` so Spark and the
-    * DuckDB oracle evaluate the identical double.
-    */
-  private def emaFoldSql(src: String, span: Int): String = {
-    // 2.0D: a plain `2.0` literal parses as DECIMAL(2,1) and decimal
-    // division truncates alpha to 6 decimals (0.153846 != 2.0/13) —
-    // the double literal keeps the full-precision recursion.
-    val a = s"(2.0D/${span + 1})"
-    s"""aggregate(
-       |  slice($src, 2, size($src) - 1),
-       |  array(element_at($src, 1)),
-       |  (acc, v) -> array_append(acc, $a * v + (1.0 - $a) * element_at(acc, -1)))""".stripMargin
-  }
-
-  /** Collect the per-key series once: returns (grouped df with column `s`
-    * = date-sorted array of row structs and `closes` = array of close).
-    */
-  private def collectSeries(bars: DataFrame,
-                            maxLen: Int = MaxFoldSeriesLen): (DataFrame, Seq[String]) = {
-    val others = bars.columns.filter(_ != KeyCol).toSeq
-    val ordered = Seq(OrdCol) ++ others.filterNot(_ == OrdCol)
-    // The guard must fire BEFORE collect_list materializes a key's whole
-    // series — a post-hoc size(s) check would OOM the aggregate first
-    // for a truly tick-grain key. A keyed window count buffers rows in
-    // a spill-safe sorter (never an array) and raises per oversized
-    // key; it evaluates inside the SAME single derivation of `bars`
-    // (an aggregate-plus-join guard would re-derive the whole upstream
-    // bars pipeline a second time — measured 2× on enrichAll queries),
-    // and its hash partitioning on the key is what the groupBy needs,
-    // so guard + collect share one Exchange.
-    val byKeyAll = org.apache.spark.sql.expressions.Window.partitionBy(col(KeyCol))
-    val guarded = bars
-      .withColumn("__n", count(lit(1)).over(byKeyAll))
-      .withColumn("__chk",
-        when(col("__n") > maxLen, raise_error(concat(
-          lit(s"Indicators fold: per-key series exceeds maxSeriesLen=$maxLen (n="),
-          col("__n").cast("string"),
-          lit(") — the array fold holds one key's whole series in a task; " +
-            "use withEmaStreaming for long series or raise maxSeriesLen"))))
-          .otherwise(lit(1)))
-      .filter(col("__chk") === 1).drop("__n", "__chk")
-    val g = guarded
-      .groupBy(col(KeyCol))
-      .agg(sort_array(collect_list(struct(ordered.map(col): _*))).as("s"))
-      .withColumn("closes", expr("transform(s, x -> x.close)"))
-    (g, others)
-  }
-
-  private def explodeSeries(g: DataFrame, others: Seq[String], extra: Seq[String]): DataFrame = {
-    val exploded = g.select(
-      (col(KeyCol) +: extra.map(col)) :+ posexplode(col("s")): _*)
-    others.foldLeft(exploded)((df, c) => df.withColumn(c, col("col").getField(c)))
-  }
+    build(bars, Families(sma = periods))
 
   /** EMA columns `ema_{span}` (technical_indicators.py:44 add_ema):
     * null until span observations (min_periods), recursion seeded at the
     * first bar exactly as pandas ewm(adjust=False).
     */
   def withEma(bars: DataFrame, spans: Seq[Int],
-              maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame = {
-    val (g0, others) = collectSeries(bars, maxSeriesLen)
-    val g = spans.foldLeft(g0) { (df, sp) =>
-      df.withColumn(s"__ea_$sp", expr(emaFoldSql("closes", sp)))
-    }
-    val arrCols = spans.map(sp => s"__ea_$sp")
-    val e = explodeSeries(g, others, arrCols)
-    spans.foldLeft(e) { (df, sp) =>
-      df.withColumn(s"ema_$sp",
-        when(col("pos") >= sp - 1, element_at(col(s"__ea_$sp"), col("pos") + 1)))
-    }.drop(Seq("col", "pos", "closes") ++ arrCols: _*)
-  }
+              maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame =
+    build(bars, Families(ema = Some(spans), maxSeriesLen = maxSeriesLen))
+
+  /** MACD (technical_indicators.py:83 add_macd): macd = EMA_fast−EMA_slow
+    * masked to null before `slow` observations; signal = EMA(span=sig) of
+    * the masked macd series (recursion seeded at the first non-null macd,
+    * matching pandas ewm over a leading-NaN series); hist = macd − signal.
+    */
+  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9,
+               maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame =
+    build(bars, Families(macd = Some((fast, slow, sig)), maxSeriesLen = maxSeriesLen))
+
+  /** RSI (technical_indicators.py:62 add_rsi): rolling-mean smoothing
+    * (the reference's choice — not Wilder's), rs = avg_gain/avg_loss with
+    * zero-loss → null, plus the overbought/oversold/neutral signal.
+    */
+  def withRsi(bars: DataFrame, p: Int = 14): DataFrame =
+    build(bars, Families(rsi = Some(p)))
+
+  /** Bollinger bands (technical_indicators.py:104): SMA ± k·stddev,
+    * width, and 0–1 clipped band position.
+    */
+  def withBollinger(bars: DataFrame, p: Int = 20, k: Double = 2.0): DataFrame =
+    build(bars, Families(bollinger = Some((p, k))))
+
+  /** ATR + volatility (technical_indicators.py:136): true range is
+    * high−low on the first bar (pandas rowwise max skips the NaN
+    * prev-close terms), else max(h−l, |h−pc|, |l−pc|).
+    */
+  def withAtr(bars: DataFrame, p: Int = 20): DataFrame =
+    build(bars, Families(atr = Some(p)))
+
+  /** Volume metrics (technical_indicators.py:160): vol SMAs, ratio, OBV
+    * (running sum of sign(Δclose)·volume, first direction = 0), VPT.
+    */
+  def withVolumeMetrics(bars: DataFrame): DataFrame =
+    build(bars, Families(volume = true))
+
+  /** Returns & momentum (technical_indicators.py:175): daily pct/abs
+    * change, cumulative return (close/first − 1, null on the first bar as
+    * pandas cumprod leaves the seed NaN), momentum over k bars, and
+    * month-to-date momentum (the reference's YTD, scaled to the corpus).
+    */
+  def withReturns(bars: DataFrame, horizons: Seq[Int] = Seq(5, 10)): DataFrame =
+    build(bars, Families(returns = Some(horizons)))
 
   /** Long-series EMA: the same `ema_{span}` columns and pandas
     * ewm(adjust=False) recursion as [[withEma]], computed as a streaming
@@ -223,139 +213,159 @@ object Indicators {
       }(Encoders.row(outSchema))
   }
 
-  /** MACD (technical_indicators.py:83 add_macd): macd = EMA_fast−EMA_slow
-    * masked to null before `slow` observations; signal = EMA(span=sig) of
-    * the masked macd series (recursion seeded at the first non-null macd,
-    * matching pandas ewm over a leading-NaN series); hist = macd − signal.
-    */
-  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9,
-               maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame = {
-    val (g0, others) = collectSeries(bars, maxSeriesLen)
-    val aSig = s"(2.0D/${sig + 1})"
-    val g = g0
-      .withColumn("__ef", expr(emaFoldSql("closes", fast)))
-      .withColumn("__es", expr(emaFoldSql("closes", slow)))
-      .withColumn("__macd", expr("zip_with(__ef, __es, (f, s) -> f - s)"))
-      // A key with fewer than `slow` bars has no unmasked macd to seed
-      // the signal (and slice/element_at would raise on the negative
-      // length / missing index under ANSI): its signal array is null, so
-      // macd, macd_signal and macd_hist stay null for the whole key.
-      .withColumn("__sig", expr(
-        s"""CASE WHEN size(__macd) >= $slow THEN aggregate(
-           |  slice(__macd, ${slow + 1}, size(__macd) - $slow),
-           |  array(element_at(__macd, $slow)),
-           |  (acc, v) -> array_append(acc, $aSig * v + (1.0 - $aSig) * element_at(acc, -1))) END""".stripMargin))
-    val e = explodeSeries(g, others, Seq("__macd", "__sig"))
-    e.withColumn("macd",
-        when(col("pos") >= slow - 1, element_at(col("__macd"), col("pos") + 1)))
-      .withColumn("macd_signal",
-        when(col("pos") >= slow + sig - 2, element_at(col("__sig"), col("pos") - slow + 2)))
-      .withColumn("macd_hist", col("macd") - col("macd_signal"))
-      .drop("col", "pos", "closes", "__macd", "__sig")
-  }
+  /** The families one [[build]] evaluates; `None` / empty skips one. */
+  private final case class Families(macd: Option[(Int, Int, Int)] = None,
+    ema: Option[Seq[Int]] = None, sma: Seq[Int] = Nil, rsi: Option[Int] = None,
+    bollinger: Option[(Int, Double)] = None, atr: Option[Int] = None, volume: Boolean = false,
+    returns: Option[Seq[Int]] = None, maxSeriesLen: Int = MaxFoldSeriesLen)
 
-  /** RSI (technical_indicators.py:62 add_rsi): rolling-mean smoothing
-    * (the reference's choice — not Wilder's), rs = avg_gain/avg_loss with
-    * zero-loss → null, plus the overbought/oversold/neutral signal.
+  /** Every requested family over `bars`: the series fold, the window
+    * levels, then one projection appending the family columns in
+    * [[enrichAll]]'s order (a column already in `bars` is replaced in
+    * place, as `withColumn` does). Window inputs are named by what they
+    * compute, so families that share one (SMA 10 and Bollinger 10, the
+    * previous close) evaluate it once.
     */
-  def withRsi(bars: DataFrame, p: Int = 14): DataFrame = {
-    val delta = col("close") - lag(col("close"), 1).over(byKey)
-    val gain = when(delta.isNotNull, greatest(delta, lit(0.0)))
-    val loss = when(delta.isNotNull, greatest(-delta, lit(0.0)))
-    bars
-      .withColumn("__gain", gain)
-      .withColumn("__loss", loss)
-      .withColumn("__ag", gatedAvg(col("__gain"), p))
-      .withColumn("__al", gatedAvg(col("__loss"), p))
-      .withColumn("rsi",
-        lit(100.0) - lit(100.0) / (lit(1.0) + col("__ag") / nullif(col("__al"), lit(0.0))))
-      .withColumn("rsi_signal",
-        when(col("rsi") > 70, "overbought")
-          .when(col("rsi") < 30, "oversold")
-          .otherwise("neutral"))
-      .drop("__gain", "__loss", "__ag", "__al")
-  }
-
-  /** Bollinger bands (technical_indicators.py:104): SMA ± k·stddev,
-    * width, and 0–1 clipped band position.
-    */
-  def withBollinger(bars: DataFrame, p: Int = 20, k: Double = 2.0): DataFrame = {
-    val middle = gatedAvg(col("close"), p)
-    bars
-      .withColumn("bb_middle", middle)
-      .withColumn("__dev", gatedStd(col("close"), p))
-      .withColumn("bb_upper", col("bb_middle") + lit(k) * col("__dev"))
-      .withColumn("bb_lower", col("bb_middle") - lit(k) * col("__dev"))
-      .withColumn("bb_width",
-        (col("bb_upper") - col("bb_lower")) / nullif(col("bb_middle"), lit(0.0)))
-      .withColumn("bb_position",
-        least(greatest(
-          (col("close") - col("bb_lower")) /
-            nullif(col("bb_upper") - col("bb_lower"), lit(0.0)),
-          lit(0.0)), lit(1.0)))
-      .drop("__dev")
-  }
-
-  /** ATR + volatility (technical_indicators.py:136): true range is
-    * high−low on the first bar (pandas rowwise max skips the NaN
-    * prev-close terms), else max(h−l, |h−pc|, |l−pc|).
-    */
-  def withAtr(bars: DataFrame, p: Int = 20): DataFrame = {
-    val pc = lag(col("close"), 1).over(byKey)
-    val tr = when(pc.isNull, col("high") - col("low"))
-      .otherwise(greatest(
-        col("high") - col("low"),
-        abs(col("high") - pc),
-        abs(col("low") - pc)))
-    bars
-      .withColumn("__tr", tr)
-      .withColumn("atr", gatedAvg(col("__tr"), p))
-      .withColumn("close_std", gatedStd(col("close"), p))
-      .withColumn("volatility_ratio", col("atr") / nullif(col("close"), lit(0.0)))
-      .drop("__tr")
-  }
-
-  /** Volume metrics (technical_indicators.py:160): vol SMAs, ratio, OBV
-    * (running sum of sign(Δclose)·volume, first direction = 0), VPT.
-    */
-  def withVolumeMetrics(bars: DataFrame): DataFrame = {
-    val delta = col("close") - lag(col("close"), 1).over(byKey)
-    val direction = coalesce(signum(delta), lit(0.0))
-    bars
-      .withColumn("vol_sma_10", gatedAvg(col("volume"), 10))
-      .withColumn("vol_sma_20", gatedAvg(col("volume"), 20))
-      .withColumn("volume_ratio", col("volume") / col("vol_sma_20"))
-      .withColumn("obv", sum(direction * col("volume"))
-        .over(byKey.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("volume_price_trend", col("volume") * delta)
-  }
-
-  /** Returns & momentum (technical_indicators.py:175): daily pct/abs
-    * change, cumulative return (close/first − 1, null on the first bar as
-    * pandas cumprod leaves the seed NaN), momentum over k bars, and
-    * month-to-date momentum (the reference's YTD, scaled to the corpus).
-    */
-  def withReturns(bars: DataFrame, horizons: Seq[Int] = Seq(5, 10)): DataFrame = {
-    val prev = lag(col("close"), 1).over(byKey)
-    val firstClose = first(col("close"))
-      .over(byKey.rowsBetween(Window.unboundedPreceding, 0))
-    val monthWin = Window
-      .partitionBy(col(KeyCol), date_trunc("month", col(OrdCol)))
-      .orderBy(col(OrdCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // nullif on every denominator: a 0.0 close (present in the raw feed)
-    // must yield NULL as in the DuckDB oracle, not an ANSI divide error.
-    val withBase = bars
-      .withColumn("daily_return_pct", col("close") / nullif(prev, lit(0.0)) - lit(1.0))
-      .withColumn("daily_return_abs", col("close") - prev)
-      .withColumn("cumulative_return",
-        when(row_number().over(byKey) >= 2,
-          col("close") / nullif(firstClose, lit(0.0)) - lit(1.0)))
-      .withColumn("momentum_mtd",
-        col("close") / nullif(first(col("close")).over(monthWin), lit(0.0)) - lit(1.0))
-    horizons.foldLeft(withBase) { (df, h) =>
-      df.withColumn(s"momentum_$h",
-        col("close") / nullif(lag(col("close"), h).over(byKey), lit(0.0)) - lit(1.0))
+  private def build(bars: DataFrame, f: Families): DataFrame = {
+    val folded = if (f.macd.isEmpty && f.ema.isEmpty) bars else foldSeries(bars, f)
+    // level 1 over bar columns, level 2 over level-1 values, the month window
+    val levels = Seq.fill(3)(mutable.LinkedHashMap.empty[String, Column])
+    def at(level: Int, name: String, c: => Column): Column = {
+      levels(level).getOrElseUpdate(name, c)
+      col(name)
     }
+    val close = col("close")
+    def lagged(n: Int) = at(0, s"__lag$n", lag(close, n).over(byKey))
+    def avgOf(c: String, p: Int) = at(0, s"__avg_${c}_$p", gatedAvg(col(c), p))
+    def stdOf(c: String, p: Int) = at(0, s"__std_${c}_$p", gatedStd(col(c), p))
+    def ratio(num: Column, den: Column) = num / nullif(den, lit(0.0)) - lit(1.0)
+    lazy val delta = close - lagged(1)
+
+    val out = mutable.ArrayBuffer.empty[(String, Column)]
+    f.macd.foreach(_ => out ++= Seq("macd" -> col("__f_macd"), "macd_signal" -> col("__f_sig"),
+      "macd_hist" -> (col("__f_macd") - col("__f_sig"))))
+    f.ema.toSeq.flatten.foreach(sp => out += s"ema_$sp" -> col(s"__f_ema$sp"))
+    f.sma.foreach { p =>
+      val ma = avgOf("close", p)
+      out ++= Seq(s"ma_$p" -> ma, s"dist_ma_$p" -> (close - ma) / nullif(ma, lit(0.0)))
+    }
+    f.rsi.foreach { p =>
+      val gain = at(1, s"__gain_$p", gatedAvg(when(delta.isNotNull, greatest(delta, lit(0.0))), p))
+      val loss = at(1, s"__loss_$p", gatedAvg(when(delta.isNotNull, greatest(-delta, lit(0.0))), p))
+      val rsi = lit(100.0) - lit(100.0) / (lit(1.0) + gain / nullif(loss, lit(0.0)))
+      out ++= Seq("rsi" -> rsi, "rsi_signal" ->
+        when(rsi > 70, "overbought").when(rsi < 30, "oversold").otherwise("neutral"))
+    }
+    f.bollinger.foreach { case (p, k) =>
+      val (mid, dev) = (avgOf("close", p), stdOf("close", p))
+      val (upper, lower) = (mid + lit(k) * dev, mid - lit(k) * dev)
+      out ++= Seq("bb_middle" -> mid, "bb_upper" -> upper, "bb_lower" -> lower,
+        "bb_width" -> (upper - lower) / nullif(mid, lit(0.0)),
+        "bb_position" -> least(greatest(
+          (close - lower) / nullif(upper - lower, lit(0.0)), lit(0.0)), lit(1.0)))
+    }
+    f.atr.foreach { p =>
+      val (high, low, pc) = (col("high"), col("low"), lagged(1))
+      val tr = when(pc.isNull, high - low)
+        .otherwise(greatest(high - low, abs(high - pc), abs(low - pc)))
+      val atr = at(1, s"__atr_$p", gatedAvg(tr, p))
+      out ++= Seq("atr" -> atr, "close_std" -> stdOf("close", p),
+        "volatility_ratio" -> atr / nullif(close, lit(0.0)))
+    }
+    if (f.volume) {
+      val volume = col("volume")
+      val obv = sum(coalesce(signum(delta), lit(0.0)) * volume).over(running)
+      out ++= Seq("vol_sma_10" -> avgOf("volume", 10), "vol_sma_20" -> avgOf("volume", 20),
+        "volume_ratio" -> volume / avgOf("volume", 20), "obv" -> at(1, "__obv", obv),
+        "volume_price_trend" -> volume * delta)
+    }
+    f.returns.foreach { horizons =>
+      // nullif on every denominator: a 0.0 close (present in the raw feed)
+      // must yield NULL as in the DuckDB oracle, not an ANSI divide error.
+      val month = Window.partitionBy(col(KeyCol), date_trunc("month", col(OrdCol)))
+        .orderBy(col(OrdCol)).rowsBetween(Window.unboundedPreceding, 0)
+      out ++= Seq("daily_return_pct" -> ratio(close, lagged(1)),
+        "daily_return_abs" -> (close - lagged(1)),
+        "cumulative_return" -> when(at(0, "__rn", row_number().over(byKey)) >= 2,
+          ratio(close, at(0, "__first", first(close).over(running)))),
+        "momentum_mtd" -> ratio(close, at(2, "__month_first", first(close).over(month))))
+      horizons.foreach(h => out += s"momentum_$h" -> ratio(close, lagged(h)))
+    }
+    val windowed = levels.filter(_.nonEmpty).foldLeft(folded) { (df, level) =>
+      df.select(col("*") +: level.map { case (n, c) => c.as(n) }.toSeq: _*)
+    }
+    val outputs = out.toMap
+    val kept = folded.columns.toSeq.filterNot(_.startsWith("__f_"))
+    windowed.select(kept.map(c => outputs.getOrElse(c, col(c)).as(c)) ++
+      out.filterNot(o => kept.contains(o._1)).distinctBy(_._1).map { case (n, c) => c.as(n) }: _*)
   }
+
+  /** SQL fold expression: pandas ewm(span, adjust=False) over an array,
+    * seeded at its first element by default. alpha is written as the
+    * expression `2.0/(span+1)` so Spark and the DuckDB oracle evaluate the
+    * identical double.
+    */
+  private def emaFold(src: String, span: Int)(seed: String = s"element_at($src, 1)",
+                      rest: String = s"slice($src, 2, size($src) - 1)"): String = {
+    // 2.0D: a plain `2.0` literal parses as DECIMAL(2,1) and decimal
+    // division truncates alpha to 6 decimals (0.153846 != 2.0/13) —
+    // the double literal keeps the full-precision recursion.
+    val a = s"(2.0D/${span + 1})"
+    s"""aggregate($rest, array($seed),
+       |  (acc, v) -> array_append(acc, $a * v + (1.0 - $a) * element_at(acc, -1)))""".stripMargin
+  }
+
+  /** The bars with `__f_ema{span}` / `__f_macd` / `__f_sig` appended
+    * (key first, then the other bar columns in order): one guarded
+    * series collect per key, the span folds in one projection, MACD and
+    * its signal over them, one posexplode slicing every array at `pos`.
+    */
+  private def foldSeries(bars: DataFrame, f: Families): DataFrame = {
+    val others = bars.columns.filter(_ != KeyCol).toSeq
+    val ordered = Seq(OrdCol) ++ others.filterNot(_ == OrdCol)
+    val spans = (f.macd.toSeq.flatMap { case (fast, slow, _) => Seq(fast, slow) } ++
+      f.ema.toSeq.flatten).distinct
+    val series = guarded(bars, f.maxSeriesLen)
+      .groupBy(col(KeyCol))
+      .agg(sort_array(collect_list(struct(ordered.map(col): _*))).as("s"))
+      .withColumn("closes", expr("transform(s, x -> x.close)"))
+      .select(col(KeyCol) +: col("s") +: spans.map(sp => expr(emaFold("closes", sp)()).as(s"__e$sp")): _*)
+    val pos = col("pos")
+    // A key with fewer than `slow` bars has no unmasked macd to seed the
+    // signal (and slice/element_at would raise on the negative length /
+    // missing index under ANSI): its signal array is null, so macd,
+    // macd_signal and macd_hist stay null for the whole key.
+    val (arrays, sliced) = f.macd.fold((series, Seq.empty[Column])) { case (fast, slow, sig) =>
+      val withMacd = series
+        .withColumn("__macd", expr(s"zip_with(__e$fast, __e$slow, (f, s) -> f - s)"))
+        .withColumn("__sig", expr(s"CASE WHEN size(__macd) >= $slow THEN " + emaFold("__macd", sig)(
+          s"element_at(__macd, $slow)", s"slice(__macd, ${slow + 1}, size(__macd) - $slow)") + " END"))
+      (withMacd, Seq(
+        when(pos >= slow - 1, element_at(col("__macd"), pos + 1)).as("__f_macd"),
+        when(pos >= slow + sig - 2, element_at(col("__sig"), pos - slow + 2)).as("__f_sig")))
+    }
+    val emas = f.ema.toSeq.flatten.distinct.map(sp =>
+      when(pos >= sp - 1, element_at(col(s"__e$sp"), pos + 1)).as(s"__f_ema$sp"))
+    arrays.select(col(KeyCol) +: arrays.columns.filterNot(Set(KeyCol, "s")).map(col).toSeq :+
+        posexplode(col("s")): _*)
+      .select((col(KeyCol) +: others.map(c => col("col").getField(c).as(c))) ++ sliced ++ emas: _*)
+  }
+
+  /** `bars`, raising on a key with more than `maxLen` rows BEFORE
+    * collect_list materializes its series (a post-hoc size(s) check would
+    * OOM the aggregate first for a truly tick-grain key). A keyed window
+    * count buffers rows in a spill-safe sorter, inside the same single
+    * derivation of `bars` (an aggregate-plus-join guard re-derived the
+    * upstream bars, 2× on enrichAll queries), and shares the collect's
+    * Exchange on the key.
+    */
+  private def guarded(bars: DataFrame, maxLen: Int): DataFrame =
+    bars.withColumn("__n", count(lit(1)).over(Window.partitionBy(col(KeyCol))))
+      .filter(when(col("__n") > maxLen, raise_error(concat(
+        lit(s"Indicators fold: per-key series exceeds maxSeriesLen=$maxLen (n="),
+        col("__n").cast("string"),
+        lit(") — the array fold holds one key's whole series in a task; " +
+          "use withEmaStreaming for long series or raise maxSeriesLen"))))
+        .otherwise(lit(true)))
+      .drop("__n")
 }

@@ -817,7 +817,10 @@ object LlmQueries {
     val kDefs = (0 until nChunks).map(c =>
       s"CAST(list_sum(list_transform(range(16), j -> bits[${c * 16} + j + 1] * (1 << j))) AS INT) AS k$c")
       .mkString(",\n    ")
-    val ham = (0 until nChunks).map(c => s"bit_count(xor(a.k$c, b.k$c))")
+    // Each term cast to INT: DuckDB's bit_count returns TINYINT, and
+    // eight 16-bit chunk counts overflow its sum (112 + 16) before the
+    // outer cast.
+    val ham = (0 until nChunks).map(c => s"CAST(bit_count(xor(a.k$c, b.k$c)) AS INT)")
       .mkString(" +\n         ")
     s"""aug AS (
        |  SELECT doc_id, text FROM documents

@@ -31,17 +31,16 @@ object Screener {
   def breakouts(bars: DataFrame, maPeriod: Int = 10, volPeriod: Int = 10,
                 volMultiplier: Double = 1.2): DataFrame =
     bars
-      .withColumn("ma", gatedAvg(col("close"), maPeriod))
-      .withColumn("vol_sma", gatedAvg(col("volume"), volPeriod))
-      .withColumn("__prev_close", lag(col("close"), 1).over(byUser))
-      .withColumn("__prev_ma", lag(col("ma"), 1).over(byUser))
+      .select(col("*"), gatedAvg(col("close"), maPeriod).as("ma"),
+        gatedAvg(col("volume"), volPeriod).as("vol_sma"),
+        lag(col("close"), 1).over(byUser).as("__prev_close"))
+      .select(col("*"), lag(col("ma"), 1).over(byUser).as("__prev_ma"))
       .filter(
         col("close") > col("ma") &&
         col("__prev_close") <= col("__prev_ma") &&
         col("volume") > lit(volMultiplier) * col("vol_sma"))
-      .withColumn("vol_mult", col("volume") / col("vol_sma"))
       .select(col("user_id"), col("date"), col("close"), col("ma"),
-        col("volume"), col("vol_sma"), col("vol_mult"))
+        col("volume"), col("vol_sma"), (col("volume") / col("vol_sma")).as("vol_mult"))
 
   /** #23 support_resistance (technical_screener.py:50): rolling price
     * channels; the last 3 distinct channel highs (descending) and lows
@@ -146,37 +145,30 @@ object Screener {
     * Expects macd columns present (Indicators.withMacd upstream).
     */
   def signalScore(enriched: DataFrame, volPeriod: Int = 10): DataFrame = {
-    val latest2 = enriched
-      .withColumn("vol_avg", gatedAvg(col("volume"), volPeriod))
-      .withColumn("__prev_close", lag(col("close"), 1).over(byUser))
-      .withColumn("__prev_ma", lag(col("ma_10"), 1).over(byUser))
-      .withColumn("__prev_macd", lag(col("macd"), 1).over(byUser))
-      .withColumn("__prev_sig", lag(col("macd_signal"), 1).over(byUser))
-      .withColumn("__rn", row_number().over(byUserDesc))
+    val prev = (c: String) => lag(col(c), 1).over(byUser)
+    // One window projection (the ascending lags and the latest-bar rank
+    // are two Window operators, nothing more), then one derivation.
+    val latest = enriched
+      .select(col("*"), gatedAvg(col("volume"), volPeriod).as("vol_avg"),
+        prev("close").as("__prev_close"), prev("ma_10").as("__prev_ma"),
+        prev("macd").as("__prev_macd"), prev("macd_signal").as("__prev_sig"),
+        row_number().over(byUserDesc).as("__rn"))
       .filter(col("__rn") === 1)
-    latest2
-      .withColumn("rsi_pts",
-        when(col("rsi") < 30, 2).when(col("rsi") > 70, -2).otherwise(0))
-      .withColumn("ma_pts",
-        when(col("__prev_close") <= col("__prev_ma") && col("__prev_ma") < col("close"), 2)
-          .when(col("__prev_close") >= col("__prev_ma") && col("__prev_ma") > col("close"), -2)
-          .otherwise(0))
-      .withColumn("macd_pts",
-        when(col("__prev_macd") <= col("__prev_sig") && col("__prev_sig") < col("macd"), 2)
-          .when(col("__prev_macd") >= col("__prev_sig") && col("__prev_sig") > col("macd"), -2)
-          .otherwise(0))
-      .withColumn("vol_pts",
-        when(col("vol_avg").isNotNull && col("vol_avg") =!= 0 &&
-             col("volume") > col("vol_avg"), 1).otherwise(0))
-      .withColumn("score",
-        col("rsi_pts") + col("ma_pts") + col("macd_pts") + col("vol_pts"))
-      .withColumn("overall_signal",
-        when(col("score") > 1, "buy").when(col("score") < -1, "sell")
-          .otherwise("neutral"))
-      .withColumn("confidence", least(lit(1.0), abs(col("score")) / 6.0))
-      .select(col("user_id"), col("date"), col("rsi_pts"), col("ma_pts"),
-        col("macd_pts"), col("vol_pts"), col("score"),
-        col("overall_signal"), col("confidence"))
+    // +2 when `line` crossed above `ref` since the previous bar, −2 below.
+    def cross(prevLine: String, prevRef: String, line: String): Column =
+      when(col(prevLine) <= col(prevRef) && col(prevRef) < col(line), 2)
+        .when(col(prevLine) >= col(prevRef) && col(prevRef) > col(line), -2)
+        .otherwise(0)
+    val rsiPts = when(col("rsi") < 30, 2).when(col("rsi") > 70, -2).otherwise(0)
+    val maPts = cross("__prev_close", "__prev_ma", "close")
+    val macdPts = cross("__prev_macd", "__prev_sig", "macd")
+    val volPts = when(col("vol_avg").isNotNull && col("vol_avg") =!= 0 &&
+      col("volume") > col("vol_avg"), 1).otherwise(0)
+    val score = rsiPts + maPts + macdPts + volPts
+    latest.select(col("user_id"), col("date"), rsiPts.as("rsi_pts"), maPts.as("ma_pts"),
+      macdPts.as("macd_pts"), volPts.as("vol_pts"), score.as("score"),
+      when(score > 1, "buy").when(score < -1, "sell").otherwise("neutral").as("overall_signal"),
+      least(lit(1.0), abs(score) / 6.0).as("confidence"))
   }
 
   /** #27 screen_criteria (technical_screener.py:205 screen_multiple_stocks):

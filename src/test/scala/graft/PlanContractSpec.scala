@@ -600,4 +600,27 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     assert(kernels.forall(_._2 >= 1), s"gate must run the native kernels ($kernels):\n$p")
     info(s"kernel occurrences in the gate plan: ${kernels.mkString(", ")}")
   }
+
+  test("indicators: one series fold and one Window per dependency level") {
+    import graft.operators.{Bars, Indicators, Screener}
+    // Bars straight off the feed's aggregate carry no window of their
+    // own, so every Window below is the enrichment's: two levels over
+    // (user_id ORDER BY date), the month-partitioned first and the fold's
+    // series-length guard. The withColumn chains stacked 14.
+    val bars = Bars.daily(graft.sources.Tables.events(spark, sf))
+    val enriched = Indicators.enrichAll(bars, macd = (5, 10, 4), bollinger = (10, 2.0),
+      atrPeriod = 10)
+    def count(p: String, token: String) = token.r.findAllMatchIn(p).size
+    val p = plan(enriched)
+    assert(count(p, "\\bWindow \\[") <= 4, s"expected at most 4 Window operators:\n$p")
+    assert(count(p, "\\bGenerate\\b") == 1, s"expected one series explode:\n$p")
+    // One collect_list aggregate (its partial and final halves) for the
+    // MACD and EMA folds together.
+    val collects = p.linesIterator.filter(_.contains("collect_list")).toSeq
+    assert(collects.size == 2 && collects.count(_.contains("partial_collect_list")) == 1,
+      s"expected one collect_list aggregate:\n$p")
+    assert(count(p, "ObjectHashAggregate") == 2, s"expected no second fold aggregate:\n$p")
+    val added = count(plan(Screener.signalScore(enriched)), "\\bWindow \\[") - count(p, "\\bWindow \\[")
+    assert(added <= 2, s"signalScore must add at most 2 Window operators, added $added")
+  }
 }

@@ -566,6 +566,98 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     assert(kept.select("id1", "id2").as[(Long, Long)].collect().toSeq == Seq((4L, 5L)))
   }
 
+  test("indicator levels equal the withColumn chains on random bars") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Breadth, Indicators, Screener}
+    import IndicatorReference.{withEma => refEma, withMacd => refMacd}
+    // Every family, enrichAll, signalScore, breakouts and the breadth
+    // move flags against the chain forms they replaced
+    // (IndicatorReference), schema for schema and row for row with exact
+    // doubles: random bars with NULL and 0.0 closes, flat stretches
+    // (zero losses), keys shorter than the MACD slow span, single-bar
+    // keys and series that cross month boundaries.
+    def same(name: String, got: DataFrame, want: DataFrame): Unit = {
+      assert(got.schema == want.schema, s"$name schema:\n${got.schema}\n${want.schema}")
+      def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val (g, w) = (rows(got), rows(want))
+      assert(g == w, s"$name: ${g.size} rows vs reference ${w.size}\n" +
+        s"${g.diff(w).take(3)}\n${w.diff(g).take(3)}")
+    }
+    def raises(name: String, df: => DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      assert(e.getMessage.contains("maxSeriesLen"), s"$name: ${e.getMessage}")
+    }
+    Seq(31, 32).foreach { seed =>
+      val rnd = new Random(seed)
+      val lens = Seq(1, 1, 2, 9, 25, 40, 47) ++ Seq.fill(5)(1 + rnd.nextInt(45))
+      val bars = lens.zipWithIndex.flatMap { case (n, k) =>
+        val first = java.time.LocalDate.of(2024, 1, 10).plusDays(rnd.nextInt(40))
+        val flat = k % 4 == 3
+        (0 until n).map { i =>
+          val close = rnd.nextInt(10) match {
+            case 0 => None
+            case 1 => Some(0.0)
+            case _ if flat => Some(20.0 + rnd.nextInt(2))
+            case _ => Some(math.round(5000 + rnd.nextGaussian() * 300) / 100.0)
+          }
+          (k.toLong, java.sql.Date.valueOf(first.plusDays(i)), close.map(_ + 0.25),
+            close.map(_ + rnd.nextInt(300) / 100.0), close.map(_ - rnd.nextInt(300) / 100.0),
+            close, 1L + rnd.nextInt(40), close.map(_ * 1.001))
+        }
+      }.toDF("user_id", "date", "open", "high", "low", "close", "volume", "vwap")
+      val s = s"seed $seed"
+      same(s"$s enrichAll", Indicators.enrichAll(bars), IndicatorReference.enrichAll(bars))
+      // The daily pipeline's arguments: SMA 10 and Bollinger 10 share a
+      // window, EMA 5 and the MACD fast span share a fold.
+      val enriched = Indicators.enrichAll(bars, macd = (5, 10, 4), bollinger = (10, 2.0),
+        atrPeriod = 10)
+      val refEnriched = IndicatorReference.enrichAll(bars, macd = (5, 10, 4),
+        bollinger = (10, 2.0), atrPeriod = 10)
+      same(s"$s enrichAll (daily pipeline)", enriched, refEnriched)
+      same(s"$s enrichAll (no horizons)", Indicators.enrichAll(bars, momentumHorizons = Nil),
+        IndicatorReference.enrichAll(bars, momentumHorizons = Nil))
+      Seq(Seq(2, 5), Seq(20)).foreach(ps =>
+        same(s"$s sma $ps", Indicators.withSma(bars, ps), IndicatorReference.withSma(bars, ps)))
+      Seq(Seq(3, 12), Seq(26)).foreach(sp =>
+        same(s"$s ema $sp", Indicators.withEma(bars, sp), refEma(bars, sp)))
+      Seq((12, 26, 9), (5, 10, 4), (2, 3, 2)).foreach { case (f, sl, sg) =>
+        same(s"$s macd ($f, $sl, $sg)", Indicators.withMacd(bars, f, sl, sg),
+          refMacd(bars, f, sl, sg))
+      }
+      Seq(3, 14).foreach(p =>
+        same(s"$s rsi $p", Indicators.withRsi(bars, p), IndicatorReference.withRsi(bars, p)))
+      same(s"$s bollinger", Indicators.withBollinger(bars, 4, 1.5),
+        IndicatorReference.withBollinger(bars, 4, 1.5))
+      same(s"$s atr", Indicators.withAtr(bars, 3), IndicatorReference.withAtr(bars, 3))
+      same(s"$s volume", Indicators.withVolumeMetrics(bars),
+        IndicatorReference.withVolumeMetrics(bars))
+      Seq(Seq(1, 3), Nil).foreach(hs => same(s"$s returns $hs",
+        Indicators.withReturns(bars, hs), IndicatorReference.withReturns(bars, hs)))
+      // Bars whose key is not the first column, without open/vwap: the
+      // folds move the key first, the window families keep the order.
+      val narrow = bars.select("date", "close", "user_id", "high", "low", "volume")
+      same(s"$s narrow macd", Indicators.withMacd(narrow, 5, 10, 4), refMacd(narrow, 5, 10, 4))
+      same(s"$s narrow ema", Indicators.withEma(narrow, Seq(3)), refEma(narrow, Seq(3)))
+      same(s"$s narrow atr", Indicators.withAtr(narrow, 3), IndicatorReference.withAtr(narrow, 3))
+      same(s"$s signalScore", Screener.signalScore(enriched),
+        IndicatorReference.signalScore(refEnriched))
+      same(s"$s signalScore vol 3", Screener.signalScore(enriched, 3),
+        IndicatorReference.signalScore(refEnriched, 3))
+      same(s"$s breakouts", Screener.breakouts(bars), IndicatorReference.breakouts(bars))
+      same(s"$s breakouts (2, 2, 1.0)", Screener.breakouts(bars, 2, 2, 1.0),
+        IndicatorReference.breakouts(bars, 2, 2, 1.0))
+      Seq(3, 10).foreach(p => same(s"$s move flags $p", Breadth.withMoveFlags(bars, p),
+        IndicatorReference.withMoveFlags(bars, p)))
+      // The fold guard: at the longest key's length the folds run; one
+      // row past it they raise the named error, before any collect.
+      val longest = lens.max
+      same(s"$s ema at maxSeriesLen", Indicators.withEma(bars, Seq(3), maxSeriesLen = longest),
+        refEma(bars, Seq(3), maxSeriesLen = longest))
+      raises(s"$s ema", Indicators.withEma(bars, Seq(3), maxSeriesLen = longest - 1))
+      raises(s"$s macd", Indicators.withMacd(bars, 5, 10, 4, maxSeriesLen = longest - 1))
+    }
+  }
+
   test("the pair kernel equals the lambda pair expansion on random sorted lists") {
     import graft.functions.ListPairs
     // Long lists and struct lists (the LSH and hamming callers), with
