@@ -11,11 +11,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Sequential BPE merge-table application over a symbol array in ONE
   * native pass per merge (r12 optimization) — the drop-in replacement
-  * for the R-deep interpreted `aggregate` HOF ladder `Bpe.mergeSyms`
-  * built (one Catalyst `aggregate` lambda per merge, each evaluating an
-  * interpreted when-chain per symbol with a growing `concat` state —
-  * O(R × len²) boxed work per word where this loop is O(R × len) array
-  * writes).
+  * for the R-deep interpreted `aggregate` HOF ladder the trainer
+  * built (`BpeReference.mergeSyms` in the specs: one Catalyst
+  * `aggregate` lambda per merge, each evaluating an interpreted
+  * when-chain per symbol with a growing `concat` state — O(R × len²)
+  * boxed work per word where this loop is O(R × len) array writes).
   *
   * Semantics are EXACTLY the greedy leftmost single-merge fold, applied
   * in merge-table order: for merge (a, b) scan left to right, replace
@@ -85,7 +85,7 @@ case class BpeMergeFold(child: Expression, merges: Seq[(String, String)])
 object BpeMergeFold {
   /** Column wrapper: `syms` with `merges` applied sequentially, each as
     * one greedy leftmost non-overlapping pass — value-identical to
-    * folding `Bpe.mergeSyms` over the merge table (spec-pinned).
+    * folding `BpeReference.mergeSyms` over the merge table (spec-pinned).
     */
   def bpeMergeFold(syms: Column, merges: Seq[(String, String)]): Column =
     GraftColumnBridge.column(

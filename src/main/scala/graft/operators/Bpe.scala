@@ -22,12 +22,13 @@ import org.apache.spark.sql.functions._
   * insertion order; a distributed count has no such order, so the
   * lexicographic rule is the documented, engine-replayable policy.
   *
-  * [[train]] spends one Spark job per merge — fine for bounded
+  * One merge per round is one Spark job per merge — fine for bounded
   * fixtures, 32k sequential jobs for a production vocabulary.
-  * [[trainBatched]] is the production entry point: it batches
-  * symbol-disjoint dominance-checked prefixes of each round's pair
-  * slice and is PROVABLY sequential-equivalent (conditions documented
-  * on the method, spec-pinned to [[train]]).
+  * [[trainBatched]] is the trainer: it batches symbol-disjoint
+  * dominance-checked prefixes of each round's pair slice and is
+  * PROVABLY sequential-equivalent (conditions documented on the
+  * method, spec-pinned to the one-merge-per-round reference);
+  * `batchMax = 1` is that sequential loop.
   */
 object Bpe {
 
@@ -50,7 +51,7 @@ object Bpe {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
   /** Initial segmentation: characters plus the end-of-word marker. */
-  private def initSymbols(w: Column): Column =
+  private[graft] def initSymbols(w: Column): Column =
     concat(split(w, ""), array(lit(Eow)))
 
   /** Adjacent-pair counts over a (syms, freq) vocabulary — one explode
@@ -58,7 +59,7 @@ object Bpe {
     * no pairs and drop out before the explode (`sequence(1, 0)` would
     * otherwise count DESCENDING).
     */
-  private def pairCounts(vocab: DataFrame): DataFrame =
+  private[graft] def pairCounts(vocab: DataFrame): DataFrame =
     vocab.filter(size(col("syms")) >= 2)
       .select(col("freq"), explode(transform(
         sequence(lit(1), size(col("syms")) - 1),
@@ -80,63 +81,12 @@ object Bpe {
       .select(col("rk"), col("lhs"), col("rhs"), col("pair_count"))
   }
 
-  /** Greedy left-to-right single-merge application as a left-fold
-    * `aggregate`: state (out, prev); (prev, s) = (a, b) emits the merged
-    * symbol, anything else flushes prev. Overlaps resolve leftmost
-    * ("aaa" + (a,a) → [aa, a]) — standard BPE greediness.
-    */
-  private def mergeSyms(syms: Column, a: String, b: String): Column = {
-    val nil = array().cast("array<string>")
-    aggregate(syms,
-      struct(nil.as("out"), lit(null).cast("string").as("prev")),
-      (acc, s) =>
-        when(acc.getField("prev").isNull,
-          struct(acc.getField("out").as("out"), s.as("prev")))
-        .when(acc.getField("prev") === lit(a) && s === lit(b),
-          struct(concat(acc.getField("out"), array(lit(a + b))).as("out"),
-            lit(null).cast("string").as("prev")))
-        .otherwise(
-          struct(concat(acc.getField("out"), array(acc.getField("prev"))).as("out"),
-            s.as("prev"))),
-      acc => when(acc.getField("prev").isNull, acc.getField("out"))
-        .otherwise(concat(acc.getField("out"), array(acc.getField("prev")))))
-  }
-
-  /** Train `merges` rounds; returns the merge table (the model
-    * artifact). Stops early when no pair remains. Each round is one
-    * vocabulary-scale job: pair count → driver argmax → fold-in.
-    */
-  def train(documents: DataFrame, merges: Int = 10): Seq[Merge] = {
-    var vocab = wordFreqs(documents)
-      .select(initSymbols(col("w")).as("syms"), col("freq"))
-      .transform(graft.Ckpt.frame)
-    val out = Seq.newBuilder[Merge]
-    var round = 1
-    var exhausted = false
-    while (round <= merges && !exhausted) {
-      val top = pairCounts(vocab)
-        .orderBy(TopK.descNum(col("pair_count")), col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, n) = (top.head.getAs[String]("lhs"),
-          top.head.getAs[String]("rhs"), top.head.getAs[Long]("pair_count"))
-        out += Merge(round, a, b, a + b, n)
-        vocab = vocab
-          .withColumn("syms", mergeSyms(col("syms"), a, b))
-          .transform(graft.Ckpt.frame)
-        round += 1
-      }
-    }
-    out.result()
-  }
-
-  /** [[train]] with BATCHED merge rounds — the fix for "R merges = R
+  /** BPE training with BATCHED merge rounds — the fix for "R merges = R
     * sequential Spark jobs" (round-6 verdict): each round collects the
     * top-`sliceSize` pair slice ONCE and greedily accepts a PREFIX of
-    * it whose batched application is PROVABLY identical to running
-    * [[train]]'s rounds one at a time. A pair `p_i` joins the batch
-    * only when three conditions hold, all checkable from the slice:
+    * it whose batched application is PROVABLY identical to running one
+    * merge per round. A pair `p_i` joins the batch only when three
+    * conditions hold, all checkable from the slice:
     *
     *  1. PREFIX — acceptance stops at the first rejected pair (a
     *     skipped pair would have been merged earlier sequentially);
@@ -157,11 +107,11 @@ object Bpe {
     *
     * Under 1–3 the sequential argmax after applying `p_1..p_{i-1}` is
     * exactly `p_i`, so the batch replays the sequential merge order —
-    * spec-pinned to [[train]] on the Sennrich fixture. Worst case every
-    * round accepts one pair (identical cost to [[train]] plus one
-    * slice collect); boilerplate-heavy rounds with several disjoint
-    * dominant pairs collapse R jobs into R/batch. `batchMax` bounds
-    * the per-round fold depth of the merge projection.
+    * spec-pinned to the one-merge-per-round reference on the Sennrich
+    * fixture. Worst case every round accepts one pair (one job per
+    * merge plus one slice collect); boilerplate-heavy rounds with
+    * several disjoint dominant pairs collapse R jobs into R/batch.
+    * `batchMax` bounds the per-round fold depth of the merge projection.
     *
     * Returns (merge table, Spark rounds used) — the second component
     * is the job-count collapse the caller can assert/monitor.

@@ -147,16 +147,17 @@ object Breadth {
       .filter(col("__rn") === 1 && col("__prev").isNotNull)
       .withColumn("return_pct", (col("close") / nullif(col("__prev"), lit(0.0)) - 1) * 100)
       .filter(col("return_pct").isNotNull)
-    // Distributed top-k (TakeOrderedAndProject) instead of a global
-    // row_number window — the ranking never sorts the whole universe on
-    // one partition.
-    val gainers = TopK.withRank(lastBar, k,
-        Seq(TopK.descNum(col("return_pct")), col("user_id")))
-      .withColumn("side", lit("gainer"))
-    val losers = TopK.withRank(lastBar, k,
-        Seq(col("return_pct"), col("user_id")))
-      .withColumn("side", lit("loser"))
-    gainers.unionByName(losers)
+      .select(col("user_id"), col("date"), col("close"), col("return_pct"))
+    // Both sides rank the ONE latest-bar derivation: each bar fans out to
+    // a gainer and a loser row, and a bounded per-side top-k aggregate
+    // ranks them (two top-k arms would each re-run the lag + latest-bar
+    // windows over the bars). No global row_number window — the ranking
+    // never sorts the whole universe on one partition.
+    val sided = lastBar.select(explode(array(lit("gainer"), lit("loser"))).as("side"),
+      col("*"))
+    TopK.groupedWithRank(sided, Seq(col("side")), k,
+        Seq(when(col("side") === "gainer", TopK.descNum(col("return_pct")))
+          .otherwise(col("return_pct")), col("user_id")))
       .select(col("side"), col("rk"), col("user_id"), col("date"),
         col("close"), col("return_pct"))
   }

@@ -308,10 +308,15 @@ object Dedup {
     * (spec-checked).
     */
   def shinglePostings(documents: DataFrame): DataFrame =
-    // r11: TokenKgrams(distinct) — see [[shinglePostingsRaw]]; the
-    // per-doc gram set is distinct by construction and source/lang are
-    // doc-constant, so the old (doc, source, lang, h) distinct is
-    // preserved exactly.
+    // r11: one TokenKgrams(distinct) pass per document replaces the
+    // posexplode → doc-window lead() → concat_ws → distinct() chain —
+    // same shingle strings (concatWs bytes are concat_ws's), so BOTH the
+    // doc-keyed window shuffle and the gram-grain distinct shuffle
+    // disappear. The per-doc gram set is distinct by construction and
+    // source/lang are doc-constant, so the old (doc, source, lang, h)
+    // distinct is preserved exactly. fanOutScan: without the window
+    // shuffle the shingle work runs in the scan stage — a small input
+    // read as one split would single-thread it (no-op at corpus scale).
     Skew.fanOutScan(documents, "doc_id")
       .select(col("doc_id"), col("source"), col("lang"),
         graft.functions.TokenKgrams.tokenKgrams(tokens(col("text")), 2,
@@ -336,7 +341,7 @@ object Dedup {
     */
   def ngramPostings(documents: DataFrame, n: Int): DataFrame = {
     require(n >= 2, "n-gram width must be at least 2")
-    // r11: TokenKgrams(distinct) — see [[shinglePostingsRaw]]; replaces
+    // r11: TokenKgrams(distinct) — see [[shinglePostings]]; replaces
     // the posexplode + (n−1) lead() columns + distinct with one pass.
     Skew.fanOutScan(documents, "doc_id")
       .select(col("doc_id"), explode(
@@ -1195,25 +1200,6 @@ object Dedup {
         col("quality_score"), col("keep_id"),
         (col("doc_id") === col("keep_id")).cast("int").as("is_kept"))
   }
-
-  /** Row-form shingle postings carrying the shingle STRING — the
-    * portable-hash twin of [[shinglePostings]] (same posexplode + lead
-    * plan, no xxhash64 collapse). Portable operators hash these with md5,
-    * which DuckDB computes identically.
-    */
-  def shinglePostingsRaw(documents: DataFrame): DataFrame =
-    // r11: one TokenKgrams pass per document replaces the
-    // posexplode → doc-window lead() → concat_ws → distinct() chain —
-    // same shingle strings (concatWs bytes are concat_ws's), per-doc
-    // deduped inside the expression, so BOTH the doc-keyed window
-    // shuffle and the gram-grain distinct shuffle disappear.
-    // fanOutScan: without the window shuffle the shingle+md5 work runs
-    // in the scan stage — a small input read as one split would
-    // single-thread it (no-op at corpus scale).
-    Skew.fanOutScan(documents, "doc_id")
-      .select(col("doc_id"), explode(
-        graft.functions.TokenKgrams.tokenKgrams(tokens(col("text")), 2,
-          distinct = true)).as("s"))
 
   /** Modulus and affine constants for the portable minhash permutation
     * family: perm_i(h) = (a_i·(h mod M) + b_i) mod M over the Mersenne

@@ -104,9 +104,10 @@ object Hybrid {
     * list — `(doc_id, lex_rk)` / `(doc_id, dense_rk)`, both already
     * bounded — into the final top-k. This is the plug point the ANN
     * tiers use at scale: any ranker whose output maps to
-    * `(doc_id, dense_rk)` (lshTopK, ivfTopK, pqTopK, ivfpqTopK for a
-    * single query) swaps in for [[topk]]'s brute-force arm with the
-    * identical fusion semantics.
+    * `(doc_id, dense_rk)` swaps in for [[topk]]'s brute-force arm with
+    * the identical fusion semantics — lshTopK, or, for a single query,
+    * ivfTopK / pqTopK / ivfpqTopK over their fitted artifacts
+    * (`Similarity.kmeansFit` centroids, `Similarity.pqCodebook`).
     */
   def fuse(lex: DataFrame, dense: DataFrame, k: Int = 10,
            rrfK: Int = 60): DataFrame = {

@@ -9,10 +9,10 @@ import graft.sources.Tables
   * ops (SURVEY §2 #37–47). Since round 6 every row carries a full
   * cross-engine oracle: the hash-seeded operators either embed their
   * driver-deterministic constants as literals the SQL replays
-  * (hyperplane LSH, IVF seeded quantizer) or run a portable hash family
-  * (md5-based minhash/simhash — the only near-dup emitters, so the
-  * curation default is the checked path — and string-keyed exact
-  * spans, whose xxhash64-key default is spec-asserted equivalent).
+  * (hyperplane LSH, zero-iteration IVF/PQ quantizers) or run a portable
+  * hash family (md5-based minhash/simhash — the only near-dup emitters,
+  * so the curation default is the checked path — and string-keyed
+  * exact spans, whose xxhash64-key default is spec-asserted equivalent).
   */
 object LlmQueries {
 
@@ -225,27 +225,36 @@ object LlmQueries {
         pointerJump = true)
         .orderBy(col("cluster_id"), col("id"))),
 
-    // SemDeDup with the seeded centroid artifact (the ivf/pq split):
-    // the whole assign → within-cell pair → CC → keep-diverse pipeline
-    // is oracle-checked; the k-means-fit quantizer keeps its spec.
-    "semantic_dedup" -> ((s, d) =>
-      Similarity.semanticDedupSeeded(emb(s, d)).orderBy(col("vec_id"))),
+    // SemDeDup over a zero-iteration kmeansFit (the first 16 nonzero
+    // vectors as centroids, the init every fit starts from): the whole
+    // assign → within-cell pair → CC → keep-diverse pipeline is
+    // oracle-checked; refined fits keep their spec.
+    "semantic_dedup" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.semanticDedup(e, Similarity.kmeansFit(e, 16, iters = 0))
+        .orderBy(col("vec_id"))
+    }),
 
-    // Embedding-space outlier gate over the same seeded cells — z of
+    // Embedding-space outlier gate over the same cells — z of
     // centroid cosine against the cell's own distribution.
-    "embed_outliers" -> ((s, d) =>
-      Similarity.embedOutliers(emb(s, d)).orderBy(col("vec_id"))),
+    "embed_outliers" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.embedOutliers(e, Similarity.kmeansFit(e, 16, iters = 0))
+        .orderBy(col("vec_id"))
+    }),
 
-    // IVF occupancy/tightness report over the same seeded cells — the
+    // IVF occupancy/tightness report over the same cells — the
     // capacity-planning read before deploying the IVF/IVF-PQ tiers.
-    "ivf_stats" -> ((s, d) =>
-      Similarity.ivfStats(emb(s, d)).orderBy(col("cell"))),
+    "ivf_stats" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfStats(e, Similarity.kmeansFit(e, 16, iters = 0))
+        .orderBy(col("cell"))
+    }),
 
-    // Distributed Lloyd (k=8, 2 rounds) + cluster profile — the
-    // full-corpus refinement tier between the seeded quantizers and the
-    // driver-sample codebook fits; integer micro-unit centroid means
-    // keep the ladder bit-deterministic, so the oracle replays it
-    // round for round.
+    // Distributed Lloyd (k=8, 2 rounds) + cluster profile — the one
+    // coarse-quantizer fit (the rows above deploy its zero-iteration
+    // init); integer micro-unit centroid means keep the ladder
+    // bit-deterministic, so the oracle replays it round for round.
     "kmeans_clusters" -> ((s, d) =>
       Similarity.kmeansClusters(emb(s, d)).orderBy(col("cluster"))),
 
@@ -255,31 +264,36 @@ object LlmQueries {
     "ann_lsh_topk" -> ((s, d) =>
       Similarity.lshTopK(emb(s, d)).orderBy(col("query_id"), col("rk"))),
 
-    // The precomputed-quantizer deployment mode (sampled-seed centroid
-    // artifact) — engine-neutral, so the full IVF search machinery is
-    // oracle-checked since round 6. The k-means-fit quantizer
-    // (Similarity.ivfTopK, sampleFraction 0.2 — fit on a bounded sample,
-    // the only shape that survives corpus scale) stays the production
-    // path, gated by DedupTextSpec's recall-vs-brute-force floor.
-    "ann_ivf_topk" -> ((s, d) =>
-      Similarity.ivfTopKSeeded(emb(s, d))
-        .orderBy(col("query_id"), col("rk"))),
+    // IVF search over a zero-iteration kmeansFit: the artifact is the
+    // first 16 nonzero vectors, so the full search machinery (assignment
+    // argmin, probe ranking, in-cell exact ranking) is oracle-checked.
+    // Refined fits (iters > 0) share the search and are gated by
+    // DedupTextSpec's recall-vs-brute-force floor.
+    "ann_ivf_topk" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfTopK(e, Similarity.kmeansFit(e, 16, iters = 0))
+        .orderBy(col("query_id"), col("rk"))
+    }),
 
-    // PQ/ADC with the zero-iteration codebook artifact (same
-    // seeded-vs-fit split as IVF): the encode → LUT → ADC → refine
-    // machinery is oracle-checked end to end; the driver-sample Lloyd
-    // fit (Similarity.pqTopK) stays the production quantizer, gated by
-    // DedupTextSpec's recall floor.
-    "ann_pq_topk" -> ((s, d) =>
-      Similarity.pqTopKSeeded(emb(s, d))
-        .orderBy(col("query_id"), col("rk"))),
+    // PQ/ADC over a zero-iteration pqCodebook (the first 16 unit
+    // vectors as codes): the encode → LUT → ADC → refine machinery is
+    // oracle-checked end to end; Lloyd-refined codebooks share the
+    // search and are gated by DedupTextSpec's recall floor.
+    "ann_pq_topk" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.pqTopK(e, Similarity.pqCodebook(e, 8, 16, iters = 0))
+        .orderBy(col("query_id"), col("rk"))
+    }),
 
     // The composed FAISS production index: IVF prunes the scan, PQ
-    // compresses it. Seeded artifacts for both quantizers carry the
-    // oracle; the double-fit variant keeps its recall-floor spec.
-    "ann_ivfpq_topk" -> ((s, d) =>
-      Similarity.ivfpqTopKSeeded(emb(s, d))
-        .orderBy(col("query_id"), col("rk"))),
+    // compresses it. Zero-iteration artifacts for both levels carry the
+    // oracle; refined ones keep the recall-floor spec.
+    "ann_ivfpq_topk" -> ((s, d) => {
+      val e = emb(s, d)
+      Similarity.ivfpqTopK(e, Similarity.kmeansFit(e, 16, iters = 0),
+        Similarity.pqCodebook(e, 8, 16, iters = 0))
+        .orderBy(col("query_id"), col("rk"))
+    }),
 
     // #43g index-quality evaluation: recall@k of the LSH index vs the
     // brute-force ground truth — both arms the oracle-checked operators
@@ -912,7 +926,7 @@ object LlmQueries {
       |  SELECT r.src, e2.b FROM reach r JOIN edges e2 ON r.dst = e2.a),
       |labels AS (SELECT src AS id, min(dst) AS cluster_id FROM reach GROUP BY src)""".stripMargin
 
-  /** Seeded-centroid cell assignment ending at
+  /** Zero-iteration kmeansFit cell assignment ending at
     * `asg(vec_id, cell, cen_cos)` — shared by the embed_outliers and
     * ivf_stats oracles (the SpanCte rule): 16 centroids = the first 16
     * nonzero vectors by id, argmin by (d2, cell), cen_cos folded from
@@ -2010,7 +2024,7 @@ object LlmQueries {
          |  CAST(sum(sz - 1) AS BIGINT) AS n_removable
          |FROM cs GROUP BY 1 ORDER BY cluster_size""".stripMargin,
 
-    // SemDeDup replay: seeded centroids, (d2, cell) argmin assignment,
+    // SemDeDup replay: first-16 centroids, (d2, cell) argmin assignment,
     // cen_cos folded from the argmin's d2 ((n2−d2)/2/(nrm·sqrt(n2)) —
     // the exact arithmetic the Spark plan runs), within-cell pairs at
     // unrounded cosine ≥ τ, recursive-CTE components, keep = first of
@@ -2065,7 +2079,7 @@ object LlmQueries {
          |    PARTITION BY cluster_id ORDER BY cen_cos, vec_id) = 1) AS INT) AS is_kept
          |FROM allv ORDER BY vec_id""".stripMargin,
 
-    // Same seeded-cell assignment CTEs as semantic_dedup; moments fold
+    // Same cell assignment CTEs as semantic_dedup; moments fold
     // over the ROUNDED cosines, z over rounded mean/std (gopher policy).
     "ivf_stats" ->
       s"""$SeedAsgChain,
@@ -2238,10 +2252,11 @@ object LlmQueries {
          |  CAST(id = cluster_id AS INT) AS is_canonical
          |FROM labels ORDER BY cluster_id, id""".stripMargin,
 
-    // Mirrors ivfTopKSeeded: centroid c's |c|² and every dot product are
-    // the same left fold vec_dot runs (0.0-seeded vs first-element-seeded
-    // is bit-identical because 0.0 + x == x); argmin and probe ranking
-    // tie-break on (d2, cell) in both engines.
+    // Mirrors ivfTopK over kmeansFit(e, 16, iters = 0): centroid c's
+    // |c|² and every dot product are the same left fold vec_dot runs
+    // (0.0-seeded vs first-element-seeded is bit-identical because
+    // 0.0 + x == x); argmin and probe ranking tie-break on (d2, cell) in
+    // both engines.
     "ann_ivf_topk" ->
       s"""$VecCte,
          |nz AS (SELECT * FROM nn WHERE nrm > 0),

@@ -251,52 +251,55 @@ object Similarity {
   }
 
   /** #43b ann_ivf_topk: inverted-file ANN — the production scale path
-    * next to [[lshTopK]]. Build: a k-means coarse quantizer is fit on a
-    * corpus SAMPLE (at 100 TB you train the quantizer on a sample and
-    * assign everything — the fit input is bounded, not corpus-sized);
-    * each corpus vector lands in its nearest centroid's cell via a
-    * broadcast of the (tiny) centroid table + map-side-combinable
-    * min_by aggregate — no UDF in the corpus-scale path. Search: each
-    * query ranks the centroids, probes its `nProbe` nearest cells, and
-    * ranks the survivors by exact cosine. Cost per query ≈
-    * nProbe/nCells of one corpus scan — the recall/cost dial.
-    * Deterministic: fixed seed, (distance, cell) and (cos, id)
-    * tie-breaks.
+    * next to [[lshTopK]]. The coarse quantizer is a fitted artifact,
+    * `coarse` = [[kmeansFit]]'s centroids (at 100 TB you fit on a corpus
+    * sample — `kmeansFit(e.sample(…), …)` — and assign everything; the
+    * fit input is bounded, not corpus-sized). Each corpus vector lands
+    * in its nearest centroid's cell via the (tiny) centroid literal
+    * table + map-side-combinable min_by aggregate — no UDF in the
+    * corpus-scale path. Search: each query ranks the centroids, probes
+    * its `nProbe` nearest cells, and ranks the survivors by exact
+    * cosine. Cost per query ≈ nProbe/#cells of one corpus scan — the
+    * recall/cost dial. Deterministic: (distance, cell) and (cos, id)
+    * tie-breaks. With `kmeansFit(e, k, iters = 0)` (the first k
+    * nonzero-norm vectors by vec_id) it carries the cross-engine oracle.
     */
-  def ivfTopK(embeddings: DataFrame, nCells: Int = 16, nProbe: Int = 4,
-              nQueries: Int = 10, k: Int = 5, sampleFraction: Double = 1.0,
-              seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
+  def ivfTopK(embeddings: DataFrame, coarse: Array[Array[Double]],
+              nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val e = withNorm(embeddings)
-    val feat = e.select(array_to_vector(col("v")).as("features"))
-    val train = if (sampleFraction >= 1.0) feat
-                else feat.sample(withReplacement = false, sampleFraction, seed)
-    val model = new KMeans().setK(nCells).setSeed(seed)
-      .setFeaturesCol("features").fit(train)
-    val cents = model.clusterCenters.map(_.toArray)
-    ivfSearch(e, cents, nProbe, nQueries, k)
-  }
+    // Nearest cell per corpus vector: |c|² − 2⟨v,c⟩ ranks cells (the
+    // |v|² term is constant per vector). Centroids are DRIVER-known,
+    // so the argmin is a narrow projection over a
+    // literal (cell, |c|², centroid) table — array_min over per-cell
+    // structs with (d2, cell) lexicographic tie-break. No crossJoin, no
+    // per-vector groupBy: zero Exchange between the corpus scan and its
+    // cell assignment.
+    // r12: one native CentroidDists node (bit-identical d2/tie-break)
+    // replaces the per-cell literal forest — see CentroidOps.
+    val cellDists = graft.functions.CentroidOps.centroidDists(
+      col("v"), coarse.toSeq.map(_.toSeq), "cell")
+    val assigned = e
+      .withColumn("m", array_min(cellDists))
+      .select(col("vec_id").as("neighbor_id"), col("m.cell").as("cell"),
+        col("v").as("cv"), col("nrm").as("cn"))
 
-  /** IVF with a PRECOMPUTED quantizer: the deployment mode where the
-    * coarse quantizer ships as a model artifact and assignment/search
-    * reuse it unchanged. The seeded artifact here is the first `nCells`
-    * nonzero-norm vectors by vec_id — sampled data points as centroids
-    * (k-means with zero Lloyd iterations), a standard cheap quantizer
-    * init. Deterministic and engine-neutral, so this variant carries the
-    * cross-engine oracle for the IVF search machinery (assignment
-    * argmin, probe ranking, in-cell exact ranking); the k-means fit path
-    * above keeps its recall-floor spec as the production quantizer.
-    */
-  def ivfTopKSeeded(embeddings: DataFrame, nCells: Int = 16, nProbe: Int = 4,
-                    nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val e = withNorm(embeddings)
-    val cents = e.orderBy(col("vec_id")).limit(nCells).select(col("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == nCells,
-      s"corpus has only ${cents.length} nonzero vectors; need $nCells centroids")
-    ivfSearch(e, cents, nProbe, nQueries, k)
+    // Query-side probe ranking reuses the same distance array; the
+    // nProbe smallest cells come from slicing the sorted struct array —
+    // driver-small input (nQueries rows), no window needed.
+    val probed = e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
+        explode(slice(sort_array(cellDists), 1, nProbe)).as("pc"))
+      .select(col("query_id"), col("qv"), col("qn"), col("pc.cell").as("cell"))
+
+    val cand = broadcast(probed).join(assigned, Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos_sim",
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+      .select(col("query_id"), col("neighbor_id"), col("cell"), col("cos_sim"))
+    TopK.groupedWithRank(cand, Seq(col("query_id")), k,
+        Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
+      .select(col("query_id"), col("rk"), col("neighbor_id"), col("cell"),
+        col("cos_sim"))
   }
 
   /** #43c ann_pq_topk: product-quantization ANN (ADC — asymmetric
@@ -309,59 +312,97 @@ object Similarity {
     *
     * Build: vectors are unit-normalized, each of the `m` sub-vectors is
     * quantized to its nearest of `ksub` codebook entries — the codebook
-    * is a driver-known model artifact (tiny by contract), so encoding
-    * is a literal-struct `array_min` projection over the corpus scan:
-    * zero Exchange, no UDF. Search: each query precomputes its
-    * ksub×m distance lookup table ONCE (on its own row); candidate
-    * scoring is then `m` array lookups + adds per pair — never a
-    * dot product against the corpus — and approximate cosine is
-    * 1 − d²/2 on the unit sphere. Ranking is two bounded stages:
+    * is a driver-known model artifact ([[pqCodebook]], tiny by
+    * contract), so encoding is a literal-struct `array_min` projection
+    * over the corpus scan: zero Exchange, no UDF. Search: each query
+    * precomputes its ksub×m distance lookup table ONCE (on its own
+    * row); candidate scoring is then `m` array lookups + adds per pair
+    * — never a dot product against the corpus — and approximate cosine
+    * is 1 − d²/2 on the unit sphere. Ranking is two bounded stages:
     * ADC top-(k·refine) via the map-side-truncating [[TopK]] aggregate,
     * then an exact-cosine re-rank that reads full vectors for ONLY the
     * k·refine·nQueries survivors (the FAISS refine stage) — the full
     * corpus never ships float vectors anywhere.
-    *
-    * [[pqTopK]] fits the codebook with per-subspace Lloyd iterations on
-    * a driver-collected sample (at 100 TB a quantizer trains on a
-    * bounded sample and assigns everything — the fit input never scales
-    * with the corpus); [[pqTopKSeeded]] uses sampled data points as
-    * codes directly (zero-iteration init) and carries the cross-engine
-    * oracle, mirroring the [[ivfTopK]]/[[ivfTopKSeeded]] split.
     */
-  def pqTopK(embeddings: DataFrame, m: Int = 8, ksub: Int = 16,
-             nQueries: Int = 10, k: Int = 5, refine: Int = 4,
-             sampleN: Int = 256, iters: Int = 5): DataFrame = {
+  def pqTopK(embeddings: DataFrame, codebook: Array[Array[Array[Double]]],
+             nQueries: Int = 10, k: Int = 5, refine: Int = 4): DataFrame = {
     val e = withUnit(embeddings)
-    val sample = collectUnitVectors(e, sampleN, atLeast = ksub)
-    val dim = sample.head.length
-    val ds = subDim(dim, m)
-    val cb = Array.tabulate(m) { mi =>
-      fitSubCodebook(sample.map(_.slice(mi * ds, mi * ds + ds)), ksub, iters)
-    }
-    pqSearch(e, cb, nQueries, k, refine)
+    val m = codebook.length
+    val cn2 = pqCn2(codebook)
+    // r11: fan the encode out and MATERIALIZE the codes (tiny rows: id +
+    // m codes) before the ADC crossjoin — localCheckpoint makes it
+    // impossible for the optimizer to inline the 128-literal-dot encode
+    // above the join and re-run it per (query, row) pair (the measured
+    // failure mode of a bare repartition here), and the narrow
+    // embedding scan no longer single-threads the encode.
+    // Routed through the Ckpt seam (ADVICE r11 #4) so the reliable-
+    // checkpoint config applies on preemptible clusters; 'local' mode
+    // is the same localCheckpoint as before.
+    val corpus = graft.Ckpt.frame(Skew.fanOutScan(e, "vec_id")
+      .select(col("vec_id").as("neighbor_id"),
+        pqCodesCol(codebook, cn2).as("codes")))
+    val queries = e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn"), pqLutCol(codebook, cn2).as("lut"))
+
+    // ADC scan: the corpus side carries ONLY (id, codes). Broadcast the
+    // query side.
+    val adc = broadcast(queries.select(col("query_id"), col("lut")))
+      .join(corpus, col("query_id") =!= col("neighbor_id"))
+      .withColumn("adc_cos", pqAdcCol(m))
+      .select(col("query_id"), col("neighbor_id"), col("adc_cos"))
+    val shortlist = TopK.groupedWithRank(adc, Seq(col("query_id")), k * refine,
+        Seq(TopK.descNum(col("adc_cos")), col("neighbor_id")))
+      .select(col("query_id"), col("neighbor_id"), col("adc_cos"))
+
+    // Refine: exact cosine for the shortlist only — full vectors join
+    // back for k·refine·nQueries rows, not the corpus. The shortlist is
+    // bounded by contract, so BROADCAST it into the corpus scan: the
+    // corpus side never shuffles for this join.
+    val refined = broadcast(shortlist
+      .join(broadcast(queries.select(col("query_id"), col("qv"), col("qn"))),
+        Seq("query_id")))
+      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
+        col("nrm").as("cn")), Seq("neighbor_id"))
+      .withColumn("cos_sim",
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+      .select(col("query_id"), col("neighbor_id"), col("adc_cos"), col("cos_sim"))
+    TopK.groupedWithRank(refined, Seq(col("query_id")), k,
+        Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
+      .select(col("query_id"), col("rk"), col("neighbor_id"), col("adc_cos"),
+        col("cos_sim"))
   }
 
-  /** PQ with the PRECOMPUTED zero-iteration codebook (first `ksub`
-    * nonzero-norm unit vectors by vec_id, sliced per subspace —
-    * sampled-data-points-as-codes, the same cheap quantizer init as
-    * [[ivfTopKSeeded]]). Deterministic and engine-neutral: this variant
-    * carries the cross-engine oracle for the whole encode → LUT → ADC →
-    * refine machinery.
+  /** The PQ codebook artifact: `cb(subspace)(code)` = centroid
+    * sub-vector, fit per subspace by driver Lloyd ([[fitSubCodebook]])
+    * on the first `sampleN` nonzero-norm unit vectors by vec_id (at
+    * 100 TB a quantizer trains on a bounded sample and assigns
+    * everything — the fit input never scales with the corpus). Lloyd's
+    * init is the first `ksub` sample points, so `iters = 0` is the
+    * sampled-data-points-as-codes codebook that carries the
+    * cross-engine oracle for the encode → LUT → ADC → refine machinery.
     */
-  def pqTopKSeeded(embeddings: DataFrame, m: Int = 8, ksub: Int = 16,
-                   nQueries: Int = 10, k: Int = 5, refine: Int = 4): DataFrame = {
-    val e = withUnit(embeddings)
-    val seeds = collectUnitVectors(e, ksub, atLeast = ksub)
-    val ds = subDim(seeds.head.length, m)
-    val cb = Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, mi * ds + ds)))
-    pqSearch(e, cb, nQueries, k, refine)
+  def pqCodebook(embeddings: DataFrame, m: Int, ksub: Int, iters: Int = 5,
+                 sampleN: Int = 256): Array[Array[Array[Double]]] = {
+    val sample = withNorm(embeddings).orderBy(col("vec_id")).limit(sampleN)
+      .select(col("v"), col("nrm")).collect()
+      .map(r => r.getSeq[Double](0).toArray.map(_ / r.getDouble(1)))
+    require(sample.length >= ksub,
+      s"pq: corpus has only ${sample.length} nonzero vectors; need $ksub")
+    val dim = sample.head.length
+    require(sample.forall(_.length == dim), "pq: embeddings must share one dimension")
+    require(m > 0 && dim % m == 0, s"pq: dim $dim must divide evenly into m=$m subspaces")
+    val ds = dim / m
+    Array.tabulate(m) { mi =>
+      fitSubCodebook(sample.map(_.slice(mi * ds, mi * ds + ds)), ksub, iters)
+    }
   }
 
   /** #43d ann_ivfpq_topk: IVF-PQ — the composed FAISS production index
     * (IndexIVFPQ): the coarse quantizer prunes WHICH vectors each query
-    * scans (nProbe/nCells of the corpus), PQ compresses WHAT the scan
+    * scans (nProbe/#cells of the corpus), PQ compresses WHAT the scan
     * reads (m code bytes per vector). Composed, a 100 TB embedding
-    * corpus serves queries from ~nProbe/nCells × 3 TB of codes — both
+    * corpus serves queries from ~nProbe/#cells × 3 TB of codes — both
     * scale levers at once, which is why this is the shape production
     * vector stores actually deploy.
     *
@@ -371,74 +412,33 @@ object Similarity {
     * [[pqTopK]]'s. Search: rank cells by the coarse argmin structs,
     * probe `nProbe`, ADC-score only the candidates in probed cells,
     * bounded-TopK shortlist, exact-cosine refine over the survivors.
-    *
-    * [[ivfpqTopK]] fits both quantizers on driver samples (k-means
-    * coarse + per-subspace Lloyd codebook); [[ivfpqTopKSeeded]] uses
-    * the first-n data points for both (the model-artifact deployment
-    * mode) and carries the cross-engine oracle.
+    * Both levels are fitted artifacts: `coarse` from [[kmeansFit]]
+    * (raw vectors), `codebook` from [[pqCodebook]] (unit vectors).
     */
-  def ivfpqTopK(embeddings: DataFrame, nCells: Int = 16, nProbe: Int = 4,
-                m: Int = 8, ksub: Int = 16, nQueries: Int = 10, k: Int = 5,
-                refine: Int = 4, sampleN: Int = 256, iters: Int = 5,
-                sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+  def ivfpqTopK(embeddings: DataFrame, coarse: Array[Array[Double]],
+                codebook: Array[Array[Array[Double]]], nProbe: Int = 4,
+                nQueries: Int = 10, k: Int = 5, refine: Int = 4): DataFrame = {
     val e = withUnit(embeddings)
-    val feat = e.select(array_to_vector(col("v")).as("features"))
-    val train = if (sampleFraction >= 1.0) feat
-                else feat.sample(withReplacement = false, sampleFraction, seed)
-    val coarse = new KMeans().setK(nCells).setSeed(seed)
-      .setFeaturesCol("features").fit(train).clusterCenters.map(_.toArray)
-    val sample = collectUnitVectors(e, sampleN, atLeast = ksub)
-    val ds = subDim(sample.head.length, m)
-    val cb = Array.tabulate(m) { mi =>
-      fitSubCodebook(sample.map(_.slice(mi * ds, mi * ds + ds)), ksub, iters)
-    }
-    ivfpqSearch(e, coarse, cb, nProbe, nQueries, k, refine)
-  }
-
-  /** IVF-PQ with both quantizers PRECOMPUTED from the first data points
-    * (coarse cells from raw vectors as in [[ivfTopKSeeded]], codebook
-    * from unit vectors as in [[pqTopKSeeded]]) — engine-neutral; carries
-    * the oracle for the composed prune + ADC + refine machinery.
-    */
-  def ivfpqTopKSeeded(embeddings: DataFrame, nCells: Int = 16, nProbe: Int = 4,
-                      m: Int = 8, ksub: Int = 16, nQueries: Int = 10,
-                      k: Int = 5, refine: Int = 4): DataFrame = {
-    val e = withUnit(embeddings)
-    val coarse = e.orderBy(col("vec_id")).limit(nCells).select(col("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(coarse.length == nCells,
-      s"corpus has only ${coarse.length} nonzero vectors; need $nCells centroids")
-    val seeds = collectUnitVectors(e, ksub, atLeast = ksub)
-    val ds = subDim(seeds.head.length, m)
-    val cb = Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, mi * ds + ds)))
-    ivfpqSearch(e, coarse, cb, nProbe, nQueries, k, refine)
-  }
-
-  private def ivfpqSearch(e: DataFrame, coarse: Array[Array[Double]],
-                          cb: Array[Array[Array[Double]]], nProbe: Int,
-                          nQueries: Int, k: Int, refine: Int): DataFrame = {
-    val m = cb.length
-    val cn2 = pqCn2(cb)
-    // Coarse cell argmin: the ivfSearch literal-struct projection (raw
-    // vectors, matching the seeded-cell artifact); PQ codes ride the
-    // SAME projection — one corpus pass emits (id, cell, codes).
+    val m = codebook.length
+    val cn2 = pqCn2(codebook)
+    // Coarse cell argmin: the ivfTopK literal-struct projection (raw
+    // vectors, as kmeansFit fits them); PQ codes ride the SAME
+    // projection — one corpus pass emits (id, cell, codes).
     val cellDists = graft.functions.CentroidOps.centroidDists(
       col("v"), coarse.toSeq.map(_.toSeq), "cell")
     val corpus = e
       .withColumn("m", array_min(cellDists))
       .select(col("vec_id").as("neighbor_id"), col("m.cell").as("cell"),
-        pqCodesCol(cb, cn2).as("codes"))
+        pqCodesCol(codebook, cn2).as("codes"))
     val qbase = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), pqLutCol(cb, cn2).as("lut"),
+        col("nrm").as("qn"), pqLutCol(codebook, cn2).as("lut"),
         slice(sort_array(cellDists), 1, nProbe).as("pcs"))
     val probes = qbase
       .select(col("query_id"), col("lut"), explode(col("pcs")).as("pc"))
       .select(col("query_id"), col("lut"), col("pc.cell").as("cell"))
     // ADC only over candidates in probed cells: the broadcast probe
-    // table keys the corpus scan by cell — nProbe/nCells of the code
+    // table keys the corpus scan by cell — nProbe/#cells of the code
     // table per query, never the whole corpus.
     val adc = broadcast(probes).join(corpus, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -473,26 +473,6 @@ object Similarity {
   // encode depends on this exact stage shape; leave it alone.
   private def withUnit(embeddings: DataFrame): DataFrame =
     withNorm(embeddings).withColumn("u", transform(col("v"), x => x / col("nrm")))
-
-  private def subDim(dim: Int, m: Int): Int = {
-    require(m > 0 && dim % m == 0,
-      s"pq: dim $dim must divide evenly into m=$m subspaces")
-    dim / m
-  }
-
-  /** First-`n`-by-vec_id unit vectors, driver-side (bounded by contract:
-    * a quantizer training sample, never the corpus).
-    */
-  private def collectUnitVectors(e: DataFrame, n: Int, atLeast: Int): Array[Array[Double]] = {
-    val rows = e.orderBy(col("vec_id")).limit(n)
-      .select(col("v"), col("nrm")).collect()
-      .map(r => r.getSeq[Double](0).toArray.map(_ / r.getDouble(1)))
-    require(rows.length >= atLeast,
-      s"pq: corpus has only ${rows.length} nonzero vectors; need $atLeast")
-    require(rows.forall(_.length == rows.head.length),
-      "pq: embeddings must share one dimension")
-    rows
-  }
 
   /** Per-subspace Lloyd fit on the driver sample: init = first `ksub`
     * points, assign by (d², index)-lexicographic argmin, recompute
@@ -583,62 +563,12 @@ object Similarity {
       (0 until m).map(mi => element_at(element_at(col("lut"), mi + 1),
         element_at(col("codes"), mi + 1) + 1)).reduce(_ + _) / lit(2.0), 6)
 
-  /** Shared PQ search over a driver-known codebook
-    * (`cb(subspace)(code) = centroid sub-vector`).
-    */
-  private def pqSearch(e: DataFrame, cb: Array[Array[Array[Double]]],
-                       nQueries: Int, k: Int, refine: Int): DataFrame = {
-    val m = cb.length
-    val cn2 = pqCn2(cb)
-    // r11: fan the encode out and MATERIALIZE the codes (tiny rows: id +
-    // m codes) before the ADC crossjoin — localCheckpoint makes it
-    // impossible for the optimizer to inline the 128-literal-dot encode
-    // above the join and re-run it per (query, row) pair (the measured
-    // failure mode of a bare repartition here), and the narrow
-    // embedding scan no longer single-threads the encode.
-    // Routed through the Ckpt seam (ADVICE r11 #4) so the reliable-
-    // checkpoint config applies on preemptible clusters; 'local' mode
-    // is the same localCheckpoint as before.
-    val corpus = graft.Ckpt.frame(Skew.fanOutScan(e, "vec_id")
-      .select(col("vec_id").as("neighbor_id"), pqCodesCol(cb, cn2).as("codes")))
-    val queries = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), pqLutCol(cb, cn2).as("lut"))
-
-    // ADC scan: the corpus side carries ONLY (id, codes). Broadcast the
-    // query side.
-    val adc = broadcast(queries.select(col("query_id"), col("lut")))
-      .join(corpus, col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cos", pqAdcCol(m))
-      .select(col("query_id"), col("neighbor_id"), col("adc_cos"))
-    val shortlist = TopK.groupedWithRank(adc, Seq(col("query_id")), k * refine,
-        Seq(TopK.descNum(col("adc_cos")), col("neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), col("adc_cos"))
-
-    // Refine: exact cosine for the shortlist only — full vectors join
-    // back for k·refine·nQueries rows, not the corpus. The shortlist is
-    // bounded by contract, so BROADCAST it into the corpus scan: the
-    // corpus side never shuffles for this join.
-    val refined = broadcast(shortlist
-      .join(broadcast(queries.select(col("query_id"), col("qv"), col("qn"))),
-        Seq("query_id")))
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("nrm").as("cn")), Seq("neighbor_id"))
-      .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("adc_cos"), col("cos_sim"))
-    TopK.groupedWithRank(refined, Seq(col("query_id")), k,
-        Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("adc_cos"),
-        col("cos_sim"))
-  }
-
   /** #41b semantic_dedup: SemDeDup (Abbas et al. 2023) — semantic
     * deduplication over embedding clusters. Near-duplicate SEMANTICS
     * (paraphrases, re-renders, boilerplate variants) survive lexical
     * dedup; SemDeDup catches them by clustering the embedding space
     * coarsely and deduplicating within clusters only: candidate pairs
-    * are cell-bounded (nCells is the blowup dial — the paper runs
+    * are cell-bounded (#cells is the blowup dial — the paper runs
     * ~100k clusters at web scale), never corpus-quadratic.
     *
     * Per cluster of cosine-≥-τ connected components, the KEPT member is
@@ -655,43 +585,56 @@ object Similarity {
     * (`maxCellRows`); cluster resolution is the hash-min
     * [[Components.connectedComponents]] loop; keep-selection is a
     * min-of-struct aggregate + join, never a cluster window.
-    * [[semanticDedup]] fits the quantizer with k-means on a sample;
-    * [[semanticDedupSeeded]] uses the first-nCells centroid artifact
-    * and carries the cross-engine oracle.
+    * The coarse cells are a fitted [[kmeansFit]] artifact; at
+    * `iters = 0` (the first #cells nonzero-norm vectors by vec_id) the
+    * row carries the cross-engine oracle.
     */
-  def semanticDedup(embeddings: DataFrame, nCells: Int = 16,
-                    tau: Double = 0.3, maxCellRows: Int = 10000,
-                    sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+  def semanticDedup(embeddings: DataFrame, coarse: Array[Array[Double]],
+                    tau: Double = 0.3, maxCellRows: Int = 10000): DataFrame = {
     val e = withNorm(embeddings)
-    val feat = e.select(array_to_vector(col("v")).as("features"))
-    val train = if (sampleFraction >= 1.0) feat
-                else feat.sample(withReplacement = false, sampleFraction, seed)
-    val model = new KMeans().setK(nCells).setSeed(seed)
-      .setFeaturesCol("features").fit(train)
-    semanticDedupSearch(e, model.clusterCenters.map(_.toArray), tau, maxCellRows)
-  }
-
-  /** SemDeDup with the PRECOMPUTED first-nCells centroid artifact
-    * (engine-neutral, carries the oracle — the [[ivfTopKSeeded]] split).
-    */
-  def semanticDedupSeeded(embeddings: DataFrame, nCells: Int = 16,
-                          tau: Double = 0.3, maxCellRows: Int = 10000): DataFrame = {
-    val e = withNorm(embeddings)
-    val cents = e.orderBy(col("vec_id")).limit(nCells).select(col("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == nCells,
-      s"corpus has only ${cents.length} nonzero vectors; need $nCells centroids")
-    semanticDedupSearch(e, cents, tau, maxCellRows)
+    val assigned = centroidAssigned(e, coarse)
+    val guard = assigned.groupBy(col("cell")).agg(count(lit(1)).as("__n"))
+      .withColumn("__chk",
+        when(col("__n") > maxCellRows, raise_error(concat(
+          lit(s"semanticDedup: cell wider than maxCellRows=$maxCellRows (n="),
+          col("__n").cast("string"),
+          lit(") — the within-cell join would go quadratic; fit more cells"))))
+          .otherwise(lit(1)))
+    val a = assigned.select(col("cell"), col("vec_id").as("id1"),
+        col("v").as("v1"), col("nrm").as("n1"))
+      .join(broadcast(guard), Seq("cell"))
+      .filter(col("__chk") === 1).drop("__n", "__chk")
+    val b = assigned.select(col("cell"), col("vec_id").as("id2"),
+      col("v").as("v2"), col("nrm").as("n2"))
+    val pairs = a.join(b, Seq("cell"))
+      .filter(col("id1") < col("id2"))
+      .filter(dot(col("v1"), col("v2")) / (col("n1") * col("n2")) >= tau)
+      .select(col("id1"), col("id2"))
+    val comp = Components.connectedComponents(pairs, "id1", "id2")
+      .select(col("id").as("vec_id"), col("label"))
+    val labeled = assigned
+      .select(col("vec_id"), col("cell"), col("cen_cos"))
+      .join(comp, Seq("vec_id"), "left")
+      .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
+      .drop("label")
+    // Keep = min (cen_cos, vec_id) per cluster: aggregate + join (a
+    // degenerate all-dup corpus is ONE cluster — a window would pin it
+    // to a task; the join side lets AQE skew-split).
+    val keep = labeled.groupBy(col("cluster_id")).agg(
+      min(struct(col("cen_cos"), col("vec_id"))).as("kb"),
+      count(lit(1)).as("cluster_size"))
+    labeled.join(keep, Seq("cluster_id"))
+      .select(col("vec_id"), col("cell"), col("cluster_id"),
+        col("cluster_size"), col("cen_cos"),
+        (col("vec_id") === col("kb.vec_id")).cast("int").as("is_kept"))
   }
 
   /** Literal-centroid cell assignment + centroid cosine — the shared
-    * front of [[semanticDedupSearch]] and [[embedOutliers]]. One
-    * projection, zero Exchange: ⟨v,c⟩ = (|c|² − d2)/2 comes from the
+    * front of [[semanticDedup]], [[embedOutliers]] and [[ivfStats]].
+    * One projection, zero Exchange: ⟨v,c⟩ = (|c|² − d2)/2 comes from the
     * argmin's own d2 (no second dot); |c| is a driver literal.
     */
-  private def seededAssigned(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
+  private def centroidAssigned(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     val cn2 = cents.map(_.foldLeft(0.0)((s, x) => s + x * x))
     assignCell(e, cents)
       .withColumn("cen_cos", round(
@@ -703,7 +646,7 @@ object Similarity {
 
   /** #41c embed_outliers: embedding-space outlier flagging — the
     * CLIP-score-style curation gate in embedding space: assign every
-    * vector to its seeded coarse cell, z-score its centroid cosine
+    * vector to its coarse cell, z-score its centroid cosine
     * against the CELL's own distribution, flag members far below their
     * cluster (mislabeled, off-distribution, or corrupt points the
     * near-dup passes cannot see). z compares ROUNDED inputs (rounded
@@ -712,18 +655,13 @@ object Similarity {
     * <2 members carry a null z and are never flagged.
     *
     * Scale shape: assignment is the zero-Exchange literal-centroid
-    * projection; the per-cell moment fold is bounded by nCells rows and
+    * projection; the per-cell moment fold is bounded by #cells rows and
     * BROADCASTS back — corpus rows shuffle only for the moment fold's
     * map-side-combined partials.
     */
-  def embedOutliers(embeddings: DataFrame, nCells: Int = 16,
+  def embedOutliers(embeddings: DataFrame, coarse: Array[Array[Double]],
                     zThresh: Double = -1.5): DataFrame = {
-    val e = withNorm(embeddings)
-    val cents = e.orderBy(col("vec_id")).limit(nCells).select(col("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == nCells,
-      s"corpus has only ${cents.length} nonzero vectors; need $nCells centroids")
-    val assigned = seededAssigned(e, cents)
+    val assigned = centroidAssigned(withNorm(embeddings), coarse)
       .select(col("vec_id"), col("cell"), col("cen_cos"))
     // Moments fold over EXACT integer micro-units: a float avg/stddev
     // over shuffled partials is order-dependent, and with cen_cos
@@ -750,28 +688,22 @@ object Similarity {
         (coalesce(col("z"), lit(0.0)) < zThresh).cast("int").as("is_outlier"))
   }
 
-  /** #43e ivf_stats: IVF index occupancy report over the seeded coarse
-    * cells — per cell: member count, corpus share, and the mean/min
-    * centroid cosine (cell tightness). THE capacity-planning read
+  /** #43e ivf_stats: IVF index occupancy report over a fitted coarse
+    * quantizer ([[kmeansFit]]) — per cell: member count, corpus share,
+    * and the mean/min centroid cosine (cell tightness). THE capacity-planning read
     * before deploying an IVF/IVF-PQ index (#43b/#43d): a fat cell means
     * probe-time latency skew (nprobe hits it constantly) and a low mean
     * cen_cos means the quantizer under-fits that region — both argue
-    * for more cells or a re-fit. Same seeded-centroid artifact as
-    * [[embedOutliers]]/[[semanticDedup]], so the report is
-    * oracle-checkable; the k-means fit is the production quantizer.
+    * for more cells or a re-fit. Same artifact as [[ivfTopK]],
+    * [[embedOutliers]] and [[semanticDedup]].
     *
     * Scale: zero-Exchange literal-centroid assignment + one hash
-    * aggregate to nCells rows + a 1-row total broadcast. The mean folds
+    * aggregate to #cells rows + a 1-row total broadcast. The mean folds
     * over exact integer micro-units (the [[embedOutliers]] rule: float
     * sums over shuffled partials are order-dependent).
     */
-  def ivfStats(embeddings: DataFrame, nCells: Int = 16): DataFrame = {
-    val e = withNorm(embeddings)
-    val cents = e.orderBy(col("vec_id")).limit(nCells).select(col("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(cents.length == nCells,
-      s"corpus has only ${cents.length} nonzero vectors; need $nCells centroids")
-    val asg = seededAssigned(e, cents)
+  def ivfStats(embeddings: DataFrame, coarse: Array[Array[Double]]): DataFrame = {
+    val asg = centroidAssigned(withNorm(embeddings), coarse)
       .select(col("vec_id"), col("cell"), col("cen_cos"))
     val mi = round(col("cen_cos") * 1e6, 0).cast("long")
     val per = asg.groupBy(col("cell"))
@@ -788,7 +720,7 @@ object Similarity {
   /** Zero-Exchange literal-centroid argmin: adds `cell` (nearest
     * centroid, ties → lowest index) and `d2` = |c|² − 2⟨v,c⟩ (the L2²
     * distance up to the per-vector |v|² constant, which cannot change
-    * the argmin). Shared by [[seededAssigned]] and the kmeans rounds.
+    * the argmin). Shared by [[centroidAssigned]] and the kmeans rounds.
     */
   private def assignCell(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     // r12: native CentroidDists node (bit-identical d2/tie-break) — the
@@ -803,12 +735,14 @@ object Similarity {
   }
 
   /** #43f kmeans_clusters (fit half): distributed Lloyd refinement over
-    * the FULL corpus — the tier between the zero-iteration seeded
-    * quantizers (assignment-only artifacts: [[ivfTopKSeeded]],
-    * [[semanticDedupSeeded]]) and the driver-sample codebook fits
-    * ([[pqTopK]]): topic clustering for data mixing / cluster-balanced
-    * sampling wants centroids refined on EVERY vector, which neither a
-    * seed nor a driver sample gives.
+    * the FULL corpus — the one coarse-quantizer fit. Its centroids are
+    * the artifact [[ivfTopK]], [[ivfpqTopK]], [[semanticDedup]],
+    * [[embedOutliers]], [[ivfStats]] and [[kmeansAssign]] deploy; topic
+    * clustering for data mixing / cluster-balanced sampling wants
+    * centroids refined on EVERY vector. `iters = 0` returns the init
+    * itself (the first k nonzero-norm vectors by vec_id), which is the
+    * artifact the ANN oracle rows replay; a bounded fit is
+    * `kmeansFit(e.sample(…), …)`.
     *
     * Per round: (1) assignment is the zero-Exchange literal-centroid
     * argmin projection ([[assignCell]] — centroids are a k×dim driver
@@ -884,7 +818,7 @@ object Similarity {
     * aggregation, no state — so the IDENTICAL operator routes incoming
     * embeddings to topic cells under readStream in append mode (assign
     * documents to curation topics as they LAND; the fit stays a batch
-    * job — the same fit/deploy split every seeded ANN tier here uses).
+    * job — the same fit/deploy split every ANN tier here uses).
     * Zero-norm vectors are dropped, matching the batch corpus rule.
     * Returns (vec_id, cell, dist2 rounded 6).
     */
@@ -894,82 +828,4 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         round(dot(col("v"), col("v")) + col("d2"), 6).as("dist2"))
 
-  private def semanticDedupSearch(e: DataFrame, cents: Array[Array[Double]],
-                                  tau: Double, maxCellRows: Int): DataFrame = {
-    val assigned = seededAssigned(e, cents)
-    val guard = assigned.groupBy(col("cell")).agg(count(lit(1)).as("__n"))
-      .withColumn("__chk",
-        when(col("__n") > maxCellRows, raise_error(concat(
-          lit(s"semanticDedup: cell wider than maxCellRows=$maxCellRows (n="),
-          col("__n").cast("string"),
-          lit(") — the within-cell join would go quadratic; raise nCells"))))
-          .otherwise(lit(1)))
-    val a = assigned.select(col("cell"), col("vec_id").as("id1"),
-        col("v").as("v1"), col("nrm").as("n1"))
-      .join(broadcast(guard), Seq("cell"))
-      .filter(col("__chk") === 1).drop("__n", "__chk")
-    val b = assigned.select(col("cell"), col("vec_id").as("id2"),
-      col("v").as("v2"), col("nrm").as("n2"))
-    val pairs = a.join(b, Seq("cell"))
-      .filter(col("id1") < col("id2"))
-      .filter(dot(col("v1"), col("v2")) / (col("n1") * col("n2")) >= tau)
-      .select(col("id1"), col("id2"))
-    val comp = Components.connectedComponents(pairs, "id1", "id2")
-      .select(col("id").as("vec_id"), col("label"))
-    val labeled = assigned
-      .select(col("vec_id"), col("cell"), col("cen_cos"))
-      .join(comp, Seq("vec_id"), "left")
-      .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
-      .drop("label")
-    // Keep = min (cen_cos, vec_id) per cluster: aggregate + join (a
-    // degenerate all-dup corpus is ONE cluster — a window would pin it
-    // to a task; the join side lets AQE skew-split).
-    val keep = labeled.groupBy(col("cluster_id")).agg(
-      min(struct(col("cen_cos"), col("vec_id"))).as("kb"),
-      count(lit(1)).as("cluster_size"))
-    labeled.join(keep, Seq("cluster_id"))
-      .select(col("vec_id"), col("cell"), col("cluster_id"),
-        col("cluster_size"), col("cen_cos"),
-        (col("vec_id") === col("kb.vec_id")).cast("int").as("is_kept"))
-  }
-
-  /** Shared IVF search over driver-known centroids (tiny by contract —
-    * a quantizer is a model artifact, never corpus-sized).
-    */
-  private def ivfSearch(e: DataFrame, cents: Array[Array[Double]],
-                        nProbe: Int, nQueries: Int, k: Int): DataFrame = {
-    // Nearest cell per corpus vector: |c|² − 2⟨v,c⟩ ranks cells (the
-    // |v|² term is constant per vector). Centroids are DRIVER-known,
-    // so the argmin is a narrow projection over a
-    // literal (cell, |c|², centroid) table — array_min over per-cell
-    // structs with (d2, cell) lexicographic tie-break. No crossJoin, no
-    // per-vector groupBy: zero Exchange between the corpus scan and its
-    // cell assignment.
-    // r12: one native CentroidDists node (bit-identical d2/tie-break)
-    // replaces the per-cell literal forest — see CentroidOps.
-    val cellDists = graft.functions.CentroidOps.centroidDists(
-      col("v"), cents.toSeq.map(_.toSeq), "cell")
-    val assigned = e
-      .withColumn("m", array_min(cellDists))
-      .select(col("vec_id").as("neighbor_id"), col("m.cell").as("cell"),
-        col("v").as("cv"), col("nrm").as("cn"))
-
-    // Query-side probe ranking reuses the same distance array; the
-    // nProbe smallest cells come from slicing the sorted struct array —
-    // driver-small input (nQueries rows), no window needed.
-    val probed = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(slice(sort_array(cellDists), 1, nProbe)).as("pc"))
-      .select(col("query_id"), col("qv"), col("qn"), col("pc.cell").as("cell"))
-
-    val cand = broadcast(probed).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("cell"), col("cos_sim"))
-    TopK.groupedWithRank(cand, Seq(col("query_id")), k,
-        Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("cell"),
-        col("cos_sim"))
-  }
 }

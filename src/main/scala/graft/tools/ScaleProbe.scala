@@ -115,7 +115,7 @@ object ScaleProbe {
       val tNgram = noopTime(Dedup.ngramJaccardInvertedIndex(docs))
       val tAnnBrute = noopTime(Similarity.cosineTopK(emb))
       val tAnnLsh = noopTime(Similarity.lshTopK(emb))
-      val tAnnIvf = noopTime(Similarity.ivfTopK(emb))
+      val tAnnIvf = noopTime(Similarity.ivfTopK(emb, Similarity.kmeansFit(emb, 16)))
       val tNearDup = noopTime(Similarity.nearDupPairs(emb))
       val tClusters = noopTime(Components.dedupClusters(
         Similarity.nearDupPairs(emb, minCosine = 0.3), "id1", "id2",
@@ -259,7 +259,7 @@ object ScaleProbe {
       val (bm, rounds) = Bpe.trainBatched(docsBase, merges = 24)
       val tB = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val sm = Bpe.train(docsBase, merges = 24)
+      val (sm, _) = Bpe.trainBatched(docsBase, merges = 24, batchMax = 1)
       val tS = (System.nanoTime() - t1) / 1e9
       println(f"[scale-bpe] merges=24 batched_rounds=$rounds " +
         f"batched=$tB%.2fs sequential=$tS%.2fs sequential_equal=${bm == sm}")

@@ -29,7 +29,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("train reproduces the classic merge sequence") {
-    val merges = Bpe.train(sennrich, merges = 5)
+    val merges = BpeReference.train(sennrich, merges = 5)
     assert(merges.map(m => (m.lhs, m.rhs, m.pair_count)) == Seq(
       ("e", "s", 9L), ("es", "t", 9L), ("est", Bpe.Eow, 9L),
       ("l", "o", 7L), ("lo", "w", 7L)))
@@ -37,7 +37,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("tokenize segments an unseen word with trained merges") {
-    val merges = Bpe.train(sennrich, merges = 5)
+    val merges = BpeReference.train(sennrich, merges = 5)
     val row = Bpe.tokenize(Seq((7L, "lowest")).toDF("doc_id", "text"), merges)
       .collect().head
     val toks = row.getSeq[String](row.fieldIndex("bpe_tokens"))
@@ -57,7 +57,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     // array, not a dropped row), one overlap run (the greedy-leftmost
     // edge), one doc repeating another's words (the vocab grain must
     // not conflate docs).
-    val merges = Bpe.train(sennrich, merges = 5) :+
+    val merges = BpeReference.train(sennrich, merges = 5) :+
       Bpe.Merge(6, "a", "a", "aa", 0L)
     val documents = Seq(
       (1L, "low lowest aaa"), (2L, "!!! ..."), (3L, ""),
@@ -76,7 +76,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fertility: per-lang tokens-per-word under a fixed merge table") {
-    val merges = Bpe.train(sennrich, merges = 5)
+    val merges = BpeReference.train(sennrich, merges = 5)
     // en: low×5→2 toks each, lower×2→[low,e,r,</w>]=4, newest×6→
     // [n,e,w,est</w>]=4, widest×3→[w,i,d,est</w>]=4: 16 words, 54 toks.
     // de: "low low" → 2 words, 4 toks (merges trained on en only).
@@ -92,7 +92,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merge table round-trips through the model store; corrupt rounds fail loudly") {
-    val merges = Bpe.train(sennrich, merges = 5)
+    val merges = BpeReference.train(sennrich, merges = 5)
     val dir = java.nio.file.Files.createTempDirectory("bpe_store").toString
     val path = s"$dir/merges"
     Bpe.saveMerges(spark, merges, path)
@@ -110,7 +110,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("NULL text folds to the empty document across the whole family") {
-    val merges = Bpe.train(sennrich, merges = 3)
+    val merges = BpeReference.train(sennrich, merges = 3)
     val documents = Seq((1L, "low low", "en"), (2L, null.asInstanceOf[String], "en"))
       .toDF("doc_id", "text", "lang")
     val a = Bpe.tokenize(documents, merges).orderBy("doc_id").collect()
@@ -126,7 +126,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("packedSequences: real-token sequences, full except tail, split docs reassemble") {
-    val merges = Bpe.train(sennrich, merges = 5)
+    val merges = BpeReference.train(sennrich, merges = 5)
     // doc1: low→[low,</w>], lower→[low,e,r,</w>] = 6 tokens;
     // doc2: newest×2→[n,e,w,est</w>]×2, low→[low,</w>] = 10 tokens.
     val documents = Seq((1L, "low lower"), (2L, "newest newest low"))
@@ -142,7 +142,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("train stops early when the vocabulary is fully merged") {
-    val merges = Bpe.train(Seq((1L, "ab ab")).toDF("doc_id", "text"), merges = 10)
+    val merges = BpeReference.train(Seq((1L, "ab ab")).toDF("doc_id", "text"), merges = 10)
     // "ab" → a b </w>: two pairs, then one, then none.
     assert(merges.length == 2)
     assert(merges.map(m => (m.lhs, m.rhs)) ==
@@ -150,12 +150,12 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("train on an empty/blank corpus yields no merges") {
-    assert(Bpe.train(Seq((1L, "")).toDF("doc_id", "text")).isEmpty)
+    assert(BpeReference.train(Seq((1L, "")).toDF("doc_id", "text")).isEmpty)
   }
 
   test("trainBatched replays train exactly on the Sennrich fixture") {
     val (batched, rounds) = Bpe.trainBatched(sennrich, merges = 5)
-    assert(batched == Bpe.train(sennrich, merges = 5))
+    assert(batched == BpeReference.train(sennrich, merges = 5))
     assert(rounds <= 5)
   }
 
@@ -171,7 +171,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
       Seq.fill(5)("cdw") ++ Seq.fill(3)("cdz")).mkString(" ")
     val corpus = Seq((1L, text)).toDF("doc_id", "text")
     val (batched, rounds) = Bpe.trainBatched(corpus, merges = 6)
-    val sequential = Bpe.train(corpus, merges = 6)
+    val sequential = BpeReference.train(corpus, merges = 6)
     assert(batched == sequential,
       s"batched=${batched.map(m => (m.lhs, m.rhs))} seq=${sequential.map(m => (m.lhs, m.rhs))}")
     assert(rounds == 4, s"expected 6 merges in 4 rounds, used $rounds")
@@ -186,7 +186,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     val corpus = Seq((1L, text)).toDF("doc_id", "text")
     // batchMax=1 degenerates to sequential train, one merge per round.
     val (one, r1) = Bpe.trainBatched(corpus, merges = 4, batchMax = 1)
-    assert(one == Bpe.train(corpus, merges = 4) && r1 == 4)
+    assert(one == BpeReference.train(corpus, merges = 4) && r1 == 4)
     // the merge budget cuts a round's batch short
     val (two, _) = Bpe.trainBatched(corpus, merges = 1)
     assert(two.map(m => (m.lhs, m.rhs)) == Seq(("a", "b")))
@@ -204,7 +204,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     // degrade to one merge per round, while covered batches freely.
     // "abu abv cdw cdz" has exactly 6 pair types: (a,b)x2, (c,d)x2,
     // (b,u), (b,v), (d,w), (d,z).
-    val seqMerges = Bpe.train(corpus, merges = 4)
+    val seqMerges = BpeReference.train(corpus, merges = 4)
     val (cov, covRounds) = Bpe.trainBatched(corpus, merges = 4, sliceSize = 6)
     assert(cov == seqMerges, "covered-slice batching must stay sequential-exact")
     val (uncov, uncovRounds) = Bpe.trainBatched(corpus, merges = 4, sliceSize = 5)
@@ -219,24 +219,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     // adversarial shapes: overlap runs ("aaa" + (a,a)), a merge chain
     // where later merges consume earlier outputs, merges that do not
     // fire, and the empty/1-symbol edges.
-    import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
-    def mergeSymsRef(syms: Column, a: String, b: String): Column = {
-      val nil = array().cast("array<string>")
-      aggregate(syms,
-        struct(nil.as("out"), lit(null).cast("string").as("prev")),
-        (acc, s) =>
-          when(acc.getField("prev").isNull,
-            struct(acc.getField("out").as("out"), s.as("prev")))
-          .when(acc.getField("prev") === lit(a) && s === lit(b),
-            struct(concat(acc.getField("out"), array(lit(a + b))).as("out"),
-              lit(null).cast("string").as("prev")))
-          .otherwise(
-            struct(concat(acc.getField("out"), array(acc.getField("prev"))).as("out"),
-              s.as("prev"))),
-        acc => when(acc.getField("prev").isNull, acc.getField("out"))
-          .otherwise(concat(acc.getField("out"), array(acc.getField("prev")))))
-    }
     val merges = Seq(("a", "a"), ("e", "s"), ("es", "t"), ("aa", "est"),
       ("q", "z"), ("l", "o"))
     val words = Seq("aaa", "aaaa", "aaaaa", "lowest", "estest", "aaest",
@@ -248,8 +231,8 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
         graft.functions.BpeMergeFold.bpeMergeFold(col("syms"), merges))
       .select(col("doc_id"), col("r")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val interp = df.withColumn("r",
-        merges.foldLeft(col("syms")) { case (s, (a, b)) => mergeSymsRef(s, a, b) })
+    val interp = df.withColumn("r", merges.foldLeft(col("syms")) {
+        case (s, (a, b)) => BpeReference.mergeSyms(s, a, b) })
       .select(col("doc_id"), col("r")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(native == interp)

@@ -111,7 +111,7 @@ class CkptSpec extends AnyFunSuite with SparkSpec {
     Graph.pageRankLadder(Seq(("a", "b"), ("b", "a"), ("a", "c")).toDF("src", "dst"),
       rounds = 2, dampingPct = 50, micro = 1000000L))
 
-  private lazy val merges = Bpe.train(Seq((1L, "low low lower newest newest widest"))
+  private lazy val merges = BpeReference.train(Seq((1L, "low low lower newest newest widest"))
     .toDF("doc_id", "text"), merges = 5)
 
   blockLoss("Bpe.packedSequences")(

@@ -173,6 +173,31 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException](Similarity.kmeansFit(emb, k = 5))
   }
 
+  test("quantizer fits at iters = 0 are the first nonzero vectors by vec_id") {
+    // The oracle rows deploy these artifacts: kmeansFit's init is the
+    // first k nonzero-norm vectors by vec_id (raw), pqCodebook's the
+    // first ksub of them unit-normalized and sliced per subspace.
+    // vec_id 1 has zero norm and is skipped; input order is not vec_id.
+    val emb = Seq(
+      (5L, Array(0f, 3f, 4f, 0f), 0), (1L, Array(0f, 0f, 0f, 0f), 0),
+      (2L, Array(2f, 0f, 0f, 0f), 0), (9L, Array(1f, 1f, 1f, 1f), 0),
+      (3L, Array(0f, 0f, 0f, 5f), 0)
+    ).toDF("vec_id", "embedding", "label")
+    val coarse = Similarity.kmeansFit(emb, k = 3, iters = 0)
+    assert(coarse.map(_.toSeq).toSeq == Seq(
+      Seq(2.0, 0.0, 0.0, 0.0), Seq(0.0, 0.0, 0.0, 5.0), Seq(0.0, 3.0, 4.0, 0.0)),
+      coarse.map(_.toSeq))
+    // unit vectors of ids 2, 3, 5: (1,0,0,0), (0,0,0,1), (0,.6,.8,0)
+    val cb = Similarity.pqCodebook(emb, 2, 3, iters = 0)
+    assert(cb.map(_.map(_.toSeq).toSeq).toSeq == Seq(
+      Seq(Seq(1.0, 0.0), Seq(0.0, 0.0), Seq(0.0, 0.6)),
+      Seq(Seq(0.0, 0.0), Seq(0.0, 1.0), Seq(0.8, 0.0))),
+      cb.map(_.map(_.toSeq)))
+    // too few nonzero vectors for the requested cells / codes
+    intercept[IllegalArgumentException](Similarity.kmeansFit(emb, k = 5, iters = 0))
+    intercept[IllegalArgumentException](Similarity.pqCodebook(emb, 2, 5, iters = 0))
+  }
+
   test("near-dup pairs stay inside label buckets") {
     val emb = Seq(
       (0L, Array(1f, 0f), 0), (1L, Array(1f, 0.01f), 0),
@@ -568,21 +593,26 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     val exact = pairs(Similarity.cosineTopK(emb, nQueries = 10, k = 5))
-    val narrow = pairs(Similarity.ivfTopK(emb, nCells = 8, nProbe = 2))
-    val wide = pairs(Similarity.ivfTopK(emb, nCells = 8, nProbe = 8))
+    val coarse = Similarity.kmeansFit(emb, k = 8)
+    val narrow = pairs(Similarity.ivfTopK(emb, coarse, nProbe = 2))
+    val wide = pairs(Similarity.ivfTopK(emb, coarse, nProbe = 8))
     val recallNarrow = (exact intersect narrow).size.toDouble / exact.size
     val recallWide = (exact intersect wide).size.toDouble / exact.size
     assert(recallWide == 1.0,
       s"probing ALL cells must equal brute force, recall $recallWide")
     assert(recallNarrow >= 0.25,
       s"expected nProbe=2/8 recall >= 0.25, got $recallNarrow")
-    // determinism: same seed, same result
-    assert(pairs(Similarity.ivfTopK(emb, nCells = 8, nProbe = 2)) == narrow)
-    // The precomputed-quantizer mode (sampled-seed centroids) shares the
-    // search tail: probing every cell is still exactly brute force.
-    val seededAll = pairs(Similarity.ivfTopKSeeded(emb, nCells = 8, nProbe = 8))
-    assert(seededAll == exact,
-      "seeded quantizer probing ALL cells must equal brute force")
+    // determinism: a repeated fit is the same artifact, same result
+    val refit = Similarity.kmeansFit(emb, k = 8)
+    assert(refit.map(_.toSeq).toSeq == coarse.map(_.toSeq).toSeq,
+      "kmeans fit must be deterministic")
+    assert(pairs(Similarity.ivfTopK(emb, refit, nProbe = 2)) == narrow)
+    // The zero-iteration artifact (the oracle row's) shares the search:
+    // probing every cell is still exactly brute force.
+    val initAll = pairs(Similarity.ivfTopK(emb, Similarity.kmeansFit(emb, k = 8, iters = 0),
+      nProbe = 8))
+    assert(initAll == exact,
+      "zero-iteration quantizer probing ALL cells must equal brute force")
   }
 
   test("annRecall: the evaluation join reproduces the per-query LSH∩brute intersection") {
@@ -639,24 +669,29 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     def full(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "rk", "neighbor_id", "cos_sim").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(full(Similarity.ivfpqTopKSeeded(emb, nProbe = 16, refine = 1000)) ==
+    val coarse = Similarity.kmeansFit(emb, k = 16)
+    val codebook = Similarity.pqCodebook(emb, 8, 16)
+    assert(full(Similarity.ivfpqTopK(emb, coarse, codebook, nProbe = 16, refine = 1000)) ==
       full(Similarity.cosineTopK(emb)),
       "IVF-PQ with all cells probed and corpus-wide refine must equal brute force")
-    // Default-parameter floors (measured 0.74 seeded / 0.52 fit at
-    // sf0.001, 0.56/0.44 at sf0.01; both paths are deterministic).
-    val seeded = pairs(Similarity.ivfpqTopKSeeded(emb))
-    val fit = pairs(Similarity.ivfpqTopK(emb))
-    assert((exact intersect seeded).size >= 0.4 * exact.size,
-      s"seeded IVF-PQ recall < 0.4: ${(exact intersect seeded).size}/${exact.size}")
+    // Default-parameter floors: the zero-iteration artifacts (the oracle
+    // row's) and the default fits; both are deterministic.
+    val init = pairs(Similarity.ivfpqTopK(emb, Similarity.kmeansFit(emb, k = 16, iters = 0),
+      Similarity.pqCodebook(emb, 8, 16, iters = 0)))
+    val fit = pairs(Similarity.ivfpqTopK(emb, coarse, codebook))
+    assert((exact intersect init).size >= 0.4 * exact.size,
+      s"zero-iteration IVF-PQ recall < 0.4: ${(exact intersect init).size}/${exact.size}")
     assert((exact intersect fit).size >= 0.35 * exact.size,
       s"fitted IVF-PQ recall < 0.35: ${(exact intersect fit).size}/${exact.size}")
-    assert(pairs(Similarity.ivfpqTopK(emb)) == fit, "IVF-PQ fit must be deterministic")
+    assert(pairs(Similarity.ivfpqTopK(emb, Similarity.kmeansFit(emb, k = 16),
+      Similarity.pqCodebook(emb, 8, 16))) == fit, "IVF-PQ fit must be deterministic")
   }
 
   test("SemDeDup: cluster invariants, diversity keep rule, density guard") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    for (df <- Seq(Similarity.semanticDedupSeeded(emb),
-                   Similarity.semanticDedup(emb))) {
+    val init = Similarity.kmeansFit(emb, k = 16, iters = 0)
+    for (df <- Seq(Similarity.semanticDedup(emb, init),
+                   Similarity.semanticDedup(emb, Similarity.kmeansFit(emb, k = 16)))) {
       val rows = df.collect()
       // every nonzero-norm vector appears exactly once
       assert(rows.length == 500 && rows.map(_.getAs[Long]("vec_id")).distinct.length == 500)
@@ -674,12 +709,12 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
         assert(cid == ms.map(_.getAs[Long]("vec_id")).min)
       }
     }
-    // k-means path is seed-deterministic
-    assert(Similarity.semanticDedup(emb).collect().toSet ==
-      Similarity.semanticDedup(emb).collect().toSet)
+    // the k-means path is deterministic: repeated fits, same clusters
+    assert(Similarity.semanticDedup(emb, Similarity.kmeansFit(emb, k = 16)).collect().toSet ==
+      Similarity.semanticDedup(emb, Similarity.kmeansFit(emb, k = 16)).collect().toSet)
     // degenerate cell density fails loudly, never goes quietly quadratic
     val err = intercept[Exception](
-      Similarity.semanticDedupSeeded(emb, maxCellRows = 3).collect())
+      Similarity.semanticDedup(emb, init, maxCellRows = 3).collect())
     assert(err.getMessage.contains("maxCellRows"))
   }
 
@@ -802,22 +837,26 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     def full(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "rk", "neighbor_id", "cos_sim").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(full(Similarity.pqTopKSeeded(emb, refine = 1000)) ==
+    val codebook = Similarity.pqCodebook(emb, 8, 16)
+    assert(full(Similarity.pqTopK(emb, codebook, refine = 1000)) ==
       full(Similarity.cosineTopK(emb)),
       "PQ with corpus-wide refine must equal brute force exactly")
-    // Default-parameter recall floors (measured 0.56 seeded / 0.58 fit at
-    // sf0.001, 0.46/0.48 at sf0.01 — random synthetic embeddings are the
-    // hard case for a 16-code-per-subspace quantizer).
-    val seeded = pairs(Similarity.pqTopKSeeded(emb))
-    val fit = pairs(Similarity.pqTopK(emb))
-    assert((exact intersect seeded).size >= 0.4 * exact.size,
-      s"seeded PQ recall < 0.4: ${(exact intersect seeded).size}/${exact.size}")
+    // Default-parameter recall floors (measured 0.56 zero-iteration /
+    // 0.58 fit at sf0.001, 0.46/0.48 at sf0.01 — random synthetic
+    // embeddings are the hard case for a 16-code-per-subspace quantizer).
+    val init = pairs(Similarity.pqTopK(emb, Similarity.pqCodebook(emb, 8, 16, iters = 0)))
+    val fit = pairs(Similarity.pqTopK(emb, codebook))
+    assert((exact intersect init).size >= 0.4 * exact.size,
+      s"zero-iteration PQ recall < 0.4: ${(exact intersect init).size}/${exact.size}")
     assert((exact intersect fit).size >= 0.4 * exact.size,
       s"fitted PQ recall < 0.4: ${(exact intersect fit).size}/${exact.size}")
     // Lloyd fit is driver-deterministic: same sample, same codebook.
-    assert(pairs(Similarity.pqTopK(emb)) == fit, "PQ fit must be deterministic")
+    val refit = Similarity.pqCodebook(emb, 8, 16)
+    assert(refit.map(_.map(_.toSeq).toSeq).toSeq == codebook.map(_.map(_.toSeq).toSeq).toSeq,
+      "PQ fit must be deterministic")
+    assert(pairs(Similarity.pqTopK(emb, refit)) == fit)
     // Dimension must split evenly into subspaces — fail loudly, not wrap.
-    val e = intercept[IllegalArgumentException](Similarity.pqTopK(emb, m = 7))
+    val e = intercept[IllegalArgumentException](Similarity.pqCodebook(emb, 7, 16))
     assert(e.getMessage.contains("divide evenly"))
   }
 
@@ -1528,7 +1567,8 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       (2L, Array(1f, 0.01f), 0), (3L, Array(1f, -0.01f), 0),
       (4L, Array(1f, 0.005f), 0), (5L, Array(1f, 0.5f), 0)
     ).toDF("vec_id", "embedding", "label")
-    val out = graft.operators.Similarity.embedOutliers(emb, nCells = 2)
+    val out = graft.operators.Similarity.embedOutliers(emb,
+        graft.operators.Similarity.kmeansFit(emb, k = 2, iters = 0))
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.size == 6)
     assert(out(5L).getAs[Int]("is_outlier") == 1)
@@ -1552,7 +1592,8 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       (2L, Array(1f, 0.1f), 0), (3L, Array(0.1f, 1f), 0),
       (4L, Array(1f, 0f), 0)
     ).toDF("vec_id", "embedding", "label")
-    val out = graft.operators.Similarity.ivfStats(emb, nCells = 2)
+    val out = graft.operators.Similarity.ivfStats(emb,
+        graft.operators.Similarity.kmeansFit(emb, k = 2, iters = 0))
       .orderBy("cell").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4))).toSeq

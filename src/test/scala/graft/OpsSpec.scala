@@ -532,6 +532,19 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       raw.groupBy(identity).map { case (f, n) => s"$f x${n.size}" }.mkString(", "))
   }
 
+  test("dependency lint: src/main uses no Spark ML; ANN entry points take fitted artifacts") {
+    // Quantizers are fit by Similarity.kmeansFit / pqCodebook, the
+    // deterministic fits the oracle rows replay; a second k-means (or a
+    // seeded twin of a search) would be a path no oracle checks.
+    val ml = srcMainMatches("(org\\.apache\\.spark\\.ml(?:lib)?)\\b").map(_._1)
+    assert(ml.isEmpty, s"Spark ML under src/main: ${ml.distinct.mkString(", ")}")
+    val twins = srcMainMatches("def (\\w+Seeded)\\b").map(_._2)
+    assert(twins.isEmpty, s"seeded twins under src/main: ${twins.mkString(", ")}")
+    val knobs = srcMainMatches("\\b(sampleFraction|seed)\\s*:")
+      .filter(_._1 == "Similarity.scala").map(_._2)
+    assert(knobs.isEmpty, s"fit knobs on Similarity entry points: ${knobs.mkString(", ")}")
+  }
+
   test("knob lint: the only session confs graft reads are the checkpoint seam's") {
     // A session conf is an option every user inherits and every
     // oracle row must hold under; adding one has to edit this list.

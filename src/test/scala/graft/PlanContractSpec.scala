@@ -22,12 +22,14 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
 
   test("ANN rankers carry no Window operator (bounded top-k aggregate instead)") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
+    val coarse = Similarity.kmeansFit(emb, 16)
+    val codebook = Similarity.pqCodebook(emb, 8, 16)
     Seq(
       "cosine" -> Similarity.cosineTopK(emb),
       "lsh" -> Similarity.lshTopK(emb),
-      "ivf" -> Similarity.ivfTopK(emb),
-      "pq" -> Similarity.pqTopK(emb),
-      "ivfpq" -> Similarity.ivfpqTopKSeeded(emb)
+      "ivf" -> Similarity.ivfTopK(emb, coarse),
+      "pq" -> Similarity.pqTopK(emb, codebook),
+      "ivfpq" -> Similarity.ivfpqTopK(emb, coarse, codebook)
     ).foreach { case (name, df) =>
       val p = plan(df)
       assert(!p.contains("Window"),
@@ -257,7 +259,7 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
 
   test("IVF cell assignment adds no exchange beyond broadcast + ranker") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val p = plan(Similarity.ivfTopK(emb))
+    val p = plan(Similarity.ivfTopK(emb, Similarity.kmeansFit(emb, 16)))
     // One shuffle Exchange total (the bounded ranker's); the corpus→cell
     // argmin is a projection over centroid literals. BroadcastExchanges
     // (probe side) are fine.
@@ -272,8 +274,9 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     // refine join broadcasts the bounded shortlist into the corpus
     // scan. The only shuffle Exchanges allowed are the two TopK
     // rankers' (shortlist + final).
-    Seq("pq" -> Similarity.pqTopK(emb),
-        "ivfpq" -> Similarity.ivfpqTopKSeeded(emb)).foreach { case (name, df) =>
+    val (coarse, codebook) = (Similarity.kmeansFit(emb, 16), Similarity.pqCodebook(emb, 8, 16))
+    Seq("pq" -> Similarity.pqTopK(emb, codebook),
+        "ivfpq" -> Similarity.ivfpqTopK(emb, coarse, codebook)).foreach { case (name, df) =>
       val p = plan(df)
       val shuffles = "(?<!Broadcast)Exchange".r.findAllIn(p).size
       assert(shuffles <= 2, s"$name: expected only the two rankers' shuffles, got $shuffles:\n$p")
@@ -422,7 +425,7 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     val psd = plan(graft.operators.Dedup.sentenceDedup(docs))
     assert(!psd.contains("Window") && !psd.contains("Cartesian"),
       s"sentence_dedup must stay keyed and windowless:\n$psd")
-    val pi = plan(graft.operators.Similarity.ivfStats(emb))
+    val pi = plan(Similarity.ivfStats(emb, Similarity.kmeansFit(emb, 16, iters = 0)))
     assert(!pi.contains("Window") && !pi.contains("SortMergeJoin"),
       s"ivf_stats is aggregates + broadcast total only:\n$pi")
     // containment: same posting-list pairs as ngram_jaccard — keyed,
@@ -599,6 +602,19 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     val kernels = Seq("quality_counts", "blocklist_counts").map(k => k -> count(k + "\\("))
     assert(kernels.forall(_._2 >= 1), s"gate must run the native kernels ($kernels):\n$p")
     info(s"kernel occurrences in the gate plan: ${kernels.mkString(", ")}")
+  }
+
+  test("top movers: both sides rank one latest-bar derivation") {
+    // Pipeline.build's movers frame: Cleaning's two dedup windows plus
+    // the latest-bar pair (lag over date, row_number over date desc).
+    // Ranking the two sides as separate top-k arms carried that pair
+    // once per arm (8 Window operators).
+    val p = plan(Pipeline.build(spark, sf).movers)
+    def windows(token: String) =
+      p.linesIterator.count(l => "\\bWindow \\[".r.findFirstIn(l).nonEmpty && l.contains(token))
+    assert(windows("lag(close") == 1, s"expected one lag window:\n$p")
+    assert(windows("row_number()") <= 2, s"expected the latest-bar row_number once:\n$p")
+    assert(windows("") <= 4, s"expected at most 4 Window operators:\n$p")
   }
 
   test("indicators: one series fold and one Window per dependency level") {

@@ -217,7 +217,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       val docs = (1 to 6).map(i =>
         (i.toLong, (1 to 8).map(_ => words(rnd.nextInt(words.size))).mkString(" ")))
         .toDF("doc_id", "text")
-      val seq = Bpe.train(docs, merges = 6)
+      val seq = BpeReference.train(docs, merges = 6)
       val (bat, rounds) = Bpe.trainBatched(docs, merges = 6)
       assert(bat.map(m => (m.lhs, m.rhs, m.merged, m.pair_count)) ==
         seq.map(m => (m.lhs, m.rhs, m.merged, m.pair_count)),
@@ -236,7 +236,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
         val n = rnd.nextInt(9) // 0 words possible — the empty-doc row rule
         (i.toLong, (1 to n).map(_ => words(rnd.nextInt(words.size))).mkString(" "))
       }.toDF("doc_id", "text")
-      val merges = Bpe.train(docs, merges = 4)
+      val merges = BpeReference.train(docs, merges = 4)
       val a = Bpe.tokenize(docs, merges).orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getSeq[String](1).toList)).toSeq
       val b = Bpe.tokenizeByVocab(docs, merges).orderBy("doc_id").collect()
@@ -254,7 +254,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       val docs = (1 to 10).map { i =>
         (i.toLong, (1 to rnd.nextInt(7)).map(_ => words(rnd.nextInt(words.size))).mkString(" "))
       }.toDF("doc_id", "text")
-      val merges = Bpe.train(docs, merges = 3)
+      val merges = BpeReference.train(docs, merges = 3)
       val seqLen = 3L + rnd.nextInt(6)
       val packed = Bpe.packedSequences(docs, merges, seqLen = seqLen)
         .orderBy("seq_id").collect()

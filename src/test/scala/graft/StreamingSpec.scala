@@ -933,7 +933,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Bpe
     val fitCorpus = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val merges = Bpe.train(Seq((1L, fitCorpus)).toDF("doc_id", "text"), merges = 5)
+    val merges = BpeReference.train(Seq((1L, fitCorpus)).toDF("doc_id", "text"), merges = 5)
     val input = MemoryStream[(Long, String)]
     val segmented = Bpe.tokenize(input.toDF().toDF("doc_id", "text"), merges)
     val query = segmented.writeStream.format("memory")
