@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -151,42 +151,49 @@ object CorpusPipeline {
           .select(col("doc_id"), col("clean_text").as("text")), Seq("doc_id"))
     // 1. Annotate + gate: one projection, every enabled predicate in the
     //    same pass (the optional gates are appended columns, not joins).
+    //    The language filter runs first and reaches the scan; every other
+    //    verdict is a projected column the gate filters on, so each text
+    //    kernel runs once per document ([[gate]]).
     //    The gopher annotation columns are dropped after gating so the
     //    output schema matches the default path (withQuality's columns,
     //    n_words included, stay — withGopher's same-named overwrite wins
     //    when the battery is on).
     val annotated = {
-      val q = TextAnalysis.withQuality(canonical)
+      val q = TextAnalysis.withQuality(canonical.filter(col("lang").isin(langs: _*)))
       if (gopherRules) operators.TextSignals.withGopher(q) else q
     }
-    val gate = Seq(
-      Some(col("lang").isin(langs: _*) && col("quality_score") >= minQuality),
+    val classifierKeep = if (!classifierGateOn) None else Some(classifierWeights match {
+      // Trained artifact ([[operators.Classifier]] fit) → dense
+      // literal gate; no artifact → the hash-derived demo weights.
+      // Either way the gate stays projection-form.
+      // `classifierBuckets` MUST equal the bucket count the artifact
+      // was trained with — it sets both the dense array length and
+      // the gate's hash modulus (denseWeights raises on an artifact
+      // trained with MORE buckets; FEWER is undetectable from the
+      // sparse artifact alone, hence the explicit parameter — r9
+      // review finding).
+      case Some(wdf) => operators.TextSignals.classifierKeepColWeighted(
+        operators.TextSignals.tokensCol(col("text")),
+        operators.Classifier.denseWeights(wdf, classifierBuckets))
+      case None => operators.TextSignals.classifierKeepCol(
+        operators.TextSignals.tokensCol(col("text")))
+    })
+    // Banned-term gate (the C4/NSFW-list rule), projection-form like
+    // the others — the same keep verdict as TextAnalysis
+    // .blocklistFilter, over counts projected once.
+    val blocklistCounts = blocklistTerms.map(TextAnalysis.blocklistCountsCol(col("text"), _))
+    val verdictCols = classifierKeep.map("__classifier_keep" -> _).toSeq ++
+      blocklistCounts.map("__blocklist_counts" -> _)
+    val keep = Seq(
+      Some(col("quality_score") >= minQuality),
       if (gopherRules) Some(col("gopher_keep")) else None,
-      if (classifierGateOn) Some(classifierWeights match {
-        // Trained artifact ([[operators.Classifier]] fit) → dense
-        // literal gate; no artifact → the hash-derived demo weights.
-        // Either way the gate stays projection-form.
-        // `classifierBuckets` MUST equal the bucket count the artifact
-        // was trained with — it sets both the dense array length and
-        // the gate's hash modulus (denseWeights raises on an artifact
-        // trained with MORE buckets; FEWER is undetectable from the
-        // sparse artifact alone, hence the explicit parameter — r9
-        // review finding).
-        case Some(wdf) => operators.TextSignals.classifierKeepColWeighted(
-          operators.TextSignals.tokensCol(col("text")),
-          operators.Classifier.denseWeights(wdf, classifierBuckets))
-        case None => operators.TextSignals.classifierKeepCol(
-          operators.TextSignals.tokensCol(col("text")))
-      }) else None,
-      // Banned-term gate (the C4/NSFW-list rule), projection-form like
-      // the others — the same keep verdict as TextAnalysis
-      // .blocklistFilter, ANDed into the one gate pass.
-      blocklistTerms.map(terms =>
-        TextAnalysis.blocklistKeepCol(col("text"), terms, blocklistMaxRatio))
+      classifierKeep.map(_ => col("__classifier_keep")),
+      blocklistCounts.map(_ =>
+        TextAnalysis.blocklistKeep(col("__blocklist_counts"), blocklistMaxRatio))
     ).flatten.reduce(_ && _)
     val gopherOnlyCols = Seq("mean_word_len", "max_word_len", "alpha_share",
       "stop_hits", "symbol_share", "n_fail", "gopher_keep", "reasons")
-    val gated0 = annotated.filter(gate)
+    val gated0 = gate(annotated, keep, verdictCols)
       .drop((if (gopherRules) gopherOnlyCols else Nil): _*)
     // 1.5. Optional CCNet perplexity tail cut (Wenzek et al. 2020: the
     //    worst per-lang ppl tercile under the corpus-fitted bigram LM
@@ -242,13 +249,34 @@ object CorpusPipeline {
     // 3.5. Optional PII redaction — the LAST text transform, AFTER all
     //    hashing/dedup (identity is decided on original content; the
     //    redaction is an export-time privacy pass, [[TextAnalysis
-    //    .piiScrubCol]] — one chained-regex projection, zero shuffle).
+    //    .piiScrubCol]] — one projection, zero shuffle, each regex stage
+    //    run only on texts holding the `@` or digit it needs).
     val released =
       if (!scrubPii) resolved
       else resolved.withColumn("text", TextAnalysis.piiScrubCol(col("text")))
     // 4. Deterministic split — stable under corpus growth.
     TextAnalysis.splitByHash(released, "doc_id", valFrac, testFrac)
   }
+
+  private val gateIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** `annotated.filter(keep)` with the filter held above the annotation;
+    * `verdicts` are columns `keep` reads, projected before the filter
+    * and dropped after it. Catalyst would push a Filter below the
+    * projections it reads and inline their aliases, so the filter would
+    * re-run a text kernel once per reference (`quality_score` alone
+    * reads the quality counts seven times) after the projection ran it.
+    * An `observe` node stops the push, so each kernel runs once per
+    * document. Its count (`docs_in`, the documents that reached the
+    * gate) lands in the query's observed metrics under `curate_gate_<n>`,
+    * a name unique to each call so two gates can share one plan.
+    */
+  private def gate(annotated: DataFrame, keep: Column,
+                   verdicts: Seq[(String, Column)] = Nil): DataFrame =
+    verdicts.foldLeft(annotated) { case (d, (name, c)) => d.withColumn(name, c) }
+      .observe(s"curate_gate_${gateIds.incrementAndGet()}", count(lit(1)).as("docs_in"))
+      .filter(keep)
+      .drop(verdicts.map(_._1): _*)
 
   /** The per-document curation stages that compose INCREMENTALLY:
     * quality/lang gate (a projection — verdicts never depend on other
@@ -261,8 +289,8 @@ object CorpusPipeline {
   def curateLite(documents: DataFrame,
                  minQuality: Double = 0.55,
                  langs: Seq[String] = Seq("en", "de", "es", "fr")): DataFrame =
-    TextAnalysis.withQuality(documents)
-      .filter(col("lang").isin(langs: _*) && col("quality_score") >= minQuality)
+    gate(TextAnalysis.withQuality(documents.filter(col("lang").isin(langs: _*))),
+        col("quality_score") >= minQuality)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(xxhash64(Dedup.canonicalKey(col("text"))))
           .orderBy(col("doc_id"))))

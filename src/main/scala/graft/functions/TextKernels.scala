@@ -4,15 +4,17 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.lower
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The curation path's text kernels: the word tokenizer, the letter-token
   * profile hits, the quality counts and the blocklist counts, each one
-  * walk over the code points of each string it reads.
+  * walk over the code points of each string it reads, plus the PII
+  * hints, one walk over its bytes.
   *
   * Each kernel reproduces a regex form exactly; the regex forms live in
   * the test tree as the equality reference (`TextReference`):
@@ -196,6 +198,29 @@ object TextKernels {
   /** [[BlocklistCounts]] of `lower(text)` against `terms`. */
   def blocklistCounts(text: Column, terms: Seq[String]): Column =
     onLower(text)(BlocklistCounts(_, terms))
+
+  /** [[PiiHints]] of `text`. */
+  def piiHints(text: Column): Column =
+    GraftColumnBridge.column(PiiHints(GraftColumnBridge.expression(text)))
+
+  /** [[PiiHints.At]] if `u` holds an `@`, [[PiiHints.Digit]] if it
+    * holds an ASCII digit. Both are ASCII and no byte of a multi-byte
+    * UTF-8 sequence is below 0x80, so the bytes are read as they are.
+    */
+  def piiHintBits(u: UTF8String): Int = {
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val n = u.numBytes
+    var bits = 0
+    var i = 0
+    while (i < n && bits != (PiiHints.At | PiiHints.Digit)) {
+      val b = Platform.getByte(base, off + i)
+      if (b == '@') bits |= PiiHints.At
+      else if (b >= '0' && b <= '9') bits |= PiiHints.Digit
+      i += 1
+    }
+    bits
+  }
 }
 
 /** Word tokens of an already-lowercased string in one pass
@@ -355,4 +380,34 @@ case class BlocklistCounts(child: Expression, terms: Seq[String])
 object BlocklistCounts {
   val Schema: StructType = StructType(
     Seq("n_tokens", "n_blocked").map(StructField(_, IntegerType, nullable = false)))
+}
+
+/** The characters a PII pattern cannot match without, present in one
+  * string: an `int` of [[PiiHints.At]] and [[PiiHints.Digit]] bits from
+  * one scan ([[TextKernels.piiHintBits]]). Code-generated, so the release
+  * projection that guards its scrub with it stays in whole-stage codegen.
+  */
+case class PiiHints(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    TextKernels.requireString(child, prettyName)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def prettyName: String = "pii_hints"
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.piiHintBits(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.piiHintBits($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): PiiHints =
+    copy(child = newChild)
+}
+
+object PiiHints {
+  /** The text holds an `@`: every email address does. */
+  final val At = 1
+  /** The text holds an ASCII digit: every IP, long id and phone number does. */
+  final val Digit = 2
 }

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,40 +19,31 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
-  /** Hash-min label propagation: every node starts labeled with its own
-    * id; each round a node adopts the minimum label among itself and its
-    * neighbors; at fixpoint every node carries the minimum id reachable
-    * in its component. Converges in O(component diameter) rounds —
-    * duplicate clusters are near-cliques (or stars, under
-    * graft.functions.ListPairs), so 3–5 rounds in practice.
+  /** Connected components of an edge list: one `(id, label)` row per
+    * node, label = the minimum id reachable from it. Two phases (the
+    * contract-then-finish shape of distributed CC, Kiveris et al., SoCC
+    * 2014):
     *
-    * `pointerJump = true` additionally folds in the previous round's
-    * label-of-label each round (labels are node ids, so the previous
-    * mapping resolves them one hop further), compounding reach roughly
-    * geometrically — O(log diameter) rounds at the cost of one extra
-    * per-round join whose key is the component label (skewed by
-    * construction). Round-5 measurement: the jump wins on BOTH
-    * sparse-chain graphs (banded-LSH emitter, 19 plain rounds) and
-    * near-clique dup graphs at sf0.1 — round 4's ~6× `dedup_clusters`
-    * regression was the checkpoint lifecycle (lazy checkpoint + explicit
-    * mid-loop block release), not this join. Default off so generic
-    * callers keep the minimal plan; the dedup query paths opt in.
+    *  - contract: a union-find over each partition's edges, then one
+    *    node-grain shuffle to (node, min local root, roots seen),
+    *    checkpointed ([[graft.Ckpt.frame]]). A node seen under two roots
+    *    is a quotient edge between them; the checkpoint job also observes
+    *    how many quotient edges there are.
+    *  - finish, chosen by that count. When 16 bytes per edge fit
+    *    `spark.sql.autoBroadcastJoinThreshold`, one job collects the
+    *    quotient edges and the driver runs the same union-find over them;
+    *    the `(root, label)` rows join back as a broadcast local relation
+    *    (an empty quotient needs no job). Otherwise, or when the threshold
+    *    is ≤ 0 (broadcasts off), the distributed hash-min loop
+    *    ([[hashMinLoop]]) resolves it at two jobs per round. `maxIter` and
+    *    `pointerJump` apply to this loop only; it throws after `maxIter`
+    *    rounds without convergence — a truncated propagation would
+    *    silently mislabel components, and for dup clusters hitting 50
+    *    rounds means the input is not a dup graph.
     *
-    * The driver loop is orchestration only (the Pregel pattern): each
-    * round's work is one distributed join + aggregate on (id, label)
-    * pairs — never the document payload. localCheckpoint (eager)
-    * truncates lineage so the plan stays constant-size across rounds; the
-    * symmetrized edge list is persisted once and reused every round
-    * instead of re-deriving the (possibly expensive) pair plan. Old
-    * rounds' checkpoint blocks are left for the ContextCleaner: they are
-    * narrow (id, label) pairs, and explicitly unpersisting
-    * locally-checkpointed RDDs mid-loop proved fragile (Spark cannot
-    * recompute a released local checkpoint, and round 4's explicit
-    * release triggered recompute-failure WARN floods and retries).
-    *
-    * Throws after `maxIter` rounds without convergence — a truncated
-    * propagation would silently mislabel components, and for dup
-    * clusters hitting 50 rounds means the input is not a dup graph.
+    * Both finishes give the same labels. The driver finish holds the
+    * quotient edges (at most the threshold) and its labels in driver
+    * memory, the price any broadcast join pays; no option picks the path.
     */
   def connectedComponents(edges: DataFrame, src: String = "a",
                           dst: String = "b", maxIter: Int = 50,
@@ -59,8 +54,8 @@ object Components {
     // union-find over each partition's edges and emits (node, localRoot)
     // with localRoot = the min node id of the node's partition-local
     // component. Everything that connects WITHIN a partition collapses
-    // before the distributed loop ever runs; the hash-min rounds then
-    // only resolve the (far smaller) quotient graph of local roots —
+    // before the quotient finish runs, which then only resolves the (far
+    // smaller) quotient graph of local roots —
     // measured at sf0.1 this cuts the LSH-chain resolution from ~10
     // pointer-jump rounds over the full node set to 1–3 rounds over a
     // few hundred roots (dedup_clusters 115 Spark jobs → ~30). At 100 TB
@@ -84,22 +79,66 @@ object Components {
     // Per-node min root + the set of roots the node was seen under —
     // one node-grain shuffle producing BOTH the final-label join frame
     // and the quotient edge list (a node seen under two roots proves
-    // those roots are one component). Ckpt: the frame feeds the loop
-    // AND the final join; without it the UF pass would run twice.
+    // those roots are one component). Ckpt: the frame feeds the quotient
+    // finish AND the final join; without it the UF pass would run twice.
+    // The observed sum is the quotient's edge count, delivered by the
+    // checkpoint job itself (no second job reads the frame for it).
+    val quotientSize = Observation()
     val grouped = nodeRoots.groupBy(col("id"))
       .agg(min(col("root")).as("root"), collect_set(col("root")).as("roots"))
+      .observe(quotientSize, sum(size(col("roots")) - 1).as("edges"))
       .transform(graft.Ckpt.frame)
     val quotient = grouped
       .select(col("root").as("a"), explode(col("roots")).as("b"))
       .filter(col("a") =!= col("b"))
-    val rootLabels = hashMinLoop(quotient, maxIter, pointerJump)
-      .select(col("id").as("root"), col("label").as("rlabel"))
+    val threshold = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rootLabels = observedLong(quotientSize) match {
+      case Some(n) if threshold > 0 && n * QuotientEdgeBytes <= threshold =>
+        if (n == 0) None else Some(driverFinish(quotient))
+      case _ => Some(hashMinLoop(quotient, maxIter, pointerJump)
+        .select(col("id").as("root"), col("label").as("rlabel")))
+    }
     // Roots absent from the quotient graph (fully contracted locally)
     // keep themselves: label = root. Both sides are root-keyed; the
     // quotient side is tiny, so this broadcasts at any realistic scale.
-    grouped.select(col("id"), col("root"))
-      .join(rootLabels, Seq("root"), "left")
-      .select(col("id"), coalesce(col("rlabel"), col("root")).as("label"))
+    rootLabels match {
+      case None => grouped.select(col("id"), col("root").as("label"))
+      case Some(labels) =>
+        grouped.select(col("id"), col("root"))
+          .join(labels, Seq("root"), "left")
+          .select(col("id"), coalesce(col("rlabel"), col("root")).as("label"))
+    }
+  }
+
+  /** Bytes per quotient edge (two longs) that [[connectedComponents]]
+    * prices against `spark.sql.autoBroadcastJoinThreshold`.
+    */
+  private val QuotientEdgeBytes = 16L
+
+  /** How long the driver waits for an observed checkpoint's metrics
+    * (delivered on the listener bus right after the checkpoint job) before
+    * it takes the path that needs no count.
+    */
+  private val ObservationWait = 60.seconds
+
+  /** The single long an eager checkpoint observed (null, as `sum` over
+    * no rows gives, reads 0); None when it was not delivered in time.
+    */
+  private def observedLong(o: Observation): Option[Long] =
+    Try(Await.result(o.future, ObservationWait)).toOption
+      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+
+  /** Union-find over the whole quotient graph on the driver: one job
+    * collects its edges, [[localContract]] labels every quotient node
+    * with the min root of its component, and the non-trivial
+    * `(root, rlabel)` rows come back as a broadcast local relation.
+    */
+  private def driverFinish(quotient: DataFrame): DataFrame = {
+    val spark = quotient.sparkSession
+    import spark.implicits._
+    val labels = localContract(quotient.as[(Long, Long)].collect().iterator)
+      .filter { case (node, root) => node != root }.toSeq
+    broadcast(labels.toDF("root", "rlabel"))
   }
 
   /** Partition-local union-find over an edge iterator: emits one
@@ -169,8 +208,39 @@ object Components {
     out.result().iterator
   }
 
-  /** The distributed hash-min resolution (pre-r11 this WAS
-    * connectedComponents; it now runs on the contracted quotient graph).
+  /** The distributed hash-min resolution of a quotient graph too large
+    * for the driver (pre-r11 this WAS connectedComponents).
+    *
+    * Hash-min label propagation: every node starts labeled with its own
+    * id; each round a node adopts the minimum label among itself and its
+    * neighbors; at fixpoint every node carries the minimum id reachable
+    * in its component. Converges in O(component diameter) rounds —
+    * duplicate clusters are near-cliques (or stars, under
+    * graft.functions.ListPairs), so 3–5 rounds in practice.
+    *
+    * `pointerJump = true` additionally folds in the previous round's
+    * label-of-label each round (labels are node ids, so the previous
+    * mapping resolves them one hop further), compounding reach roughly
+    * geometrically — O(log diameter) rounds at the cost of one extra
+    * per-round join whose key is the component label (skewed by
+    * construction). Round-5 measurement: the jump wins on BOTH
+    * sparse-chain graphs (banded-LSH emitter, 19 plain rounds) and
+    * near-clique dup graphs at sf0.1 — round 4's ~6× `dedup_clusters`
+    * regression was the checkpoint lifecycle (lazy checkpoint + explicit
+    * mid-loop block release), not this join. Default off so generic
+    * callers keep the minimal plan; the dedup query paths opt in.
+    *
+    * The driver loop is orchestration only (the Pregel pattern): each
+    * round's work is one distributed join + aggregate on (id, label)
+    * pairs — never the document payload. localCheckpoint (eager)
+    * truncates lineage so the plan stays constant-size across rounds; the
+    * symmetrized edge list is persisted once and reused every round
+    * instead of re-deriving the (possibly expensive) pair plan. Old
+    * rounds' checkpoint blocks are left for the ContextCleaner: they are
+    * narrow (id, label) pairs, and explicitly unpersisting
+    * locally-checkpointed RDDs mid-loop proved fragile (Spark cannot
+    * recompute a released local checkpoint, and round 4's explicit
+    * release triggered recompute-failure WARN floods and retries).
     */
   private def hashMinLoop(edges: DataFrame, maxIter: Int,
                           pointerJump: Boolean): DataFrame = {

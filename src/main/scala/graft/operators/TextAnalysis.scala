@@ -303,48 +303,68 @@ object TextAnalysis {
         avg(col("__words")).as("avg_words"),
         countDistinct(col("source")).as("n_sources"))
 
-  /** PII patterns applied in order by [[piiScrub]] — each is (name,
-    * regex, replacement). The regexes stay inside the Java∩RE2 syntax
-    * subset (character classes, bounded repeats, `\b`) so a SQL engine
-    * can replay them verbatim. Order matters: IP before the long-digit
-    * ID rule before phone, so a dotted quad is never half-eaten by the
-    * looser digit-run patterns (replacement tokens carry no digits, so
-    * later stages never re-match redacted spans).
+  /** One PII stage of [[piiScrub]]: the matches of `regex` become
+    * `replacement`, and `needs` is the [[graft.functions.PiiHints]] bit a
+    * match cannot do without.
     */
-  val PiiPatterns: Seq[(String, String, String)] = Seq(
-    ("email", "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("ip", "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b", "<IP>"),
-    ("id", "\\b[0-9]{9,}\\b", "<ID>"),
-    ("phone", "\\+?[0-9][0-9() .-]{6,}[0-9]", "<PHONE>"))
+  final case class PiiPattern(name: String, regex: String, replacement: String, needs: Int)
+
+  /** PII patterns applied in order by [[piiScrub]]. The regexes stay
+    * inside the Java∩RE2 syntax subset (character classes, bounded
+    * repeats, `\b`) so a SQL engine can replay them verbatim. Order
+    * matters: IP before the long-digit ID rule before phone, so a dotted
+    * quad is never half-eaten by the looser digit-run patterns.
+    * Replacement tokens carry no `@` and no digit, so later stages never
+    * re-match redacted spans, and a text without the character a stage
+    * needs still lacks it when that stage runs.
+    */
+  val PiiPatterns: Seq[PiiPattern] = {
+    import graft.functions.PiiHints.{At, Digit}
+    Seq(
+      PiiPattern("email", "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>", At),
+      PiiPattern("ip", "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b", "<IP>", Digit),
+      PiiPattern("id", "\\b[0-9]{9,}\\b", "<ID>", Digit),
+      PiiPattern("phone", "\\+?[0-9][0-9() .-]{6,}[0-9]", "<PHONE>", Digit))
+  }
+
+  /** `run`, or `skip` when `hints` (a [[graft.functions.PiiHints]]
+    * column) lacks the `needs` bit. NULL hints (NULL text) take `run`,
+    * which keeps the unguarded result.
+    */
+  private def unlessMissing(hints: Column, needs: Int, skip: Column, run: Column): Column =
+    when(hints.bitwiseAND(needs) === 0, skip).otherwise(run)
 
   /** #47h pii_scrub: PII redaction — the privacy pass every
     * training-data release runs before export. Patterns apply
     * sequentially; each stage counts its matches on the
     * previous stage's text (so a span redacted by an earlier, more
     * specific rule is never double-counted by a looser one) and
-    * replaces them with a digit-free token. Output keeps the fully
-    * redacted text plus per-category counts and the total.
+    * replaces them with a token free of `@` and digits. Output keeps
+    * the fully redacted text plus per-category counts and the total.
     *
-    * Scale shape: embarrassingly parallel — one projection of chained
+    * Each stage runs only on documents holding the character it needs
+    * (`@` for email, a digit for the rest), read from one byte scan
+    * ([[graft.functions.PiiHints]]); without it the stage cannot match,
+    * so its count is 0 and its text unchanged.
+    *
+    * Scale shape: embarrassingly parallel — one projection of guarded
     * `regexp_replace`/`regexp_extract_all` per document, no shuffle, no
-    * UDF; stays inside whole-stage codegen. Catalyst's projection
-    * collapse inlines the stage chain, so each count re-derives the
-    * replace prefix (≈11 linear regex passes vs the 8 a hand-fused
-    * operator would do) — linear per document either way, and the
-    * pruned-scan + single-stage plan is worth more at 100 TB than the
-    * constant factor.
+    * UDF; stays inside whole-stage codegen.
     */
   def piiScrub(documents: DataFrame, textCol: String = "text",
-               patterns: Seq[(String, String, String)] = PiiPatterns,
                passthrough: Seq[String] = Nil): DataFrame = {
+    val hints = col("__pii_hints")
     val start = documents.withColumn("__t0", col(textCol))
-    val (staged, lastCol) = patterns.zipWithIndex.foldLeft((start, "__t0")) {
-      case ((d, cur), ((name, pat, repl), i)) =>
+      .withColumn("__pii_hints", graft.functions.TextKernels.piiHints(col(textCol)))
+    val (staged, lastCol) = PiiPatterns.zipWithIndex.foldLeft((start, "__t0")) {
+      case ((d, cur), (p, i)) =>
         val next = s"__t${i + 1}"
-        (d.withColumn(s"n_$name", size(regexp_extract_all(col(cur), lit(pat), lit(0))))
-          .withColumn(next, regexp_replace(col(cur), pat, repl)), next)
+        (d.withColumn(s"n_${p.name}", unlessMissing(hints, p.needs, lit(0),
+            size(regexp_extract_all(col(cur), lit(p.regex), lit(0)))))
+          .withColumn(next, unlessMissing(hints, p.needs, col(cur),
+            regexp_replace(col(cur), p.regex, p.replacement))), next)
     }
-    val countCols = patterns.map { case (n, _, _) => col(s"n_$n") }
+    val countCols = PiiPatterns.map(p => col(s"n_${p.name}"))
     // `passthrough` keeps caller-named input columns (e.g. `source` for
     // the per-source report) in the output — the scrub already has them
     // in hand, and re-joining them back at doc grain would cost a
@@ -357,14 +377,23 @@ object TextAnalysis {
 
   /** The scrub as ONE column (the sequential [[PiiPatterns]] replace
     * fold, no counts) — the projection-form stage [[graft.CorpusPipeline]]
-    * ANDs into its release pass. Same pattern list as [[piiScrub]], so
-    * the two cannot drift on WHAT is redacted; use [[piiScrub]] when the
-    * per-category counts matter.
+    * runs in its release pass. Same patterns and guards as [[piiScrub]],
+    * so the two cannot drift on WHAT is redacted; use [[piiScrub]] when
+    * the per-category counts matter. Consecutive stages that need the
+    * same character share one guard, so the email stage runs on texts
+    * with an `@` and the three digit stages on texts with a digit.
     */
-  def piiScrubCol(text: Column,
-                  patterns: Seq[(String, String, String)] = PiiPatterns): Column =
-    patterns.foldLeft(text) { case (c, (_, pat, repl)) =>
-      regexp_replace(c, pat, repl) }
+  def piiScrubCol(text: Column): Column = {
+    val hints = graft.functions.TextKernels.piiHints(text)
+    val runs = PiiPatterns.foldLeft(List.empty[(Int, List[PiiPattern])]) {
+      case ((needs, ps) :: rest, p) if p.needs == needs => (needs, ps :+ p) :: rest
+      case (acc, p) => (p.needs, List(p)) :: acc
+    }.reverse
+    runs.foldLeft(text) { case (c, (needs, ps)) =>
+      unlessMissing(hints, needs, c,
+        ps.foldLeft(c)((t, p) => regexp_replace(t, p.regex, p.replacement)))
+    }
+  }
 
   /** #47h2 pii_report: per-source PII rollup — the auditor's face of
     * [[piiScrub]] (a data-release review asks "WHERE does the PII come
@@ -378,13 +407,11 @@ object TextAnalysis {
     * passed through (never re-joined), so the whole report is ONE
     * map-side-combinable groupBy(source) to a bounded row set.
     */
-  def piiReport(documents: DataFrame, textCol: String = "text",
-                patterns: Seq[(String, String, String)] = PiiPatterns): DataFrame = {
-    val per = piiScrub(documents, textCol, patterns,
-        passthrough = Seq("source"))
+  def piiReport(documents: DataFrame, textCol: String = "text"): DataFrame = {
+    val per = piiScrub(documents, textCol, passthrough = Seq("source"))
       .drop("clean_text")
-    val typeSums = patterns.map { case (n, _, _) =>
-      sum(col(s"n_$n")).cast("long").as(s"n_$n") }
+    val typeSums = PiiPatterns.map(p =>
+      sum(col(s"n_${p.name}")).cast("long").as(s"n_${p.name}"))
     val aggs = Seq(
       count(lit(1)).as("n_docs"),
       sum((col("n_pii") > 0).cast("long")).as("n_docs_with_pii")) ++
@@ -435,11 +462,21 @@ object TextAnalysis {
     * gate pass.
     */
   def blocklistKeepCol(text: Column, terms: Seq[String],
-                       maxRatio: Double = 0.05): Column = {
+                       maxRatio: Double = 0.05): Column =
+    blocklistKeep(blocklistCountsCol(text, terms), maxRatio)
+
+  /** The blocklist counts struct (`n_tokens`, `n_blocked`) of `text`. */
+  def blocklistCountsCol(text: Column, terms: Seq[String]): Column = {
     require(terms.nonEmpty, "blocklist must not be empty")
-    val c = graft.functions.TextKernels.blocklistCounts(text, terms)
-    val nTokens = c("n_tokens")
-    nTokens === 0 || c("n_blocked").cast("double") <= nTokens.cast("double") * maxRatio
+    graft.functions.TextKernels.blocklistCounts(text, terms)
+  }
+
+  /** [[blocklistKeepCol]]'s verdict over a [[blocklistCountsCol]] struct
+    * — for a gate that projects the counts once and filters on them.
+    */
+  def blocklistKeep(counts: Column, maxRatio: Double): Column = {
+    val nTokens = counts("n_tokens")
+    nTokens === 0 || counts("n_blocked").cast("double") <= nTokens.cast("double") * maxRatio
   }
 
   /** Large-blocklist twin of [[blocklistFilter]]: explode tokens, LEFT

@@ -103,9 +103,14 @@ class CkptSpec extends AnyFunSuite with SparkSpec {
     Dedup.incrementalNewBloom(incremental, col("source") === "seen",
       expectedItems = 100L))
 
-  blockLoss("Components.dedupClusters")(
-    Components.dedupClusters(Seq((10L, 11L), (11L, 12L), (12L, 13L),
-      (1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2"), "id1", "id2"))
+  private def clusters = Components.dedupClusters(Seq((10L, 11L), (11L, 12L),
+    (12L, 13L), (1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2"), "id1", "id2")
+
+  // The quotient graph is finished by the driver union-find below the
+  // broadcast threshold and by the distributed hash-min loop without one.
+  blockLoss("Components.dedupClusters")(clusters)
+
+  blockLoss("Components.dedupClusters, distributed loop")(withDistributedCc(clusters))
 
   blockLoss("Graph.pageRankLadder")(
     Graph.pageRankLadder(Seq(("a", "b"), ("b", "a"), ("a", "c")).toDF("src", "dst"),

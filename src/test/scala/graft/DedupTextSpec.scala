@@ -1415,8 +1415,11 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
   test("connected components throws rather than truncate an unconverged run") {
     import graft.operators.Components
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id1", "id2")
+    // Only the distributed hash-min loop has rounds to run out of; the
+    // driver union-find always finishes.
     val ex = intercept[IllegalStateException] {
-      Components.connectedComponents(chain, "id1", "id2", maxIter = 1).collect()
+      withDistributedCc(
+        Components.connectedComponents(chain, "id1", "id2", maxIter = 1).collect())
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -1776,6 +1779,39 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     assert(out.getAs[Int]("n_ip") == 1 && out.getAs[Int]("n_id") == 1)
     assert(out.getAs[Int]("n_phone") == 0, "tokens <IP>/<ID> must not re-match as phone")
     assert(out.getAs[String]("clean_text") == "host <IP> then <ID>")
+  }
+
+  test("pii scrub: the guarded stages equal the unguarded regex chain") {
+    import org.apache.spark.sql.functions.{col, regexp_replace}
+    // Texts with and without '@' and ASCII digits, non-ASCII look-alikes
+    // (fullwidth @, Arabic-Indic and fullwidth digits, which the
+    // patterns' [0-9] does not match either), multi-byte text and NULL.
+    val texts = Seq(
+      "mail a.b+c@x-corp.co.uk from 192.168.0.1 acct 12345678901 tel +84 (28) 3822-9999",
+      "no at sign but 10.0.0.1 and 555-123-4567", "a@b.io only", "@ alone", "1",
+      "fullwidth ａ＠ｂ．ｉｏ and ٣٣٣٣٣٣٣٣٣٣ and １２３４５６７８９",
+      "ünïcödé e-mail x@y.de, Straße 123456789", "", "plain words only", null)
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "src0", 0L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val chain = TextAnalysis.PiiPatterns.foldLeft(col("text"))((c, p) =>
+      regexp_replace(c, p.regex, p.replacement))
+    val cols = d.select(col("doc_id"), TextAnalysis.piiScrubCol(col("text")), chain)
+      .collect()
+    assert(cols.forall(r => r.get(1) == r.get(2)), cols.mkString("\n"))
+    // The counting form: each stage's count on the previous stage's text.
+    val want = texts.map { t =>
+      TextAnalysis.PiiPatterns.foldLeft((Option(t), Seq.empty[Option[Int]])) {
+        case ((cur, counts), p) =>
+          (cur.map(_.replaceAll(p.regex, p.replacement)),
+            counts :+ cur.map(p.regex.r.findAllMatchIn(_).size))
+      }
+    }
+    val got = TextAnalysis.piiScrub(d).orderBy("doc_id").collect()
+    got.zip(want).foreach { case (r, (clean, counts)) =>
+      assert(Option(r.getAs[String]("clean_text")) == clean, r.toString)
+      assert(TextAnalysis.PiiPatterns.map(p => Option(r.getAs[Any](s"n_${p.name}"))
+        .map(_.asInstanceOf[Int])) == counts, r.toString)
+    }
   }
 
   test("pii report: per-source rollup agrees with the per-doc scrub") {

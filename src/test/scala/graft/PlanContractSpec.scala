@@ -507,6 +507,62 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     assert(Skew.plannedPartitions(scan.repartition(width + 1)) == Some(width + 1))
   }
 
+  test("connected components: a small quotient graph finishes in 2 result jobs") {
+    import scala.collection.mutable
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import graft.operators.Components
+    val sc = spark.sparkContext
+    // (all jobs, result jobs) run by `body`. Under AQE every shuffle
+    // also runs as a map-stage job of its own; a result job is one
+    // whose tasks include a ResultTask (a checkpoint, a collect).
+    def jobsIn[T](body: => T): (T, Int, Int) = {
+      val stagesOf = mutable.Map[Int, Seq[Int]]()
+      val resultStages = mutable.Set[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          stagesOf.synchronized(stagesOf(e.jobId) = e.stageIds)
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask") resultStages.synchronized(resultStages += e.stageId)
+      }
+      org.apache.spark.graft.Bus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.graft.Bus.drain(sc)
+        (out, stagesOf.size, stagesOf.values.count(_.exists(resultStages)))
+      } finally sc.removeSparkListener(listener)
+    }
+    // Four 10-node chains from a local relation (no job to build the
+    // pairs), sliced across partitions so the contraction leaves a
+    // non-empty quotient graph to finish.
+    val pairs = (1L until 40L).filter(_ % 10 != 0).map(i => (i, i + 1))
+      .toDF("id1", "id2").repartition(4)
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).sorted.toSeq
+    val (driver, driverJobs, driverResults) =
+      jobsIn(Components.dedupClusters(pairs, "id1", "id2"))
+    val (loop, loopJobs, loopResults) =
+      withDistributedCc(jobsIn(Components.dedupClusters(pairs, "id1", "id2")))
+    // After the pairs' and the contraction's shuffles: the grouped
+    // checkpoint (its observed edge count picks the path) and the
+    // quotient collect. The hash-min loop adds a seed checkpoint and a
+    // checkpoint plus an isEmpty per round.
+    assert(driverResults <= 2, s"driver finish ran $driverResults result jobs ($driverJobs in all)")
+    assert(loopResults >= 4 && loopJobs > driverJobs,
+      s"the distributed loop ran only $loopResults result jobs ($loopJobs in all)")
+    // A reliable checkpoint writes its files in one more job; its
+    // observed count arrives all the same and picks the driver finish.
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-reliable").toString
+    val (reliable, _, reliableResults) = withCkptMode("reliable", dir)(
+      jobsIn(Components.dedupClusters(pairs, "id1", "id2")))
+    assert(reliableResults <= 3, s"reliable driver finish ran $reliableResults result jobs")
+    val want = (1L to 40L).map { id =>
+      val c = (id - 1) / 10 * 10 + 1
+      (id, c, 10L, if (id == c) 1 else 0)
+    }
+    Seq(driver, loop, reliable).foreach(df => assert(rows(df) == want))
+  }
+
   test("round-8: span decontamination marks via semi-join; diff joins hashes") {
     val docs = graft.sources.Tables.documents(spark, sf)
     // The bench-window mark must be a semi-join (rows never widen past
@@ -580,10 +636,12 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
   test("curation gate: native text kernels, no tokenizer or quality regex in its plan") {
     // curate's gate (withQuality + the language/quality/blocklist
     // filter) and the exact dedup live in the persisted frame the
-    // release reads back; its executed plan is the gate as it ran, after
-    // Catalyst pushed the Filter below withQuality's projections. The
+    // release reads back; its executed plan is the gate as it ran. The
     // regex forms put 7 regexp_replace and 12 split calls there; the
-    // kernels must replace every one of them.
+    // kernels must replace every one of them. A Filter pushed below
+    // withQuality's projections inlined quality_score and ran the
+    // quality kernel 9 times and the blocklist kernel twice; the gate
+    // filters on the projected columns, so each kernel appears once.
     val docs = graft.sources.Tables.documents(spark, sf)
     val released = CorpusPipeline.curate(docs, blocklistTerms = Some(Seq("slow", "merge")))
     val gates = released.queryExecution.optimizedPlan.collect {
@@ -600,8 +658,9 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
     assert(count("regexp_replace\\(") == 0 && count("\\bsplit\\(") == 0,
       s"gate must not run the regex tokenizer or quality regexes:\n$p")
     val kernels = Seq("quality_counts", "blocklist_counts").map(k => k -> count(k + "\\("))
-    assert(kernels.forall(_._2 >= 1), s"gate must run the native kernels ($kernels):\n$p")
-    info(s"kernel occurrences in the gate plan: ${kernels.mkString(", ")}")
+    assert(kernels.forall(_._2 == 1), s"gate must run each native kernel once ($kernels):\n$p")
+    assert("PushedFilters: \\[[^\\]]*In\\(lang,".r.findFirstIn(p).nonEmpty,
+      s"the language filter must reach the scan:\n$p")
   }
 
   test("top movers: both sides rank one latest-bar derivation") {

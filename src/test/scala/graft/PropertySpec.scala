@@ -139,7 +139,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     // Pins the r11 partition-local-contraction rewrite: final labels are
     // the min reachable id, independent of how edges land in partitions
     // (the contraction's local roots differ per layout; the result must
-    // not).
+    // not), on either quotient finish.
     val rnd = new Random(1311)
     for (trial <- 1 to 6) {
       val n = 20 + rnd.nextInt(30)
@@ -161,13 +161,16 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val want = parent.keys.map(k => k -> find(k)).toMap
-      for (parts <- Seq(1, 3, 8); pj <- Seq(false, true)) {
+      // Both quotient finishes: the driver union-find (default broadcast
+      // threshold) and the distributed hash-min loop (threshold -1).
+      for (driver <- Seq(true, false); parts <- Seq(1, 3, 8); pj <- Seq(false, true)) {
         val df = edges.toDF("id1", "id2").repartition(parts)
-        val got = graft.operators.Components
+        def run() = graft.operators.Components
           .connectedComponents(df, "id1", "id2", pointerJump = pj)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == want,
-          s"trial $trial parts=$parts pj=$pj: labels diverge from the UF oracle")
+        val got = if (driver) run() else withDistributedCc(run())
+        assert(got == want, s"trial $trial driver=$driver parts=$parts pj=$pj: " +
+          "labels diverge from the UF oracle")
       }
     }
   }

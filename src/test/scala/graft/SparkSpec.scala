@@ -13,20 +13,31 @@ trait SparkSpec {
   def r6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Run `body` with the checkpoint seam in `mode` against `dir`, then
-    * restore both [[Ckpt.ModeKey]] and [[Ckpt.DirKey]] to what they were
-    * (unset stays unset), so no later suite inherits the mode or dir.
+  /** Run `body` with the session confs in `settings`, then restore each
+    * to what it was (unset stays unset), so no later suite inherits them.
     */
-  def withCkptMode[T](mode: String, dir: String)(body: => T): T = {
-    val keys = Seq(Ckpt.ModeKey -> mode, Ckpt.DirKey -> dir)
-    val before = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val before = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally before.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `body` with the checkpoint seam in `mode` against `dir`
+    * ([[Ckpt.ModeKey]] and [[Ckpt.DirKey]], restored afterwards).
+    */
+  def withCkptMode[T](mode: String, dir: String)(body: => T): T =
+    withConf(Ckpt.ModeKey -> mode, Ckpt.DirKey -> dir)(body)
+
+  /** Run `body` with broadcast joins off, so connected components
+    * resolves its quotient graph with the distributed hash-min loop
+    * instead of the driver union-find.
+    */
+  def withDistributedCc[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 }
 
 object SparkSpec {

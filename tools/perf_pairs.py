@@ -12,9 +12,13 @@ result line (with its seed, side and run order) to `--out` as it arrives.
 It then prints, per workload and metric: each side's median and quartiles,
 the change's wins and ties over the pairs, and the verdict. A claimed gain
 holds when the change wins at least 9 of every 10 pairs and its median
-beats the parent's by more than the parent's interquartile range. The
-better direction of each metric comes from the parent's `BENCHMARK.json`
-(lower when a metric is not declared there).
+beats the parent's by more than the parent's interquartile range. An
+end-to-end metric is a REGRESSION when the change's median is worse than
+the parent's by more than the metric's `bound` (a fraction of the
+parent's median). The better direction and the bounds come from the
+parent's `BENCHMARK.json` (lower and no bound when a metric is not
+declared there). Last come the change/parent ratio of each pair for
+every end-to-end metric.
 
 `--report` re-reads a kept file and prints the same summary.
 Standard library only.
@@ -67,26 +71,35 @@ def quartiles(values):
     return q[0], q[2]
 
 
-def directions(checkout):
+def bench_spec(checkout):
+    """(better direction per metric, bound per end-to-end metric)."""
     path = os.path.join(checkout or "", "BENCHMARK.json")
     if not os.path.exists(path):
-        return {}
+        return {}, {}
     with open(path) as f:
         bench = json.load(f)
-    return {m["name"]: m.get("better", "lower")
-            for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    better = {m["name"]: m.get("better", "lower")
+              for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    bounds = {m["name"]: m["bound"] for m in bench.get("end_to_end", []) if "bound" in m}
+    return better, bounds
 
 
-def summarize(records, better=None):
-    """Per (workload, metric): medians, quartiles, wins, ties, verdict."""
+def full_pairs(records, workload):
+    """{seed: {"parent": line, "change": line}} for the seeds run on both sides."""
+    pairs = {}
+    for r in records:
+        if r["workload"] == workload:
+            pairs.setdefault(r["seed"], {})[r["side"]] = r["line"]
+    return {s: p for s, p in sorted(pairs.items()) if len(p) == 2}
+
+
+def summarize(records, better=None, bounds=None):
+    """Per (workload, metric): medians, quartiles, wins, ties, verdicts."""
     better = better or {}
+    bounds = bounds or {}
     out = []
     for workload in sorted({r["workload"] for r in records}):
-        pairs = {}
-        for r in records:
-            if r["workload"] == workload:
-                pairs.setdefault(r["seed"], {})[r["side"]] = r["line"]
-        full = {s: p for s, p in sorted(pairs.items()) if len(p) == 2}
+        full = full_pairs(records, workload)
         runs = [line for p in full.values() for line in p.values()]
         ok = all(line.get("correct") and line.get("failed") == 0 for line in runs)
         names = sorted({m for line in runs for m in line.get("metrics", {})})
@@ -105,11 +118,31 @@ def summarize(records, better=None):
             pq1, pq3 = quartiles(par)
             gap = sign * (statistics.median(par) - statistics.median(chg))
             holds = wins >= math.ceil(0.9 * len(got)) and gap > pq3 - pq1
+            bound = bounds.get(name)
+            regression = bound is not None and -gap > bound * abs(statistics.median(par))
             out.append({"workload": workload, "metric": name, "pairs": len(got),
                         "parent_median": statistics.median(par), "parent_q1": pq1,
                         "parent_q3": pq3, "change_median": statistics.median(chg),
                         "change_q1": quartiles(chg)[0], "change_q3": quartiles(chg)[1],
-                        "wins": wins, "ties": ties, "gain_holds": holds, "all_correct": ok})
+                        "wins": wins, "ties": ties, "gain_holds": holds,
+                        "regression": regression, "all_correct": ok})
+    return out
+
+
+def pair_ratios(records, metrics):
+    """Per (workload, metric): [(seed, change / parent)] in seed order."""
+    out = []
+    for workload in sorted({r["workload"] for r in records}):
+        full = full_pairs(records, workload)
+        for name in metrics:
+            ratios = []
+            for seed, p in full.items():
+                a = p["parent"].get("metrics", {}).get(name, {}).get("value")
+                b = p["change"].get("metrics", {}).get(name, {}).get("value")
+                if a is not None and b is not None:
+                    ratios.append((seed, b / a if a else math.nan))
+            if ratios:
+                out.append((workload, name, ratios))
     return out
 
 
@@ -118,12 +151,20 @@ def print_summary(rows):
           "wins ties | verdict")
     for r in rows:
         verdict = "GAIN" if r["gain_holds"] else "no gain"
+        if r["regression"]:
+            verdict += " REGRESSION"
         if not r["all_correct"]:
             verdict += " (a run was not correct or failed)"
         print(f"{r['workload']} {r['metric']} {r['pairs']} | "
               f"{r['parent_median']:.4g} [{r['parent_q1']:.4g} {r['parent_q3']:.4g}] | "
               f"{r['change_median']:.4g} [{r['change_q1']:.4g} {r['change_q3']:.4g}] | "
               f"{r['wins']} {r['ties']} | {verdict}")
+
+
+def print_ratios(ratios):
+    print("workload metric | change/parent per pair (seed:ratio)")
+    for workload, name, got in ratios:
+        print(f"{workload} {name} | " + " ".join(f"{seed}:{x:.3f}" for seed, x in got))
 
 
 def main(argv=None):
@@ -146,7 +187,9 @@ def main(argv=None):
         for workload in args.workload:
             records += run_pairs(args.parent, args.change, workload, seed_range(args.seeds),
                                  args.trace, args.out)
-    print_summary(summarize(records, directions(args.parent)))
+    better, bounds = bench_spec(args.parent)
+    print_summary(summarize(records, better, bounds))
+    print_ratios(pair_ratios(records, sorted(bounds) or ["op_ms"]))
 
 
 if __name__ == "__main__":

@@ -83,6 +83,51 @@ class VerdictTest(unittest.TestCase):
         self.assertIn("daily_snapshot op_ms 10 | 5450", buf.getvalue())
         self.assertIn("| 10 0 | GAIN", buf.getvalue())
 
+    def test_median_worse_than_bound_is_a_regression(self):
+        # change median 30 % above the parent's: outside a 25 % bound
+        pairs = [(line(4000 + 10 * i), line(5200 + 10 * i)) for i in range(10)]
+        rows = perf_pairs.summarize(records(pairs), bounds={"op_ms": 0.25})
+        self.assertTrue(row(rows, "op_ms")["regression"])
+        self.assertFalse(row(rows, "output_mb")["regression"])
+
+    def test_median_worse_within_bound_is_not_a_regression(self):
+        pairs = [(line(4000 + 10 * i), line(4800 + 10 * i)) for i in range(10)]
+        rows = perf_pairs.summarize(records(pairs), bounds={"op_ms": 0.25})
+        self.assertFalse(row(rows, "op_ms")["regression"])
+        # no bound declared: never a regression
+        rows = perf_pairs.summarize(records([(line(1000), line(9000))] * 3))
+        self.assertFalse(row(rows, "op_ms")["regression"])
+
+    def test_regression_follows_the_better_direction(self):
+        pairs = [(line(5000), line(3000))] * 4
+        rows = perf_pairs.summarize(records(pairs), {"op_ms": "higher"}, {"op_ms": 0.25})
+        self.assertTrue(row(rows, "op_ms")["regression"])
+        rows = perf_pairs.summarize(records(pairs), {}, {"op_ms": 0.25})
+        self.assertFalse(row(rows, "op_ms")["regression"])
+
+    def test_report_prints_regression_and_per_pair_ratios(self):
+        pairs = [(line(4000), line(6000, mb=2.0)), (line(5000), line(7500, mb=2.0))]
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "pairs.jsonl")
+            with open(path, "w") as f:
+                f.writelines(json.dumps(r) + "\n" for r in records(pairs))
+            with open(os.path.join(d, "BENCHMARK.json"), "w") as f:
+                json.dump({"end_to_end": [
+                    {"name": "op_ms", "better": "lower", "bound": 0.25},
+                    {"name": "output_mb", "better": "lower", "bound": 0.05}]}, f)
+            buf = io.StringIO()
+            cwd = os.getcwd()
+            os.chdir(d)
+            try:
+                with contextlib.redirect_stdout(buf):
+                    perf_pairs.main(["--report", path])
+            finally:
+                os.chdir(cwd)
+        out = buf.getvalue()
+        self.assertIn("| 0 0 | no gain REGRESSION", out)
+        self.assertIn("daily_snapshot op_ms | 21:1.500 22:1.500", out)
+        self.assertIn("daily_snapshot output_mb | 21:1.000 22:1.000", out)
+
     def test_seed_range(self):
         self.assertEqual(perf_pairs.seed_range("21-24"), [21, 22, 23, 24])
         self.assertEqual(perf_pairs.seed_range("7"), [7])
