@@ -237,6 +237,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional name filter (local profiling: `runMain graft.Bench q1,q2`);
+    // a filtered run never arms the regression gate.
+    val only = args.headOption.map(_.split(",").toSet)
+    only.foreach(SparkEntry.requireKnown(_,
+      SparkEntry.queries.keySet ++ graft.operators.LlmQueries.reportQueries.keySet))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder("graft-bench")
       .master(s"local[$cpus]")
@@ -253,9 +258,6 @@ object Bench {
       } catch { case _: Throwable => () }
     }
     val meter = new Meter(spark)
-    // Optional name filter (local profiling: `runMain graft.Bench q1,q2`);
-    // a filtered run never arms the regression gate.
-    val only = args.headOption.map(_.split(",").toSet)
     val thunks = rowThunks(spark, sfDir, only)
     // In a full run the 60+ earlier queries amortize JVM/codegen warmup;
     // a filtered run has no such cushion and its first timed pass reads

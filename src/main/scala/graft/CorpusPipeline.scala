@@ -319,7 +319,7 @@ object CorpusPipeline {
     * Scale shape: the additions batch is a day's slice; the prior
     * release reduces to its distinct 8-byte key set before the
     * anti-join (never text) — the [[Dedup.incrementalNew]] story, with
-    * [[Dedup.seenBloomFilter]] layerable in front at 100 TB.
+    * [[Dedup.incrementalNewBloom]] layerable in front at 100 TB.
     *
     * `checkIdMonotonic` (ADVICE r10): the composition law above rests
     * on the id-monotonicity PREcondition — every addition doc_id must

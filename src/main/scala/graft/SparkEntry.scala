@@ -17,6 +17,15 @@ object SparkEntry {
     AnalyticsQueries.queries ++ FundamentalsQueries.queries ++ LlmQueries.queries ++
     TextSignalsQueries.queries
 
+  /** Raise, naming every one of `names` (a row-name filter) that
+    * `known` lacks, so a misspelt name fails before any query runs
+    * instead of reading as a clean partial run.
+    */
+  def requireKnown(names: Set[String], known: Set[String]): Unit = {
+    val unknown = (names -- known).toSeq.sorted
+    require(unknown.isEmpty, s"unknown row names: ${unknown.mkString(", ")}")
+  }
+
   private def relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing_summary" -> ((s, d) => Relational.q1PricingSummary(s, d)),
     "q3_revenue_topn" -> ((s, d) => Relational.q3RevenueTopN(s, d)),

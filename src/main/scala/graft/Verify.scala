@@ -13,6 +13,7 @@ object Verify {
     // never wrote).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach(SparkEntry.requireKnown(_, SparkEntry.queries.keySet))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder("graft-verify")
       .master(s"local[$cpus]")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Publish.roundCols
 import graft.sources.Tables
 
 /** Driver-contract wrappers + DuckDB oracles for the analytics suite
@@ -15,9 +16,6 @@ object AnalyticsQueries {
 
   private def bars(s: SparkSession, d: String): DataFrame =
     Bars.daily(clean(s, d))
-
-  private def roundCols(df: DataFrame, cols: Seq[String], scale: Int = 6): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), scale)))
 
   /** The batch session window chain shared by the sessionize and
     * stream_sessionize oracles (the SpanCte rule: one definition, so
@@ -85,58 +83,33 @@ object AnalyticsQueries {
       roundCols(Analytics.sessionize(clean(s, d)), Seq("duration_sec"))
         .orderBy(col("user_id"), col("session_id"))),
 
-    // #49l Sessionize.sessions as a DRIVER-CHECKED correctness row: the
-    // custom flatMapGroupsWithState fold (the most state-shaped
-    // machinery in the repo) run through a real micro-batch and
-    // hash-checked against the batch window-chain oracle. A far-future
-    // sentinel event per user proves the trailing gap so every real
-    // session CLOSES and emits; the sentinels' own open sessions never
-    // emit (no successor event) — absent by construction. session_id is
-    // re-derived on the session-grain SINK (a harness-side window over
-    // finalized rows, never the corpus — the append stream cannot carry
-    // a per-user running index). Deterministic 1/5 user subset, the
-    // stream_bars harness-cost rule. The µs-grain fold (usOf/tsOfUs)
-    // is what makes VALUE parity possible — events carry microsecond
-    // timestamps.
+    // #49l Sessionize.sessions as a driver-checked row: the custom
+    // flatMapGroupsWithState fold (the most state-shaped machinery in
+    // the repo) replays in three micro-batches, with sessions open
+    // across batch boundaries, and hash-checks against the batch
+    // window-chain oracle. The sentinel file (every user at the
+    // far-future time) proves the trailing gap, so every real session
+    // CLOSES and emits; the sentinels' own sessions never close.
+    // session_id is re-derived over the emitted sessions (the append
+    // stream cannot carry a per-user running index). Deterministic 1/5
+    // user subset, the stream_bars rule. The µs-grain fold
+    // (usOf/tsOfUs) is what makes VALUE parity possible: events carry
+    // microsecond timestamps.
     "stream_sessionize" -> ((s, d) => {
       import graft.streaming.Sessionize
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = clean(s, d)
+      val src = clean(s, d)
         .filter(pmod(col("user_id"), lit(5L)) === 0)
         .select(col("user_id"), col("ts"), col("value"))
-        .collect()
-        .map(r => Sessionize.Event(r.getLong(0), r.getTimestamp(1),
-          r.getDouble(2)))
-      val maxMs = if (evs.isEmpty) 0L else evs.iterator.map(_.ts.getTime).max
-      val sink = "stream_sessionize_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[Sessionize.Event]
-      // 4 state partitions (the stream_quality harness-cost rule):
-      // shuffle.partitions is only read at stream START for the state
-      // store layout; per-partition store open/commit dominates a tiny
-      // MemoryStream micro-batch, and key-sharded state is
-      // partition-count-invariant in its results.
-      StreamHarness.withConf(s) {
-        val q = Sessionize.sessions(input.toDS(), gapMinutes = 30)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          input.addData(evs.toIndexedSeq)
-          val flush = evs.map(_.user_id).distinct.map(u => Sessionize.Event(u,
-            new java.sql.Timestamp(maxMs + 100L * 86400000L), 0.0))
-          input.addData(flush.toIndexedSeq)
-          q.processAllAvailable()
-        } finally q.stop()
+      val out = StreamHarness.replay(s, src, "ts", flushBy = Seq("user_id")) { in =>
+        Sessionize.sessions(in.as[Sessionize.Event], gapMinutes = 30).toDF()
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("session_start"))
-      s.table(sink)
-        .withColumn("session_id", row_number().over(w).cast("long"))
-        .select(col("user_id"), col("session_id"), col("session_start"),
-          col("session_end"), col("n_events"),
-          round(col("duration_sec"), 6).as("duration_sec"))
+      roundCols(out.withColumn("session_id", row_number().over(w).cast("long"))
+          .select(col("user_id"), col("session_id"), col("session_start"),
+            col("session_end"), col("n_events"), col("duration_sec")),
+        Seq("duration_sec"))
         .orderBy(col("user_id"), col("session_id"))
     }),
 
@@ -166,95 +139,49 @@ object AnalyticsQueries {
       Analytics.rangeJoin(clean(s, d))
         .orderBy(col("right_id"), col("left_id"))),
 
-    // #49m StreamRangeJoin as a DRIVER-CHECKED correctness row
-    // (VERDICT r9 next-round #1): the native watermarked stream-stream
-    // interval join driven through a REAL micro-batch run and
+    // #49m StreamRangeJoin as a driver-checked row: the native
+    // watermarked stream-stream interval join between the clicks and
+    // the purchases of one replayed event stream (three micro-batches,
+    // so clicks buffered in one batch match purchases of a later one),
     // hash-checked against the SAME oracle as the batch `range_join`
-    // (one shared SQL constant — the two rows assert one predicate,
-    // through two genuinely different plans: binned-equi batch vs
-    // buffered stream-stream). Both sides feed in one micro-batch;
-    // inner-join rows emit as they match, so no watermark sentinel is
-    // needed (the watermark only bounds state retention). The driver
-    // collect is the harness shim on a deterministic 1/5 user subset
-    // (the stream_bars harness-cost rule: the row checks the join
-    // machinery, and the single-threaded stateful feed is the cost —
-    // measured 7.9 s full vs ~1.6 s subset at sf0.1); production
-    // reads two readStream sources.
+    // (one shared SQL constant: the two rows assert one predicate
+    // through two different plans, binned-equi batch vs buffered
+    // stream-stream). One source, split in the operator, derives the
+    // clean chain once. Inner-join rows emit as they match, so no
+    // sentinel is needed (the watermark only bounds state retention).
+    // Deterministic 1/5 user subset, the stream_bars rule.
     "stream_range_join" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      // ONE collect for both sides (the two-feed form re-derived the
-      // clean chain per side), split driver-side.
       val src = clean(s, d)
         .filter(pmod(col("user_id"), lit(5L)) === 0 &&
           col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .collect()
-      def feed(tpe: String): IndexedSeq[(Long, Long, java.sql.Timestamp)] =
-        src.iterator.filter(_.getString(3) == tpe)
-          .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2)))
-          .toIndexedSeq
-      val sink = "stream_range_join_sink"
-      s.catalog.dropTempView(sink)
-      val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      // The stream-stream join plants FOUR state stores per shuffle
-      // partition; at the session's 32 partitions the store setup/commit
-      // dominates this single-micro-batch harness (~7.5 s → ~2 s at 4).
-      // Session-scoped config, restored after the query stops —
-      // shuffle.partitions is only read at stream START for the state
-      // partition count, so the restore cannot race the running query.
-      StreamHarness.withConf(s) {
-        val q = graft.streaming.StreamRangeJoin.attribution(
-            clicks.toDF().toDF("user_id", "event_id", "ts"),
-            purchases.toDF().toDF("user_id", "event_id", "ts"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          clicks.addData(feed("click"))
-          purchases.addData(feed("purchase"))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      s.table(sink).orderBy(col("right_id"), col("left_id"))
+      StreamHarness.replay(s, src, "ts") { in =>
+        def side(tpe: String) = in.filter(col("event_type") === tpe).drop("event_type")
+        graft.streaming.StreamRangeJoin.attribution(side("click"), side("purchase"))
+      }.orderBy(col("right_id"), col("left_id"))
     }),
 
-    // #49d StreamAsOf as a DRIVER-CHECKED correctness row (VERDICT r9
-    // next-round #1 — THE market-data streaming join): purchases
-    // (side 1) and views (side 0) tag into one union, feed a
-    // MemoryStream, and the single-row-state fold enriches every
-    // purchase with the latest view at or before it — hash-checked
-    // against the same DuckDB ASOF JOIN shape the batch twins carry
-    // (without event_id: the tagged union carries (key, ts, value),
-    // and (user_id, ts) is unique post-clean, so nothing is lost).
-    // flatMapGroupsWithState in append mode emits within the batch —
-    // no watermark sentinel needed. The driver collect is the harness
-    // shim, bounded by the event table (the stream_bars rule).
+    // #49d StreamAsOf as a driver-checked row (THE market-data
+    // streaming join): purchases (side 1) and views (side 0) tag into
+    // one union that replays in three micro-batches, and the
+    // single-row-state fold enriches every purchase with the latest
+    // view at or before it, that view often held from an earlier batch.
+    // Hash-checked against the same DuckDB ASOF JOIN shape the batch
+    // twins carry (without event_id: the tagged union carries (key, ts,
+    // value), and (user_id, ts) is unique post-clean, so nothing is
+    // lost). flatMapGroupsWithState in append mode emits within the
+    // batch, so no sentinel is needed.
     "stream_asof" -> ((s, d) => {
       import graft.streaming.StreamAsOf
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val src = clean(s, d)
         .filter(col("event_type").isin("purchase", "view"))
-        .select(col("user_id"), col("ts"), col("value"),
-          (col("event_type") === lit("purchase")).cast("int").as("side"))
-        .collect()
-        .map(r => StreamAsOf.Tagged(r.getLong(0), r.getTimestamp(1),
-          r.getInt(3), r.getDouble(2)))
-      val sink = "stream_asof_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[StreamAsOf.Tagged]
-      // 4 state partitions — the stream_quality harness-cost rule.
-      StreamHarness.withConf(s) {
-        val q = StreamAsOf.enrich(input.toDS())
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try { input.addData(src.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table(sink).select(col("user_id"), col("ts"),
+        .select(col("user_id"), col("ts"),
+          (col("event_type") === lit("purchase")).cast("int").as("side"),
+          col("value"))
+      StreamHarness.replay(s, src, "ts") { in =>
+        StreamAsOf.enrich(in.as[StreamAsOf.Tagged]).toDF()
+      }.select(col("user_id"), col("ts"),
           col("value").as("purchase_value"),
           col("asof_ts").as("view_ts"), col("asof_value").as("view_value"))
         .orderBy(col("user_id"), col("ts"))

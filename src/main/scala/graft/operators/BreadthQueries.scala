@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Publish.roundCols
 import graft.sources.Tables
 
 /** Driver-contract wrappers + DuckDB oracles for the breadth suite
@@ -17,73 +18,36 @@ object BreadthQueries {
   private def breadth(s: SparkSession, d: String): DataFrame =
     Breadth.breadthDaily(bars(s, d))
 
-  private def roundCols(df: DataFrame, cols: Seq[String], scale: Int = 6): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), scale)))
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "breadth_daily" -> ((s, d) =>
       roundCols(breadth(s, d), Seq("breadth_percent", "adv_dec_ratio"))
         .orderBy(col("date"))),
 
-    // #49c StreamBreadth as a DRIVER-CHECKED correctness row (r10 —
-    // the two chained stateful stages run through a real micro-batch:
-    // per-symbol prev-close direction fold → watermarked 1-day window
-    // counts, finalized by a far-future sentinel). The sentinel user
-    // needs TWO bars: its FIRST emits no direction (no prev close — the
-    // lag-null rule), so a single sentinel would never reach the
-    // watermark stage and no window would finalize; the harness then
-    // filters windows at/after the sentinel's (its first direction row
-    // lands in a finalized far-future window). Oracle = the batch
-    // direction-count arithmetic on days that HAVE a direction row
-    // (the streaming operator's contract: no calendar fill, no
-    // new-high/low columns — those need the 10-day prior window the
-    // live fold doesn't claim). Driver collect is the harness shim at
-    // bar grain (the stream_ind_sma rule).
+    // #49c StreamBreadth as a driver-checked row: the two chained
+    // stateful stages (per-symbol prev-close direction fold →
+    // watermarked 1-day window counts) replay in three micro-batches,
+    // and the sentinel file finalizes the windows. Each user's sentinel
+    // bar has a previous close, so it emits a far-future direction row
+    // that carries stage 2's watermark past every real window; that
+    // row's own window never finalizes. Oracle = the batch
+    // direction-count arithmetic on days that HAVE a direction row (the
+    // streaming operator's contract: no calendar fill, no new-high/low
+    // columns, which need the 10-day prior window the live fold doesn't
+    // claim).
     "stream_breadth" -> ((s, d) => {
       import graft.streaming.{StreamBreadth, StreamIndicators}
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val src = bars(s, d).select(col("user_id"),
-          datediff(col("date"), lit("1970-01-01").cast("date")).as("days"),
-          col("close"))
-        .collect()
-        .map(r => StreamIndicators.Bar(r.getLong(0),
-          new java.sql.Timestamp(r.getInt(1).toLong * 86400000L),
-          r.getDouble(2)))
-      val maxMs = if (src.isEmpty) 0L else src.iterator.map(_.ts.getTime).max
-      val sentinelMs = maxMs + 40L * 86400000L
-      val sink = "stream_breadth_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[StreamIndicators.Bar]
-      // TWO chained stateful stages plant state stores per shuffle
-      // partition; run the harness at 4 (the stream_range_join rule —
-      // session-scoped, restored; partitions are read at stream start).
-      StreamHarness.withConf(s) {
-        val q = StreamBreadth.breadth(input.toDS(), windowDur = "1 day",
-            watermark = "10 minutes")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          input.addData(src.toIndexedSeq)
-          q.processAllAvailable()
-          input.addData(
-            StreamIndicators.Bar(-1L, new java.sql.Timestamp(sentinelMs), 1.0),
-            StreamIndicators.Bar(-1L,
-              new java.sql.Timestamp(sentinelMs + 86400000L), 1.0))
-          q.processAllAvailable()
-        } finally q.stop()
+        timestamp_seconds(unix_date(col("date")).cast("long") * 86400L).as("ts"),
+        col("close"))
+      val out = StreamHarness.replay(s, src, "ts", flushBy = Seq("user_id")) { in =>
+        StreamBreadth.breadth(in.as[StreamIndicators.Bar], windowDur = "1 day",
+          watermark = "10 minutes")
       }
-      s.table(sink)
-        .filter(col("bucket_start") < new java.sql.Timestamp(sentinelMs))
-        .select(
-          date_add(lit("1970-01-01").cast("date"),
-            (col("bucket_start").cast("long") / lit(86400L)).cast("int"))
-            .as("date"),
+      roundCols(out.select(MarketQueries.epochDate(col("bucket_start")).as("date"),
           col("advancers"), col("decliners"), col("unchanged"),
-          col("total_issues"),
-          round(col("breadth_percent"), 6).as("breadth_percent"),
-          round(col("adv_dec_ratio"), 6).as("adv_dec_ratio"))
+          col("total_issues"), col("breadth_percent"), col("adv_dec_ratio")),
+        Seq("breadth_percent", "adv_dec_ratio"))
         .orderBy(col("date"))
     }),
 

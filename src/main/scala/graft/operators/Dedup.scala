@@ -157,8 +157,8 @@ object Dedup {
     * batch is a day's slice joining a corpus-wide key set — at 100 TB
     * the seen-key set is the big side, and the sort-merge/shuffled-hash
     * join on a 64-bit key is exactly what Spark distributes well. For
-    * the common case where most incoming docs are novel, layer
-    * [[seenBloomFilter]] in front: definite-new rows never shuffle.
+    * the common case where most incoming docs are novel, use
+    * [[incrementalNewBloom]]: definite-new rows never shuffle.
     */
   def incrementalNew(documents: DataFrame, seenPred: Column): DataFrame = {
     // keyed feeds BOTH branches (seen-key set + incoming probe) — the
@@ -214,7 +214,7 @@ object Dedup {
       s"$site: bloom sketch for $expectedItems items at fpp $fpp would " +
         s"serialize to ~$bytes bytes (> ${MaxBloomSketchBytes} budget — " +
         "a driver-held plan literal). Use the exact distributed key join " +
-        "(Dedup.incrementalNew / withContamination) or shard the key set " +
+        "(Dedup.incrementalNew) or shard the key set " +
         "and AND the verdicts.")
   }
 
@@ -406,10 +406,8 @@ object Dedup {
     * while this projection flags them as contaminated by themselves —
     * row-equality holds on the non-bench rows; a caller comparing the
     * two (or gating a mixed stream) must filter bench docs first. The
-    * gram array rides `typedlit`; at bench
-    * sizes past literal comfort the [[incrementalNewBloom]] sketch is
-    * the same projection shape with a might-contain probe (loses the
-    * exact hit count, keeps the verdict).
+    * gram array rides `typedlit`; a benchmark too large for a plan
+    * literal stays on the [[decontaminate]] join.
     */
   def withContamination(documents: DataFrame, benchGrams: Array[Long],
                         n: Int = 4): DataFrame = {
@@ -426,62 +424,6 @@ object Dedup {
     documents
       .withColumn("n_hits", hits)
       .withColumn("is_contaminated", (col("n_hits") > 0).cast("int"))
-  }
-
-  /** Bloom-sketch artifact build for [[withContaminationBloom]] — the
-    * large-benchmark fallback when the literal gram array of
-    * [[benchGramSet]] stops being comfortable (size is
-    * `expectedItems·~10 bits`, vs 8 bytes/gram for the literal).
-    */
-  def benchGramBloom(documents: DataFrame, n: Int = 4, benchMod: Int = 20,
-                     expectedItems: Long = 0L,
-                     fpp: Double = 0.01): Array[Byte] = {
-    val posts = ngramPostings(
-      documents.filter(pmod(col("doc_id"), lit(benchMod.toLong)) === 0), n)
-    // Size the sketch from the ACTUAL distinct gram count (one bounded
-    // count over the bench postings) unless the caller overrides —
-    // a fixed 1e6 default made every tiny benchmark carry a ~1.2 MB
-    // plan literal (ADVICE r7). Floor keeps degenerate benches sane.
-    val items = if (expectedItems > 0) expectedItems
-                else math.max(64L, posts.select(col("g")).distinct().count())
-    // Same driver budget as incrementalNewBloom — the sketch is a plan
-    // literal; a benchmark suite so large its gram set breaks the
-    // budget should stay on the exact join (withContamination).
-    requireBloomBudget(items, fpp, "benchGramBloom")
-    val bloom = posts.stat.bloomFilter("g", items, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** [[withContamination]] over a bloom SKETCH of the benchmark gram
-    * set instead of the literal array — same stateless projection
-    * (streaming-safe for the same reason), same gram semantics, but
-    * the verdict is a might-contain: no false negatives (a leaked doc
-    * is never missed), a ~fpp chance per clean gram of over-flagging,
-    * and `n_maybe_hits` is an upper bound on the exact count. Probes
-    * run the codegen'd BloomFilterMightContain over a literal of the
-    * sketch ([[incrementalNewBloom]]'s rule — never a Scala UDF on the
-    * full-scan path), applied per gram inside the array filter.
-    */
-  def withContaminationBloom(documents: DataFrame, benchBloom: Array[Byte],
-                             n: Int = 4): DataFrame = {
-    require(n >= 2, "n-gram width must be at least 2")
-    def mightContain(k: Column): Column =
-      org.apache.spark.sql.GraftColumnBridge.column(
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          org.apache.spark.sql.catalyst.expressions.Literal(benchBloom),
-          org.apache.spark.sql.GraftColumnBridge.expression(k)))
-    val t = tokens(col("text"))
-    val grams = array_distinct(
-      transform(sequence(lit(0), size(t) - n),
-        i => xxhash64(concat_ws(" ", slice(t, i + 1, lit(n))))))
-    val hits = when(col("text").isNotNull && size(t) >= n,
-      size(filter(grams, g => mightContain(g))).cast("long"))
-      .otherwise(lit(0L))
-    documents
-      .withColumn("n_maybe_hits", hits)
-      .withColumn("is_contaminated", (col("n_maybe_hits") > 0).cast("int"))
   }
 
   /** Driver-literal artifacts for [[withContaminationFuzzy]] — the

@@ -4,15 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Publish.roundCols
 import graft.sources.Tables
 
 /** Driver-contract wrappers + DuckDB oracles for the fundamentals suite
   * (SURVEY §2 #32–36).
   */
 object FundamentalsQueries {
-
-  private def roundCols(df: DataFrame, cols: Seq[String], scale: Int = 6): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), scale)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "fund_quarterly_revenue" -> ((s, d) => {

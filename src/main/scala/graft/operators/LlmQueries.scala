@@ -17,6 +17,12 @@ import graft.sources.Tables
 object LlmQueries {
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
+
+  /** The event time every document carries in the document-stream rows.
+    * Not epoch 0: Spark's watermark starts there, and the
+    * within-watermark dedupe treats a row at the watermark as late.
+    */
+  private val IngestT0 = new java.sql.Timestamp(1704067200000L) // 2024-01-01T00:00:00Z
   private def emb(s: SparkSession, d: String): DataFrame = Tables.embeddings(s, d)
 
   /** The media-dedup planted corpus (shared by #50c/#50d): the natural
@@ -116,40 +122,24 @@ object LlmQueries {
     "dedup_exact" -> ((s, d) =>
       Dedup.exact(docs(s, d)).orderBy(col("canonical_id"))),
 
-    // #49e StreamDedup.dedupDocuments driven through a REAL micro-batch
-    // run and hash-checked against the distinct-content oracle — the
-    // driver-visible row for the streaming content-identity gate
-    // (dropDuplicatesWithinWatermark under append mode). The streamed
-    // row is projected to (text, constant ingest_ts) BEFORE the dedupe
-    // so every duplicate is value-identical and the arbitrary
-    // within-batch survivor carries the same output values — the only
-    // shape that makes a first-arrival-wins operator hash-checkable.
-    // The driver collect is the test-harness shim (bounded by the
-    // documents table; production reads a readStream source).
+    // #49e StreamDedup.dedupDocuments through the replay harness,
+    // hash-checked against the distinct-content oracle: the streaming
+    // content-identity gate (dropDuplicatesWithinWatermark in append
+    // mode). The documents table has no event time, so every row gets
+    // the constant IngestT0; the replay splits on doc_id instead, and
+    // the watermark after the first batch (IngestT0 − 1 h) keeps later
+    // batches on time while the seen hashes stay in state. The stream
+    // is projected to (text, ingest_ts) BEFORE the dedupe, so every
+    // duplicate is value-identical and whichever arrives first carries
+    // the same output values: the only shape that makes a
+    // first-arrival-wins operator hash-checkable.
     "stream_dedup_docs" -> ((s, d) => {
       import graft.streaming.StreamDedup
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      // NOT epoch 0: Spark's watermark initializes at epoch 0, and
-      // event-time-at-watermark rows are treated as late by the
-      // within-watermark dedupe — every row would be dropped unseen.
-      val t0 = new java.sql.Timestamp(1704067200000L) // 2024-01-01T00:00:00Z
-      val src = docs(s, d).select(col("text")).collect()
-        .map(r => StreamDedup.Doc(r.getString(0), t0))
-      val sink = "stream_dedup_docs_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[StreamDedup.Doc]
-      // 4 state partitions — the stream_quality harness-cost rule.
-      StreamHarness.withConf(s) {
-        val q = StreamDedup.dedupDocuments(input.toDF())
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try { input.addData(src.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table(sink)
-        .select(col("content_hash"), length(col("text")).cast("long").as("n_chars"))
+      val src = docs(s, d).select(col("doc_id"), col("text"),
+        lit(IngestT0).as("ingest_ts"))
+      StreamHarness.replay(s, src, "doc_id") { in =>
+        StreamDedup.dedupDocuments(in.drop("doc_id"))
+      }.select(col("content_hash"), length(col("text")).cast("long").as("n_chars"))
         .orderBy(col("content_hash"))
     }),
 
@@ -749,59 +739,39 @@ object LlmQueries {
         .orderBy(col("doc_id"))
     }),
 
-    // #49k StreamNearDup as a DRIVER-CHECKED correctness row (r10 —
-    // the last streaming operator with an SQL-expressible twin): the
-    // per-bucket signature-state fold runs the whole corpus through
-    // one micro-batch (constant ingest_ts) and the emitted candidate
-    // pairs hash-check against the SAME banding chain the dedup_minhash
-    // oracle replays, with est-Jaccard as a generated 32-term
-    // component-match count — one row per colliding band, est ≥ 0.5.
-    // Values are exact binary fractions (m/32), so round(…, 6) is
-    // lossless cross-engine. The fixture's buckets stay far under
-    // maxBucket, so the all-pairs branch is what's checked; the
-    // star-cap branch stays spec-pinned (its fold-order contract has
-    // no batch-SQL twin). Harness-cost shape (the stream_bars rule,
-    // twice over): per-(band, doc) state-store work dominates
-    // (~0.1 ms per bucket-group op, measured — text length is
-    // irrelevant), so the fixture is the 1/25 doc subset truncated to
-    // 300 chars (50 s full at sf0.1 → ~2 s; the truncation bounds the
+    // #49k StreamNearDup as a driver-checked row (the last streaming
+    // operator with an SQL-expressible twin): the per-bucket
+    // signature-state fold replays the corpus in three micro-batches
+    // (constant IngestT0, split on doc_id, the stream_dedup_docs rule),
+    // and the emitted candidate pairs hash-check against the SAME
+    // banding chain the dedup_minhash oracle replays, with est-Jaccard
+    // as a generated 32-term component-match count: one row per
+    // colliding band, est ≥ 0.5. Values are exact binary fractions
+    // (m/32), so round(…, 6) is lossless cross-engine. The fixture's
+    // buckets stay far under maxBucket, so the all-pairs branch is
+    // what's checked; the star-cap branch stays spec-pinned (its
+    // fold-order contract has no batch-SQL twin). Per-(band, doc)
+    // state-store work dominates (~0.1 ms per bucket-group op,
+    // measured; text length is irrelevant), so the fixture is the 1/25
+    // doc subset truncated to 300 chars (the truncation bounds the
     // oracle's shingle replay too), with a planted near-dup TWIN per
-    // doc (doc_id + 10⁷,
-    // ' twin tail marker' appended — the url_normalize plant rule:
-    // rebuilt verbatim by the oracle) so the detector has guaranteed
-    // value-checked pairs at every sf (the raw subset had none at
-    // sf0.01). 4-state-partition rule.
+    // doc (doc_id + 10⁷, ' twin tail marker' appended, the
+    // url_normalize plant rule: rebuilt verbatim by the oracle), so the
+    // detector has value-checked pairs at every sf. The twins sort
+    // after every base doc, so most pairs join a twin in a later batch
+    // to its base held in state. repartition(4) spreads each batch's
+    // shingle+minhash pass, which otherwise runs as one task per file;
+    // per-bucket folds are partition-invariant.
     "stream_near_dup" -> ((s, d) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       val base = docs(s, d).filter(pmod(col("doc_id"), lit(25L)) === 0)
         .select(col("doc_id"), substring(col("text"), 1, 300).as("text"))
-      val aug = base.unionByName(base.select(
-        (col("doc_id") + lit(10000000L)).as("doc_id"),
-        concat(col("text"), lit(" twin tail marker")).as("text")))
-      val src = aug.collect()
-        .map(r => (r.getLong(0), r.getString(1), t0))
-      val sink = "stream_near_dup_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-      StreamHarness.withConf(s) {
-        // repartition(4) ahead of the signature projection (r12): the
-        // single MemoryStream block otherwise runs the whole in-stream
-        // shingle+minhash pass as ONE serial task (~2.9 s measured) —
-        // the band-key shuffle only happens AFTER signatures exist.
-        // Production sources arrive multi-partition; this is the
-        // harness matching that, not operator code. Results are
-        // partition-invariant (per-bucket folds in (ts, doc_id) order).
-        val q = graft.streaming.StreamNearDup.candidatePairs(
-            input.toDF().toDF("doc_id", "text", "ingest_ts").repartition(4))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try { input.addData(src.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table(sink).orderBy(col("id1"), col("id2"), col("band"))
+      val src = base.unionByName(base.select(
+          (col("doc_id") + lit(10000000L)).as("doc_id"),
+          concat(col("text"), lit(" twin tail marker")).as("text")))
+        .withColumn("ingest_ts", lit(IngestT0))
+      StreamHarness.replay(s, src, "doc_id") { in =>
+        graft.streaming.StreamNearDup.candidatePairs(in.repartition(4)).toDF()
+      }.orderBy(col("id1"), col("id2"), col("band"))
     }),
   )
 

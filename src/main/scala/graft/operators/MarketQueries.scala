@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Publish.roundCols
 import graft.sources.Tables
 
 /** Driver-contract wrappers for the market-data surface: each query is
@@ -14,11 +15,12 @@ object MarketQueries {
   private def bars(s: SparkSession, d: String): DataFrame =
     Bars.daily(Cleaning.cleanEvents(Tables.events(s, d)))
 
-  private def roundCols(df: DataFrame, cols: Seq[String], scale: Int = 6): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), scale)))
-
   private def ordered(df: DataFrame): DataFrame =
     df.orderBy(col("user_id"), col("date"))
+
+  /** The UTC date of a timestamp by epoch-day arithmetic (zone-free). */
+  private[operators] def epochDate(ts: Column): Column =
+    date_from_unix_date((unix_seconds(ts) / 86400L).cast("int"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "clean_events" -> ((s, d) =>
@@ -80,115 +82,50 @@ object MarketQueries {
       ordered(roundCols(df, Seq("ema_5", "ema_12", "ema_26")))
     }),
 
-    // #49b StreamIndicators driven through a REAL micro-batch run and
-    // checked against the batch-plan oracle — converting the
-    // spec-level batch-parity proof into a driver-visible CORRECTNESS
-    // row (VERDICT r8 next-round #6): daily bars feed a MemoryStream,
-    // smaEma folds them under flatMapGroupsWithState, the memory
-    // sink's append output is the query result. The driver collect is
-    // BAR-grain (events already folded ~1000×) and the memory sink
-    // holds the same rows — a test-harness shim bounded by the bar
-    // table, not an operator shape; production feeds ohlcvBars'
-    // watermarked stream instead.
+    // #49b StreamIndicators through the replay harness, checked
+    // against the batch-plan oracle: daily bars replay in three
+    // micro-batches (split on event time), smaEma folds them under
+    // flatMapGroupsWithState with its state carried across batches, and
+    // the append output is the row. Date → ts → date goes through
+    // epoch-day arithmetic on both legs, which is zone-free (a
+    // `java.sql.Date` round trip shifts a day whenever the JVM and
+    // session zones differ).
     "stream_ind_sma" -> ((s, d) => {
       import graft.streaming.StreamIndicators
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      // Date → ts → date round-trips through EPOCH-DAY arithmetic on
-      // both legs (datediff out, epoch-seconds div + date_add back):
-      // java.sql.Date.getTime is midnight in the JVM DEFAULT zone
-      // while to_date(ts) converts in the SESSION zone, so the naive
-      // round trip shifts a day whenever the two differ (r9 review
-      // finding). datediff and the long cast (epoch seconds) are both
-      // zone-free.
       val src = bars(s, d).select(col("user_id"),
-          datediff(col("date"), lit("1970-01-01").cast("date")).as("days"),
-          col("close"))
-        .orderBy(col("user_id"), col("days")).collect()
-        .map(r => StreamIndicators.Bar(r.getLong(0),
-          new java.sql.Timestamp(r.getInt(1).toLong * 86400000L),
-          r.getDouble(2)))
-      val sink = "stream_ind_sma_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[StreamIndicators.Bar]
-      // 4 state partitions — the stream_quality harness-cost rule
-      // (shuffle.partitions is read at stream START for the state store
-      // layout; per-key folds are partition-count-invariant).
-      StreamHarness.withConf(s) {
-        val q = StreamIndicators.smaEma(input.toDS(), p = 5, span = 5)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try { input.addData(src.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
+        timestamp_seconds(unix_date(col("date")).cast("long") * 86400L).as("ts"),
+        col("close"))
+      val out = StreamHarness.replay(s, src, "ts") { in =>
+        StreamIndicators.smaEma(in.as[StreamIndicators.Bar], p = 5, span = 5).toDF()
       }
-      s.table(sink).select(col("user_id"),
-          date_add(lit("1970-01-01").cast("date"),
-            (col("ts").cast("long") / lit(86400L)).cast("int")).as("date"),
-          col("close"), round(col("sma"), 6).as("ma_5"),
-          round(col("ema"), 6).as("ema_5"))
-        .orderBy(col("user_id"), col("date"))
+      ordered(roundCols(out.select(col("user_id"), epochDate(col("ts")).as("date"),
+          col("close"), col("sma").as("ma_5"), col("ema").as("ema_5")),
+        Seq("ma_5", "ema_5")))
     }),
 
-    // #48b WindowedAggs.ohlcvBars driven through a REAL watermarked
-    // micro-batch run and hash-checked against the bars_daily oracle:
-    // cleaned ticks feed a MemoryStream, the 1-day tumbling window
-    // aggregates under append mode, and a far-future sentinel tick
-    // advances the watermark past every real window end so the windows
-    // FINALIZE and emit — the row therefore also checks the
-    // watermark-finalization machinery itself, not just the aggregate.
-    // The driver collect is the test-harness shim (bounded by the tick
-    // table; production reads a readStream source); the sentinel's own
-    // window never finalizes, so it is absent from the sink by
-    // construction (the filter is defensive). Session tz is UTC, so
-    // window(ts, "1 day") boundaries coincide with CAST(ts AS DATE);
-    // the window.start → date leg uses epoch-day arithmetic (zone-free,
-    // the stream_ind_sma rule).
+    // #48b WindowedAggs.ohlcvBars through the replay harness,
+    // hash-checked against the bars_daily oracle: cleaned ticks replay
+    // in three micro-batches, the watermarked 1-day tumbling window
+    // aggregates in append mode with windows open across batch
+    // boundaries, and the sentinel file (every user at the far-future
+    // time) advances the watermark past every real window end, so the
+    // windows FINALIZE and emit: the row checks the finalization
+    // machinery, not just the aggregate. The sentinels' own windows
+    // never finalize. Session tz is UTC, so window(ts, "1 day")
+    // boundaries coincide with CAST(ts AS DATE). Deterministic 1/5 user
+    // subset: the same machinery at a fifth of the state-store work.
     "stream_bars" -> ((s, d) => {
       import graft.streaming.WindowedAggs
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      // Deterministic 1/5 user subset: the row checks the finalization
-      // MACHINERY, and the harness feed (driver collect + single-threaded
-      // MemoryStream) is the cost — a fifth of the ticks checks the same
-      // machinery at a fifth of the harness price (8.5 s → ~2 s at sf0.1).
       val src = Cleaning.cleanEvents(Tables.events(s, d))
         .filter(pmod(col("user_id"), lit(5L)) === 0)
         .select(col("user_id"), col("ts"), col("value"))
-        .collect()
-        .map(r => WindowedAggs.Tick(r.getLong(0), r.getTimestamp(1),
-          r.getDouble(2)))
-      // 0L on an empty subset: the sentinel still streams, no real
-      // window exists, and the row returns the (correct) empty frame
-      // instead of crashing on empty.max.
-      val maxMs = if (src.isEmpty) 0L
-                  else src.iterator.map(_.ts.getTime).max
-      val sink = "stream_bars_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[WindowedAggs.Tick]
-      // 4 state partitions — the stream_quality harness-cost rule.
-      StreamHarness.withConf(s) {
-        val q = WindowedAggs.ohlcvBars(input.toDF(), windowDur = "1 day",
-            watermark = "10 minutes")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          input.addData(src.toIndexedSeq)
-          q.processAllAvailable()
-          input.addData(WindowedAggs.Tick(-1L,
-            new java.sql.Timestamp(maxMs + 40L * 86400000L), 0.0))
-          q.processAllAvailable()
-        } finally q.stop()
+      val out = StreamHarness.replay(s, src, "ts", flushBy = Seq("user_id")) { in =>
+        WindowedAggs.ohlcvBars(in, windowDur = "1 day", watermark = "10 minutes")
       }
-      s.table(sink).filter(col("user_id") >= 0)
-        .select(col("user_id"),
-          date_add(lit("1970-01-01").cast("date"),
-            (col("bucket_start").cast("long") / lit(86400L)).cast("int"))
-            .as("date"),
+      ordered(roundCols(out.select(col("user_id"), epochDate(col("bucket_start")).as("date"),
           col("open"), col("high"), col("low"), col("close"),
-          col("volume"), round(col("vwap"), 6).as("vwap"))
-        .orderBy(col("user_id"), col("date"))
+          col("volume"), col("vwap")), Seq("vwap")))
     }),
 
     "ind_rsi" -> ((s, d) => {
@@ -228,56 +165,26 @@ object MarketQueries {
     "data_quality" -> ((s, d) =>
       Quality.dataQuality(Tables.events(s, d)).orderBy(col("user_id"))),
 
-    // #48c WindowedAggs.qualityCounters driven through a REAL
-    // watermarked micro-batch run (VERDICT r10 next-round #6 — the
-    // last streaming operator with oracle-expressible columns): raw
-    // ticks feed a MemoryStream, the 1-day window counters aggregate
-    // under append mode, a far-future sentinel finalizes every real
-    // window (the stream_bars pattern), and the EXACT per-day counters
-    // (rows, nulls, non-positives, freshness) hash-check against a
-    // per-(user, day) batch oracle. The HLL duplicate ESTIMATE
-    // (n_dup_ts_est) stays out of the hash by design — approx sketches
-    // are not cross-engine portable; the batch `data_quality` row
-    // carries the exact count. Deterministic 1/5 user subset + 4 state
-    // partitions: the single-threaded MemoryStream feed and per-
-    // partition state stores are the harness cost, not the operator
-    // (the stream_bars / stream_range_join harness rules).
+    // #48c WindowedAggs.qualityCounters through the replay harness
+    // (the stream_bars pattern): raw ticks replay in three micro-batches,
+    // the watermarked 1-day window counters aggregate in append mode,
+    // the sentinel file finalizes every real window, and the EXACT
+    // per-day counters (rows, nulls, non-positives, freshness)
+    // hash-check against a per-(user, day) batch oracle. The HLL
+    // duplicate ESTIMATE (n_dup_ts_est) stays out of the hash by design
+    // (approx sketches are not cross-engine portable); the batch
+    // `data_quality` row carries the exact count. Deterministic 1/5 user
+    // subset, the stream_bars rule.
     "stream_quality" -> ((s, d) => {
       import graft.streaming.WindowedAggs
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val src = Tables.events(s, d)
         .filter(col("ts").isNotNull && pmod(col("user_id"), lit(5L)) === 0)
         .select(col("user_id"), col("ts"), col("value"))
-        .collect()
-        .map(r => WindowedAggs.QTick(r.getLong(0), r.getTimestamp(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-      val maxMs = if (src.isEmpty) 0L
-                  else src.iterator.map(_.ts.getTime).max
-      val sink = "stream_quality_sink"
-      s.catalog.dropTempView(sink)
-      val input = MemoryStream[WindowedAggs.QTick]
-      StreamHarness.withConf(s) {
-        val q = WindowedAggs.qualityCounters(input.toDF(), windowDur = "1 day",
-            watermark = "1 hour")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").start()
-        try {
-          input.addData(src.toIndexedSeq)
-          q.processAllAvailable()
-          input.addData(WindowedAggs.QTick(-1L,
-            new java.sql.Timestamp(maxMs + 40L * 86400000L), Some(1.0)))
-          q.processAllAvailable()
-        } finally q.stop()
+      val out = StreamHarness.replay(s, src, "ts", flushBy = Seq("user_id")) { in =>
+        WindowedAggs.qualityCounters(in, windowDur = "1 day", watermark = "1 hour")
       }
-      s.table(sink).filter(col("user_id") >= 0)
-        .select(col("user_id"),
-          date_add(lit("1970-01-01").cast("date"),
-            (col("day").cast("long") / lit(86400L)).cast("int")).as("date"),
-          col("n_rows"), col("n_null_value"), col("n_nonpos_value"),
-          col("last_ts"))
-        .orderBy(col("user_id"), col("date"))
+      ordered(out.select(col("user_id"), epochDate(col("day")).as("date"),
+        col("n_rows"), col("n_null_value"), col("n_nonpos_value"), col("last_ts")))
     }),
 
     "feature_matrix" -> ((s, d) =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Publish.roundCols
 import graft.sources.Tables
 
 /** Driver-contract wrappers + DuckDB oracles for the screener suite
@@ -12,9 +13,6 @@ object ScreenerQueries {
 
   private def bars(s: SparkSession, d: String): DataFrame =
     Bars.daily(Cleaning.cleanEvents(Tables.events(s, d)))
-
-  private def roundCols(df: DataFrame, cols: Seq[String], scale: Int = 6): DataFrame =
-    cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), scale)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "screen_breakout" -> ((s, d) =>

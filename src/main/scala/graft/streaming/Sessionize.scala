@@ -135,7 +135,7 @@ object Sessionize {
   }
 
   /** Streaming sessionize: append-mode, one open-session state per user.
-    * Works identically on a MemoryStream (specs) and a real source.
+    * Works identically on any streaming source and on a batch Dataset.
     * Gap closure requires a successor event — see [[sessionsWithTimeout]]
     * for the watermark-flushed production variant.
     */

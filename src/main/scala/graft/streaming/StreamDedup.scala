@@ -16,12 +16,6 @@ import org.apache.spark.sql.DataFrame
   */
 object StreamDedup {
 
-  /** MemoryStream row shape for the driver-checked `stream_dedup_docs`
-    * correctness row (the documents table has no event-time column, so
-    * the harness synthesizes a constant `ingest_ts`).
-    */
-  case class Doc(text: String, ingest_ts: java.sql.Timestamp)
-
   def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events
       .withWatermark("ts", watermark)

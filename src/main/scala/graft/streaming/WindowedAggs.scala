@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * state: late ticks beyond the watermark are dropped, windows finalize
   * and evict incrementally. The same call works on any streaming source
   * (`spark.readStream.schema(...).parquet(dir)`, Kafka, or a test
-  * MemoryStream) and on a batch DataFrame (windows compute, watermark is
+  * feed) and on a batch DataFrame (windows compute, watermark is
   * a no-op) — the logical plan is identical, which is the point of
   * Structured Streaming.
   *
@@ -22,17 +22,6 @@ import org.apache.spark.sql.functions._
   * shuffle exactly as in batch.
   */
 object WindowedAggs {
-
-  /** MemoryStream row shape for the driver-checked `stream_bars`
-    * correctness row (a cleaned tick: user, event time, price).
-    */
-  case class Tick(user_id: Long, ts: java.sql.Timestamp, value: Double)
-
-  /** MemoryStream row shape for the driver-checked `stream_quality`
-    * row — value is nullable (the quality counters COUNT the nulls, so
-    * the harness feed must carry them through).
-    */
-  case class QTick(user_id: Long, ts: java.sql.Timestamp, value: Option[Double])
 
   /** Per-(window, user) OHLC-ish aggregate with event-time watermark.
     * Output schema: window(start, end), user_id, n_events, avg_value,

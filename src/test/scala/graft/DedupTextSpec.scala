@@ -1162,21 +1162,6 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
     // stateless and streaming-safe.
     val plan = Dedup.withContamination(d, bench).queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"projection gate must not join:\n$plan")
-    // Bloom fallback: same projection shape, no false negatives — on
-    // this fixture (fpp 1e-6) the verdicts coincide with the exact gate
-    // and n_maybe_hits bounds n_hits from above.
-    val bloom = Dedup.benchGramBloom(d, expectedItems = 100L, fpp = 1e-6)
-    val bm = Dedup.withContaminationBloom(d, bloom)
-      .filter($"doc_id" % 20 =!= 0)
-      .select("doc_id", "n_maybe_hits", "is_contaminated")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
-    assert(bm.map(x => (x._1, x._3)) == proj.map(x => (x._1, x._3)),
-      s"bloom verdicts: $bm vs $proj")
-    assert(bm.zip(proj).forall { case (b, p) => b._2 >= p._2 },
-      "bloom hit count is an upper bound")
-    val bplan = Dedup.withContaminationBloom(d, bloom).queryExecution.executedPlan.toString
-    assert(!bplan.contains("Join") && !bplan.contains("ScalaUDF"),
-      s"bloom gate must stay joinless and UDF-free:\n$bplan")
   }
 
   test("contamination report: per-benchmark rollup keeps zero-leak rows") {
@@ -1921,8 +1906,6 @@ class DedupTextSpec extends AnyFunSuite with SparkSpec {
       Dedup.incrementalNewBloom(d, seen, expectedItems = 100L, fpp = 1.5))
     intercept[IllegalArgumentException](
       Dedup.incrementalNewBloom(d, seen, expectedItems = 0L))
-    intercept[IllegalArgumentException](
-      Dedup.benchGramBloom(d, expectedItems = 4000000000L))
     // In-budget builds still work end-to-end.
     assert(Dedup.incrementalNewBloom(d, seen, expectedItems = 100L).count() == 1L)
   }

@@ -545,6 +545,15 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(knobs.isEmpty, s"fit knobs on Similarity entry points: ${knobs.mkString(", ")}")
   }
 
+  test("stream lint: no MemoryStream feed in src/main code") {
+    // The stream rows replay their sources as files through
+    // StreamHarness.replay; a MemoryStream feed needs a driver-held copy
+    // of the source. Comment lines may still name them.
+    val fed = srcMainMatches(
+      "(?m)^(?!\\s*(?://|/?\\*))(.*\\b(?:MemoryStream|addData)\\b.*)$")
+    assert(fed.isEmpty, s"MemoryStream feeds under src/main: ${fed.mkString("; ")}")
+  }
+
   test("knob lint: the only session confs graft reads are the checkpoint seam's") {
     // A session conf is an option every user inherits and every
     // oracle row must hold under; adding one has to edit this list.

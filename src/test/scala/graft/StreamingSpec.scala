@@ -1044,11 +1044,48 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     } finally query.stop()
   }
 
+  test("replay harness: every key's state carries across the three micro-batches") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import spark.implicits._
+    import graft.operators.StreamHarness
+    // Per key: the number of micro-batches that reached its state, and
+    // the running sum of v.
+    def counted(in: DataFrame): DataFrame =
+      in.select($"k", $"v").as[(Long, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (k: Long, it: Iterator[(Long, Long)], st: GroupState[(Long, Long)]) =>
+            val (calls, sum) = st.getOption.getOrElse((0L, 0L))
+            val next = (calls + 1, sum + it.map(_._2).sum)
+            st.update(next)
+            Iterator((k, next._1, next._2))
+        }.toDF("k", "calls", "sum")
+    def last(out: DataFrame): Map[Long, (Long, Long)] =
+      out.groupBy("k").agg(max("calls"), max("sum")).as[(Long, Long, Long)]
+        .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    // Four keys with events at nine distinct hours each: every key has
+    // rows in all three value ranges of ts.
+    val src = (for (k <- 1L to 4L; h <- 1 to 9)
+      yield (k, new Timestamp(h * 3600000L), k * 100L + h)).toDF("k", "ts", "v")
+    val sums = src.groupBy("k").agg(sum("v")).as[(Long, Long)].collect().toMap
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(last(StreamHarness.replay(spark, src, "ts")(counted)) ==
+      sums.map { case (k, v) => k -> (3L, v) })
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parts,
+      "the caller's session conf is untouched")
+    // One distinct ts: both quantiles equal it, the later two files are
+    // empty, and each key's state sees the one batch that has rows.
+    val flat = src.withColumn("ts", lit(new Timestamp(3600000L)))
+    assert(last(StreamHarness.replay(spark, flat, "ts")(counted)) ==
+      sums.map { case (k, v) => k -> (1L, v) })
+  }
+
   test("stream_bars query row: finalized streaming windows equal batch bars_daily") {
-    // The driver-checked row itself (MemoryStream + sentinel watermark
-    // flush inside MarketQueries) must reproduce the batch daily bars
-    // row-for-row — same columns, same rounding, same order — so the
-    // DuckDB oracle carries over verbatim.
+    // The driver-checked row itself (replayed micro-batches + sentinel
+    // watermark flush inside MarketQueries) must reproduce the batch
+    // daily bars row-for-row — same columns, same rounding, same order —
+    // so the DuckDB oracle carries over verbatim.
     val sf = "/root/testdata/sf0.001"
     val streamed = graft.operators.MarketQueries.queries("stream_bars")(spark, sf)
       .collect().map(_.toSeq)

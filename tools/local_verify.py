@@ -5,6 +5,9 @@ compare rows / schema / value-hash (columns sorted by name, rows sorted,
 values stringified) — so oracle bugs surface before the driver runs.
 
 Usage: python3 tools/local_verify.py <verify_out_dir> <sf_dir> [query ...]
+
+Exits 1 when a query fails its compare, and when a requested query has
+no dump or no oracle entry.
 """
 import sys, os, json, hashlib
 import duckdb
@@ -41,6 +44,15 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     bad = 0
+    # A requested name must have both a dump and an oracle entry: a
+    # misspelt or oracle-less name would otherwise read as a clean pass.
+    for name in sorted(only):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"{name:28s} NO DUMP in {out_dir}")
+            bad += 1
+        elif name not in oracle:
+            print(f"{name:28s} NO ORACLE entry in oracle_sql.json")
+            bad += 1
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d) or (only and name not in only):
@@ -49,7 +61,8 @@ def main():
             [pd.read_parquet(os.path.join(d, f)) for f in os.listdir(d)
              if f.endswith(".parquet")], ignore_index=True)
         if name not in oracle:
-            print(f"{name:28s} rows={len(spark_df):6d}  (no oracle — rows-only)")
+            if not only:
+                print(f"{name:28s} rows={len(spark_df):6d}  (no oracle — rows-only)")
             continue
         try:
             odf = con.execute(oracle[name]).fetchdf()
