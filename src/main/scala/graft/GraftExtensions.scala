@@ -22,10 +22,12 @@ import graft.functions.{DotProduct, TopKStruct}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Whole-operator extension: the native as-of join's planner rule
-    // (graft.plans.AsOfJoinStrategy). `AsOf.join` also self-installs
-    // via experimental strategies for sessions built without extensions.
+    // Whole-operator extensions: the native as-of join's and the
+    // ordered-series fold's planner rules. `AsOf.join` and `SeriesFold`
+    // also self-install via experimental strategies for sessions built
+    // without extensions.
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.SeriesFoldStrategy)
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),

@@ -99,7 +99,7 @@ object Analytics {
     // construction — the cheapest checkpoint in the repo.
     val pairs = correlationPairs(bars, topK, minDays)
       .filter(col("correlation").isNotNull && !isnan(col("correlation")))
-      .withColumn("correlation", round(col("correlation"), 6))
+      .withColumn("correlation", Publish.round6(col("correlation")))
       .transform(graft.Ckpt.frame)
     val sym = pairs.select(col("u1").as("user_id"), col("u2").as("neighbor_id"),
         col("correlation"), col("n_days"))

@@ -69,7 +69,7 @@ object Bm25 {
           (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_matched"),
-        round(sum(col("__s")), 6).as("score"))
+        Publish.round6(sum(col("__s"))).as("score"))
     TopK.withRank(scored, k,
         Seq(TopK.descNum(col("score")), col("doc_id")))
       .select(col("rk"), col("doc_id"), col("n_terms_matched"), col("score"))

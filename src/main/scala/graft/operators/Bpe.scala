@@ -362,8 +362,8 @@ object Bpe {
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(col("nw"), lit(0L))).as("n_words"),
         sum(coalesce(col("nb"), lit(0L))).as("n_bpe"),
-        round(sum(coalesce(col("nb"), lit(0L))).cast("double") /
-          nullif(sum(coalesce(col("nw"), lit(0L))).cast("double"), lit(0.0)), 6)
+        Publish.round6(sum(coalesce(col("nb"), lit(0L))).cast("double") /
+          nullif(sum(coalesce(col("nw"), lit(0L))).cast("double"), lit(0.0)))
           .as("fertility"))
   }
 }

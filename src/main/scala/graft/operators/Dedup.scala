@@ -528,7 +528,7 @@ object Dedup {
     verified
       .withColumn("n_bench_matches", size(col("__v")).cast("long"))
       .withColumn("best_jaccard",
-        when(size(col("__v")) > 0, round(best("j"), 6)).otherwise(lit(0.0)))
+        when(size(col("__v")) > 0, Publish.round6(best("j"))).otherwise(lit(0.0)))
       .withColumn("best_bench_id",
         when(size(col("__v")) > 0, -best("nb")).otherwise(lit(null).cast("bigint")))
       .withColumn("is_contaminated", (col("n_bench_matches") > 0).cast("int"))
@@ -610,8 +610,8 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
         coalesce(col("n_dup"), lit(0L)).as("n_dup_chunks"),
-        round(col("n_dup").cast("double") /
-          nullif(col("n_chunks").cast("double"), lit(0.0)), 6).as("dup_chunk_ratio"),
+        Publish.round6(col("n_dup").cast("double") /
+          nullif(col("n_chunks").cast("double"), lit(0.0))).as("dup_chunk_ratio"),
         (coalesce(col("n_dup"), lit(0L)) * chunkTokens).as("n_tokens_dropped"))
   }
 
@@ -1095,7 +1095,7 @@ object Dedup {
         sum(col("span_len")).as("total_chars"),
         min(col("span_len")).as("min_len"),
         max(col("span_len")).as("max_len"),
-        round(avg(col("span_len")), 6).as("avg_len"))
+        Publish.round6(avg(col("span_len"))).as("avg_len"))
 
   /** #37c dedup_keep_best: quality-aware canonical selection — resolve
     * near-dup pairs to clusters ([[Components.connectedComponents]]) and
@@ -1298,7 +1298,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_bench_matches"),
         max(struct(col("__j").as("j"), (-col("bench_id")).as("nb"))).as("__best"))
       .select(col("doc_id"), col("n_bench_matches"),
-        round(col("__best.j"), 6).as("best_jaccard"),
+        Publish.round6(col("__best.j")).as("best_jaccard"),
         (-col("__best.nb")).as("best_bench_id"))
     documents.filter(!isBench)
       .select(col("doc_id"), col("lang"), col("source"))
@@ -1325,7 +1325,7 @@ object Dedup {
     val per = fuzzyMatches(documents, benchMod, minJaccard)
       .groupBy(col("bench_id"))
       .agg(count(lit(1)).as("n_corpus_docs"),
-        round(max(col("__j")), 6).as("max_jaccard"))
+        Publish.round6(max(col("__j"))).as("max_jaccard"))
     documents.filter(isBench).select(col("doc_id").as("bench_id"))
       .join(per, Seq("bench_id"), "left_outer")
       .select(col("bench_id"),
@@ -1510,8 +1510,8 @@ object Dedup {
           lit(0L)).as("n_hits"),
         coalesce(sum(col("f")), lit(0L)).as("n_banding_pairs"))
       .withColumn("recall",
-        round(when(col("n_truth") > 0,
-          col("n_hits").cast("double") / col("n_truth")), 6))
+        Publish.round6(when(col("n_truth") > 0,
+          col("n_hits").cast("double") / col("n_truth"))))
   }
 
   /** Exact shingle-pair overlaps by the postings-list form (Elsayed,
@@ -1660,7 +1660,7 @@ object Dedup {
         coalesce(col("n_sents"), lit(0L)).as("n_sents"),
         coalesce(col("n_dup_sents"), lit(0L)).as("n_dup_sents"),
         when(coalesce(col("n_sents"), lit(0L)) > 0,
-          round(col("n_dup_sents").cast("double") / col("n_sents"), 6))
+          Publish.round6(col("n_dup_sents").cast("double") / col("n_sents")))
           .otherwise(lit(0.0)).as("dup_sent_frac"))
   }
 
@@ -1742,9 +1742,9 @@ object Dedup {
     require(minContainment > 0, "inverted-index plan only emits overlapping pairs")
     shinglePairCounts(documents, maxPostingDf, stopShingleDf)
       .select(col("id1"), col("id2"), col("n_common"), col("n1"), col("n2"),
-        round(col("n_common").cast("double") / col("n1"), 6).as("c1_in_2"),
-        round(col("n_common").cast("double") / col("n2"), 6).as("c2_in_1"),
-        round(col("n_common").cast("double") / least(col("n1"), col("n2")), 6)
+        Publish.round6(col("n_common").cast("double") / col("n1")).as("c1_in_2"),
+        Publish.round6(col("n_common").cast("double") / col("n2")).as("c2_in_1"),
+        Publish.round6(col("n_common").cast("double") / least(col("n1"), col("n2")))
           .as("containment"))
       .filter(col("containment") >= minContainment)
   }

@@ -89,7 +89,7 @@ object Dsir {
     dbk.join(broadcast(lr), Seq("bucket"))
       .groupBy(col("doc_id"))
       .agg(sum(col("m")).as("n_grams"),
-        round(sum(col("m") * col("lw")), 6).as("log_weight"))
+        Publish.round6(sum(col("m") * col("lw"))).as("log_weight"))
   }
 
   /** Gumbel-top-k importance resampling — the paper's "sample without
@@ -107,7 +107,7 @@ object Dsir {
     // perturbed key compares UNROUNDED nowhere, so a sub-ulp libm ln
     // difference can never flip a cross-engine rank.
     val perturbed = weighted.withColumn("__g",
-      round(col("log_weight") - log(-log(u)), 6))
+      Publish.round6(col("log_weight") - log(-log(u))))
     TopK.withRank(perturbed, k,
         Seq(TopK.descNum(col("__g")), col("doc_id")))
       .select(col("rk"), col("doc_id"), col("n_grams"), col("log_weight"))

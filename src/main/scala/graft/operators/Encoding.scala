@@ -123,8 +123,8 @@ object Encoding {
       .withColumn("n_mojibake_chars",
         (length(col(textCol)) - length(col("text_fixed"))).cast("long"))
       .withColumn("charset_confidence",
-        round(lit(1.0) - col("n_mojibake_chars").cast("double") /
-          greatest(length(col(textCol)).cast("double"), lit(1.0)), 6))
+        Publish.round6(lit(1.0) - col("n_mojibake_chars").cast("double") /
+          greatest(length(col(textCol)).cast("double"), lit(1.0))))
   }
 
   /** #47ab charset_report: the per-source rollup of [[withFixedEncoding]]
@@ -140,5 +140,5 @@ object Encoding {
       .agg(count(lit(1)).as("n_docs"),
         sum((col("n_mojibake_chars") > 0).cast("long")).as("n_damaged"),
         sum(col("n_mojibake_chars")).as("chars_repaired"),
-        round(avg(col("charset_confidence")), 6).as("avg_confidence"))
+        Publish.round6(avg(col("charset_confidence"))).as("avg_confidence"))
 }

@@ -55,12 +55,12 @@ object Features {
     feats
       .filter(required.map(col(_).isNotNull).reduce(_ && _))
       .select(col(Indicators.KeyCol), col(Indicators.OrdCol),
-        round(col("__ret1"), 6).as("ret_1"),
-        round(col("__mom5"), 6).as("mom_5"),
-        round(col("__dist5"), 6).as("dist_ma_5"),
-        round(col("__dist20"), 6).as("dist_ma_20"),
-        round(col("__vol20"), 6).as("vol_20"),
-        round(col("__vratio"), 6).as("volume_ratio"),
-        round(col("__label"), 6).as("label_fwd"))
+        Publish.round6(col("__ret1")).as("ret_1"),
+        Publish.round6(col("__mom5")).as("mom_5"),
+        Publish.round6(col("__dist5")).as("dist_ma_5"),
+        Publish.round6(col("__dist20")).as("dist_ma_20"),
+        Publish.round6(col("__vol20")).as("vol_20"),
+        Publish.round6(col("__vratio")).as("volume_ratio"),
+        Publish.round6(col("__label")).as("label_fwd"))
   }
 }

@@ -16,7 +16,7 @@ object FundamentalsQueries {
     "fund_quarterly_revenue" -> ((s, d) => {
       val df = Fundamentals.quarterlyRevenue(Tables.orders(s, d), Tables.lineitem(s, d))
       df.withColumn("revenue", round(col("revenue"), 4))
-        .withColumn("growth", round(col("growth"), 6))
+        .withColumn("growth", Publish.round6(col("growth")))
         .orderBy(col("custkey"), col("quarter"))
     }),
 
@@ -36,17 +36,17 @@ object FundamentalsQueries {
         // Output avg as round4(total)/n: bit-identical across engines,
         // unlike round(avg(x), 4) whose last-bit sum-order noise can land
         // either side of a rounding half.
-        .withColumn("avg_order", round(col("total_rev") / col("n_orders"), 6))
+        .withColumn("avg_order", Publish.round6(col("total_rev") / col("n_orders")))
         .drop("n_orders")
         .orderBy(col("custkey"))),
 
     "fund_fair_value_relative" -> ((s, d) => {
       val df = Fundamentals.fairValueRelative(Tables.customer(s, d), Tables.orders(s, d))
       df.withColumn("price", round(col("price"), 4))
-        .withColumn("pe", round(col("pe"), 6))
-        .withColumn("sector_pe", round(col("sector_pe"), 6))
+        .withColumn("pe", Publish.round6(col("pe")))
+        .withColumn("sector_pe", Publish.round6(col("sector_pe")))
         .withColumn("fair_value", round(col("fair_value"), 4))
-        .withColumn("delta", round(col("delta"), 6))
+        .withColumn("delta", Publish.round6(col("delta")))
         .orderBy(col("custkey"))
     }),
 
@@ -54,7 +54,7 @@ object FundamentalsQueries {
       val df = Fundamentals.fairValueDcf(Tables.orders(s, d))
       df.withColumn("fair_value", round(col("fair_value"), 4))
         .withColumn("price", round(col("price"), 4))
-        .withColumn("delta", round(col("delta"), 6))
+        .withColumn("delta", Publish.round6(col("delta")))
         .orderBy(col("custkey"))
     }),
 
@@ -71,20 +71,20 @@ object FundamentalsQueries {
         .withColumn("gross", round(col("gross"), 4))
         .withColumn("earnings", round(col("earnings"), 4))
         .withColumn("debt", round(col("debt"), 4))
-        .withColumn("pe", round(col("gross") / nullif(col("earnings"), lit(0.0)), 6))
-        .withColumn("ps", round(col("gross") / col("n_items"), 6))
-        .withColumn("roe", round(col("earnings") / nullif(col("equity"), lit(0.0)), 6))
+        .withColumn("pe", Publish.round6(col("gross") / nullif(col("earnings"), lit(0.0))))
+        .withColumn("ps", Publish.round6(col("gross") / col("n_items")))
+        .withColumn("roe", Publish.round6(col("earnings") / nullif(col("equity"), lit(0.0))))
         // + 0.0 normalizes −0.0 (debt 0 over negative equity): Spark's
         // round collapses the sign, DuckDB's keeps it — same value,
         // different string, hash mismatch.
         .withColumn("debt_to_equity",
-          round(col("debt") / nullif(col("equity"), lit(0.0)), 6) + lit(0.0))
+          Publish.round6(col("debt") / nullif(col("equity"), lit(0.0))) + lit(0.0))
         .withColumn("current_ratio",
-          round(col("equity") / nullif(col("gross") / col("n_items"), lit(0.0)), 6))
+          Publish.round6(col("equity") / nullif(col("gross") / col("n_items"), lit(0.0))))
         .withColumn("gross_margin",
-          round(col("earnings") / nullif(col("gross"), lit(0.0)), 6))
+          Publish.round6(col("earnings") / nullif(col("gross"), lit(0.0))))
         .withColumn("revenue_growth",
-          round(col("earnings") / nullif(lag(col("earnings"), 1).over(wq), lit(0.0)) - 1, 6))
+          Publish.round6(col("earnings") / nullif(lag(col("earnings"), 1).over(wq), lit(0.0)) - 1))
         .drop("equity")
         .orderBy(col("custkey"), col("quarter"))
     }),
@@ -115,8 +115,8 @@ object FundamentalsQueries {
         .withColumn("gross_revenue", round(col("gross_revenue"), 4))
         .withColumn("discounts", round(col("discounts"), 4))
         .withColumn("net_revenue", round(col("net_revenue"), 4))
-        .withColumn("tax_expense", round(col("tax_expense"), 6))
-        .withColumn("net_income", round(col("net_income"), 6))
+        .withColumn("tax_expense", Publish.round6(col("tax_expense")))
+        .withColumn("net_income", Publish.round6(col("net_income")))
         .orderBy(col("custkey"), col("period"))),
 
     "balance_sheet" -> ((s, d) =>
@@ -139,7 +139,7 @@ object FundamentalsQueries {
 
     "corporate_events" -> ((s, d) =>
       Statements.corporateEvents(Tables.events(s, d))
-        .withColumn("value", round(col("value"), 6))
+        .withColumn("value", Publish.round6(col("value")))
         .orderBy(col("entity_id"), col("rk"))),
   )
 

@@ -57,7 +57,7 @@ object Hybrid {
     val cand = e.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
-        round(Similarity.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+        Publish.round6(Similarity.dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
           .as("cos_sim"))
     val dense = TopK.withRank(cand, poolK,
         Seq(TopK.descNum(col("cos_sim")), col("doc_id")))
@@ -112,9 +112,9 @@ object Hybrid {
   def fuse(lex: DataFrame, dense: DataFrame, k: Int = 10,
            rrfK: Int = 60): DataFrame = {
     val fused = lex.join(dense, Seq("doc_id"), "full_outer")
-      .withColumn("rrf_score", round(
+      .withColumn("rrf_score", Publish.round6(
         coalesce(lit(1.0) / (lit(rrfK) + col("lex_rk")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("dense_rk")), lit(0.0)), 6))
+          coalesce(lit(1.0) / (lit(rrfK) + col("dense_rk")), lit(0.0))))
     TopK.withRank(fused, k, Seq(TopK.descNum(col("rrf_score")), col("doc_id")))
       .select(col("rk"), col("doc_id"), col("lex_rk"), col("dense_rk"),
         col("rrf_score"))

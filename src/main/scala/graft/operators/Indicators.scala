@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
+import graft.plans.SeriesFold
+
 /** Technical indicators over per-key ordered bar series.
   *
   * Spark re-expression of the reference's `TechnicalIndicators`
@@ -20,20 +22,17 @@ import org.apache.spark.sql.functions._
   * (gated via `count(x) over frame == p`).
   *
   * EMA (`ewm(span, adjust=False)`) is a linear recursion, which no SQL
-  * window expresses directly. It's computed as a per-key fold:
-  * `collect_list` the (small, bar-grain) series per key, fold with the
-  * `aggregate` higher-order function (stays inside Catalyst/codegen),
-  * `posexplode` back. Parallelism is across keys; per-key state is the
-  * bar-grain series (years of daily bars ≈ KBs), never tick grain.
+  * window expresses directly. EMA and MACD are one
+  * [[graft.plans.SeriesFold]]: an operator that streams each key's
+  * ordered rows once with O(spans) state, whatever the series length.
   *
   * Plan shape: every entry point ([[enrichAll]] and each `withX`) is one
   * call of [[build]], which evaluates any subset of the families in a
   * fixed number of projections:
-  *  - one series fold for all fold families (EMA, MACD): one guarded
-  *    `collect_list`, the fold arrays in projections of their own (a HOF
-  *    fold is interpreted; below the explode it runs once per key, not
-  *    once per column that reads it), one `posexplode` that reads the bar
-  *    fields back and slices each array;
+  *  - one series fold for all fold families (EMA, MACD): a
+  *    `SeriesFoldExec` over the rows clustered on the key and sorted by
+  *    (key, date, the remaining bar columns), whose Exchange and Sort the
+  *    level windows reuse;
   *  - one window projection per dependency level over `(key ORDER BY
   *    date)`: level 1 over bar columns (lags, gated rolling count / avg /
   *    stddev, row_number, running first), level 2 over level-1 values
@@ -50,17 +49,6 @@ import org.apache.spark.sql.functions._
 object Indicators {
   val KeyCol = "user_id"
   val OrdCol = "date"
-
-  /** Hard ceiling on the per-key series length the collect_list fold
-    * paths ([[withEma]]/[[withMacd]]) will materialize. One key's whole
-    * series becomes a single array in one task — bar-grain series are
-    * KBs, but a tick-grain misuse would OOM the executor silently.
-    * Past the ceiling the fold raises instead (use
-    * [[withEmaStreaming]], whose per-key state is O(spans), or raise
-    * the limit knowingly). 100k rows ≈ a year of minute bars ≈ 800 KB
-    * per array — comfortably inside a task, far outside accident range.
-    */
-  val MaxFoldSeriesLen: Int = 100000
 
   /** Full enrichment chain — every indicator family in one call, the
     * Spark twin of the reference applying its whole `TechnicalIndicators`
@@ -104,18 +92,16 @@ object Indicators {
     * null until span observations (min_periods), recursion seeded at the
     * first bar exactly as pandas ewm(adjust=False).
     */
-  def withEma(bars: DataFrame, spans: Seq[Int],
-              maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame =
-    build(bars, Families(ema = Some(spans), maxSeriesLen = maxSeriesLen))
+  def withEma(bars: DataFrame, spans: Seq[Int]): DataFrame =
+    build(bars, Families(ema = Some(spans)))
 
   /** MACD (technical_indicators.py:83 add_macd): macd = EMA_fast−EMA_slow
     * masked to null before `slow` observations; signal = EMA(span=sig) of
     * the masked macd series (recursion seeded at the first non-null macd,
     * matching pandas ewm over a leading-NaN series); hist = macd − signal.
     */
-  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9,
-               maxSeriesLen: Int = MaxFoldSeriesLen): DataFrame =
-    build(bars, Families(macd = Some((fast, slow, sig)), maxSeriesLen = maxSeriesLen))
+  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9): DataFrame =
+    build(bars, Families(macd = Some((fast, slow, sig))))
 
   /** RSI (technical_indicators.py:62 add_rsi): rolling-mean smoothing
     * (the reference's choice — not Wilder's), rs = avg_gain/avg_loss with
@@ -151,73 +137,11 @@ object Indicators {
   def withReturns(bars: DataFrame, horizons: Seq[Int] = Seq(5, 10)): DataFrame =
     build(bars, Families(returns = Some(horizons)))
 
-  /** Long-series EMA: the same `ema_{span}` columns and pandas
-    * ewm(adjust=False) recursion as [[withEma]], computed as a streaming
-    * per-partition fold instead of a per-key collect_list array —
-    * per-key state is O(spans) doubles regardless of series length, so
-    * a minute-grain 100×-scale deployment (millions of rows per key)
-    * never materializes a series. Shape: one hash repartition on the
-    * key, sortWithinPartitions on (key, date, remaining columns) — the
-    * exact per-key order `sort_array` gives the fold — then a single
-    * mapPartitions pass carrying the running EMA per span. Arithmetic
-    * is the identical `a*v + (1-a)*prev` double recursion with
-    * a = 2.0/(span+1): bit-equal output (spec-asserted), including the
-    * null-close poison semantics of the array fold (a null close nulls
-    * that key's EMAs from that row on).
-    */
-  def withEmaStreaming(bars: DataFrame, spans: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val inSchema = bars.schema
-    val outSchema = StructType(inSchema.fields ++
-      spans.map(sp => StructField(s"ema_$sp", DoubleType, nullable = true)))
-    val keyIdx = inSchema.fieldIndex(KeyCol)
-    val closeIdx = inSchema.fieldIndex("close")
-    val spanArr = spans.toArray
-    val alphas = spanArr.map(sp => 2.0 / (sp + 1))
-    val others = bars.columns.filter(_ != KeyCol).toSeq
-    val ordered = Seq(OrdCol) ++ others.filterNot(_ == OrdCol)
-    bars
-      .repartition(col(KeyCol))
-      .sortWithinPartitions((KeyCol +: ordered).map(col): _*)
-      .mapPartitions { it =>
-        var started = false
-        var curKey: Any = null
-        var pos = 0L
-        var poisoned = false
-        val e = new Array[Double](spanArr.length)
-        it.map { row =>
-          val k = row.get(keyIdx)
-          if (!started || k != curKey) {
-            started = true; curKey = k; pos = 0L; poisoned = false
-          } else pos += 1
-          val cNull = row.isNullAt(closeIdx)
-          if (cNull) poisoned = true
-          else {
-            val c = row.getDouble(closeIdx)
-            var i = 0
-            while (i < e.length) {
-              e(i) = if (pos == 0L) c else alphas(i) * c + (1.0 - alphas(i)) * e(i)
-              i += 1
-            }
-          }
-          val out = new Array[Any](spanArr.length)
-          var i = 0
-          while (i < spanArr.length) {
-            out(i) = if (!poisoned && pos >= spanArr(i) - 1)
-              java.lang.Double.valueOf(e(i)) else null
-            i += 1
-          }
-          Row.fromSeq(row.toSeq ++ out)
-        }
-      }(Encoders.row(outSchema))
-  }
-
   /** The families one [[build]] evaluates; `None` / empty skips one. */
   private final case class Families(macd: Option[(Int, Int, Int)] = None,
     ema: Option[Seq[Int]] = None, sma: Seq[Int] = Nil, rsi: Option[Int] = None,
     bollinger: Option[(Int, Double)] = None, atr: Option[Int] = None, volume: Boolean = false,
-    returns: Option[Seq[Int]] = None, maxSeriesLen: Int = MaxFoldSeriesLen)
+    returns: Option[Seq[Int]] = None)
 
   /** Every requested family over `bars`: the series fold, the window
     * levels, then one projection appending the family columns in
@@ -227,7 +151,8 @@ object Indicators {
     * previous close) evaluate it once.
     */
   private def build(bars: DataFrame, f: Families): DataFrame = {
-    val folded = if (f.macd.isEmpty && f.ema.isEmpty) bars else foldSeries(bars, f)
+    val folded = if (f.macd.isEmpty && f.ema.isEmpty) bars
+      else SeriesFold(bars, KeyCol, OrdCol, "close", f.ema.toSeq.flatten.distinct, f.macd)
     // level 1 over bar columns, level 2 over level-1 values, the month window
     val levels = Seq.fill(3)(mutable.LinkedHashMap.empty[String, Column])
     def at(level: Int, name: String, c: => Column): Column = {
@@ -242,9 +167,11 @@ object Indicators {
     lazy val delta = close - lagged(1)
 
     val out = mutable.ArrayBuffer.empty[(String, Column)]
-    f.macd.foreach(_ => out ++= Seq("macd" -> col("__f_macd"), "macd_signal" -> col("__f_sig"),
-      "macd_hist" -> (col("__f_macd") - col("__f_sig"))))
-    f.ema.toSeq.flatten.foreach(sp => out += s"ema_$sp" -> col(s"__f_ema$sp"))
+    f.macd.foreach { _ =>
+      val (macd, signal) = (col(SeriesFold.MacdName), col(SeriesFold.SignalName))
+      out ++= Seq("macd" -> macd, "macd_signal" -> signal, "macd_hist" -> (macd - signal))
+    }
+    f.ema.toSeq.flatten.foreach(sp => out += s"ema_$sp" -> col(SeriesFold.emaName(sp)))
     f.sma.foreach { p =>
       val ma = avgOf("close", p)
       out ++= Seq(s"ma_$p" -> ma, s"dist_ma_$p" -> (close - ma) / nullif(ma, lit(0.0)))
@@ -295,77 +222,10 @@ object Indicators {
       df.select(col("*") +: level.map { case (n, c) => c.as(n) }.toSeq: _*)
     }
     val outputs = out.toMap
-    val kept = folded.columns.toSeq.filterNot(_.startsWith("__f_"))
+    // With a fold family the key comes first: the published column order.
+    val kept = if (folded eq bars) bars.columns.toSeq
+      else KeyCol +: bars.columns.toSeq.filterNot(_ == KeyCol)
     windowed.select(kept.map(c => outputs.getOrElse(c, col(c)).as(c)) ++
       out.filterNot(o => kept.contains(o._1)).distinctBy(_._1).map { case (n, c) => c.as(n) }: _*)
   }
-
-  /** SQL fold expression: pandas ewm(span, adjust=False) over an array,
-    * seeded at its first element by default. alpha is written as the
-    * expression `2.0/(span+1)` so Spark and the DuckDB oracle evaluate the
-    * identical double.
-    */
-  private def emaFold(src: String, span: Int)(seed: String = s"element_at($src, 1)",
-                      rest: String = s"slice($src, 2, size($src) - 1)"): String = {
-    // 2.0D: a plain `2.0` literal parses as DECIMAL(2,1) and decimal
-    // division truncates alpha to 6 decimals (0.153846 != 2.0/13) —
-    // the double literal keeps the full-precision recursion.
-    val a = s"(2.0D/${span + 1})"
-    s"""aggregate($rest, array($seed),
-       |  (acc, v) -> array_append(acc, $a * v + (1.0 - $a) * element_at(acc, -1)))""".stripMargin
-  }
-
-  /** The bars with `__f_ema{span}` / `__f_macd` / `__f_sig` appended
-    * (key first, then the other bar columns in order): one guarded
-    * series collect per key, the span folds in one projection, MACD and
-    * its signal over them, one posexplode slicing every array at `pos`.
-    */
-  private def foldSeries(bars: DataFrame, f: Families): DataFrame = {
-    val others = bars.columns.filter(_ != KeyCol).toSeq
-    val ordered = Seq(OrdCol) ++ others.filterNot(_ == OrdCol)
-    val spans = (f.macd.toSeq.flatMap { case (fast, slow, _) => Seq(fast, slow) } ++
-      f.ema.toSeq.flatten).distinct
-    val series = guarded(bars, f.maxSeriesLen)
-      .groupBy(col(KeyCol))
-      .agg(sort_array(collect_list(struct(ordered.map(col): _*))).as("s"))
-      .withColumn("closes", expr("transform(s, x -> x.close)"))
-      .select(col(KeyCol) +: col("s") +: spans.map(sp => expr(emaFold("closes", sp)()).as(s"__e$sp")): _*)
-    val pos = col("pos")
-    // A key with fewer than `slow` bars has no unmasked macd to seed the
-    // signal (and slice/element_at would raise on the negative length /
-    // missing index under ANSI): its signal array is null, so macd,
-    // macd_signal and macd_hist stay null for the whole key.
-    val (arrays, sliced) = f.macd.fold((series, Seq.empty[Column])) { case (fast, slow, sig) =>
-      val withMacd = series
-        .withColumn("__macd", expr(s"zip_with(__e$fast, __e$slow, (f, s) -> f - s)"))
-        .withColumn("__sig", expr(s"CASE WHEN size(__macd) >= $slow THEN " + emaFold("__macd", sig)(
-          s"element_at(__macd, $slow)", s"slice(__macd, ${slow + 1}, size(__macd) - $slow)") + " END"))
-      (withMacd, Seq(
-        when(pos >= slow - 1, element_at(col("__macd"), pos + 1)).as("__f_macd"),
-        when(pos >= slow + sig - 2, element_at(col("__sig"), pos - slow + 2)).as("__f_sig")))
-    }
-    val emas = f.ema.toSeq.flatten.distinct.map(sp =>
-      when(pos >= sp - 1, element_at(col(s"__e$sp"), pos + 1)).as(s"__f_ema$sp"))
-    arrays.select(col(KeyCol) +: arrays.columns.filterNot(Set(KeyCol, "s")).map(col).toSeq :+
-        posexplode(col("s")): _*)
-      .select((col(KeyCol) +: others.map(c => col("col").getField(c).as(c))) ++ sliced ++ emas: _*)
-  }
-
-  /** `bars`, raising on a key with more than `maxLen` rows BEFORE
-    * collect_list materializes its series (a post-hoc size(s) check would
-    * OOM the aggregate first for a truly tick-grain key). A keyed window
-    * count buffers rows in a spill-safe sorter, inside the same single
-    * derivation of `bars` (an aggregate-plus-join guard re-derived the
-    * upstream bars, 2× on enrichAll queries), and shares the collect's
-    * Exchange on the key.
-    */
-  private def guarded(bars: DataFrame, maxLen: Int): DataFrame =
-    bars.withColumn("__n", count(lit(1)).over(Window.partitionBy(col(KeyCol))))
-      .filter(when(col("__n") > maxLen, raise_error(concat(
-        lit(s"Indicators fold: per-key series exceeds maxSeriesLen=$maxLen (n="),
-        col("__n").cast("string"),
-        lit(") — the array fold holds one key's whole series in a task; " +
-          "use withEmaStreaming for long series or raise maxSeriesLen"))))
-        .otherwise(lit(true)))
-      .drop("__n")
 }

@@ -147,7 +147,7 @@ object LlmQueries {
     // and it is CorpusPipeline.curate's default pair emitter.
     "dedup_minhash" -> ((s, d) =>
       Dedup.minhashPairsPortable(docs(s, d))
-        .withColumn("jaccard", round(col("jaccard"), 6))
+        .withColumn("jaccard", Publish.round6(col("jaccard")))
         .orderBy(col("id1"), col("id2"))),
 
     "dedup_simhash" -> ((s, d) =>
@@ -160,7 +160,7 @@ object LlmQueries {
 
     "ngram_jaccard" -> ((s, d) =>
       Dedup.ngramJaccardInvertedIndex(docs(s, d))
-        .withColumn("jaccard", round(col("jaccard"), 6))
+        .withColumn("jaccard", Publish.round6(col("jaccard")))
         .orderBy(col("id1"), col("id2"))),
 
     // Asymmetric containment — the quote/excerpt detector symmetric
@@ -182,7 +182,7 @@ object LlmQueries {
 
     "embed_near_dup" -> ((s, d) =>
       Similarity.nearDupPairs(emb(s, d))
-        .withColumn("cos_sim", round(col("cos_sim"), 6))
+        .withColumn("cos_sim", Publish.round6(col("cos_sim")))
         .orderBy(col("id1"), col("id2"))),
 
     // Label-bucketed emitter: oracle-expressible (the recursive CTE
@@ -390,9 +390,8 @@ object LlmQueries {
       TextAnalysis.langId(docs(s, d)).orderBy(col("doc_id"))),
 
     "text_quality" -> ((s, d) => {
-      val df = TextAnalysis.textQuality(docs(s, d))
-      Seq("avg_word_len", "punct_ratio", "upper_ratio", "stop_ratio")
-        .foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), 6)))
+      Publish.roundCols(TextAnalysis.textQuality(docs(s, d)),
+        Seq("avg_word_len", "punct_ratio", "upper_ratio", "stop_ratio"))
         .orderBy(col("doc_id"))
     }),
 
@@ -512,7 +511,7 @@ object LlmQueries {
     "media_features" -> ((s, d) => {
       val feats = graft.ops.Multimodal.featurize(docs(s, d)).toDF()
       feats.select(col("doc_id"), col("n_bytes"),
-          round(col("mean_byte"), 6).as("mean_byte"),
+          Publish.round6(col("mean_byte")).as("mean_byte"),
           posexplode(col("histogram")).as(Seq("bin", "bin_count")))
         .orderBy(col("doc_id"), col("bin"))
     }),
@@ -595,7 +594,7 @@ object LlmQueries {
 
     "corpus_stats" -> ((s, d) =>
       TextAnalysis.corpusStats(docs(s, d))
-        .withColumn("avg_words", round(col("avg_words"), 6))
+        .withColumn("avg_words", Publish.round6(col("avg_words")))
         .orderBy(col("lang"))),
 
     // The synthetic corpus carries no digits/emails, so the scrub query

@@ -70,18 +70,6 @@ object MarketQueries {
       ordered(roundCols(df, Seq("ema_5", "ema_12", "ema_26")))
     }),
 
-    // #9b the LONG-SERIES EMA path driven through the driver gate
-    // (r10): withEmaStreaming's repartition + sortWithinPartitions +
-    // mapPartitions fold (O(spans) state per key — the plan the array
-    // fold's maxSeriesLen guard hands 100k+-bar series to) checked
-    // against the SAME oracle as ind_ema (one SQL, two genuinely
-    // different physical plans — the range_join shared-constant rule).
-    "ind_ema_streaming" -> ((s, d) => {
-      val df = Indicators.withEmaStreaming(bars(s, d), Seq(5, 12, 26))
-        .select("user_id", "date", "close", "ema_5", "ema_12", "ema_26")
-      ordered(roundCols(df, Seq("ema_5", "ema_12", "ema_26")))
-    }),
-
     // #49b StreamIndicators through the replay harness, checked
     // against the batch-plan oracle: daily bars replay in three
     // micro-batches (split on event time), smaEma folds them under
@@ -223,26 +211,6 @@ object MarketQueries {
   private def emaFold(alphaExpr: String): String =
     s"(acc, v) -> $alphaExpr * v + (1.0 - $alphaExpr) * acc"
 
-  /** One SQL for the `ind_ema` / `ind_ema_streaming` pair — the
-    * array-fold default and the long-series mapPartitions fold assert
-    * the same EMA semantics through two genuinely different physical
-    * plans (the range_join shared-constant rule).
-    */
-  private lazy val IndEmaOracle: String =
-    s"""$BarsCte,
-       |p AS (
-       |  SELECT user_id, date, close,
-       |    row_number() OVER wk AS rn,
-       |    list(close) OVER wc AS vals
-       |  FROM bars
-       |  WINDOW wk AS (PARTITION BY user_id ORDER BY date),
-       |         wc AS (PARTITION BY user_id ORDER BY date ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |SELECT user_id, date, close,
-       |  CASE WHEN rn >= 5 THEN round(list_reduce(vals, ${emaFold("(2.0/6)")}), 6) END AS ema_5,
-       |  CASE WHEN rn >= 12 THEN round(list_reduce(vals, ${emaFold("(2.0/13)")}), 6) END AS ema_12,
-       |  CASE WHEN rn >= 26 THEN round(list_reduce(vals, ${emaFold("(2.0/27)")}), 6) END AS ema_26
-       |FROM p ORDER BY user_id, date""".stripMargin
-
   def oracles: Map[String, String] = Map(
     "clean_events" ->
       s"""$BarsCte
@@ -354,11 +322,21 @@ object MarketQueries {
          |  round((close - ma_20) / ma_20, 6) AS dist_ma_20
          |FROM t ORDER BY user_id, date""".stripMargin,
 
-    "ind_ema" -> IndEmaOracle,
-
-    // One SQL, two physical plans: the array-fold default and the
-    // long-series mapPartitions fold assert the same EMA semantics.
-    "ind_ema_streaming" -> IndEmaOracle,
+    // each EMA re-folds the key's closes up to the row with list_reduce
+    "ind_ema" ->
+      s"""$BarsCte,
+         |p AS (
+         |  SELECT user_id, date, close,
+         |    row_number() OVER wk AS rn,
+         |    list(close) OVER wc AS vals
+         |  FROM bars
+         |  WINDOW wk AS (PARTITION BY user_id ORDER BY date),
+         |         wc AS (PARTITION BY user_id ORDER BY date ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+         |SELECT user_id, date, close,
+         |  CASE WHEN rn >= 5 THEN round(list_reduce(vals, ${emaFold("(2.0/6)")}), 6) END AS ema_5,
+         |  CASE WHEN rn >= 12 THEN round(list_reduce(vals, ${emaFold("(2.0/13)")}), 6) END AS ema_12,
+         |  CASE WHEN rn >= 26 THEN round(list_reduce(vals, ${emaFold("(2.0/27)")}), 6) END AS ema_26
+         |FROM p ORDER BY user_id, date""".stripMargin,
 
     // The streaming twin checks against the same BATCH plan the spec
     // proves it bit-equal to: w5 rolling mean + the EMA list fold.

@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Literal, Multiply, Round, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
 
-/** How the oracle-checked rows publish fractional columns: to 6
-  * decimals, the way the DuckDB oracles' `round(x, 6)` does.
+/** How graft publishes fractional columns: to 6 decimals, the way the
+  * DuckDB oracles' `round(x, 6)` does. Every 6-decimal round under
+  * `src/main` goes through [[round6]] (an `OpsSpec` lint holds it).
   *
   * DuckDB rounds a double as `round(x * 1e6) / 1e6`, half away from
   * zero on the scaled binary value. Spark's `round(x, 6)` instead rounds
@@ -18,9 +21,21 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Publish {
 
+  /** `c` rounded to 6 decimals by the rule above, chosen by its type once
+    * the column is resolved.
+    */
+  def round6(c: Column): Column =
+    GraftColumnBridge.column(Round6(GraftColumnBridge.expression(c)))
+
   def roundCols(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.withColumns(cols.map { c =>
-      c -> (if (df.schema(c).dataType == DoubleType) round(col(c) * 1e6) / 1e6
-            else round(col(c), 6))
-    }.toMap)
+    df.withColumns(cols.map(c => c -> round6(col(c))).toMap)
+
+  private case class Round6(child: Expression) extends RuntimeReplaceable
+      with UnaryLike[Expression] {
+    override lazy val replacement: Expression = if (child.dataType == DoubleType)
+      Divide(Round(Multiply(child, Literal(1e6)), Literal(0)), Literal(1e6)) else Round(child, Literal(6))
+    // the name an unaliased column gets, as Spark's round(x, 6) had it
+    override def sql: String = s"round(${child.sql}, 6)"
+    override protected def withNewChildInternal(c: Expression): Round6 = copy(child = c)
+  }
 }

@@ -30,9 +30,9 @@ object Relational {
         round(sum($"l_extendedprice"), 4).as("sum_base_price"),
         round(sum($"l_extendedprice" * (lit(1) - $"l_discount")), 4).as("sum_disc_price"),
         round(sum($"l_extendedprice" * (lit(1) - $"l_discount") * (lit(1) + $"l_tax")), 4).as("sum_charge"),
-        round(avg($"l_quantity"), 6).as("avg_qty"),
-        round(avg($"l_extendedprice"), 6).as("avg_price"),
-        round(avg($"l_discount"), 6).as("avg_disc"),
+        Publish.round6(avg($"l_quantity")).as("avg_qty"),
+        Publish.round6(avg($"l_extendedprice")).as("avg_price"),
+        Publish.round6(avg($"l_discount")).as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy($"l_returnflag", $"l_linestatus")
   }
@@ -118,7 +118,7 @@ object Relational {
     byBrand
       .crossJoin(broadcast(byBrand.agg(sum($"rev_raw").as("total"))))
       .select($"p_brand", round($"rev_raw", 4).as("revenue"), $"n_items",
-        round($"rev_raw" / $"total" * 100, 6).as("share_pct"))
+        Publish.round6($"rev_raw" / $"total" * 100).as("share_pct"))
       .orderBy($"p_brand")
   }
 }

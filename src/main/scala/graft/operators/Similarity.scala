@@ -147,7 +147,7 @@ object Similarity {
       col("nrm").as("cn"), col("label"))
     val cand = broadcast(queries).join(corpus, col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        Publish.round6(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
       .select(col("query_id"), col("neighbor_id"), col("label"), col("cos_sim"))
     TopK.groupedWithRank(cand, Seq(col("query_id")), k,
         Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
@@ -217,7 +217,7 @@ object Similarity {
         col("nrm").as("cn"), col("sig")), Seq("sig"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        Publish.round6(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
       // no dedup needed: probe sigs are pairwise distinct and a neighbor
       // has exactly one sig, so each (query, neighbor) matches once.
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
@@ -247,7 +247,7 @@ object Similarity {
     truth.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall", round(col("n_hits") / lit(k.toDouble), 6))
+      .withColumn("recall", Publish.round6(col("n_hits") / lit(k.toDouble)))
   }
 
   /** #43b ann_ivf_topk: inverted-file ANN — the production scale path
@@ -294,7 +294,7 @@ object Similarity {
     val cand = broadcast(probed).join(assigned, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        Publish.round6(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
       .select(col("query_id"), col("neighbor_id"), col("cell"), col("cos_sim"))
     TopK.groupedWithRank(cand, Seq(col("query_id")), k,
         Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
@@ -365,7 +365,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("nrm").as("cn")), Seq("neighbor_id"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        Publish.round6(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
       .select(col("query_id"), col("neighbor_id"), col("adc_cos"), col("cos_sim"))
     TopK.groupedWithRank(refined, Seq(col("query_id")), k,
         Seq(TopK.descNum(col("cos_sim")), col("neighbor_id")))
@@ -453,7 +453,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("nrm").as("cn")), Seq("neighbor_id"))
       .withColumn("cos_sim",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        Publish.round6(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))))
       .select(col("query_id"), col("neighbor_id"), col("cell"),
         col("adc_cos"), col("cos_sim"))
     TopK.groupedWithRank(refined, Seq(col("query_id")), k,
@@ -559,9 +559,9 @@ object Similarity {
     * replays), never a dot product against the corpus.
     */
   private def pqAdcCol(m: Int): Column =
-    round(lit(1.0) -
+    Publish.round6(lit(1.0) -
       (0 until m).map(mi => element_at(element_at(col("lut"), mi + 1),
-        element_at(col("codes"), mi + 1) + 1)).reduce(_ + _) / lit(2.0), 6)
+        element_at(col("codes"), mi + 1) + 1)).reduce(_ + _) / lit(2.0))
 
   /** #41b semantic_dedup: SemDeDup (Abbas et al. 2023) — semantic
     * deduplication over embedding clusters. Near-duplicate SEMANTICS
@@ -637,10 +637,9 @@ object Similarity {
   private def centroidAssigned(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     val cn2 = cents.map(_.foldLeft(0.0)((s, x) => s + x * x))
     assignCell(e, cents)
-      .withColumn("cen_cos", round(
+      .withColumn("cen_cos", Publish.round6(
         (element_at(typedlit(cn2), col("cell") + 1) - col("d2")) / lit(2.0)
-          / (col("nrm") * element_at(typedlit(cn2.map(math.sqrt)), col("cell") + 1)),
-        6))
+          / (col("nrm") * element_at(typedlit(cn2.map(math.sqrt)), col("cell") + 1))))
       .drop("d2")
   }
 
@@ -678,11 +677,11 @@ object Similarity {
       count(lit(1)).as("n_cell"),
       sum(mi).as("__s1"), sum(mi * mi).as("__s2"))
       .select(col("cell"), col("n_cell"),
-        round(col("__s1").cast("double") / (nD * 1e6), 6).as("cell_mean"),
-        when(col("n_cell") > 1, round(sqrt(varMicro) / 1e6, 6)).as("__sd"))
+        Publish.round6(col("__s1").cast("double") / (nD * 1e6)).as("cell_mean"),
+        when(col("n_cell") > 1, Publish.round6(sqrt(varMicro) / 1e6)).as("__sd"))
     assigned.join(broadcast(stats), Seq("cell"))
       .withColumn("z", when(col("__sd").isNotNull && col("__sd") > 0,
-        round((col("cen_cos") - col("cell_mean")) / col("__sd"), 6)))
+        Publish.round6((col("cen_cos") - col("cell_mean")) / col("__sd"))))
       .select(col("vec_id"), col("cell"), col("cen_cos"), col("n_cell"),
         col("cell_mean"), col("z"),
         (coalesce(col("z"), lit(0.0)) < zThresh).cast("int").as("is_outlier"))
@@ -712,8 +711,8 @@ object Similarity {
     val tot = per.agg(sum(col("n_vecs")).as("__tot"))
     per.crossJoin(broadcast(tot))
       .select(col("cell"), col("n_vecs"),
-        round(col("n_vecs").cast("double") / col("__tot"), 6).as("frac"),
-        round(col("__s1").cast("double") / (col("n_vecs") * 1e6), 6).as("avg_cen_cos"),
+        Publish.round6(col("n_vecs").cast("double") / col("__tot")).as("frac"),
+        Publish.round6(col("__s1").cast("double") / (col("n_vecs") * 1e6)).as("avg_cen_cos"),
         col("min_cen_cos"))
   }
 
@@ -809,8 +808,8 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"),
         sum(round(col("dist2") * 1e6).cast("long")).as("__im"))
       .select(col("cell").as("cluster"), col("n_members"),
-        round(col("__im") / 1e6, 6).as("inertia"),
-        round(col("__im") / (lit(1e6) * col("n_members")), 6).as("avg_dist2"))
+        Publish.round6(col("__im") / 1e6).as("inertia"),
+        Publish.round6(col("__im") / (lit(1e6) * col("n_members"))).as("avg_dist2"))
   }
 
   /** #49i streaming topic routing: [[assignCell]] with a PRECOMPUTED
@@ -826,6 +825,6 @@ object Similarity {
                    cents: Array[Array[Double]]): DataFrame =
     assignCell(withNorm(embeddings).select(col("vec_id"), col("v")), cents)
       .select(col("vec_id"), col("cell"),
-        round(dot(col("v"), col("v")) + col("d2"), 6).as("dist2"))
+        Publish.round6(dot(col("v"), col("v")) + col("d2")).as("dist2"))
 
 }

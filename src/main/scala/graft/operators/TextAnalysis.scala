@@ -68,8 +68,8 @@ object TextAnalysis {
         col("text"), langs.map(LangProfiles)))
       .select(
       (col("doc_id") +: col("lang").as("labeled_lang") +:
-        round(coalesce(nonLatin.cast("double") /
-          nullif(letters.cast("double"), lit(0.0)), lit(0.0)), 6)
+        Publish.round6(coalesce(nonLatin.cast("double") /
+          nullif(letters.cast("double"), lit(0.0)), lit(0.0)))
           .as("nonlatin_share") +:
         langs.zipWithIndex.map { case (l, i) =>
           element_at(col("__lh"), i + 1).as(s"${l}_hits") }): _*)
@@ -115,9 +115,9 @@ object TextAnalysis {
       .withColumn("upper_ratio", q("n_upper").cast("double") / nullif(nChars.cast("double"), lit(0.0)))
       .withColumn("stop_ratio", q("n_stop").cast("double") / nullif(nWords.cast("double"), lit(0.0)))
       .withColumn("quality_score",
-        round(least(lit(1.0), nWords.cast("double") / 50) * 0.4 +
+        Publish.round6(least(lit(1.0), nWords.cast("double") / 50) * 0.4 +
           (lit(1.0) - col("punct_ratio")) * 0.3 +
-          least(lit(1.0), col("stop_ratio") * 5) * 0.3, 6))
+          least(lit(1.0), col("stop_ratio") * 5) * 0.3))
       .drop("__qc")
   }
 
@@ -191,15 +191,15 @@ object TextAnalysis {
       .select(col("doc_id"), toks.as("__toks"))
       .select(col("doc_id"),
         size(col("__toks")).cast("bigint").as("n_tokens"),
-        round(size(array_distinct(col("__toks"))).cast("double") /
-          nullif(size(col("__toks")).cast("double"), lit(0.0)), 6)
+        Publish.round6(size(array_distinct(col("__toks"))).cast("double") /
+          nullif(size(col("__toks")).cast("double"), lit(0.0)))
           .as("uniq_token_ratio"))
       .join(rep, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("n_tokens"), col("uniq_token_ratio"),
         coalesce(col("nb"), lit(0L)).as("n_bigrams"),
         coalesce(col("tb"), lit(0L)).as("top_bigram_n"),
-        round(col("tb").cast("double") /
-          nullif(col("nb").cast("double"), lit(0.0)), 6).as("rep_ratio"))
+        Publish.round6(col("tb").cast("double") /
+          nullif(col("nb").cast("double"), lit(0.0))).as("rep_ratio"))
   }
 
   /** #47e stratified_sample: deterministic corpus rebalancing — every
@@ -419,7 +419,7 @@ object TextAnalysis {
     per.groupBy(col("source"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("pii_doc_share",
-        round(col("n_docs_with_pii").cast("double") / col("n_docs"), 6))
+        Publish.round6(col("n_docs_with_pii").cast("double") / col("n_docs")))
   }
 
   /** Default blocklist — stand-ins for the NSFW/unsafe wordlists real
@@ -449,8 +449,8 @@ object TextAnalysis {
         col("__bc.n_tokens").cast("bigint").as("n_tokens"),
         col("__bc.n_blocked").cast("bigint").as("n_blocked"))
       .select(col("doc_id"), col("n_tokens"), col("n_blocked"),
-        round(col("n_blocked").cast("double") /
-          nullif(col("n_tokens").cast("double"), lit(0.0)), 6).as("blocked_ratio"),
+        Publish.round6(col("n_blocked").cast("double") /
+          nullif(col("n_tokens").cast("double"), lit(0.0))).as("blocked_ratio"),
         (col("n_tokens") === 0 ||
           col("n_blocked").cast("double") <= col("n_tokens").cast("double") * maxRatio)
           .cast("int").as("keep"))
@@ -498,8 +498,8 @@ object TextAnalysis {
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("n_blocked"), lit(0L)).as("n_blocked"))
       .select(col("doc_id"), col("n_tokens"), col("n_blocked"),
-        round(col("n_blocked").cast("double") /
-          nullif(col("n_tokens").cast("double"), lit(0.0)), 6).as("blocked_ratio"),
+        Publish.round6(col("n_blocked").cast("double") /
+          nullif(col("n_tokens").cast("double"), lit(0.0))).as("blocked_ratio"),
         (col("n_tokens") === 0 ||
           col("n_blocked").cast("double") <= col("n_tokens").cast("double") * maxRatio)
           .cast("int").as("keep"))
@@ -531,14 +531,14 @@ object TextAnalysis {
         percentile(col("__w"), pcts).as("__wq"),
         max(col("__w")).as("max_words"),
         percentile(col("__c"), lit(0.5)).as("__cmed"),
-        round(avg(col("__w")), 6).as("avg_words"))
+        Publish.round6(avg(col("__w"))).as("avg_words"))
       .select(col(stratumCol), col("n_docs"), col("min_words"),
-        round(element_at(col("__wq"), 1), 6).as("p25_words"),
-        round(element_at(col("__wq"), 2), 6).as("p50_words"),
-        round(element_at(col("__wq"), 3), 6).as("p75_words"),
-        round(element_at(col("__wq"), 4), 6).as("p90_words"),
+        Publish.round6(element_at(col("__wq"), 1)).as("p25_words"),
+        Publish.round6(element_at(col("__wq"), 2)).as("p50_words"),
+        Publish.round6(element_at(col("__wq"), 3)).as("p75_words"),
+        Publish.round6(element_at(col("__wq"), 4)).as("p90_words"),
         col("max_words"), col("avg_words"),
-        round(col("__cmed"), 6).as("p50_chars"))
+        Publish.round6(col("__cmed")).as("p50_chars"))
   }
 
   /** Sketch-based twin of [[lengthProfile]] for unbounded value
@@ -633,8 +633,8 @@ object TextAnalysis {
       .agg(sum(col("m")).as("n_bigrams"),
         (sum(col("m") * col("__lnp")) / sum(col("m"))).as("__lp"))
     scored.select(col("doc_id"), col("n_bigrams"),
-      round(col("__lp"), 6).as("avg_logprob"),
-      round(exp(-col("__lp")), 6).as("ppl"))
+      Publish.round6(col("__lp")).as("avg_logprob"),
+      Publish.round6(exp(-col("__lp"))).as("ppl"))
   }
 
   /** #47k2 lm_score_ref: perplexity under a REFERENCE-fitted bigram LM —
@@ -713,8 +713,8 @@ object TextAnalysis {
       .agg(sum(col("m")).as("n_bigrams"),
         (sum(col("m") * col("__lnp")) / sum(col("m"))).as("__lp"))
     scored.select(col("doc_id"), col("n_bigrams"),
-      round(col("__lp"), 6).as("avg_logprob"),
-      round(exp(-col("__lp")), 6).as("ppl"))
+      Publish.round6(col("__lp")).as("avg_logprob"),
+      Publish.round6(exp(-col("__lp"))).as("ppl"))
   }
 
   /** #47x lm_buckets: CCNet-style perplexity partition (Wenzek et al.
@@ -743,8 +743,8 @@ object TextAnalysis {
       .join(documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .transform(graft.Ckpt.frame)
     val th = ppl.groupBy(col("lang")).agg(
-      round(percentile(col("ppl"), lit(1.0 / 3)), 6).as("t33"),
-      round(percentile(col("ppl"), lit(2.0 / 3)), 6).as("t66"))
+      Publish.round6(percentile(col("ppl"), lit(1.0 / 3))).as("t33"),
+      Publish.round6(percentile(col("ppl"), lit(2.0 / 3))).as("t66"))
     ppl.join(broadcast(th), Seq("lang"))
       .select(col("doc_id"), col("lang"), col("ppl"), col("t33"), col("t66"),
         when(col("ppl") <= col("t33"), "head")

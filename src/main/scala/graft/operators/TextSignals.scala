@@ -84,7 +84,7 @@ object TextSignals {
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_fps"), lit(0L)).as("n_fps"),
         when(col("n_grams") > 0,
-          round(coalesce(col("n_fps"), lit(0L)).cast("double") / col("n_grams"), 6))
+          Publish.round6(coalesce(col("n_fps"), lit(0L)).cast("double") / col("n_grams")))
           .otherwise(lit(0.0)).as("fp_density"),
         coalesce(col("fp_checksum"), lit(0L)).as("fp_checksum"))
   }
@@ -169,8 +169,8 @@ object TextSignals {
       .join(sizes.select(col("doc_id").as("id1"), col("__nf").as("__n1")), Seq("id1"))
       .join(sizes.select(col("doc_id").as("id2"), col("__nf").as("__n2")), Seq("id2"))
       .select(col("id1"), col("id2"), col("n_shared"),
-        round(col("n_shared").cast("double") /
-          least(col("__n1"), col("__n2")).cast("double"), 6).as("overlap"))
+        Publish.round6(col("n_shared").cast("double") /
+          least(col("__n1"), col("__n2")).cast("double")).as("overlap"))
   }
 
   /** #45c dup_ngram_frac: corpus-level duplicate n-gram fraction — per
@@ -216,7 +216,7 @@ object TextSignals {
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("n_dup"), lit(0L)).as("n_dup"),
         when(coalesce(col("n_grams"), lit(0L)) > 0,
-          round(col("n_dup").cast("double") / col("n_grams"), 6))
+          Publish.round6(col("n_dup").cast("double") / col("n_grams")))
           .otherwise(lit(0.0)).as("dup_frac"))
   }
 
@@ -267,8 +267,8 @@ object TextSignals {
   private def classifierTail(agg: DataFrame): DataFrame = {
     val score = col("__ws").cast("double") / (col("n_tokens") * lit(1000000.0))
     agg.select(col("doc_id"), col("n_tokens"),
-      when(col("n_tokens") > 0, round(score, 6)).otherwise(lit(0.0)).as("score"),
-      when(col("n_tokens") > 0, round(lit(1.0) / (lit(1.0) + exp(-score)), 6))
+      when(col("n_tokens") > 0, Publish.round6(score)).otherwise(lit(0.0)).as("score"),
+      when(col("n_tokens") > 0, Publish.round6(lit(1.0) / (lit(1.0) + exp(-score))))
         .otherwise(lit(0.5)).as("prob"),
       (col("__ws") >= 0).as("keep"))
   }
@@ -352,7 +352,7 @@ object TextSignals {
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("n_oov"), lit(0L)).as("n_oov"),
         when(coalesce(col("n_tokens"), lit(0L)) > 0,
-          round(col("n_oov").cast("double") / col("n_tokens"), 6))
+          Publish.round6(col("n_oov").cast("double") / col("n_tokens")))
           .otherwise(lit(0.0)).as("oov_rate"))
   }
 
@@ -399,13 +399,13 @@ object TextSignals {
     val m = base
       .withColumn("n_words", nWords)
       .withColumn("mean_word_len",
-        when(nWords > 0, round(wordChars.cast("double") / nWords, 6))
+        when(nWords > 0, Publish.round6(wordChars.cast("double") / nWords))
           .otherwise(lit(0.0)))
       .withColumn("max_word_len",
         coalesce(array_max(transform(col("__w"), w => length(w))), lit(0)))
       .withColumn("alpha_share",
         when(nWords > 0,
-          round(size(filter(col("__w"), w => w.rlike("\\p{L}"))).cast("double") / nWords, 6))
+          Publish.round6(size(filter(col("__w"), w => w.rlike("\\p{L}"))).cast("double") / nWords))
           .otherwise(lit(0.0)))
       .withColumn("stop_hits",
         // The native letter-token walk langId and withQuality use
@@ -415,8 +415,8 @@ object TextSignals {
           col("text"), Seq(allStops)), 1))
       .withColumn("symbol_share",
         when(length(col("text")) > 0,
-          round(length(regexp_replace(col("text"), "[\\p{L}\\p{N} \\t\\n\\r\\f]", ""))
-            .cast("double") / length(col("text")), 6))
+          Publish.round6(length(regexp_replace(col("text"), "[\\p{L}\\p{N} \\t\\n\\r\\f]", ""))
+            .cast("double") / length(col("text"))))
           .otherwise(lit(0.0)))
     val fails = array(
       when(col("n_words") < 5, lit("too_short")),
@@ -481,12 +481,12 @@ object TextSignals {
       .withColumn("__wc", wc)
       .withColumn("n_sents", size(col("__s")))
     m.select(col("doc_id"), col("n_sents"),
-      when(col("n_sents") > 0, round(
-        aggregate(col("__wc"), lit(0L), (a, x) => a + x).cast("double") / col("n_sents"), 6))
+      when(col("n_sents") > 0, Publish.round6(
+        aggregate(col("__wc"), lit(0L), (a, x) => a + x).cast("double") / col("n_sents")))
         .otherwise(lit(0.0)).as("avg_sent_words"),
       coalesce(array_max(col("__wc")), lit(0)).as("max_sent_words"),
-      when(col("n_sents") > 0, round(
-        size(filter(col("__wc"), x => x < 4)).cast("double") / col("n_sents"), 6))
+      when(col("n_sents") > 0, Publish.round6(
+        size(filter(col("__wc"), x => x < 4)).cast("double") / col("n_sents")))
         .otherwise(lit(0.0)).as("short_share"))
   }
 
@@ -534,7 +534,7 @@ object TextSignals {
         sum(col("gopher_keep").cast("long")).as("n_gopher_keep"),
         sum((col("keep") && col("gopher_keep")).cast("long")).as("n_both_keep"))
       .withColumn("gopher_keep_rate",
-        round(col("n_gopher_keep").cast("double") / col("n_docs"), 6))
+        Publish.round6(col("n_gopher_keep").cast("double") / col("n_docs")))
   }
 
   def sourceQuality(documents: DataFrame): DataFrame = {
@@ -552,10 +552,10 @@ object TextSignals {
         sum(col("n_words").cast("long")).as("__words"))
       .crossJoin(broadcast(total))
       .select(col("source"), col("n_docs"),
-        round(col("n_docs").cast("double") / col("__N"), 6).as("corpus_share"),
-        round(col("__kept").cast("double") / col("n_docs"), 6).as("keep_rate"),
-        round(col("__pm").cast("double") / (col("n_docs") * 1e6), 6).as("mean_prob"),
-        round(col("__words").cast("double") / col("n_docs"), 6).as("mean_words"))
+        Publish.round6(col("n_docs").cast("double") / col("__N")).as("corpus_share"),
+        Publish.round6(col("__kept").cast("double") / col("n_docs")).as("keep_rate"),
+        Publish.round6(col("__pm").cast("double") / (col("n_docs") * 1e6)).as("mean_prob"),
+        Publish.round6(col("__words").cast("double") / col("n_docs")).as("mean_words"))
   }
 
   /** #47q chunk_split: overlapping token-window chunking — the
@@ -644,7 +644,7 @@ object TextSignals {
     val scored = tf.join(dfq, "term")
       .crossJoin(broadcast(n))
       .withColumn("score",
-        round(col("tf") * (log((col("__N") + 1).cast("double") / (col("df") + 1)) + 1), 6))
+        Publish.round6(col("tf") * (log((col("__N") + 1).cast("double") / (col("df") + 1)) + 1)))
     TopK.groupedWithRank(scored, Seq(col("doc_id")), k,
       Seq(TopK.descNum(col("score")), col("term")))
       .select(col("doc_id"), col("rk"), col("term"), col("tf"), col("df"), col("score"))

@@ -134,7 +134,7 @@ object StreamIndicators {
   /** Streaming SMA(p) + EMA(span) per symbol, append mode. EMA seeds at
     * the first bar and folds αx + (1−α)prev with α = 2/(span+1) — the
     * identical recursion (same operation order, bit-identical doubles)
-    * as the batch `emaFoldSql`.
+    * as the batch `SeriesFoldExec`.
     */
   def smaEma(bars: Dataset[Bar], p: Int = 5, span: Int = 5): Dataset[IndRow] = {
     val alpha = 2.0 / (span + 1)

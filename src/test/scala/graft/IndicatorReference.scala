@@ -12,7 +12,10 @@ import graft.operators.Indicators
   * forms they had before they were built as one series fold and one
   * window projection per dependency level, kept so the level form can be
   * pinned field for field (`PropertySpec`). Each family collects and
-  * explodes its own series and stacks its own windows here.
+  * explodes its own series and stacks its own windows here: EMA and
+  * MACD as the `collect_list` + `aggregate` array folds that
+  * `graft.plans.SeriesFold` replaced, quadratic in series length, so
+  * long series are checked against a driver loop instead.
   */
 object IndicatorReference {
   val KeyCol = Indicators.KeyCol
@@ -76,31 +79,10 @@ object IndicatorReference {
   /** Collect the per-key series once: returns (grouped df with column `s`
     * = date-sorted array of row structs and `closes` = array of close).
     */
-  private def collectSeries(bars: DataFrame,
-                            maxLen: Int = Indicators.MaxFoldSeriesLen): (DataFrame, Seq[String]) = {
+  private def collectSeries(bars: DataFrame): (DataFrame, Seq[String]) = {
     val others = bars.columns.filter(_ != KeyCol).toSeq
     val ordered = Seq(OrdCol) ++ others.filterNot(_ == OrdCol)
-    // The guard must fire BEFORE collect_list materializes a key's whole
-    // series — a post-hoc size(s) check would OOM the aggregate first
-    // for a truly tick-grain key. A keyed window count buffers rows in
-    // a spill-safe sorter (never an array) and raises per oversized
-    // key; it evaluates inside the SAME single derivation of `bars`
-    // (an aggregate-plus-join guard would re-derive the whole upstream
-    // bars pipeline a second time — measured 2× on enrichAll queries),
-    // and its hash partitioning on the key is what the groupBy needs,
-    // so guard + collect share one Exchange.
-    val byKeyAll = org.apache.spark.sql.expressions.Window.partitionBy(col(KeyCol))
-    val guarded = bars
-      .withColumn("__n", count(lit(1)).over(byKeyAll))
-      .withColumn("__chk",
-        when(col("__n") > maxLen, raise_error(concat(
-          lit(s"Indicators fold: per-key series exceeds maxSeriesLen=$maxLen (n="),
-          col("__n").cast("string"),
-          lit(") — the array fold holds one key's whole series in a task; " +
-            "use withEmaStreaming for long series or raise maxSeriesLen"))))
-          .otherwise(lit(1)))
-      .filter(col("__chk") === 1).drop("__n", "__chk")
-    val g = guarded
+    val g = bars
       .groupBy(col(KeyCol))
       .agg(sort_array(collect_list(struct(ordered.map(col): _*))).as("s"))
       .withColumn("closes", expr("transform(s, x -> x.close)"))
@@ -117,9 +99,8 @@ object IndicatorReference {
     * null until span observations (min_periods), recursion seeded at the
     * first bar exactly as pandas ewm(adjust=False).
     */
-  def withEma(bars: DataFrame, spans: Seq[Int],
-              maxSeriesLen: Int = Indicators.MaxFoldSeriesLen): DataFrame = {
-    val (g0, others) = collectSeries(bars, maxSeriesLen)
+  def withEma(bars: DataFrame, spans: Seq[Int]): DataFrame = {
+    val (g0, others) = collectSeries(bars)
     val g = spans.foldLeft(g0) { (df, sp) =>
       df.withColumn(s"__ea_$sp", expr(emaFoldSql("closes", sp)))
     }
@@ -135,9 +116,8 @@ object IndicatorReference {
     * the masked macd series (recursion seeded at the first non-null macd,
     * matching pandas ewm over a leading-NaN series); hist = macd − signal.
     */
-  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9,
-               maxSeriesLen: Int = Indicators.MaxFoldSeriesLen): DataFrame = {
-    val (g0, others) = collectSeries(bars, maxSeriesLen)
+  def withMacd(bars: DataFrame, fast: Int = 12, slow: Int = 26, sig: Int = 9): DataFrame = {
+    val (g0, others) = collectSeries(bars)
     val aSig = s"(2.0D/${sig + 1})"
     val g = g0
       .withColumn("__ef", expr(emaFoldSql("closes", fast)))

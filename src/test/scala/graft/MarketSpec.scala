@@ -155,7 +155,8 @@ class MarketSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming EMA fold is bit-equal to the collect_list array fold") {
     // Multiple keys, uneven lengths, awkward doubles, one null close —
-    // every branch of the streaming fold vs the array fold.
+    // every branch of SeriesFoldExec's streaming fold vs the reference
+    // array fold.
     val jan1 = d("2024-01-01")
     def day(n: Int) = Date.valueOf(jan1.toLocalDate.plusDays(n - 1))
     val rows = (1 to 40).map(i => (1L, day(i),
@@ -167,8 +168,8 @@ class MarketSpec extends AnyFunSuite with SparkSpec {
     val spans = Seq(3, 12)
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getAs[Long]("user_id"), r.getAs[Date]("date"))
-    val a = Indicators.withEma(bars, spans).collect().map(r => key(r) -> r).toMap
-    val b = Indicators.withEmaStreaming(bars, spans).collect()
+    val a = IndicatorReference.withEma(bars, spans).collect().map(r => key(r) -> r).toMap
+    val b = Indicators.withEma(bars, spans).collect()
     assert(b.length == rows.length && a.size == rows.length)
     b.foreach { r =>
       val exp = a(key(r))
@@ -184,20 +185,22 @@ class MarketSpec extends AnyFunSuite with SparkSpec {
     }
     // key 3: null close at row 2 poisons both folds from that row on
     assert(a((3L, d("2024-03-03"))).isNullAt(a((3L, d("2024-03-03"))).fieldIndex("ema_3")))
+    // one row out per bar in, ten bars of one key
+    assert(Indicators.withEma(barsOf((1 to 10).map(_.toDouble)), Seq(3)).count() == 10)
   }
 
   test("streaming EMA matches the array fold on the real bar pipeline") {
     // The fixture test proves bit-equality on hand data; this one runs
     // both folds over the actual cleaned-events bar pipeline (150 keys,
-    // multi-partition), where the repartition + sortWithinPartitions
-    // path actually crosses partition boundaries.
+    // multi-partition), where each partition holds many keys and the
+    // exec's state resets at every key boundary.
     val bars = operators.Bars.daily(operators.Cleaning.cleanEvents(
       graft.sources.Tables.events(spark, "/root/testdata/sf0.001")))
     val spans = Seq(5, 12)
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getAs[Long]("user_id"), r.getAs[Date]("date"))
-    val a = Indicators.withEma(bars, spans).collect().map(r => key(r) -> r).toMap
-    val b = Indicators.withEmaStreaming(bars, spans).collect()
+    val a = IndicatorReference.withEma(bars, spans).collect().map(r => key(r) -> r).toMap
+    val b = Indicators.withEma(bars, spans).collect()
     assert(b.nonEmpty && b.length == a.size)
     b.foreach { r =>
       val exp = a(key(r))
@@ -211,16 +214,6 @@ class MarketSpec extends AnyFunSuite with SparkSpec {
           s"$c not bit-equal at ${key(r)}")
       }
     }
-  }
-
-  test("array-fold EMA raises past the series-length ceiling") {
-    val long = barsOf((1 to 10).map(_.toDouble))
-    val e = intercept[Exception] {
-      Indicators.withEma(long, Seq(3), maxSeriesLen = 5).collect()
-    }
-    assert(e.getMessage.contains("maxSeriesLen"), e.getMessage)
-    // withEmaStreaming handles the same series with O(spans) state
-    assert(Indicators.withEmaStreaming(long, Seq(3)).count() == 10)
   }
 
   test("MACD: fast/slow EMA difference, signal seeded at first valid macd") {

@@ -507,16 +507,18 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** Every (file, group 1) of `pattern`'s matches in src/main's Scala. */
-  private def srcMainMatches(pattern: String): Seq[(String, String)] = {
+  /** (file name, text) of every Scala file under src/main. */
+  private def srcMainFiles: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     try files.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        pattern.r.findAllMatchIn(text).map(m => p.getFileName.toString -> m.group(1))
-      }.toList finally files.close()
+      .map(p => p.getFileName.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toList finally files.close()
   }
+
+  private def srcMainMatches(pattern: String): Seq[(String, String)] =
+    srcMainFiles.flatMap { case (f, text) => pattern.r.findAllMatchIn(text).map(f -> _.group(1)) }
 
   /** Every string literal under src/main matching `pattern`'s group 1. */
   private def srcMainLiterals(pattern: String): Set[String] =
@@ -552,6 +554,37 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     val fed = srcMainMatches(
       "(?m)^(?!\\s*(?://|/?\\*))(.*\\b(?:MemoryStream|addData)\\b.*)$")
     assert(fed.isEmpty, s"MemoryStream feeds under src/main: ${fed.mkString("; ")}")
+  }
+
+  test("rounding lint: every 6-decimal round under src/main goes through Publish.round6") {
+    // Spark's round(x, 6) rounds the shortest decimal string of x, the
+    // DuckDB oracles the scaled double; Publish is the one place that
+    // applies the oracles' rule. Comment lines and `|`-margin SQL lines
+    // are skipped; a call may span lines.
+    def sixDecimalRounds(text: String): Seq[String] = {
+      val code = text.linesIterator
+        .map(l => if (l.trim.matches("(//|/?\\*|\\|).*")) "" else l).mkString("\n")
+      "\\bround\\(".r.findAllMatchIn(code).flatMap { m =>
+        var (i, depth, lastComma) = (m.end, 1, -1)
+        while (i < code.length && depth > 0) {
+          code(i) match {
+            case '(' | '[' | '{' => depth += 1
+            case ')' | ']' | '}' => depth -= 1
+            case ',' if depth == 1 => lastComma = i
+            case _ =>
+          }
+          i += 1
+        }
+        Some(code.substring(m.start, i).replaceAll("\\s+", " "))
+          .filter(_ => lastComma > 0 && code.substring(lastComma + 1, i - 1).trim == "6")
+      }.toSeq
+    }
+    assert(sixDecimalRounds("a(round(x +\n  y,\n  6))\n// round(c, 6)\n  |round(d, 6)\n" +
+      "round(e, 2) round6(f)") == Seq("round(x + y, 6)"), "the lint's own fixture")
+    val calls = srcMainFiles.filter(_._1 != "Publish.scala").flatMap { case (f, text) =>
+      sixDecimalRounds(text).map(c => s"$f: $c")
+    }
+    assert(calls.isEmpty, s"${calls.size} 6-decimal rounds outside Publish:\n${calls.mkString("\n")}")
   }
 
   test("knob lint: the only session confs graft reads are the checkpoint seam's") {

@@ -678,23 +678,34 @@ class PlanContractSpec extends AnyFunSuite with SparkSpec {
 
   test("indicators: one series fold and one Window per dependency level") {
     import graft.operators.{Bars, Indicators, Screener}
-    // Bars straight off the feed's aggregate carry no window of their
-    // own, so every Window below is the enrichment's: two levels over
-    // (user_id ORDER BY date), the month-partitioned first and the fold's
-    // series-length guard. The withColumn chains stacked 14.
+    // Bars straight off the feed's aggregate carry no window, sort or
+    // key-only exchange of their own, so what the enrichment adds is
+    // counted against the bars' plan: one Exchange on the key, shared by
+    // the series fold and the level windows, the fold's (user_id, date,
+    // …) Sort, which the windows reuse, and the month window's own Sort.
+    // The withColumn chains stacked 14 Windows.
     val bars = Bars.daily(graft.sources.Tables.events(spark, sf))
     val enriched = Indicators.enrichAll(bars, macd = (5, 10, 4), bollinger = (10, 2.0),
       atrPeriod = 10)
     def count(p: String, token: String) = token.r.findAllMatchIn(p).size
-    val p = plan(enriched)
-    assert(count(p, "\\bWindow \\[") <= 4, s"expected at most 4 Window operators:\n$p")
-    assert(count(p, "\\bGenerate\\b") == 1, s"expected one series explode:\n$p")
-    // One collect_list aggregate (its partial and final halves) for the
-    // MACD and EMA folds together.
-    val collects = p.linesIterator.filter(_.contains("collect_list")).toSeq
-    assert(collects.size == 2 && collects.count(_.contains("partial_collect_list")) == 1,
-      s"expected one collect_list aggregate:\n$p")
-    assert(count(p, "ObjectHashAggregate") == 2, s"expected no second fold aggregate:\n$p")
+    def lines(p: String, token: String) = p.linesIterator.filter(token.r.findFirstIn(_).nonEmpty).toSeq
+    val (b, p) = (plan(bars), plan(enriched))
+    assert(p.contains("SeriesFold"), s"expected the series fold exec:\n$p")
+    assert(count(p, "\\bWindow \\[") <= 3, s"expected at most 3 Window operators:\n$p")
+    Seq("collect_list", "ObjectHashAggregate", "\\bGenerate\\b").foreach(t =>
+      assert(count(p, t) == 0, s"expected no $t:\n$p"))
+    val exchange = "Exchange hashpartitioning\\("
+    assert(count(p, exchange) == count(b, exchange) + 1, s"expected one added Exchange:\n$p")
+    val onKey = "Exchange hashpartitioning\\(user_id#\\d+L?, \\d+\\)"
+    assert(count(p, onKey) == count(b, onKey) + 1,
+      s"expected the added Exchange on user_id alone:\n$p")
+    val sorts = lines(p, "\\bSort \\[").diff(lines(b, "\\bSort \\["))
+    val keyFirst = "Sort \\[user_id#\\d+L? ASC NULLS FIRST, "
+    assert(sorts.size == 2 &&
+      sorts.count(l => (keyFirst + "date#\\d+ ASC NULLS FIRST, \\w").r.findFirstIn(l).nonEmpty) == 1 &&
+      sorts.count(l => (keyFirst + "_w\\d+#\\d+ ASC NULLS FIRST, date#\\d+ ASC NULLS FIRST\\]")
+        .r.findFirstIn(l).nonEmpty) == 1,
+      s"expected the fold's (user_id, date, …) Sort and the month window's:\n${sorts.mkString("\n")}")
     val added = count(plan(Screener.signalScore(enriched)), "\\bWindow \\[") - count(p, "\\bWindow \\[")
     assert(added <= 2, s"signalScore must add at most 2 Window operators, added $added")
   }

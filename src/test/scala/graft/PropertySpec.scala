@@ -578,17 +578,14 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     // (IndicatorReference), schema for schema and row for row with exact
     // doubles: random bars with NULL and 0.0 closes, flat stretches
     // (zero losses), keys shorter than the MACD slow span, single-bar
-    // keys and series that cross month boundaries.
+    // keys and series that cross month boundaries. Then one long key
+    // against a driver loop of the same recurrence.
     def same(name: String, got: DataFrame, want: DataFrame): Unit = {
       assert(got.schema == want.schema, s"$name schema:\n${got.schema}\n${want.schema}")
       def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
       val (g, w) = (rows(got), rows(want))
       assert(g == w, s"$name: ${g.size} rows vs reference ${w.size}\n" +
         s"${g.diff(w).take(3)}\n${w.diff(g).take(3)}")
-    }
-    def raises(name: String, df: => DataFrame): Unit = {
-      val e = intercept[Exception](df.collect())
-      assert(e.getMessage.contains("maxSeriesLen"), s"$name: ${e.getMessage}")
     }
     Seq(31, 32).foreach { seed =>
       val rnd = new Random(seed)
@@ -651,14 +648,46 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
         IndicatorReference.breakouts(bars, 2, 2, 1.0))
       Seq(3, 10).foreach(p => same(s"$s move flags $p", Breadth.withMoveFlags(bars, p),
         IndicatorReference.withMoveFlags(bars, p)))
-      // The fold guard: at the longest key's length the folds run; one
-      // row past it they raise the named error, before any collect.
-      val longest = lens.max
-      same(s"$s ema at maxSeriesLen", Indicators.withEma(bars, Seq(3), maxSeriesLen = longest),
-        refEma(bars, Seq(3), maxSeriesLen = longest))
-      raises(s"$s ema", Indicators.withEma(bars, Seq(3), maxSeriesLen = longest - 1))
-      raises(s"$s macd", Indicators.withMacd(bars, 5, 10, 4, maxSeriesLen = longest - 1))
     }
+    // A key of 50 000 bars with a NULL close past bar 40 000, beside a
+    // 3-bar key. The array-fold reference is quadratic in series length,
+    // so the expectation is the recurrence as a driver loop:
+    // a * v + (1.0 - a) * prev, seeded at the first close, a NULL close
+    // nulling the rest of its key.
+    val rnd = new Random(50000)
+    val day0 = java.time.LocalDate.of(1980, 1, 1)
+    val series = Seq(
+      1L -> (0 until 50000).map(i =>
+        if (i == 40321) None else Some(math.round(5000 + rnd.nextGaussian() * 300) / 100.0)),
+      2L -> Seq(Some(10.0), Some(11.5), Some(9.25)))
+    val long = series.flatMap { case (k, closes) =>
+      closes.zipWithIndex.map { case (c, i) => (k, java.sql.Date.valueOf(day0.plusDays(i)), c) }
+    }.toDF("user_id", "date", "close")
+    def ewm(xs: Seq[Option[Double]], span: Int): Seq[Option[Double]] = {
+      val a = 2.0 / (span + 1)
+      xs.tail.scanLeft(xs.head)((prev, x) =>
+        for (p <- prev; v <- x) yield a * v + (1.0 - a) * p)
+    }
+    def from(n: Int, xs: Seq[Option[Double]]) = Seq.fill(n min xs.size)(None) ++ xs.drop(n)
+    def expect(cols: (Long, Seq[Option[Double]]) => Seq[Seq[Option[Double]]]) =
+      series.flatMap { case (k, closes) =>
+        val outs = cols(k, closes)
+        closes.indices.map(i => (Seq(k, java.sql.Date.valueOf(day0.plusDays(i))) ++
+          (closes +: outs).map(_(i).getOrElse(null))).mkString("|"))
+      }.sorted
+    def got(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val spans = Seq(3, 12, 26)
+    assert(got(Indicators.withEma(long, spans)) ==
+      expect((_, closes) => spans.map(sp => from(sp - 1, ewm(closes, sp)))), "long ema")
+    val (fast, slow, sig) = (5, 10, 4)
+    assert(got(Indicators.withMacd(long, fast, slow, sig)) == expect { (_, closes) =>
+      val macd = ewm(closes, fast).zip(ewm(closes, slow)).map { case (f, sl) =>
+        for (a <- f; b <- sl) yield a - b }
+      val signal = if (closes.size < slow) closes.map(_ => None)
+        else Seq.fill(slow - 1)(None) ++ ewm(macd.drop(slow - 1), sig)
+      val (m, g) = (from(slow - 1, macd), from(slow + sig - 2, signal))
+      Seq(m, g, m.zip(g).map { case (a, b) => for (x <- a; y <- b) yield x - y })
+    }, "long macd")
   }
 
   test("the pair kernel equals the lambda pair expansion on random sorted lists") {

@@ -6,12 +6,14 @@ import org.apache.spark.sql.SparkSession
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** The repo-wide float publication rule (round(x, 6), HALF_UP — what
-    * Spark's `round` and the DuckDB oracles both apply), for
-    * hand-computed spec expectations.
+  /** The repo-wide float publication rule, `Publish.round6`, for
+    * hand-computed spec expectations: scale by 1e6, round half away from
+    * zero to an integer, divide by 1e6 — what DuckDB's `round(x, 6)`
+    * does. Spark's `round(x, 6)` rounds the shortest decimal string of
+    * `x` instead and can differ on a 6th-decimal tie.
     */
   def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble / 1e6
 
   /** Run `body` with the session confs in `settings`, then restore each
     * to what it was (unset stays unset), so no later suite inherits them.
